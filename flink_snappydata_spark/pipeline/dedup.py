@@ -593,57 +593,6 @@ def containment_pairs(
     return scored.filter(F.col("containment") >= threshold)
 
 
-def minhash_signatures(
-    documents: DataFrame, k: int = MINHASH_K, n: int = SHINGLE_N
-) -> DataFrame:
-    """(doc_id, h0..h{k-1}) MinHash signatures — map-side Arrow kernel.
-
-    Per document, one pandas-UDF batch shingles the text, hashes each
-    shingle with crc32 (stable, content-only), applies the k fixed-seed
-    modular permutations as a vectorized (k x n_shingles) uint64 matrix,
-    and takes the column min. No explode, no aggregation, no shuffle —
-    the earlier JVM formulation (explode + k MIN aggregates over the
-    shingle index) was the slowest step of the dedup suite (~3.5 s of
-    the sf0.1 headline run); the kernel does the same math in numpy at
-    a fraction of the cost and is deterministic at any parallelism.
-    Tokenization matches :func:`shingles` exactly (``re.ASCII`` \\W).
-    """
-    import re
-    import zlib
-
-    import numpy as np
-    import pandas as pd
-
-    ascii_nonword = re.compile(r"\W+", re.ASCII)
-    a_mat = np.array(_HASH_A[:k], dtype=np.uint64)[:, None]
-    b_mat = np.array(_HASH_B[:k], dtype=np.uint64)[:, None]
-    p = np.uint64(_P32)
-
-    # no annotations: PEP-563 lazy hints defeat pandas_udf inference
-    @F.pandas_udf("array<long>")
-    def _sig(texts):
-        out = []
-        for t in texts:
-            ws = [w for w in ascii_nonword.split(t.lower()) if w]
-            if len(ws) >= n:
-                sh = dict.fromkeys(
-                    " ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)
-                )
-            else:
-                sh = {" ".join(ws): None}
-            x = np.fromiter(
-                (zlib.crc32(s.encode()) for s in sh),
-                dtype=np.uint64,
-                count=len(sh),
-            )
-            out.append(((a_mat * x[None, :] + b_mat) % p).min(axis=1).astype(np.int64))
-        return pd.Series(out)
-
-    return spread(documents, "doc_id").select(
-        "doc_id", _sig(F.col("text")).alias("sig")
-    ).select("doc_id", *[F.col("sig")[i].alias(f"h{i}") for i in range(k)])
-
-
 def minhash_band_hashes(
     documents: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
 ) -> DataFrame:

@@ -14,13 +14,18 @@ so value hashes match bit-for-bit at any parallelism.
 
 The specs themselves live in per-domain modules under
 :mod:`flink_snappydata_spark.specs` (import order there = registration
-order); THIS module owns only the driver-facing declaration order —
-``_HEAD`` (the 50-slot driver-stamp window), ``_HEAD_ROUND``, and the
-never-stamped queue — so the ordering contract stays auditable in one
-place.
+order). THIS module owns only the driver-facing declaration order: the
+correctness driver stamps the first 50 entries each round into
+``CORRECTNESS_r{N}.json``, so :func:`stamp_order` puts never-stamped
+queries first and the rest stalest-first, computed from those receipts.
 """
 
 from __future__ import annotations
+
+import json
+import re
+from collections.abc import Iterable
+from pathlib import Path
 
 # Importing the specs package registers every query, in spec-module
 # import order, into the shared dict re-exported here.
@@ -31,185 +36,36 @@ from flink_snappydata_spark.specs.profiling_analytics import (  # noqa: F401
     _scd2_streamed,
 )
 
-# ---------------------------------------------------------------------------
-# Declaration order
-# ---------------------------------------------------------------------------
-# The correctness driver verifies registry entries front-to-back with a
-# bounded budget (50 stamps per round). Order therefore encodes
-# verification priority, not implementation grouping.
-#
-# ROUND-10 POLICY AMENDMENT (budget math, superseding the round-6
-# "every third round" cadence): with 200+ registered queries (218
-# after round 11) and a 50-stamp budget, the tightest cadence any
-# rotation can sustain is every ceil(len(QUERIES)/50) = FIFTH round —
-# 50 stamps/round * 4 rounds = 200 < registry size, so a 3- or even
-# 4-round cadence is structurally
-# unsatisfiable once every query has been stamped at least once (the
-# same arithmetic that forced the round-8 amendment when never-stamped
-# backlog first exceeded the window). Effective policy, pinned by
-# tests/test_oracle_parity.py::test_stamp_rotation_covers_stale_and_
-# unstamped:
-#
-# (a) every query whose latest stamp is ceil(len(QUERIES)/50)+ rounds
-#     old is inside the window (cadence floor, threshold derived from
-#     the live registry size so it tightens/relaxes with the budget
-#     math instead of silently rotting);
-# (b) never-stamped queries are inside the window or head the
-#     post-window order (new work first in line, never buried);
-# (c) remaining slots go stalest-first.
-#
-# Local tests/test_oracle_parity.py still verifies ALL registered
-# queries (218 after the round-11 additions)
-# against their DuckDB oracles every pytest run, so driver-stamp
-# staleness never means unverified code, only an older driver receipt.
-#
-# Round-14 window (_HEAD, 50 names) — exactly the round-13 verdict's
-# task-1 directive: the 5 round-13 additions (never stamped; invariant
-# (b) puts new work first: the multi-stage CEP pair, the absence and
-# multistage stream→table loops, and the prebuilt-index IVFADC), the
-# 26 r09-stamped remainder (staleness 5 at r14 — cadence-due under
-# invariant (a): window_lag_lead … drift_streamed), and the 19
-# stalest r10-stamped queries in declaration order per (c) (all 50
-# r10 stamps share staleness 4, so declaration order is the tiebreak;
-# rollup_multires … mmr_select make the cut). After the driver stamps
-# this window every registered query has a green driver row inside
-# the threshold-5 cadence: stalest surviving stamps are the 31 r10
-# remainder (staleness 4 at r14), which follow any never-stamped r14
-# additions in _R15_QUEUE and rotate next round at staleness 5.
-#
-# All queue entries are fully verified locally every pytest run via
-# test_oracle_parity plus the per-op semantic suites — driver-stamp
-# pending, not unverified.
+#: Repo root, where the correctness driver writes CORRECTNESS_r{N}.json.
+_ROOT = Path(__file__).resolve().parent.parent
 
-#: The round this _HEAD window was built for. The rotation tripwire
-#: (tests/test_oracle_parity.py::test_stamp_rotation_covers_stale_and_
-#: unstamped) computes staleness relative to THIS round, not to
-#: max(stamp files)+1, so the suite a round ships stays green both
-#: before and after the driver writes its CORRECTNESS_r{N}.json — and
-#: goes red only if a round closes without rotating the window.
-_HEAD_ROUND = 14
+#: Spec-module registration order, captured before the reorder below.
+_REGISTERED = tuple(QUERIES)
 
-_HEAD = [
-    # -- never stamped: the round-13 additions, r14-queue order --
-    "ivf_pq_prebuilt_topk",
-    "cep_multi_stage",
-    "cep_multi_stage_relaxed",
-    "absence_streamed",
-    "multistage_streamed",
-    # -- cadence-due: the 26 r09-stamped remainder (staleness 5) --
-    "window_lag_lead",
-    "window_range_frame",
-    "pivot_revenue",
-    "scalar_string",
-    "scalar_date",
-    "scalar_math",
-    "scalar_json",
-    "scalar_map",
-    "scalar_conditional",
-    "scalar_array",
-    "events_sliding_window",
-    "stream_join_rowlevel",
-    "interval_join",
-    "train_val_test_split",
-    "image_decode_stats",
-    "multimodal_features",
-    "seq_packing",
-    "global_index",
-    "shard_stats",
-    "doc_chunking",
-    "frequent_tokens",
-    "rollup_streamed",
-    "cms_streamed",
-    "ohlc_streamed",
-    "scd2_streamed",
-    "drift_streamed",
-    # -- rotation: 19 stalest r10-stamped, declaration order --
-    "rollup_multires",
-    "pq_adc_topk",
-    "random_projection",
-    "hard_negatives",
-    "inverted_index",
-    "cms_heavy_hitters",
-    "pagerank",
-    "retention_cohorts",
-    "ordered_funnel",
-    "events_mad_outliers",
-    "source_centroids",
-    "embedding_dim_stats",
-    "bloom_membership",
-    "latest_snapshot",
-    "timeline_gapfill",
-    "percentile_bands",
-    "vocab_growth",
-    "knn_accuracy",
-    "mmr_select",
-]
 
-#: The r15 stamp queue. Head: any round-14 additions (never stamped —
-#: rotation invariant (b) requires never-stamped queries to occupy the
-#: FIRST post-window slots; new queries register here, not at the
-#: tail). Then the 31 r10-stamped queries that did not fit in the r14
-#: window (staleness 5 at r15 — cadence-due under invariant (a)), in
-#: declaration order. All queue entries are oracle-verified locally
-#: every pytest run.
-_R15_QUEUE: list[str] = [
-    # -- round-14 additions (never stamped; new work drains first) --
-    "cep_bounded_subrun",
-    "match_recognize_funnel",
-    "cep_relaxed_nfa",
-    "cep_relaxed_nfa_within",
-    "match_recognize_optional",
-    "cep_relaxed_nfa_skiptonext",
-    "nfa_streamed",
-    "cep_iterative_condition",
-    "match_recognize_prev",
-    "match_recognize_measures",
-    # -- r10-stamped remainder (cadence-due at r15) --
-    "typo_pairs",
-    "zorder_key",
-    "event_rate_spikes",
-    "equidepth_histogram",
-    "readability_scores",
-    "session_paths",
-    "snapshot_diff",
-    "merge_upsert",
-    "event_transitions",
-    "zonemap_skip_stats",
-    "weighted_sample",
-    "ohlc_bars",
-    "trend_regression",
-    "conversion_attribution",
-    "table_profile",
-    "key_skew_profile",
-    "bpe_merges",
-    "temperature_mix",
-    "user_growth",
-    "itemset_pairs",
-    "referential_audit",
-    "graph_triangles",
-    "ks_drift",
-    "ab_test_report",
-    "activity_heatmap",
-    "repeat_purchase_stats",
-    "session_conversion",
-    "quantile_transform",
-    "token_drift_topk",
-    "rfm_segments",
-    "funnel_latency",
-]
+def _last_stamps(root: Path) -> dict[str, int]:
+    """Latest driver-stamp round per query name, read from the
+    ``CORRECTNESS_r{N}.json`` receipts in ``root`` ({} when there are
+    none)."""
+    stamps: dict[str, int] = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        for name in json.loads(path.read_text()):
+            stamps[name] = max(stamps.get(name, 0), rnd)
+    return stamps
 
-_TAIL: list[str] = []
+
+def stamp_order(names: Iterable[str], stamps: dict[str, int]) -> list[str]:
+    """Driver-stamp priority: never-stamped names first, then ascending
+    last-stamp round (stalest first); ties keep the order of ``names``."""
+    return sorted(names, key=lambda n: stamps.get(n, 0))
 
 
 def _reorder() -> None:
-    order = _HEAD + _R15_QUEUE + _TAIL
-    missing = [n for n in order if n not in QUERIES]
-    if missing:  # pragma: no cover - guards registry edits
-        raise KeyError(f"unknown registry entries in order lists: {missing}")
-    middle = [
-        n for n in QUERIES if n not in _HEAD and n not in _R15_QUEUE and n not in _TAIL
-    ]
-    ordered = {n: QUERIES[n] for n in _HEAD + _R15_QUEUE + middle + _TAIL}
+    ordered = {n: QUERIES[n] for n in stamp_order(_REGISTERED, _last_stamps(_ROOT))}
     # Reorder IN PLACE: QUERIES is the same dict object the specs
     # package exports, so mutating (rather than rebinding) keeps
     # specs.QUERIES and registry.QUERIES identical — any importer sees

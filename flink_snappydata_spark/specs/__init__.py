@@ -2,11 +2,10 @@
 
 IMPORT ORDER IS THE REGISTRATION ORDER: each module below registers its
 specs into :data:`flink_snappydata_spark.specs.base.QUERIES` at import
-time, and :mod:`flink_snappydata_spark.registry` reorders only the
-driver-priority window (``_HEAD`` + queue) on top of this sequence —
-everything not named there keeps the order established here. Do not
-alphabetize these imports; ``tests/test_oracle_parity.py`` pins the
-resulting declaration order as a golden list.
+time, and :mod:`flink_snappydata_spark.registry` sorts them into
+driver-stamp order (never-stamped first, then stalest first) computed
+from the ``CORRECTNESS_r*.json`` receipts. Queries with equal stamps
+keep the order established here.
 """
 
 from flink_snappydata_spark.specs.base import (  # noqa: F401

@@ -577,8 +577,7 @@ _register(
 )
 
 # -- round 11: the remaining two members of the embedding-compression
-# family (PQ already above). Rotated into the r12 stamp window
-# (registry._HEAD) as never-stamped work per rotation invariant (b).
+# family (PQ already above).
 
 _register(
     "embedding_sq8_topk",

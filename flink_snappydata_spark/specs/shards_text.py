@@ -503,9 +503,7 @@ _register(
         "text shuffle.",
 )
 
-# -- round 11: context-window co-occurrence (rotated into the r12
-# stamp window, registry._HEAD, with the other round-11 additions
-# as never-stamped work per rotation invariant (b)).
+# -- round 11: context-window co-occurrence.
 
 _register(
     "skipgram_pmi",

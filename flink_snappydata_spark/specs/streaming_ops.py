@@ -233,9 +233,7 @@ _register(
         "parity; streaming twin in streaming/count_window.py.",
 )
 
-# -- round 11: the outer windowed stream-stream join (rotated into
-# the r12 stamp window, registry._HEAD, with the other round-11
-# additions).
+# -- round 11: the outer windowed stream-stream join.
 
 
 def _rowlevel_left_join(events: DataFrame) -> DataFrame:
@@ -306,8 +304,7 @@ _register(
 # reference runs on Flink, whose signature beyond-SQL features are the
 # CEP pattern library (SQL MATCH_RECOGNIZE), staged funnels, and the
 # temporal table join (FOR SYSTEM_TIME AS OF) — re-expressed here as
-# windows + interval joins (operators/cep.py). Listed at the head of
-# registry r13 _HEAD window with the other never-stamped round-12 work.
+# windows + interval joins (operators/cep.py).
 
 _register(
     "cep_pattern_match",

@@ -21,6 +21,7 @@ import os
 import tempfile
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -379,9 +380,15 @@ def ingest_stream_to_tables(
     q.awaitTermination()
     # foreachBatch writes through a cloned session whose catalog refresh
     # does not reach the parent; invalidate the parent's relation cache
-    # so readers of the tables see the new files immediately.
+    # so readers of the tables see the new files immediately. A run that
+    # landed no batch (empty source on first ingest) never created the
+    # table, so there is nothing to refresh.
     for table, _ in outputs:
-        stream_df.sparkSession.catalog.refreshTable(table)
+        try:
+            stream_df.sparkSession.catalog.refreshTable(table)
+        except AnalysisException as e:
+            if e.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+                raise
     return q
 
 

@@ -209,29 +209,22 @@ def cell_prefix_sums(
     `per_source_cap` bucket-histogram rank idiom instead, where offsets
     stay keyed and co-partitioned rather than broadcast.
 
-    NOTE: for batch inputs, CONSTRUCTION IS EAGER — a bounded
+    NOTE: BATCH-ONLY, and CONSTRUCTION IS EAGER — a bounded
     LocalLimit probe (one job) picks between the naive window and the
-    cell machinery and materializes the input persist. Streaming
-    inputs skip probe and persist and stay fully lazy (naive window).
+    cell machinery and materializes the input persist. A streaming
+    input raises ``NotImplementedError``: it can neither persist nor
+    run the probe, and Spark rejects the non-time window it would need
+    at ``start()``.
     """
     from pyspark.sql import Window
 
-    pc = list(partition_cols)
-    # A streaming frame can neither persist nor run the LocalLimit
-    # probe below (both are batch actions): fall through to the
-    # fully-lazy naive window, whose unpartitioned global frame is the
-    # only shape a bounded-state stream could window anyway.
     if df.isStreaming:
-        base_w = Window.partitionBy(*pc) if pc else Window.partitionBy()
-        in_w = base_w.orderBy(order_col).rowsBetween(
-            Window.unboundedPreceding, 0
+        raise NotImplementedError(
+            "cell_prefix_sums is batch-only: streaming input cannot be "
+            "probed or persisted, and Spark rejects non-time windows on "
+            "streams"
         )
-        out = df
-        for c in sum_cols:
-            out = out.withColumn(
-                f"cum_{c}", F.sum(c).over(in_w).cast("long")
-            )
-        return out
+    pc = list(partition_cols)
     # The input executes once for the bounds and once into the persisted
     # cell-keyed frame; offsets and the final join both read the persist
     # (without it, an expensive upstream — a full-outer histogram merge,
@@ -250,8 +243,7 @@ def cell_prefix_sums(
     # _shingle_bound_cleared idiom), so it costs one bounded job and
     # doubles as the persist's materialization. NOTE: the probe is an
     # ACTION at DataFrame-construction time — building the returned
-    # frame is eager for batch inputs (streaming inputs took the lazy
-    # branch above).
+    # frame is eager.
     if df.limit(n_cells + 1).count() <= n_cells:
         base_w = Window.partitionBy(*pc) if pc else Window.partitionBy()
         in_w = base_w.orderBy(order_col).rowsBetween(

@@ -53,7 +53,7 @@ def spark():
 # collection time — a central list instead of 80 scattered decorators,
 # and the only way to mark individual PARAMETRIZED cases (marking
 # test_query_matches_oracle's function would drop all 241 oracle-parity
-# params from the default run; this drops only the heavy handful).
+# params from the default run, and none of them is listed here).
 # pytest.ini's `addopts = -m "not slow"` makes the fast selection the
 # default; the FULL suite remains the release gate, run as every
 # round's closing receipt via -m "slow or not slow".
@@ -65,14 +65,6 @@ SLOW_NODE_IDS = {
     "tests/test_determinism.py::test_result_invariant_under_parallelism[pq_codebook]",
     "tests/test_determinism.py::test_result_invariant_under_parallelism[quantile_transform]",
     "tests/test_determinism.py::test_result_invariant_under_parallelism[zipf_fit]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[bpe_encode_stats]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[ivf_pq_prebuilt_topk]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[ivf_pq_topk]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[mmr_select]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[novelty_streamed]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[pq_adc_topk]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[tokenizer_fertility]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[zipf_fit]",
     "tests/test_packing.py::test_pack_sequences_boundary",
     "tests/test_packing.py::test_pack_sequences_per_shard_independent",
     "tests/test_packing.py::test_write_sharded_roundtrip",
@@ -141,6 +133,21 @@ SLOW_NODE_IDS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    ids = {item.nodeid for item in items}
     for item in items:
         if item.nodeid in SLOW_NODE_IDS:
             item.add_marker(pytest.mark.slow)
+    # An entry whose file was collected whole but which matched no item
+    # is stale (a renamed test or param): fail loudly instead of
+    # silently dropping the mark. Runs of other files, and runs that
+    # select single tests by node id, cannot tell and are not checked.
+    if any("::" in arg for arg in config.args):
+        return
+    files = {nodeid.split("::", 1)[0] for nodeid in ids}
+    stale = sorted(
+        n for n in SLOW_NODE_IDS - ids if n.split("::", 1)[0] in files
+    )
+    if stale:
+        raise pytest.UsageError(
+            "SLOW_NODE_IDS entries match no collected test: " + ", ".join(stale)
+        )

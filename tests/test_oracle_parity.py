@@ -32,49 +32,6 @@ def test_registry_contract():
     assert len(qs) >= 20 or len(qs) == len(registry.QUERIES)
 
 
-def test_declaration_order_matches_golden():
-    """Declaration order IS the driver-sampling contract: the driver
-    stamps the first 50 registry entries front-to-back, so a silent
-    reorder (a spec-module import shuffled, a _HEAD edit, a dict
-    rebuild) changes WHICH queries get driver receipts. The full order
-    is pinned as a checked-in golden file — an order change must show
-    up as an explicit, reviewable diff to tests/golden_query_order.txt
-    (regenerate deliberately:
-    `python -c "from flink_snappydata_spark import registry;
-    open('tests/golden_query_order.txt','w').write(
-    chr(10).join(registry.QUERIES)+chr(10))"`)."""
-    import pathlib
-
-    golden = (
-        pathlib.Path(__file__).parent / "golden_query_order.txt"
-    ).read_text().splitlines()
-    actual = list(registry.QUERIES)
-    assert actual == golden, (
-        "declaration order drifted from tests/golden_query_order.txt; "
-        "first diff: "
-        + next(
-            (
-                f"slot {i}: golden={g!r} actual={a!r}"
-                for i, (g, a) in enumerate(zip(golden, actual))
-                if g != a
-            ),
-            f"length {len(golden)} -> {len(actual)}",
-        )
-    )
-
-
-def test_verification_window_hygiene():
-    """The declaration-order window must stay well-formed: unique
-    names, all registered, and the first 50 slots covering every query
-    whose driver stamp is due this round (the rotation + touched set)."""
-    from flink_snappydata_spark.registry import _HEAD, QUERIES
-
-    assert len(_HEAD) == len(set(_HEAD)), "duplicate names in _HEAD"
-    assert set(_HEAD) <= set(QUERIES)
-    # declaration order actually starts with _HEAD
-    assert list(QUERIES)[: len(_HEAD)] == _HEAD
-
-
 #: Round-6 additions, re-checked at the smoke scale as well: oracle
 #: parity at TWO scales catches scale-dependent drift (fixture schema
 #: quirks, empty-group shapes) that a single-scale check can miss.
@@ -180,74 +137,43 @@ def test_round8_queries_match_oracle_at_smoke_scale(spark, name):
     assert not problems, f"{name}@sf0.001: " + "; ".join(problems)
 
 
-def test_stamp_rotation_covers_stale_and_unstamped():
-    """Budget-bounded rotation hygiene, pinned as data.
-
-    ROUND-10 POLICY AMENDMENT (budget math): the round-6 "every third
-    round" cadence became structurally unsatisfiable once all 210
-    queries existed — 50 stamps/round x 4 rounds = 200 < 210, so no
-    rotation can re-stamp every query within 4 rounds, let alone 3.
-    (Same arithmetic as the round-8 amendment, which relaxed the
-    original "every never-stamped query is inside the window" pin when
-    the new-operator backlog first exceeded the window.) The staleness
-    threshold is therefore DERIVED from the live registry size:
-    ceil(len(QUERIES) / 50) rounds — the tightest cadence the budget
-    can sustain — so it tightens or relaxes with the actual math
-    instead of hard-coding a number that silently rots.
-
-    The satisfiable invariants, each still checked strictly:
-
-    (a) every query whose latest stamp is >= threshold rounds old is
-        inside the window (the cadence floor never slips);
-    (b) every never-stamped query is inside the window OR heads the
-        post-window declaration order (the r11 queue) — new work is
-        first in line next round, never buried behind stamped queries;
-    (c) the window itself carries no filler: every slot is either
-        never-stamped or already stamped (i.e. a re-proof/rotation
-        entry) — trivially true, kept as a schema guard on _HEAD.
-
-    Locally, ALL queries — stamped or queued — are oracle-verified
-    every pytest run by test_query_matches_oracle; driver stamps are
-    receipts, not the only verification.
-    """
-    import glob
+def test_stamp_order_is_computed_from_receipts(tmp_path):
+    """Declaration order IS the driver-sampling contract: the
+    correctness driver stamps the first 50 registry entries each round
+    into CORRECTNESS_r{N}.json. The order is computed from those
+    receipts — never-stamped queries first, then stalest first, ties in
+    registration order — so a new receipt rotates the window with no
+    code edit."""
     import json
-    import math
-    import re
+    import pathlib
 
-    from flink_snappydata_spark.registry import _HEAD, _HEAD_ROUND, QUERIES
+    from flink_snappydata_spark.registry import (
+        _REGISTERED,
+        _last_stamps,
+        stamp_order,
+    )
 
-    stamps: dict[str, int] = {}
-    for path in sorted(glob.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", path).group(1))
-        for name in json.load(open(path)):
-            stamps[name] = max(stamps.get(name, 0), rnd)
-    # Staleness is computed relative to the round the window was BUILT
-    # for (_HEAD_ROUND), not max(stamp files)+1 — so the suite a round
-    # ships is green for that round both before and after the driver
-    # writes CORRECTNESS_r{N}.json. The window itself must not be
-    # stale: once the driver has stamped _HEAD_ROUND's window, the next
-    # session must rotate before anything else.
-    this_round = _HEAD_ROUND
-    assert _HEAD_ROUND >= max(stamps.values()), (
-        f"_HEAD window built for r{_HEAD_ROUND} but driver stamps reach "
-        f"r{max(stamps.values())}: rotate _HEAD and bump _HEAD_ROUND"
-    )
-    threshold = math.ceil(len(QUERIES) / len(_HEAD))
-    window = set(_HEAD)
-    never = {n for n in QUERIES if n not in stamps}
-    stale = {
-        n for n, r in stamps.items() if n in QUERIES and this_round - r >= threshold
-    }
-    assert stale <= window, (
-        f"{threshold}+-round-stale outside window: {sorted(stale - window)}"
-    )
-    overflow = never - window
-    queue_slots = list(QUERIES)[len(_HEAD) : len(_HEAD) + len(overflow)]
-    assert overflow == set(queue_slots), (
-        "never-stamped overflow must occupy the first post-window "
-        f"slots; misplaced: {sorted(overflow - set(queue_slots))}"
-    )
+    names = ["a", "b", "c", "d", "e"]
+    for stamps, want in [
+        ({}, ["a", "b", "c", "d", "e"]),
+        ({"a": 1, "b": 1, "c": 1, "d": 1, "e": 1}, ["a", "b", "c", "d", "e"]),
+        ({"a": 3, "b": 1, "c": 2, "d": 1}, ["e", "b", "d", "c", "a"]),
+        ({"a": 2, "e": 1, "gone": 0}, ["b", "c", "d", "e", "a"]),
+    ]:
+        assert stamp_order(names, stamps) == want, stamps
+
+    assert _last_stamps(tmp_path) == {}
+    for rnd, stamped in [(1, "ab"), (2, "cd")]:
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps({n: {} for n in stamped})
+        )
+    assert _last_stamps(tmp_path) == {"a": 1, "b": 1, "c": 2, "d": 2}
+    assert stamp_order(names, _last_stamps(tmp_path))[:2] == ["e", "a"]
+    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps({"e": {}, "a": {}}))
+    assert stamp_order(names, _last_stamps(tmp_path))[:2] == ["b", "c"]
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    assert list(registry.QUERIES) == stamp_order(_REGISTERED, _last_stamps(root))
 
 
 def test_registry_and_specs_share_one_ordered_dict():
@@ -261,4 +187,6 @@ def test_registry_and_specs_share_one_ordered_dict():
 
     assert registry.QUERIES is specs.QUERIES
     assert registry.QUERIES is base.QUERIES
-    assert list(registry.QUERIES)[: len(registry._HEAD)] == registry._HEAD
+    assert list(base.QUERIES) == registry.stamp_order(
+        registry._REGISTERED, registry._last_stamps(registry._ROOT)
+    )

@@ -35,14 +35,13 @@ def test_bpe_driver_fold_matches_distributed_loop(spark, docs, n_merges):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
     )
-    orig = T.BPE_DRIVER_VOCAB_MAX
-    try:
-        T.BPE_DRIVER_VOCAB_MAX = 1 << 16
+    # hypothesis reruns the body per example, so the function-scoped
+    # monkeypatch fixture cannot be used; a context undoes each example.
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(T, "BPE_DRIVER_VOCAB_MAX", 1 << 16)
         fast = [tuple(r) for r in T.bpe_merges(df, n_merges).collect()]
-        T.BPE_DRIVER_VOCAB_MAX = 0  # force the distributed loop
+        mp.setattr(T, "BPE_DRIVER_VOCAB_MAX", 0)  # force the distributed loop
         slow = [tuple(r) for r in T.bpe_merges(df, n_merges).collect()]
-    finally:
-        T.BPE_DRIVER_VOCAB_MAX = orig
     assert fast == slow
 
 
@@ -63,46 +62,37 @@ def _docs_frame(spark, n=60):
     return spark.createDataFrame(rows, "doc_id long, text string, lang string")
 
 
-def test_quality_auc_fast_path_matches_cell_path(spark):
+def test_quality_auc_fast_path_matches_cell_path(spark, monkeypatch):
     docs = _docs_frame(spark)
-    orig = T.AUC_NAIVE_MAX
-    try:
-        T.AUC_NAIVE_MAX = 1 << 13
-        fast = [tuple(r) for r in T.quality_auc(docs).collect()]
-        T.AUC_NAIVE_MAX = 0  # force the cell machinery
-        slow = [tuple(r) for r in T.quality_auc(docs).collect()]
-    finally:
-        T.AUC_NAIVE_MAX = orig
+    monkeypatch.setattr(T, "AUC_NAIVE_MAX", 1 << 13)
+    fast = [tuple(r) for r in T.quality_auc(docs).collect()]
+    monkeypatch.setattr(T, "AUC_NAIVE_MAX", 0)  # force the cell machinery
+    slow = [tuple(r) for r in T.quality_auc(docs).collect()]
     assert fast == slow
 
 
-def test_ccnet_buckets_fast_path_matches_cell_path(spark):
+def test_ccnet_buckets_fast_path_matches_cell_path(spark, monkeypatch):
     docs = _docs_frame(spark)
-    orig = T.CCNET_NAIVE_MAX
-    try:
-        T.CCNET_NAIVE_MAX = 1 << 14
-        fast = [tuple(r) for r in T.ccnet_buckets(docs).collect()]
-        T.CCNET_NAIVE_MAX = 0  # force the cell machinery
-        slow = [tuple(r) for r in T.ccnet_buckets(docs).collect()]
-    finally:
-        T.CCNET_NAIVE_MAX = orig
+    monkeypatch.setattr(T, "CCNET_NAIVE_MAX", 1 << 14)
+    fast = [tuple(r) for r in T.ccnet_buckets(docs).collect()]
+    monkeypatch.setattr(T, "CCNET_NAIVE_MAX", 0)  # force the cell machinery
+    slow = [tuple(r) for r in T.ccnet_buckets(docs).collect()]
     assert fast == slow
     assert len(fast) == 60
 
 
-def test_cell_prefix_sums_streaming_stays_lazy(spark):
-    """ADVICE r14: a streaming frame must not trip the eager LocalLimit
-    probe (AnalysisException) — it takes the lazy naive-window branch
-    and construction succeeds without running any job."""
+def test_cell_prefix_sums_rejects_streaming_input(spark):
+    """cell_prefix_sums is batch-only: its probe and persist are batch
+    actions, and Spark rejects the non-time window a stream would need
+    at start(). A streaming frame fails loudly at construction."""
     from flink_snappydata_spark.util import cell_prefix_sums
 
     stream = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
         .select(F.col("value").alias("v"), F.lit(1).alias("one"))
     )
-    out = cell_prefix_sums(stream, "v", ["one"])
-    assert out.isStreaming
-    assert "cum_one" in out.columns
+    with pytest.raises(NotImplementedError, match="batch-only"):
+        cell_prefix_sums(stream, "v", ["one"])
 
 
 # ---------------------------------------------------------------------------
@@ -226,7 +216,7 @@ def test_kmeans_train_matches_python_lloyds_replay(spark):
     assert got == expected
 
 
-def test_bpe_driver_fold_same_letter_runs(spark):
+def test_bpe_driver_fold_same_letter_runs(spark, monkeypatch):
     """The two-pass replace's same-letter-run semantics ('a a a a'
     merges pairwise left-to-right, leaving the odd tail) must agree
     between the paths — the exact case the docstring pins."""
@@ -234,13 +224,9 @@ def test_bpe_driver_fold_same_letter_runs(spark):
         [(0, "aaaa aaa aa bbbb abab"), (1, "aaaa aaaa cc")],
         "doc_id long, text string",
     )
-    orig = T.BPE_DRIVER_VOCAB_MAX
-    try:
-        T.BPE_DRIVER_VOCAB_MAX = 1 << 16
-        fast = [tuple(r) for r in T.bpe_merges(df, 4).collect()]
-        T.BPE_DRIVER_VOCAB_MAX = 0
-        slow = [tuple(r) for r in T.bpe_merges(df, 4).collect()]
-    finally:
-        T.BPE_DRIVER_VOCAB_MAX = orig
+    monkeypatch.setattr(T, "BPE_DRIVER_VOCAB_MAX", 1 << 16)
+    fast = [tuple(r) for r in T.bpe_merges(df, 4).collect()]
+    monkeypatch.setattr(T, "BPE_DRIVER_VOCAB_MAX", 0)
+    slow = [tuple(r) for r in T.bpe_merges(df, 4).collect()]
     assert fast == slow
     assert len(fast) >= 1

@@ -674,6 +674,25 @@ def test_streaming_wordcount_ingest_matches_batch(spark):
     spark.sql(f"DROP TABLE IF EXISTS {cnt_t}")
 
 
+def test_ingest_of_empty_source_lands_nothing(spark, tmp_path):
+    """A first availableNow ingest that finds no input lands no batch
+    and so never creates the table; it must return without raising."""
+    import uuid
+
+    from flink_snappydata_spark.operators import wordcount
+
+    src = tmp_path / "docs"
+    src.mkdir()
+    table = f"wc_empty_{uuid.uuid4().hex[:8]}"
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        str(src)
+    )
+    wordcount.streaming_wordcount_ingest(
+        stream, table, checkpoint=str(tmp_path / "ckpt")
+    )
+    assert not spark.catalog.tableExists(table)
+
+
 def test_streaming_dedup_ingest_matches_batch(spark):
     """Streaming-ingest twin of exact_dedup: documents arrive over 4
     micro-batches, each appending per-digest (min doc_id, copy count,
