@@ -917,11 +917,10 @@ def ks_drift(
     histogram (:func:`_drift_partials` — one map-side-combined
     aggregation over only the two types' rows; the frame is bounded by
     the value domain's distinct-cent cardinality, not event count).
-    The two cumulative sums ride
+    The two cumulative sums and their totals ride
     :func:`~flink_snappydata_spark.util.cell_prefix_sums` — the
-    `quality_auc` value-cell two-phase prefix — so even a merged
-    histogram with 10⁸ distinct cents never funnels through one window
-    task; totals are a 1-row aggregate broadcast back. The argmax is a
+    value-cell two-phase prefix — so even a merged histogram with 10⁸
+    distinct cents never funnels through one window task. The argmax is a
     1-row aggregate, then a filter on the persisted merged frame — no
     corpus-sized (or histogram-sized) single-task sort anywhere.
     The partials are MERGEABLE int64 sums, which is what lets the
@@ -953,20 +952,16 @@ def _ks_from_merged(merged: DataFrame) -> DataFrame:
     tie-break."""
     from flink_snappydata_spark.util import cell_prefix_sums, tracked_persist
 
-    totals = merged.agg(
-        F.sum("ca").cast("long").alias("n_a"),
-        F.sum("cb").cast("long").alias("n_b"),
-    )
     cdf = tracked_persist(
-        cell_prefix_sums(merged, "v", ["ca", "cb"])
-        .crossJoin(F.broadcast(totals))
-        .select(
+        cell_prefix_sums(merged, "v", ["ca", "cb"]).select(
             "v",
-            "n_a",
-            "n_b",
+            F.col("tot_ca").alias("n_a"),
+            F.col("tot_cb").alias("n_b"),
             F.abs(
-                F.col("cum_ca").cast("double") / F.col("n_a").cast("double")
-                - F.col("cum_cb").cast("double") / F.col("n_b").cast("double")
+                F.col("cum_ca").cast("double")
+                / F.col("tot_ca").cast("double")
+                - F.col("cum_cb").cast("double")
+                / F.col("tot_cb").cast("double")
             ).alias("diff"),
         )
     )

@@ -275,41 +275,32 @@ def quantile_transform(
 
     Scale: the corpus collapses FIRST to the per-type value histogram
     (map-side combined, bounded by the value domain's distinct-cent
-    cardinality per type, not event count). The cumulative count is
-    then the keyed two-phase prefix (the `quality_auc`/`ccnet_buckets`
-    rank idiom): values bucket into ``n_cells`` fixed bounds-derived
-    cells (a monotone affine map, so cell order = value order), the
-    per-(type, cell) histogram — ≤ types × n_cells narrow rows — takes
-    the strictly-lower-cell prefix on a type-partitioned window, and
-    within-cell prefixes run on (type, cell)-partitioned windows whose
-    partitions hold ~1/n_cells of a type's distinct values each. NO
-    window ever holds a type's whole histogram, so a type with 10⁸
-    distinct cents never funnels through one task (the old shape —
-    ``Window.partitionBy(type)`` over the full histogram — did exactly
-    that). Per-type totals ride a broadcast join; q is one double
-    division of exact int64s, bit-identical to the single-window
-    spelling.
+    cardinality per type, not event count). The cumulative count and
+    the per-type total are then the keyed two-phase prefix of
+    :func:`~flink_snappydata_spark.util.cell_prefix_sums`: values
+    bucket into ``n_cells`` fixed bounds-derived cells (a monotone
+    map, so cell order = value order), the per-(type, cell) histogram
+    — ≤ types × n_cells narrow rows — takes the strictly-lower-cell
+    prefix on a type-partitioned window, and within-cell prefixes run
+    on (type, cell)-partitioned windows whose partitions hold
+    ~1/n_cells of a type's distinct values each. NO window ever holds
+    a type's whole histogram, so a type with 10⁸ distinct cents never
+    funnels through one task (the naive ``Window.partitionBy(type)``
+    over the full histogram would). q is one double division of exact
+    int64s, bit-identical to the single-window spelling.
     """
-    # cell_prefix_sums persists `hist` internally; `totals` reads the
-    # same persisted frame.
     hist = events.groupBy("event_type", cents("value").alias("v")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    totals = hist.groupBy("event_type").agg(F.sum("n").alias("n_tot"))
-    out = (
-        cell_prefix_sums(
-            hist, "v", ["n"], ("event_type",), n_cells=n_cells
-        )
-        .join(F.broadcast(totals), "event_type")
-        .select(
-            "event_type",
-            "v",
-            "n",
-            (
-                F.col("cum_n").cast("double")
-                / F.col("n_tot").cast("double")
-            ).alias("q"),
-        )
+    out = cell_prefix_sums(
+        hist, "v", ["n"], ("event_type",), n_cells=n_cells
+    ).select(
+        "event_type",
+        "v",
+        "n",
+        (
+            F.col("cum_n").cast("double") / F.col("tot_n").cast("double")
+        ).alias("q"),
     )
     if sort:
         return presentation_sorted(

@@ -1269,35 +1269,24 @@ def pareto_frontier(part: DataFrame, n_cells: int = 4096) -> DataFrame:
     size at every strictly lower price — computed WITHOUT a global
     sort of the catalog: prices collapse to the per-price best-size
     frame (one map-side-combined max, ≤ |distinct prices| rows), the
-    running "best at lower price" uses the two-phase cell idiom of
-    :func:`~flink_snappydata_spark.util.cell_prefix_sums` (affine
-    monotone bucketing into ``n_cells`` cells, a prefix-max window
-    over the ≤ n_cells cell frame that broadcasts back, within-cell
-    windows holding ~1/n_cells of the prices each — no window task
-    ever holds the whole price histogram), and frontier membership
-    joins back to the catalog as a plain hash join on price. Every
-    shuffle is on price/cell keys; the catalog rows never sort.
+    running "best at lower price" is a two-phase prefix MAX over the
+    value cells of :func:`~flink_snappydata_spark.util.cell_prefix_sums`
+    (the same monotone map of prices onto ``n_cells`` cells; a
+    prefix-max window over the ≤ n_cells cell frame broadcasts back,
+    and within-cell windows hold ~1/n_cells of the prices each — no
+    window task ever holds the whole price histogram), and frontier
+    membership joins back to the catalog as a plain hash join on
+    price. Every shuffle is on price/cell keys; the catalog rows never
+    sort.
     """
     from pyspark.sql import Window
+
+    from flink_snappydata_spark.util import _value_cells
 
     per = part.groupBy("p_retailprice").agg(
         F.max("p_size").alias("best_size")
     )
-    bounds = per.agg(
-        F.min("p_retailprice").alias("_vmin"),
-        F.max("p_retailprice").alias("_vmax"),
-    )
-    g = per.crossJoin(F.broadcast(bounds)).withColumn(
-        "_cell",
-        F.least(
-            F.floor(
-                (F.col("p_retailprice") - F.col("_vmin"))
-                * F.lit(float(n_cells))
-                / (F.col("_vmax") - F.col("_vmin") + F.lit(1e-9))
-            ),
-            F.lit(n_cells - 1),
-        ).cast("long"),
-    )
+    g = _value_cells(per, "p_retailprice", n_cells)
     cell_w = Window.orderBy("_cell").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -1348,14 +1337,13 @@ def weighted_median_price(lineitem: DataFrame) -> DataFrame:
 
     Scale: collapses FIRST to per-(flag, price) weight sums (one
     map-side-combined shuffle, bounded by flags × distinct prices);
-    the cumulative weight rides
+    the cumulative weight and the flag's total ride
     :func:`~flink_snappydata_spark.util.cell_prefix_sums` — the
     two-phase value-cell prefix, so no window task ever holds a whole
     flag's price histogram (the naive
     ``Window.partitionBy(flag).orderBy(price)`` would funnel each
-    flag's distinct prices through one task); group totals broadcast
-    (3 flags), and the argmin-over-qualifying is a flags-sized
-    aggregation.
+    flag's distinct prices through one task); the
+    argmin-over-qualifying is a flags-sized aggregation.
     """
     from flink_snappydata_spark.util import cell_prefix_sums
 
@@ -1368,15 +1356,13 @@ def weighted_median_price(lineitem: DataFrame) -> DataFrame:
         .groupBy("flag", "v")
         .agg(F.sum("w").alias("w"))
     )
-    cum = cell_prefix_sums(per_value, "v", ["w"], partition_cols=("flag",))
-    tot = per_value.groupBy("flag").agg(F.sum("w").alias("tw"))
     return (
-        cum.join(F.broadcast(tot), "flag")
+        cell_prefix_sums(per_value, "v", ["w"], partition_cols=("flag",))
         .groupBy("flag")
         .agg(
-            F.min("tw").alias("total_weight"),
+            F.min("tot_w").alias("total_weight"),
             F.min(
-                F.when(2 * F.col("cum_w") >= F.col("tw"), F.col("v"))
+                F.when(2 * F.col("cum_w") >= F.col("tot_w"), F.col("v"))
             ).alias("median_cents"),
         )
         .select(

@@ -9,12 +9,14 @@ so the DuckDB oracle reproduces them bit-for-bit.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from flink_snappydata_spark.util import spread, tracked_persist
+from flink_snappydata_spark.util import (
+    cell_prefix_sums,
+    spread,
+    tracked_persist,
+)
 
 TOKEN_REGEX = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
@@ -1515,19 +1517,6 @@ def gopher_rules(documents: DataFrame, sort: bool = True) -> DataFrame:
     return out.orderBy("doc_id") if sort else out
 
 
-#: Margin-cell width for the AUC prefix machinery: margins lie in
-#: [-1, 1], so floor(margin * 2^12) yields at most 2^13 + 1 cells —
-#: a histogram the driver-side of the plan never sees and the
-#: single-partition prefix window is provably bounded over.
-AUC_CELLS_SHIFT = 12
-
-#: Distinct-margin ceiling for quality_auc's naive-window fast path —
-#: the cell-histogram size the slow path would build anyway, so the
-#: naive single-partition window is never bigger than the bounded
-#: window the cell path already pays.
-AUC_NAIVE_MAX = (1 << (AUC_CELLS_SHIFT + 1)) + 1
-
-
 def quality_auc(documents: DataFrame, pos_lang: str = "en") -> DataFrame:
     """Exact tie-aware ROC AUC of the hashed linear quality model's
     margin as a ranker for ``lang == pos_lang`` — the "evaluate the
@@ -1546,22 +1535,12 @@ def quality_auc(documents: DataFrame, pos_lang: str = "en") -> DataFrame:
     division, so the full value-hash oracle applies. Returns ONE row:
     ``(n_pos, n_neg, auc_num, auc_den, auc)``.
 
-    Scale — a global rank with NO global sort: (1) one corpus scan
-    computes each document's margin (pure per-row expressions); (2) a
-    ``margin``-keyed aggregation collapses the corpus to distinct
-    margins with (p, q) counts (map-side combined — ties are FREE);
-    (3) the global prefix count splits two-phase, the
-    :func:`~flink_snappydata_spark.pipeline.packing.global_index`
-    idiom transposed to value-ranges: margins bucket into ≤ 2^13 + 1
-    fixed cells (floor(margin·2^12) — monotone, so cell order = margin
-    order), the ≤ 8193-row cell histogram takes one bounded
-    single-partition prefix window, and within-cell prefixes are a
-    cell-partitioned window over distinct margins; (4) one single-row
-    final aggregation. Only (margin, count) pairs ever shuffle. The
-    irreducible hot case is a corpus whose distinct margins crowd into
-    one 2^-12-wide cell — real score distributions spread across
-    hundreds of cells, and even then the window holds narrow triples,
-    never documents.
+    Scale — a global rank with NO global sort: one corpus scan computes
+    each document's margin, a ``margin``-keyed aggregation collapses the
+    corpus to distinct margins with (p, q) counts (map-side combined —
+    ties are FREE), and ``cum_s`` is an exclusive running count from
+    :func:`~flink_snappydata_spark.util.cell_prefix_sums` over that
+    frame. Only (margin, count) rows ever shuffle.
     """
     _, _, margin = _qm_margin(F.col("text"))
     is_pos = F.col("lang") == F.lit(pos_lang)
@@ -1578,69 +1557,9 @@ def quality_auc(documents: DataFrame, pos_lang: str = "en") -> DataFrame:
         )
         .withColumn("t", F.col("p") + F.col("q"))
     )
-    g = tracked_persist(g)
-    # Bounded-input fast path (the cell_prefix_sums idiom): the cell
-    # machinery exists so no ONE window partition ever holds a large
-    # distinct-margin frame. When the whole distinct-margin frame is
-    # no bigger than the cell histogram the slow path would build
-    # anyway (≤ 2^13 + 1 rows), the naive single-partition prefix
-    # window computes the IDENTICAL integer `cum` in one job where the
-    # cell path pays a histogram aggregation, a prefix window and a
-    # broadcast join. The LocalLimit probe doubles as the persist's
-    # materialization; `documents` is always a batch frame here (the
-    # margin scan is batch-only), so the eager probe is safe.
-    n_cells = AUC_NAIVE_MAX
-    if g.limit(n_cells + 1).count() <= n_cells:
-        naive_w = Window.orderBy("margin").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        cum = g.select(
-            "margin",
-            "p",
-            "q",
-            "t",
-            F.coalesce(F.sum("t").over(naive_w), F.lit(0)).alias("cum"),
-        )
-    else:
-        g = g.withColumn(
-            "cell",
-            F.floor(F.col("margin") * F.lit(1 << AUC_CELLS_SHIFT)).cast(
-                "long"
-            ),
-        )
-        # Cell histogram: <= 2^13 + 1 rows by construction — the bounded
-        # single-partition prefix window the docstring pins.
-        cell_w = Window.orderBy("cell").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        cell_off = (
-            g.groupBy("cell")
-            .agg(F.sum("t").alias("ct"))
-            .select(
-                "cell",
-                F.coalesce(F.sum("ct").over(cell_w), F.lit(0))
-                .cast("long")
-                .alias("cell_off"),
-            )
-        )
-        in_w = (
-            Window.partitionBy("cell")
-            .orderBy("margin")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        cum = (
-            g.join(F.broadcast(cell_off), "cell")
-            .select(
-                "margin",
-                "p",
-                "q",
-                "t",
-                (
-                    F.col("cell_off")
-                    + F.coalesce(F.sum("t").over(in_w), F.lit(0))
-                ).alias("cum"),
-            )
-        )
+    # Up to 2^13 + 1 distinct margins take the single naive window.
+    cum = cell_prefix_sums(g, "margin", ["t"], n_cells=(1 << 13) + 1)
+    cum = cum.withColumn("cum", F.col("cum_t") - F.col("t"))
     agg = cum.agg(
         F.sum("p").cast("long").alias("n_pos"),
         F.sum("q").cast("long").alias("n_neg"),
@@ -1668,20 +1587,8 @@ def quality_auc(documents: DataFrame, pos_lang: str = "en") -> DataFrame:
     )
 
 
-#: Surprisal-cell width for the CCNet-bucket rank machinery: avg_bits
-#: is < 64 by construction (a token's surprisal is at most
-#: floor(log2 N) < 63 bits), so floor(avg_bits * 2^8) yields < 2^14
-#: cells per language.
-CCNET_CELLS_SHIFT = 8
-
 #: Tercile labels in rank order (low surprisal = most in-distribution).
 CCNET_BUCKET_NAMES = ["head", "middle", "tail"]
-
-#: Corpus-frame ceiling for ccnet_buckets' naive-rank fast path — the
-#: per-language cell-histogram bound (< 2^14) the slow path's prefix
-#: window is sized to, so the naive window never holds more rows than
-#: the machinery it replaces was built to bound.
-CCNET_NAIVE_MAX = 1 << (CCNET_CELLS_SHIFT + 6)
 
 
 def ccnet_buckets(documents: DataFrame, sort: bool = True) -> DataFrame:
@@ -1705,15 +1612,10 @@ def ccnet_buckets(documents: DataFrame, sort: bool = True) -> DataFrame:
     Scale — per-language global rank with NO per-language global sort
     (a naive ``row_number() OVER (PARTITION BY lang ORDER BY ...)``
     funnels each language — a third of a 100 TB corpus — through one
-    window partition): the :func:`per_source_cap` two-phase rank
-    transposed to value-ranges. Surprisals bucket into < 2^14 fixed
-    cells (floor(avg_bits·2^8) — monotone in the score); per-(lang,
-    cell) counts prefix-sum DISTRIBUTEDLY (a window over < 2^14
-    narrow rows per language, never documents); the rank is a (lang,
-    cell)-partitioned row_number plus the cell offset. The per-lang
-    totals frame is |langs| rows and broadcasts. Worst window
-    partition = documents within one 1/256-bit surprisal sliver of
-    one language — real corpora spread over hundreds of cells.
+    window partition): the rank and the per-language count ``c`` are
+    the running and total count from
+    :func:`~flink_snappydata_spark.util.cell_prefix_sums` keyed by
+    ``lang`` with a ``doc_id`` tiebreak.
     """
     scored = unigram_surprisal(documents, sort=False).select(
         "doc_id", "avg_bits"
@@ -1721,68 +1623,17 @@ def ccnet_buckets(documents: DataFrame, sort: bool = True) -> DataFrame:
     keyed = (
         documents.select("doc_id", "lang")
         .join(scored.hint("shuffle_hash"), "doc_id")
-        .withColumn(
-            "cell",
-            F.floor(
-                F.col("avg_bits") * F.lit(1 << CCNET_CELLS_SHIFT)
-            ).cast("long"),
-        )
+        .withColumn("one", F.lit(1).cast("long"))
     )
-    keyed = tracked_persist(keyed)
-    # Bounded-input fast path (the cell_prefix_sums idiom): the
-    # two-phase cell rank exists so no one window partition holds a
-    # whole language's documents. When the ENTIRE corpus frame is no
-    # bigger than the per-language cell histogram the slow path builds
-    # anyway (< 2^14 rows), the naive per-language rank window over the
-    # persisted frame computes the IDENTICAL ranks in one job where
-    # the cell path pays a histogram aggregation + persist, an offsets
-    # window and two broadcast joins. The LocalLimit probe doubles as
-    # the persist's materialization; `documents` is batch-only here.
-    n_cells = CCNET_NAIVE_MAX
-    if keyed.limit(n_cells + 1).count() <= n_cells:
-        rank_w = Window.partitionBy("lang").orderBy("avg_bits", "doc_id")
-        cnt_w = Window.partitionBy("lang")
-        ranked = keyed.select(
-            "doc_id",
-            "lang",
-            "avg_bits",
-            F.row_number().over(rank_w).cast("long").alias("lang_rank"),
-            F.count(F.lit(1)).over(cnt_w).cast("long").alias("c"),
-        )
-    else:
-        hist = keyed.groupBy("lang", "cell").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        hist = tracked_persist(hist)
-        off_w = (
-            Window.partitionBy("lang")
-            .orderBy("cell")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = hist.select(
-            "lang",
-            "cell",
-            F.coalesce(F.sum("cnt").over(off_w), F.lit(0)).alias("off"),
-        )
-        totals = hist.groupBy("lang").agg(
-            F.sum("cnt").cast("long").alias("c")
-        )
-        rank_w = Window.partitionBy("lang", "cell").orderBy(
-            "avg_bits", "doc_id"
-        )
-        ranked = (
-            keyed.join(F.broadcast(offsets), ["lang", "cell"])
-            .join(F.broadcast(totals), "lang")
-            .select(
-                "doc_id",
-                "lang",
-                "avg_bits",
-                (F.row_number().over(rank_w) + F.col("off"))
-                .cast("long")
-                .alias("lang_rank"),
-                "c",
-            )
-        )
+    # Up to 2^14 documents take the naive per-language window.
+    ranked = cell_prefix_sums(
+        keyed,
+        "avg_bits",
+        ["one"],
+        ("lang",),
+        n_cells=1 << 14,
+        then_by=("doc_id",),
+    ).withColumnsRenamed({"cum_one": "lang_rank", "tot_one": "c"})
     # Exact integer division (the (s - s%n)/n idiom used throughout —
     # the subtraction makes the double division exactly divisible, so
     # no float-rounding edge can cross an integer boundary).
@@ -2101,11 +1952,8 @@ def readability_scores(documents: DataFrame, sort: bool = True) -> DataFrame:
 #: fold. Rows are narrow (a ≤ 2·max_word_len+2-char symbol string + an
 #: int64), so the collect is bounded at a few MB — a driver-memory
 #: bound that holds at ANY corpus scale: a vocabulary larger than this
-#: (web-scale corpora) takes the distributed loop instead. Overridable
-#: for deployments via SPARK_GRAFT_BPE_DRIVER_VOCAB_MAX.
-BPE_DRIVER_VOCAB_MAX = int(
-    os.environ.get("SPARK_GRAFT_BPE_DRIVER_VOCAB_MAX", 1 << 16)
-)
+#: (web-scale corpora) takes the distributed loop instead.
+BPE_DRIVER_VOCAB_MAX = 1 << 16
 
 
 def _bpe_driver_fold(

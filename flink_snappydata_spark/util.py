@@ -172,49 +172,80 @@ def presentation_sorted(
     return df.orderBy(*cols)
 
 
+def _value_cells(df: DataFrame, order_col: str, n_cells: int) -> DataFrame:
+    """``df`` plus ``_cell`` in ``[0, n_cells)``: ``order_col`` (any
+    numeric type) mapped onto ``n_cells`` equal-width cells spanning
+    its GLOBAL min/max. The map is monotone, so cell order is value
+    order and equal values share a cell; the two bounds ride a
+    one-row broadcast cross join."""
+    v = F.col(order_col).cast("double")
+    bounds = df.agg(F.min(v).alias("_vmin"), F.max(v).alias("_vmax"))
+    cell = F.floor(
+        (v - F.col("_vmin"))
+        * F.lit(float(n_cells))
+        / (F.col("_vmax") - F.col("_vmin") + F.lit(1e-9))
+    )
+    return (
+        df.crossJoin(F.broadcast(bounds))
+        .withColumn("_cell", F.least(cell, F.lit(n_cells - 1)).cast("long"))
+        .drop("_vmin", "_vmax")
+    )
+
+
 def cell_prefix_sums(
     df: DataFrame,
     order_col: str,
     sum_cols: list[str],
     partition_cols: tuple[str, ...] = (),
     n_cells: int = 4096,
+    then_by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Inclusive (right-closed) running sums of ``sum_cols`` in
-    ``order_col`` order within each ``partition_cols`` group — WITHOUT
-    a window that holds a whole group, the hazard of the naive
-    ``Window.partitionBy(keys).orderBy(v)`` spelling when a group's
-    distinct-value frame is itself large (a cumulative CDF over 10⁸
-    distinct cents would funnel through one task).
+    ``(order_col, *then_by)`` order within each ``partition_cols``
+    group — WITHOUT a window that holds a whole group, the hazard of
+    the naive ``Window.partitionBy(keys).orderBy(v)`` spelling when a
+    group is itself large (a cumulative CDF over 10⁸ distinct cents
+    would funnel through one task). The engine's one exact-rank/CDF
+    primitive: a bounded probe picks the naive window or the two-phase
+    value-cell prefix.
 
-    The `quality_auc`/`ccnet_buckets` rank idiom, generalized: values
-    bucket into ``n_cells`` fixed cells derived from the GLOBAL
-    min/max by a monotone affine integer map (cell order = value
-    order), per-(group, cell) subtotals take the strictly-lower-cell
-    prefix on a window whose partitions hold ≤ n_cells narrow rows,
-    and within-cell inclusive prefixes run on (group, cell)-partitioned
-    windows holding ~1/n_cells of a group's values each. The cell
-    offset table (≤ groups × n_cells rows) broadcasts back.
+    ``order_col`` may be integral, decimal or fractional. ``then_by``
+    breaks ties in ``order_col``: it is appended to the order of every
+    window, so a running count over ``(score, doc_id)`` is a row
+    number. ``(order_col, *then_by)`` should be unique within a group
+    (a histogram frame, or a unique tiebreak); otherwise tied rows
+    take their running sums in an arbitrary order.
+
+    Small input (at most ``n_cells`` rows — one LocalLimit probe, which
+    also materializes the input persist): the naive window. Larger
+    input: :func:`_value_cells` buckets values into ``n_cells`` cells,
+    per-(group, cell) subtotals take the strictly-lower-cell prefix on
+    a window whose partitions hold ≤ n_cells narrow rows, within-cell
+    inclusive prefixes run on (group, cell)-partitioned windows holding
+    ~1/n_cells of a group's values each, and the cell offset table
+    (≤ groups × n_cells rows) broadcasts back. Both branches return
+    the SAME integers. Exclusive prefixes are ``cum_<col> - <col>``.
 
     Sums run in the input columns' own type (callers pass int64;
-    results cast to long), and every per-value result is the SAME
-    integer as the naive window's — callers' downstream divisions are
-    bit-identical. ``sum_cols`` must be null-free (coalesce first).
-    Adds one ``cum_<col>`` column per sum col; consumes the names
-    ``_vmin/_vmax/_cell/_off_*`` internally.
+    results cast to long). ``sum_cols`` must be null-free (coalesce
+    first). Adds ``cum_<col>`` and ``tot_<col>`` (the group's total,
+    the denominator of a CDF — it rides the same window or broadcast,
+    so a caller needs no totals pass of its own) per sum col; consumes
+    the names ``_vmin/_vmax/_cell/_ct_*/_off_*`` internally.
 
     Bound: the broadcast offset table is ``groups × n_cells`` rows, so
-    ``partition_cols`` must be LOW-cardinality (a type/language/source
-    vocabulary — the current consumers use at most the event-type key).
-    A high-cardinality group key (per-user, per-document) needs the
-    `per_source_cap` bucket-histogram rank idiom instead, where offsets
-    stay keyed and co-partitioned rather than broadcast.
+    ``partition_cols`` must be LOW-cardinality (a type/language/flag
+    vocabulary). A high-cardinality group key (per-user, per-document)
+    needs the `per_source_cap` bucket-histogram rank idiom instead,
+    where offsets stay keyed and co-partitioned rather than broadcast.
 
-    NOTE: BATCH-ONLY, and CONSTRUCTION IS EAGER — a bounded
-    LocalLimit probe (one job) picks between the naive window and the
-    cell machinery and materializes the input persist. A streaming
-    input raises ``NotImplementedError``: it can neither persist nor
-    run the probe, and Spark rejects the non-time window it would need
-    at ``start()``.
+    NOTE: BATCH-ONLY, and CONSTRUCTION IS EAGER — the probe is an
+    action, so every consumer (`quality_auc`, `ccnet_buckets`,
+    `zipf_fit`, `quantile_transform`, `ks_drift`, `activity_gini`,
+    `weighted_median_price`) runs a job while its frame is built. A
+    streaming input raises ``NotImplementedError``: it can neither
+    persist nor run the probe, and Spark rejects the non-time window
+    it would need at ``start()``.
     """
     from pyspark.sql import Window
 
@@ -225,52 +256,34 @@ def cell_prefix_sums(
             "streams"
         )
     pc = list(partition_cols)
-    # The input executes once for the bounds and once into the persisted
-    # cell-keyed frame; offsets and the final join both read the persist
-    # (without it, an expensive upstream — a full-outer histogram merge,
-    # say — would re-execute for every consumer of `g`).
+    order = [order_col, *then_by]
+    # Every reader below (probe, bounds, cell keys, naive window) reads
+    # the persist, so an expensive upstream — a full-outer histogram
+    # merge, say — executes once.
     df = tracked_persist(df)
-    # Small-input fast path: the cell machinery exists to keep any ONE
-    # window partition bounded when the distinct-value frame is large
-    # (10⁸ distinct cents through one task). When the whole input fits
-    # a single window partition anyway — the common case for bounded
-    # histograms like zipf_fit's distinct-frequency frame — the naive
-    # window computes the IDENTICAL integer prefix sums in one job
-    # where the cell path pays a bounds agg, a second persist, an
-    # offsets window, and a broadcast join (~5 sequential tiny jobs,
-    # measured 2-3 s of pure latency per query at fixture scale). The
-    # probe is a LocalLimit short-circuit over the persist (the
-    # _shingle_bound_cleared idiom), so it costs one bounded job and
-    # doubles as the persist's materialization. NOTE: the probe is an
-    # ACTION at DataFrame-construction time — building the returned
-    # frame is eager.
+    # An input no bigger than the cell frame the slow path would build
+    # fits one window partition anyway; the naive window then saves the
+    # cell path's ~5 sequential tiny jobs (2-3 s of latency per query
+    # at fixture scale).
+    group_w = Window.partitionBy(*pc)
     if df.limit(n_cells + 1).count() <= n_cells:
-        base_w = Window.partitionBy(*pc) if pc else Window.partitionBy()
-        in_w = base_w.orderBy(order_col).rowsBetween(
+        in_w = group_w.orderBy(*order).rowsBetween(
             Window.unboundedPreceding, 0
         )
-        out = df
-        for c in sum_cols:
-            out = out.withColumn(
-                f"cum_{c}", F.sum(c).over(in_w).cast("long")
-            )
-        return out
-    bounds = df.agg(
-        F.min(order_col).alias("_vmin"), F.max(order_col).alias("_vmax")
-    )
-    g = tracked_persist(
-        df.crossJoin(F.broadcast(bounds)).withColumn(
-            "_cell",
-            F.expr(
-                f"CAST((({order_col} - _vmin) * {n_cells})"
-                " DIV (_vmax - _vmin + 1) AS BIGINT)"
-            ),
+        return df.select(
+            "*",
+            *[
+                F.sum(c).over(in_w).cast("long").alias(f"cum_{c}")
+                for c in sum_cols
+            ],
+            *[
+                F.sum(c).over(group_w).cast("long").alias(f"tot_{c}")
+                for c in sum_cols
+            ],
         )
-    )
-    cell_w = (
-        Window.partitionBy(*pc)
-        .orderBy("_cell")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    g = tracked_persist(_value_cells(df, order_col, n_cells))
+    cell_w = group_w.orderBy("_cell").rowsBetween(
+        Window.unboundedPreceding, -1
     )
     offs = (
         g.groupBy(*pc, "_cell")
@@ -284,21 +297,26 @@ def cell_prefix_sums(
                 .alias(f"_off_{c}")
                 for c in sum_cols
             ],
+            *[
+                F.sum(f"_ct_{c}").over(group_w).cast("long").alias(f"tot_{c}")
+                for c in sum_cols
+            ],
         )
     )
     in_w = (
         Window.partitionBy(*pc, "_cell")
-        .orderBy(order_col)
+        .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    out = g.join(F.broadcast(offs), pc + ["_cell"])
-    for c in sum_cols:
-        out = out.withColumn(
-            f"cum_{c}",
-            (F.col(f"_off_{c}") + F.sum(c).over(in_w)).cast("long"),
-        )
-    return out.drop(
-        "_cell", "_vmin", "_vmax", *[f"_off_{c}" for c in sum_cols]
+    return g.join(F.broadcast(offs), pc + ["_cell"]).select(
+        *df.columns,
+        *[
+            (F.col(f"_off_{c}") + F.sum(c).over(in_w))
+            .cast("long")
+            .alias(f"cum_{c}")
+            for c in sum_cols
+        ],
+        *[f"tot_{c}" for c in sum_cols],
     )
 
 

@@ -719,13 +719,16 @@ def test_per_source_cap_matches_naive(spark, raw, k):
 
 
 # ---------------------------------------------------------------------------
-# cell_prefix_sums (load-bearing for quantile_transform / ks_drift /
-# activity_gini / zipf_fit): inclusive keyed prefix sums via the
+# cell_prefix_sums (load-bearing for quality_auc / ccnet_buckets /
+# quantile_transform / ks_drift / activity_gini / zipf_fit /
+# weighted_median_price): inclusive keyed prefix sums via the
 # two-phase value-cell decomposition must equal the naive running sum
+# (and the group totals the naive sum ends on)
 # for ANY group layout, value distribution (clustered, negative,
-# single-valued), and cell count — including n_cells=1 (everything in
-# one cell, pure within-cell window) and n_cells larger than the
-# distinct-value count (pure cell-offset path).
+# single-valued), order type (BIGINT histogram values, or DOUBLE values
+# with ties broken by a ``then_by`` id), and cell count — including
+# n_cells=1 (everything in one cell, pure within-cell window) and
+# n_cells larger than the row count (the naive window).
 # ---------------------------------------------------------------------------
 
 _prefix_strategy = st.lists(
@@ -741,33 +744,47 @@ _prefix_strategy = st.lists(
 
 
 @settings(max_examples=15, deadline=None)
-@given(raw=_prefix_strategy, n_cells=st.sampled_from([1, 3, 4096]))
-def test_cell_prefix_sums_match_naive(spark, raw, n_cells):
+@given(
+    raw=_prefix_strategy,
+    n_cells=st.sampled_from([1, 3, 4096]),
+    frac=st.booleans(),
+)
+def test_cell_prefix_sums_match_naive(spark, raw, n_cells, frac):
     from flink_snappydata_spark.util import cell_prefix_sums
 
-    # distinct order values per group (the helper's contract: callers
-    # pass histogram frames, one row per (group, value))
-    dedup = {}
-    for g, v, a, b in raw:
-        if (g, v) not in dedup:
-            dedup[(g, v)] = (a, b)
-    rows = [(g, v, a, b) for (g, v), (a, b) in dedup.items()]
-    df = spark.createDataFrame(rows, "g long, v long, a long, b long")
+    if frac:
+        # DOUBLE order values with ties kept; the row id breaks them
+        rows = [(g, v / 8.0, i, a, b) for i, (g, v, a, b) in enumerate(raw)]
+        then_by = ("i",)
+    else:
+        # distinct order values per group (a histogram frame, one row
+        # per (group, value))
+        dedup = {}
+        for g, v, a, b in raw:
+            dedup.setdefault((g, v), (a, b))
+        rows = [(g, v, 0, a, b) for (g, v), (a, b) in dedup.items()]
+        then_by = ()
+    df = spark.createDataFrame(
+        rows,
+        f"g long, v {'double' if frac else 'long'}, i long, a long, b long",
+    )
     got = {
-        (r.g, r.v): (r.cum_a, r.cum_b)
+        (r.g, r.v, r.i): (r.cum_a, r.cum_b, r.tot_a, r.tot_b)
         for r in cell_prefix_sums(
-            df, "v", ["a", "b"], ("g",), n_cells=n_cells
+            df, "v", ["a", "b"], ("g",), n_cells=n_cells, then_by=then_by
         ).collect()
     }
     want = {}
     for g in {r[0] for r in rows}:
+        grp = sorted(
+            (r for r in rows if r[0] == g), key=lambda r: (r[1], r[2])
+        )
+        tot_a, tot_b = sum(r[3] for r in grp), sum(r[4] for r in grp)
         run_a = run_b = 0
-        for _, v, a, b in sorted(
-            (r for r in rows if r[0] == g), key=lambda r: r[1]
-        ):
+        for _, v, i, a, b in grp:
             run_a += a
             run_b += b
-            want[(g, v)] = (run_a, run_b)
+            want[(g, v, i)] = (run_a, run_b, tot_a, tot_b)
     assert got == want
 
 

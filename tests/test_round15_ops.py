@@ -12,9 +12,11 @@ from __future__ import annotations
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from flink_snappydata_spark.pipeline import text as T
+from flink_snappydata_spark.util import cell_prefix_sums
 
 
 # ---------------------------------------------------------------------------
@@ -46,53 +48,100 @@ def test_bpe_driver_fold_matches_distributed_loop(spark, docs, n_merges):
 
 
 # ---------------------------------------------------------------------------
-# quality_auc / ccnet_buckets: naive-window fast path == cell machinery
+# cell_prefix_sums: the one probe -> naive window / value-cell prefix
+# primitive behind quality_auc, ccnet_buckets and five more queries
 # ---------------------------------------------------------------------------
 
+# (group, DOUBLE order value, tiebreak id, summand): negative and
+# fractional values, ties inside a group broken only by the id, a
+# single-row group, and an all-equal group.
+_PREFIX_ROWS = [
+    ("en", -1.0, 7, 3),
+    ("en", 0.25, 2, 5),
+    ("en", 0.25, 1, 11),
+    ("en", 0.125, 9, 1),
+    ("en", 0.9990234375, 4, 2),
+    ("en", 0.25, 8, 13),
+    ("de", 3.5, 3, 4),
+    ("de", -2.75, 5, 6),
+    ("de", 3.5, 0, 8),
+    ("fr", 1e-3, 6, 9),
+    ("xx", 2.0, 11, 1),
+    ("xx", 2.0, 10, 2),
+    ("xx", 2.0, 12, 4),
+]
 
-def _docs_frame(spark, n=60):
-    rows = [
-        (
-            i,
-            ("the quick brown fox %d jumps over dogs " % i) * (1 + i % 3),
-            ["en", "de", "fr"][i % 3],
+
+@pytest.mark.parametrize("n_cells", [1, 3, 1 << 14])
+def test_cell_prefix_sums_double_order_with_tiebreak(spark, n_cells):
+    """n_cells=1 and 3 take the cell path (13 rows > n_cells), 1 << 14
+    the naive window; all three must equal a Python running sum in
+    (value, id) order within each group, and the group total."""
+    df = spark.createDataFrame(
+        _PREFIX_ROWS, "g string, v double, id long, x long"
+    )
+    got = {
+        r.id: (r.cum_x, r.tot_x)
+        for r in cell_prefix_sums(
+            df, "v", ["x"], ("g",), n_cells=n_cells, then_by=("id",)
+        ).collect()
+    }
+    want = {}
+    for g in {r[0] for r in _PREFIX_ROWS}:
+        rows = sorted(
+            (r for r in _PREFIX_ROWS if r[0] == g), key=lambda r: (r[1], r[2])
         )
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string, lang string")
+        run = 0
+        for _, v, i, x in rows:
+            run += x
+            want[i] = (run, sum(r[3] for r in rows))
+    assert got == want
 
 
-def test_quality_auc_fast_path_matches_cell_path(spark, monkeypatch):
-    docs = _docs_frame(spark)
-    monkeypatch.setattr(T, "AUC_NAIVE_MAX", 1 << 13)
-    fast = [tuple(r) for r in T.quality_auc(docs).collect()]
-    monkeypatch.setattr(T, "AUC_NAIVE_MAX", 0)  # force the cell machinery
-    slow = [tuple(r) for r in T.quality_auc(docs).collect()]
-    assert fast == slow
+def _rate_docs(spark):
+    return (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .select(
+            F.col("value").alias("doc_id"),
+            F.lit("the quick brown fox").alias("text"),
+            F.lit("en").alias("lang"),
+        )
+    )
 
 
-def test_ccnet_buckets_fast_path_matches_cell_path(spark, monkeypatch):
-    docs = _docs_frame(spark)
-    monkeypatch.setattr(T, "CCNET_NAIVE_MAX", 1 << 14)
-    fast = [tuple(r) for r in T.ccnet_buckets(docs).collect()]
-    monkeypatch.setattr(T, "CCNET_NAIVE_MAX", 0)  # force the cell machinery
-    slow = [tuple(r) for r in T.ccnet_buckets(docs).collect()]
-    assert fast == slow
-    assert len(fast) == 60
-
-
-def test_cell_prefix_sums_rejects_streaming_input(spark):
+@pytest.mark.parametrize(
+    "build,error,match",
+    [
+        pytest.param(
+            lambda s: cell_prefix_sums(
+                _rate_docs(s).withColumn("one", F.lit(1)), "doc_id", ["one"]
+            ),
+            NotImplementedError,
+            "batch-only",
+            id="cell_prefix_sums",
+        ),
+        pytest.param(
+            lambda s: T.quality_auc(_rate_docs(s)),
+            NotImplementedError,
+            "batch-only",
+            id="quality_auc",
+        ),
+        # the surprisal stage rejects the stream before the rank is built
+        pytest.param(
+            lambda s: T.ccnet_buckets(_rate_docs(s)),
+            AnalysisException,
+            None,
+            id="ccnet_buckets",
+        ),
+    ],
+)
+def test_cell_prefix_sums_rejects_streaming_input(spark, build, error, match):
     """cell_prefix_sums is batch-only: its probe and persist are batch
     actions, and Spark rejects the non-time window a stream would need
-    at start(). A streaming frame fails loudly at construction."""
-    from flink_snappydata_spark.util import cell_prefix_sums
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .select(F.col("value").alias("v"), F.lit(1).alias("one"))
-    )
-    with pytest.raises(NotImplementedError, match="batch-only"):
-        cell_prefix_sums(stream, "v", ["one"])
+    at start(). A streaming frame fails loudly at construction, also
+    through a consumer, never later at start()."""
+    with pytest.raises(error, match=match):
+        build(spark)
 
 
 # ---------------------------------------------------------------------------
