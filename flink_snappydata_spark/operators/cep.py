@@ -24,6 +24,8 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_snappydata_spark.streaming.runtime import read_state_table
+
 
 def cep_pattern_match(
     events: DataFrame,
@@ -269,8 +271,8 @@ def cep_from_state(spark, events_table: str) -> DataFrame:
     """Continuous CEP monitor over the stream→table loop: run
     :func:`cep_pattern_match` against the column-pruned event log a
     foreachBatch ingest accumulated (the SAME landed state
-    ``streaming_scd2_ingest`` maintains — one raw log serves every
-    order-sensitive reader: the SCD2 dimension, this pattern monitor).
+    ``streaming_event_log_ingest`` maintains for the SCD2 dimension —
+    one raw log serves every order-sensitive reader).
 
     Raw events, not per-batch match fragments, are the minimal
     sufficient state: "consecutive" is defined against ALL events, so
@@ -280,8 +282,6 @@ def cep_from_state(spark, events_table: str) -> DataFrame:
     user by (ts, event_id), so batching order is irrelevant and the
     bounded-drain result is row-identical to the batch op — the batch
     oracle applies verbatim."""
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
     return cep_pattern_match(read_state_table(spark, events_table))
 
 
@@ -294,8 +294,6 @@ def cep_absence_from_state(spark, events_table: str) -> DataFrame:
     a bounded drain; its oracle applies verbatim. The LIVE timer form
     (alerts push as the watermark passes, instead of at read) is
     :func:`flink_snappydata_spark.streaming.cep.streaming_cep_absence`."""
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
     return cep_absence_alerts(read_state_table(spark, events_table))
 
 
@@ -305,8 +303,6 @@ def cep_multistage_from_state(spark, events_table: str) -> DataFrame:
     WITH the ``value`` column — the middle stage's non-type predicate
     reads it). Same raw-log rationale and read-time row-identity as
     the other order-sensitive CEP loops."""
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
     return cep_funnel_pattern(read_state_table(spark, events_table))
 
 
@@ -325,8 +321,6 @@ def cep_nfa_from_state(spark, events_table: str) -> DataFrame:
     oracle applies verbatim. The LIVE form (matches push in the
     closing micro-batch instead of at read) is
     ``streaming_cep_pattern(contiguity="relaxed_nfa")``."""
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
     return cep_funnel_relaxed_nfa(read_state_table(spark, events_table))
 
 

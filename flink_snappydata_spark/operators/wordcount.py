@@ -13,6 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_snappydata_spark.streaming.runtime import (
+    ingest_stream_to_tables,
+    read_state_table,
+)
 from flink_snappydata_spark.util import small_sorted, spread
 
 #: The reference tokenizes with ``line.toLowerCase.split("\\W+")``
@@ -85,10 +89,6 @@ def streaming_wordcount_ingest(
     ingest_stream_to_tables`, so retried micro-batches overwrite their
     own ``batch_id`` partition instead of double-counting.
     """
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
-
     return ingest_stream_to_tables(
         stream_docs,
         [(counts_table, None)],
@@ -113,18 +113,11 @@ def wordcount_partials(batch_df: DataFrame) -> DataFrame:
 
 def wordcount_from_state(spark, counts_table: str) -> DataFrame:
     """Fold the :func:`streaming_wordcount_ingest` partials into the
-    global vocabulary counts (one map-side-combined SUM) — through the
-    floor-aware :func:`~flink_snappydata_spark.streaming.runtime.
-    read_state_table`, so a compacting loop's readers see only the
-    live partials (ingest lineage columns are stripped there)."""
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
-    return (
+    global vocabulary counts through the loop's own merge
+    (:func:`compact_wordcount_partials`, one map-side-combined SUM)."""
+    return compact_wordcount_partials(
         read_state_table(spark, counts_table)
-        .groupBy("word")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .transform(lambda d: small_sorted(d, "word"))
-    )
+    ).transform(lambda d: small_sorted(d, "word"))
 
 
 def map_partitions_identity(df: DataFrame) -> DataFrame:

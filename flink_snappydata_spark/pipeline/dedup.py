@@ -26,6 +26,10 @@ import random
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_snappydata_spark.streaming.runtime import (
+    ingest_stream_to_tables,
+    read_state_table,
+)
 from flink_snappydata_spark.util import (
     presentation_sorted,
     spread,
@@ -1122,7 +1126,7 @@ def streaming_dedup_ingest(
     stream_docs: DataFrame,
     parts_table: str,
     checkpoint: str | None = None,
-    tiered_every: int | None = 8,
+    tiered_every: int = 8,
 ):
     """Streaming-ingest twin of :func:`exact_dedup` through the
     stream→queryable-table loop (the reference's continuous
@@ -1144,7 +1148,7 @@ def streaming_dedup_ingest(
     ingest_stream_to_tables`, so retried micro-batches overwrite their
     own ``batch_id`` partition instead of double-counting copies.
 
-    ``tiered_every`` (default 8; ``None`` disables): TIERED compaction
+    ``tiered_every`` (default 8): TIERED compaction
     for long-running streams. The live state here is CORPUS-sized (one row per distinct
     text, carrying the text itself), so the floor mechanism's
     full-state rewrite every N batches is O(corpus) write
@@ -1157,10 +1161,6 @@ def streaming_dedup_ingest(
     bounded raw tail instead of O(age) raw fragments. Values are
     unchanged either way — the fold's digest re-group is associative.
     """
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
-
     return ingest_stream_to_tables(
         stream_docs,
         [(parts_table, None)],
@@ -1173,12 +1173,8 @@ def streaming_dedup_ingest(
         # streaming_event_log_ingest). 4 matches the harness-scale
         # file layout used by the prebuilt IVFADC index; a real
         # deployment sizes this to its segment bytes.
-        compact=(
-            (lambda f: compact_dedup_partials(f).coalesce(4))
-            if tiered_every
-            else None
-        ),
-        compact_every=tiered_every or 8,
+        compact=lambda f: compact_dedup_partials(f).coalesce(4),
+        compact_every=tiered_every,
         compact_mode="tiered",
     )
 
@@ -1199,10 +1195,10 @@ def dedup_partials(batch_df: DataFrame) -> DataFrame:
 
 def compact_dedup_partials(parts: DataFrame) -> DataFrame:
     """Schema-preserving merge of dedup partials (min of mins, sum of
-    sums, min_by representative — exactly the reader's fold), used by
-    the tiered-compaction path to collapse one window of raw batch
-    partitions into a single merged partition. Digest-keyed shuffle of
-    window-sized input only — never the whole corpus."""
+    sums, min_by representative): the tiered-compaction path collapses
+    one window of raw batch partitions into a single merged partition
+    with it (a digest-keyed shuffle of window-sized input only), and
+    :func:`dedup_from_state` folds the live state with it."""
     return parts.groupBy("digest").agg(
         F.min("doc_id").alias("doc_id"),
         F.sum("n_copies").cast("long").alias("n_copies"),
@@ -1214,25 +1210,14 @@ def dedup_from_state(spark, parts_table: str) -> DataFrame:
     """Fold the :func:`streaming_dedup_ingest` partials into the global
     exact-dedup result: re-group by digest (min of mins, sum of counts,
     min_by representative — all map-side-combinable), matching
-    :func:`exact_dedup` row-for-row. ``batch_id`` is ingest lineage,
-    not state — dropped here. The output is O(distinct texts) rows, so
+    :func:`exact_dedup` row-for-row. The fold is the loop's own merge
+    (:func:`compact_dedup_partials`), so merged segments and the raw
+    tail fold identically. The output is O(distinct texts) rows, so
     no presentation sort is bolted on (the driver's hash compare is
     order-insensitive; batch ``exact_dedup`` sorts only for human
-    eyes). Reads through
-    :func:`~flink_snappydata_spark.streaming.runtime.read_state_table`
-    so tiered-compacted state (merged partitions + live raw tail) and
-    plain append-only state fold identically."""
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
-    return (
-        read_state_table(spark, parts_table)
-        .groupBy("digest")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.sum("n_copies").cast("long").alias("n_copies"),
-            F.min_by("text", "doc_id").alias("text"),
-        )
-        .select("doc_id", "n_copies", "text")
+    eyes)."""
+    return compact_dedup_partials(read_state_table(spark, parts_table)).select(
+        "doc_id", "n_copies", "text"
     )
 
 

@@ -25,6 +25,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_snappydata_spark.pipeline.packing import portable_hash
+from flink_snappydata_spark.streaming.runtime import (
+    ingest_stream_to_tables,
+    read_state_table,
+)
 
 SPLIT_BUCKETS = 10_000
 
@@ -242,10 +246,6 @@ def streaming_mix_ingest(
     ingest_stream_to_tables`, so retried micro-batches overwrite their
     own ``batch_id`` partition instead of double-appending partials.
     """
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
-
     return ingest_stream_to_tables(
         stream_docs,
         [
@@ -276,8 +276,8 @@ def mix_from_state(
     thresholds, and join back over the ingested feature log — after a
     bounded stream drains, row-identical to :func:`token_budget_mix`
     on the same corpus (the batch oracle applies verbatim)."""
-    docs = spark.table(docs_table).drop("batch_id")
-    totals = spark.table(totals_table).groupBy("source").agg(
+    docs = read_state_table(spark, docs_table)
+    totals = read_state_table(spark, totals_table).groupBy("source").agg(
         F.sum("tok").alias("total_tokens")
     )
     return _mix_summary(_assign_from_totals(docs, totals, budget_tokens))

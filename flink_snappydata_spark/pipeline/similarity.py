@@ -29,6 +29,10 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_snappydata_spark.streaming.runtime import (
+    ingest_stream_to_tables,
+    read_state_table,
+)
 from flink_snappydata_spark.util import (
     presentation_sorted,
     spread,
@@ -518,10 +522,6 @@ def streaming_centroid_ingest(
     ingest_stream_to_tables`, so retried micro-batches overwrite their
     own ``batch_id`` partition instead of double-counting partials.
     """
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
-
     return ingest_stream_to_tables(
         stream_embeddings,
         [(partials_table, None)],
@@ -552,12 +552,10 @@ def centroids_from_state(spark, partials_table: str) -> DataFrame:
     :func:`streaming_centroid_ingest`: one map-side-combined fold
     (``SUM(s)/SUM(c)`` per (label, pos)), then the exact batch
     divide-then-scale arithmetic — row-identical to
-    :func:`label_centroids` over the union of all ingested batches.
-    ``batch_id`` is ingest lineage (the idempotency partition key),
-    not state — dropped here."""
-    p = spark.table(partials_table).drop("batch_id")
+    :func:`label_centroids` over the union of all ingested batches."""
     return (
-        p.groupBy("label", "pos")
+        read_state_table(spark, partials_table)
+        .groupBy("label", "pos")
         .agg(
             (
                 F.sum("s").cast("double") / F.sum("c") / F.lit(QUANT)

@@ -12,6 +12,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_snappydata_spark.operators.wordcount import (
+    compact_wordcount_partials,
+)
+from flink_snappydata_spark.streaming.runtime import (
+    ingest_stream_to_tables,
+    read_state_table,
+)
 from flink_snappydata_spark.util import (
     cell_prefix_sums,
     spread,
@@ -332,9 +339,6 @@ def streaming_novelty_ingest(
     own ``batch_id`` partition instead of double-appending partials.
     """
     from flink_snappydata_spark.pipeline.dedup import shingles
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
 
     return ingest_stream_to_tables(
         stream_docs,
@@ -362,11 +366,10 @@ def novelty_from_state(
     :func:`streaming_novelty_ingest` — the queryable-table half of the
     loop. Folds the log-structured count partials into per-shingle
     document frequencies (one map-side-combined aggregation), then
-    scores with the exact batch recipe. ``batch_id`` is ingest lineage
-    (the idempotency partition key), not state — dropped here."""
-    sh = spark.table(index_table).drop("batch_id")
+    scores with the exact batch recipe."""
+    sh = read_state_table(spark, index_table)
     dfreq = (
-        spark.table(counts_table)
+        read_state_table(spark, counts_table)
         .groupBy("sh")
         .agg(F.sum("cnt").alias("df"))
     )
@@ -1780,18 +1783,12 @@ def cms_from_state(spark, counts_table: str) -> DataFrame:
     spark.operators.wordcount.streaming_wordcount_ingest` (identical
     tokenizer) — exact counts fold batching-insensitively, so the
     sketch built from folded state equals the batch sketch and the
-    batch oracle applies verbatim. Reads through the floor-aware
-    :func:`~flink_snappydata_spark.streaming.runtime.read_state_table`
-    (the shared counts loop compacts; lineage columns stripped
-    there)."""
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
-    counts = (
-        read_state_table(spark, counts_table)
-        .groupBy("word")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    batch oracle applies verbatim. The fold is the counts loop's own
+    merge (:func:`~flink_snappydata_spark.operators.wordcount.
+    compact_wordcount_partials`)."""
+    return _cms_from_counts(
+        compact_wordcount_partials(read_state_table(spark, counts_table))
     )
-    return _cms_from_counts(counts)
 
 
 def _cms_from_counts(counts: DataFrame) -> DataFrame:

@@ -31,11 +31,6 @@ from pathlib import Path
 # import order, into the shared dict re-exported here.
 from flink_snappydata_spark.specs import QUERIES, QueryFn, QuerySpec  # noqa: F401
 
-# Back-compat re-exports for tests that reach into spec internals.
-from flink_snappydata_spark.specs.profiling_analytics import (  # noqa: F401
-    _scd2_streamed,
-)
-
 #: Repo root, where the correctness driver writes CORRECTNESS_r{N}.json.
 _ROOT = Path(__file__).resolve().parent.parent
 

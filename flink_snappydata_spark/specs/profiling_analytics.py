@@ -1093,7 +1093,7 @@ def _scd2_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev,
         "scd2",
         ["events"],
-        stream_windows.streaming_scd2_ingest,
+        stream_windows.streaming_event_log_ingest,
         stream_windows.scd2_from_state,
     )
 

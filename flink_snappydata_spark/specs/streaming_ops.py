@@ -444,7 +444,7 @@ def _cep_streamed(spark, sf_dir: str) -> DataFrame:
         ev,
         "cep",
         ["events"],
-        stream_windows.streaming_scd2_ingest,
+        stream_windows.streaming_event_log_ingest,
         cep.cep_from_state,
     )
 

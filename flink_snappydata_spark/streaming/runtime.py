@@ -234,7 +234,9 @@ def ingest_stream_to_tables(
     and the tables are PARTITIONED by it; writes use dynamic
     partition-overwrite ``insertInto``, so a retry of batch N rewrites
     exactly partition ``batch_id=N`` — idempotent, with no fold-time
-    dedup shuffle for readers (they just ``drop("batch_id")``).
+    dedup shuffle for readers. Every reader opens its state through
+    :func:`read_state_table`, which strips the ``batch_id`` lineage and
+    applies compaction visibility.
 
     Scale: per batch, one persisted materialization of the shared
     transform and one partition-overwrite write per table; state tables
@@ -244,11 +246,15 @@ def ingest_stream_to_tables(
     long-running stream's state by its LIVE aggregate size instead of
     its age.
 
-    COMPACTION (``compact``, single-output loops only): every
-    ``compact_every``-th micro-batch folds the accumulated live rows
-    plus the current batch through the caller's ``compact`` callable
-    (state-frame -> state-frame, same schema — e.g. the session
-    fragment sweep-merge) and lands the result in the CURRENT batch's
+    COMPACTION (``compact``, single-output loops only): ``compact`` is
+    the loop's MERGE (state-frame -> state-frame, same schema — e.g.
+    the session fragment sweep-merge), and the loop's ``*_from_state``
+    reader folds through the SAME function:
+    ``finalize(compact(read_state_table(spark, table)))``. A merge
+    written once is what makes compaction invisible to the reader.
+    Every ``compact_every``-th micro-batch (:func:`land_floor_partition`)
+    folds the accumulated live rows plus the current batch through
+    ``compact`` and lands the result in the CURRENT batch's
     partition with a ``floor`` column stamped to this batch_id; normal
     batches stamp ``floor=0``. Readers (:func:`read_state_table`)
     keep only partitions ``batch_id >= max(floor)``, so a compaction
@@ -267,8 +273,9 @@ def ingest_stream_to_tables(
     partials log: one row per distinct text, carrying the text).
     Tiered mode instead merges only the RAW batch partitions landed
     since the previous merge: every ``compact_every``-th micro-batch
-    folds those raws plus the current batch through ``compact`` and
-    lands the result in the CURRENT batch's partition stamped
+    (:func:`land_tiered_partition`) folds those raws plus the current
+    batch through ``compact`` and lands the result in the CURRENT
+    batch's partition stamped
     ``covered_to = batch_id``; normal batches stamp ``covered_to=0``.
     Each row is therefore rewritten exactly ONCE ever (raw → its
     window's merged partition) — total write amplification 2x,
@@ -301,13 +308,14 @@ def ingest_stream_to_tables(
     if compact_mode not in ("floor", "tiered"):
         raise ValueError(f"compact_mode must be floor|tiered: {compact_mode!r}")
 
+    land = (
+        land_tiered_partition if compact_mode == "tiered" else land_floor_partition
+    )
+
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         base = prepare(batch_df) if prepare is not None else batch_df
         if compact is not None:
-            if compact_mode == "tiered":
-                _ingest_tiered(base, batch_id)
-            else:
-                _ingest_compacting(base, batch_id)
+            land(base, outputs[0][0], batch_id, compact, compact_every)
             return
         fan_out = len(outputs) > 1
         if fan_out:
@@ -322,50 +330,6 @@ def ingest_stream_to_tables(
         finally:
             if fan_out:
                 base.unpersist()
-
-    def _ingest_compacting(base: DataFrame, batch_id: int) -> None:
-        table = outputs[0][0]
-        spark = base.sparkSession
-        out = base.withColumn("floor", F.lit(0).cast("long"))
-        is_compaction = (
-            batch_id > 0
-            and batch_id % compact_every == 0
-            and spark.catalog.tableExists(table)
-        )
-        prev_floor = 0
-        if is_compaction:
-            # Pre-floor state only, and NEVER this batch's own partition
-            # (a retry may have left a partial/complete one — the
-            # recompute must not read its own prior output).
-            state = spark.table(table).filter(F.col("batch_id") < batch_id)
-            # bounded driver fetch: one scalar (the current floor)
-            prev_floor = (
-                state.agg(F.max("floor")).collect()[0][0] or 0
-            )
-            live = (
-                state.filter(F.col("batch_id") >= prev_floor)
-                .drop("batch_id", "floor")
-            )
-            out = compact(live.unionByName(base)).withColumn(
-                "floor", F.lit(batch_id).cast("long")
-            )
-        land_batch_partition(out, table, batch_id)
-        if is_compaction:
-            # lazy space reclamation of partitions no reader can see
-            # (floor is now batch_id; anything below prev_floor was
-            # already invisible before this compaction committed)
-            for row in spark.sql(f"SHOW PARTITIONS {table}").collect():
-                pid = int(row[0].split("=", 1)[1])
-                if pid < prev_floor:
-                    spark.sql(
-                        f"ALTER TABLE {table} DROP IF EXISTS "
-                        f"PARTITION (batch_id={pid})"
-                    )
-
-    def _ingest_tiered(base: DataFrame, batch_id: int) -> None:
-        land_tiered_partition(
-            base, outputs[0][0], batch_id, compact, compact_every
-        )
 
     tag = "-".join(t for t, _ in outputs)
     q = (
@@ -390,6 +354,56 @@ def ingest_stream_to_tables(
             if e.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
                 raise
     return q
+
+
+def land_floor_partition(
+    base: DataFrame,
+    table: str,
+    batch_id: int,
+    compact,
+    compact_every: int,
+) -> None:
+    """One micro-batch of the FLOOR-compacting ingest (module-level,
+    like :func:`land_tiered_partition`, so the fold scale probe drives
+    the identical code path the stream does): normal batches land with
+    ``floor=0``; every ``compact_every``-th batch folds the live rows
+    plus the current batch through ``compact`` and lands the result
+    stamped ``floor = batch_id``. See :func:`ingest_stream_to_tables`'s
+    COMPACTION section for the visibility/exactly-once argument."""
+    spark = base.sparkSession
+    out = base.withColumn("floor", F.lit(0).cast("long"))
+    is_compaction = (
+        batch_id > 0
+        and batch_id % compact_every == 0
+        and spark.catalog.tableExists(table)
+    )
+    prev_floor = 0
+    if is_compaction:
+        # Pre-floor state only, and NEVER this batch's own partition
+        # (a retry may have left a partial/complete one — the
+        # recompute must not read its own prior output).
+        state = spark.table(table).filter(F.col("batch_id") < batch_id)
+        # bounded driver fetch: one scalar (the current floor)
+        prev_floor = state.agg(F.max("floor")).collect()[0][0] or 0
+        live = (
+            state.filter(F.col("batch_id") >= prev_floor)
+            .drop("batch_id", "floor")
+        )
+        out = compact(live.unionByName(base)).withColumn(
+            "floor", F.lit(batch_id).cast("long")
+        )
+    land_batch_partition(out, table, batch_id)
+    if is_compaction:
+        # lazy space reclamation of partitions no reader can see
+        # (floor is now batch_id; anything below prev_floor was
+        # already invisible before this compaction committed)
+        for row in spark.sql(f"SHOW PARTITIONS {table}").collect():
+            pid = int(row[0].split("=", 1)[1])
+            if pid < prev_floor:
+                spark.sql(
+                    f"ALTER TABLE {table} DROP IF EXISTS "
+                    f"PARTITION (batch_id={pid})"
+                )
 
 
 def land_tiered_partition(

@@ -23,6 +23,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_snappydata_spark.functions.exact import cents
+from flink_snappydata_spark.streaming.runtime import (
+    ingest_stream_to_tables,
+    read_state_table,
+)
 
 
 def tumbling_window_counts(
@@ -246,10 +250,6 @@ def streaming_rollup_ingest(
     ingest_stream_to_tables`, so retried micro-batches overwrite their
     own ``batch_id`` partition instead of double-counting.
     """
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
-
     return ingest_stream_to_tables(
         stream_events,
         [(hourly_table, None)],
@@ -273,21 +273,12 @@ def compact_rollup_partials(parts: DataFrame) -> DataFrame:
 def rollup_from_state(spark, hourly_table: str) -> DataFrame:
     """Multi-resolution rollup from the hourly partials accumulated by
     :func:`streaming_rollup_ingest`: fold partials per (hour, type)
-    (exact int64 cent sums — batching order irrelevant), then the same
-    coarsening as the batch op. Reads through the floor-aware
-    :func:`~flink_snappydata_spark.streaming.runtime.read_state_table`
-    (the loop compacts; lineage columns stripped there)."""
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
-    hourly = (
-        read_state_table(spark, hourly_table)
-        .groupBy("bucket_start", "event_type")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_cents").alias("sum_cents"),
-        )
+    through the loop's own merge (:func:`compact_rollup_partials`,
+    exact int64 cent sums — batching order irrelevant), then the same
+    coarsening as the batch op."""
+    return _multires_from_hourly(
+        compact_rollup_partials(read_state_table(spark, hourly_table))
     )
-    return _multires_from_hourly(hourly)
 
 
 def session_paths(
@@ -361,9 +352,6 @@ def streaming_ohlc_ingest(
     own ``batch_id`` partition instead of double-counting.
     """
     from flink_snappydata_spark.operators.analytic import _ohlc_partials
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
 
     return ingest_stream_to_tables(
         stream_events,
@@ -376,11 +364,10 @@ def streaming_ohlc_ingest(
 def ohlc_from_state(spark, partials_table: str) -> DataFrame:
     """Final OHLC candles from the per-batch partials accumulated by
     :func:`streaming_ohlc_ingest`: one argmin/argmax + min/max/sum fold
-    per (type, hour) — batching order irrelevant. ``batch_id`` is
-    ingest lineage, not state — dropped here."""
+    per (type, hour) — batching order irrelevant."""
     from flink_snappydata_spark.operators.analytic import _ohlc_finalize
 
-    return _ohlc_finalize(spark.table(partials_table).drop("batch_id"))
+    return _ohlc_finalize(read_state_table(spark, partials_table))
 
 
 def streaming_drift_ingest(
@@ -407,9 +394,6 @@ def streaming_drift_ingest(
     own ``batch_id`` partition instead of double-counting.
     """
     from flink_snappydata_spark.operators.analytic import _drift_partials
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
 
     return ingest_stream_to_tables(
         stream_events,
@@ -423,42 +407,33 @@ def drift_from_state(spark, partials_table: str) -> DataFrame:
     """KS drift statistic from the histogram partials accumulated by
     :func:`streaming_drift_ingest`: fold per value (exact int64 count
     sums — batching order irrelevant), then the same two-phase-prefix
-    CDF compare as the batch op. ``batch_id`` is ingest lineage, not
-    state — dropped here."""
+    CDF compare as the batch op."""
     from flink_snappydata_spark.operators.analytic import _ks_from_merged
 
     merged = (
-        spark.table(partials_table)
-        .drop("batch_id")
+        read_state_table(spark, partials_table)
         .groupBy("v")
         .agg(F.sum("ca").alias("ca"), F.sum("cb").alias("cb"))
     )
     return _ks_from_merged(merged)
 
 
-def streaming_scd2_ingest(
+def streaming_event_log_ingest(
     stream_events: DataFrame,
     events_table: str,
     checkpoint: str | None = None,
-    tiered_every: int | None = 8,
+    columns: tuple[str, ...] = ("user_id", "event_id", "ts", "event_type"),
+    tiered_every: int = 8,
 ):
-    """Streaming-ingest twin of
-    :func:`operators.analytic.scd2_state_intervals` — the
-    stream→queryable-table loop as a continuously-maintained
-    point-in-time DIMENSION: micro-batches land, and any OLAP reader
-    gets the current SCD2 interval set via :func:`scd2_from_state`.
-
-    State choice (why raw events, not per-batch runs): SCD2 intervals
-    are NOT incrementally mergeable under cross-batch event-time
-    interleaving — a later micro-batch can land an event BETWEEN two
-    already-merged same-state events, splitting their run, so
-    run-level partials are not a sufficient statistic. The minimal
-    sufficient state is the COLUMN-PRUNED event log: each batch lands
-    only ``(user_id, event_id, ts, event_type)`` (value/props never
-    ingested), and the interval build runs at read over the user-keyed
-    fold. Rides :func:`~flink_snappydata_spark.streaming.runtime.
+    """Column-pruned raw event-log ingest — the minimal sufficient
+    state of the order-sensitive readers (:func:`scd2_from_state`, the
+    CEP ``*_from_state`` monitors), which fold the log at read; pass
+    ``columns`` when a fold needs a different projection (e.g. the
+    multi-stage pattern matcher's ``value`` predicate). Rides
+    :func:`~flink_snappydata_spark.streaming.runtime.
     ingest_stream_to_tables`, so retried micro-batches overwrite their
     own ``batch_id`` partition — idempotent.
+
     RETENTION (``tiered_every``, default 8 — the r14 512-batch probe's
     answer): raw logs are not aggregable (the whole point of landing
     them), but their fold cost grows with PARTITION COUNT, not just
@@ -467,38 +442,7 @@ def streaming_scd2_ingest(
     consolidates the raw partitions landed since the previous merge
     into ONE log segment (``compact`` = identity: pure file/partition
     consolidation, rows byte-identical, LSM log-segment style), so the
-    fold opens O(age/tiered_every) segments + a bounded raw tail.
-    ``None`` disables (pure append-only).
-    """
-    return streaming_event_log_ingest(
-        stream_events,
-        events_table,
-        checkpoint=checkpoint,
-        tiered_every=tiered_every,
-    )
-
-
-def streaming_event_log_ingest(
-    stream_events: DataFrame,
-    events_table: str,
-    checkpoint: str | None = None,
-    columns: tuple[str, ...] = ("user_id", "event_id", "ts", "event_type"),
-    tiered_every: int | None = 8,
-):
-    """Column-pruned raw event-log ingest — the same minimal
-    sufficient state :func:`streaming_scd2_ingest` lands, for
-    order-sensitive readers whose fold needs a different projection
-    (e.g. the multi-stage pattern matcher's ``value`` predicate).
-    Raw events, not per-batch partials, for the same reason as SCD2:
-    pattern runs are not mergeable under cross-batch event-time
-    interleaving. Idempotent per-batch_id partition landing, with
-    identity-merge tiered segment consolidation every ``tiered_every``
-    batches (see :func:`streaming_scd2_ingest` — rows byte-identical,
-    fold cost bounded by segment count instead of stream age)."""
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
-
+    fold opens O(age/tiered_every) segments + a bounded raw tail."""
     # identity merge + coalesce(1): without the coalesce the segment
     # write inherits one task per input file and re-shards K one-file
     # raw partitions into K+1 files — no consolidation at all (measured
@@ -511,25 +455,34 @@ def streaming_event_log_ingest(
         [(events_table, None)],
         prepare=lambda b: b.select(*columns),
         checkpoint=checkpoint,
-        compact=(lambda f: f.coalesce(1)) if tiered_every else None,
-        compact_every=tiered_every or 8,
+        compact=lambda f: f.coalesce(1),
+        compact_every=tiered_every,
         compact_mode="tiered",
     )
 
 
 def scd2_from_state(spark, events_table: str) -> DataFrame:
-    """Current SCD2 dimension from the event log accumulated by
-    :func:`streaming_scd2_ingest`: exactly the batch interval build
-    over the folded state — batching order is irrelevant because the
-    build sorts per user by (ts, event_id), so after a bounded stream
-    drains the result is row-identical to the batch op and the batch
-    oracle applies verbatim. ``batch_id`` is ingest lineage, not
-    state — dropped by the shared state reader (which also applies
-    tiered-segment visibility when the log consolidates)."""
+    """Current SCD2 dimension — the streaming twin of
+    :func:`operators.analytic.scd2_state_intervals` — from the event
+    log accumulated by :func:`streaming_event_log_ingest` (default
+    columns): exactly the batch interval build over the folded state.
+    Batching order is irrelevant because the build sorts per user by
+    (ts, event_id), so after a bounded stream drains the result is
+    row-identical to the batch op and the batch oracle applies
+    verbatim.
+
+    State choice (why raw events, not per-batch runs): SCD2 intervals
+    are NOT incrementally mergeable under cross-batch event-time
+    interleaving — a later micro-batch can land an event BETWEEN two
+    already-merged same-state events, splitting their run, so
+    run-level partials are not a sufficient statistic. The minimal
+    sufficient state is the COLUMN-PRUNED event log: each batch lands
+    only ``(user_id, event_id, ts, event_type)`` (value/props never
+    ingested), and the interval build runs at read over the user-keyed
+    fold."""
     from flink_snappydata_spark.operators.analytic import (
         scd2_state_intervals,
     )
-    from flink_snappydata_spark.streaming.runtime import read_state_table
 
     return scd2_state_intervals(read_state_table(spark, events_table))
 
@@ -567,10 +520,6 @@ def streaming_sessions_ingest(
     ingest_stream_to_tables`, so retried micro-batches overwrite their
     own ``batch_id`` partition — idempotent.
     """
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
-
     return ingest_stream_to_tables(
         stream_events,
         [(fragments_table, None)],
@@ -605,15 +554,16 @@ def session_fragments(batch_df: DataFrame, gap: str = "30 minutes") -> DataFrame
 def compact_session_fragments(
     frags: DataFrame, gap: str = "30 minutes"
 ) -> DataFrame:
-    """Fold a session-fragment frame onto itself: sweep-merge (the
-    same boundary rule the reader uses) and collapse each session's
-    fragments to ONE fragment. The output is a valid fragment frame —
-    the merge rule only reads boundaries (frag_start, max_ts), and a
+    """Fold a session-fragment frame onto itself: sweep-merge and
+    collapse each session's fragments to ONE fragment. The output is
+    a valid fragment frame — the merge rule only reads boundaries
+    (frag_start, max_ts), and a
     merged run's boundaries are exactly min(start)/max(max_ts) of its
     members, so ``sweep(compact(A) ∪ B) == sweep(A ∪ B)`` for any
-    later batch B (pinned by the compaction-equivalence tests). Used
-    as the ingest loop's periodic compaction, bounding a long-running
-    stream's fold cost by LIVE sessions instead of stream age."""
+    later batch B (pinned by the compaction-equivalence tests). The
+    loop's one merge: the ingest's periodic compaction (bounding a
+    long-running stream's fold cost by LIVE sessions instead of stream
+    age) and the fold of :func:`sessions_from_state`."""
     swept = _sweep_fragments(
         frags, gap, ["frag_start", "max_ts", "n_events", "sum_cents"]
     )
@@ -669,8 +619,8 @@ def _sweep_fragments(frags: DataFrame, gap: str, order_cols) -> DataFrame:
     earlier fragments (STRICT >, matching Spark's session_window —
     see the note in :func:`sessions_from_state`). ``order_cols`` must
     totally order each user's fragments by (frag_start, ...) so the
-    running max is deterministic. Shared by the session-window and
-    funnel stream→table folds."""
+    running max is deterministic. Shared by the session and funnel
+    merges."""
     w_ord = Window.partitionBy("user_id").orderBy(*order_cols)
     prev_max = F.max("max_ts").over(
         w_ord.rowsBetween(Window.unboundedPreceding, -1)
@@ -695,9 +645,9 @@ def sessions_from_state(
     After a bounded stream drains the result is row-identical to
     :func:`session_window_counts` (the fragment-boundary merge rule
     reconstructs exactly the event-level components — see the ingest
-    docstring), so the batch oracle applies verbatim. ``batch_id`` is
-    ingest lineage, not state; the floor-aware state reader drops it
-    and skips partitions a compaction already folded."""
+    docstring), so the batch oracle applies verbatim. The fold is the
+    loop's own merge (:func:`compact_session_fragments`): one fragment
+    per session, whose boundaries are the session's."""
     # STRICT >: Spark's session_window merges events spaced EXACTLY gap
     # apart (a new session needs silence strictly longer than gap), so
     # the fragment sweep must too — pinned by the exact-boundary case in
@@ -706,22 +656,14 @@ def sessions_from_state(
     # future fixture with events landing exactly on the gap boundary
     # cannot split the two; tests/test_round12_ops.py pins the boundary
     # case against DuckDB directly).
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
-    frags = read_state_table(spark, fragments_table)
-    swept = _sweep_fragments(
-        frags, gap, ["frag_start", "max_ts", "n_events", "sum_cents"]
-    )
     return (
-        swept.groupBy("user_id", "sid")
-        .agg(
-            F.min("frag_start").alias("session_start"),
-            (F.max("max_ts") + F.expr(f"INTERVAL {gap}")).alias("session_end"),
-            F.sum("n_events").alias("n_events"),
-            (F.sum("sum_cents") / F.lit(100.0)).alias("sum_value"),
-        )
+        compact_session_fragments(read_state_table(spark, fragments_table), gap)
         .select(
-            "session_start", "session_end", "user_id", "n_events", "sum_value"
+            F.col("frag_start").alias("session_start"),
+            (F.col("max_ts") + F.expr(f"INTERVAL {gap}")).alias("session_end"),
+            "user_id",
+            "n_events",
+            (F.col("sum_cents") / F.lit(100.0)).alias("sum_value"),
         )
         .orderBy("user_id", "session_start")
     )
@@ -747,10 +689,6 @@ def streaming_hll_ingest(
     own ``batch_id`` partition — idempotent (re-landing the same
     batch's sketch cannot inflate the union).
     """
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
-
     return ingest_stream_to_tables(
         stream_events,
         [(sketch_table, None)],
@@ -770,8 +708,7 @@ def hll_distinct_from_state(spark, sketch_table: str) -> DataFrame:
     wrap it in the bound-verdict pattern against the exact distinct —
     at scale you serve this estimate alone."""
     return (
-        spark.table(sketch_table)
-        .drop("batch_id")
+        read_state_table(spark, sketch_table)
         .groupBy("event_type")
         .agg(
             F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx")
@@ -809,10 +746,6 @@ def streaming_topn_ingest(
     proof), :func:`topn_from_state` re-ranks the union at read.
     Flink's continuous Top-N query shape, exact at any batch count.
     Rides the shared idempotent foreachBatch loop."""
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
-
     return ingest_stream_to_tables(
         stream_events,
         [(partials_table, None)],
@@ -825,8 +758,6 @@ def topn_from_state(spark, partials_table: str, n: int = 10) -> DataFrame:
     """(event_type, rank, event_id, value) — the exact global top-N
     per group from the accumulated partials, identical to ranking the
     raw stream (containment argument in :func:`topn_partials`)."""
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
     w = Window.partitionBy("event_type").orderBy(
         F.col("value").desc(), F.col("event_id").asc()
     )
@@ -864,10 +795,6 @@ def streaming_quantiles_ingest(
     2-decimal value domain, no sketch error to argue about. The
     continuous analog of the batch percentile ops. Rides the shared
     idempotent foreachBatch loop."""
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
-
     return ingest_stream_to_tables(
         stream_events,
         [(hist_table, None)],
@@ -890,8 +817,6 @@ def quantiles_from_state(spark, hist_table: str) -> DataFrame:
     Scale: the fold is one histogram-sized aggregation plus a running
     sum over the value DOMAIN (distinct cents), not the event count —
     a window over thousands of rows at any corpus size."""
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
     hist = (
         read_state_table(spark, hist_table)
         .groupBy("v")
@@ -938,10 +863,6 @@ def streaming_funnel_ingest(
     ``converted`` flag is exact. State is O(funnel sessions per
     batch). Rides the shared idempotent foreachBatch loop.
     """
-    from flink_snappydata_spark.streaming.runtime import (
-        ingest_stream_to_tables,
-    )
-
     return ingest_stream_to_tables(
         stream_events,
         [(fragments_table, None)],
@@ -989,36 +910,12 @@ def funnel_from_state(
     boundary sweep assigns session ids, then counts sum, the first
     click takes the min, the last purchase the max — after a bounded
     stream drains the result is row-identical to
-    :func:`session_funnel`, so the batch oracle applies verbatim (the
-    floor-aware state reader skips compaction-superseded partitions)."""
-    from flink_snappydata_spark.streaming.runtime import read_state_table
-
-    frags = read_state_table(spark, fragments_table)
-    swept = _sweep_fragments(
-        frags,
-        gap,
-        [
-            "frag_start",
-            "max_ts",
-            "n_clicks",
-            "n_purchases",
-            "first_click_ts",
-            "last_purchase_ts",
-        ],
-    )
-    first_click = F.min("first_click_ts")
-    last_purchase = F.max("last_purchase_ts")
+    :func:`session_funnel`, so the batch oracle applies verbatim. The
+    fold is the loop's own merge (:func:`compact_funnel_fragments`)."""
     return (
-        swept.groupBy("user_id", "sid")
-        .agg(
-            F.min("frag_start").alias("session_start"),
-            F.sum("n_clicks").alias("n_clicks"),
-            F.sum("n_purchases").alias("n_purchases"),
-            first_click.alias("first_click_ts"),
-            last_purchase.alias("last_purchase_ts"),
-        )
+        compact_funnel_fragments(read_state_table(spark, fragments_table), gap)
         .select(
-            "session_start",
+            F.col("frag_start").alias("session_start"),
             "user_id",
             "n_clicks",
             "n_purchases",

@@ -263,7 +263,7 @@ def test_cep_streamed_equals_batch_after_4_batch_drain(spark):
         spark,
         ev,
         4,
-        stream_windows.streaming_scd2_ingest,
+        stream_windows.streaming_event_log_ingest,
         cep_from_state,
         "cepstream",
     )

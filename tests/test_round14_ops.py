@@ -599,7 +599,7 @@ def test_raw_log_tiered_segments_fold_identically(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(tmp)
         )
-        stream_windows.streaming_scd2_ingest(stream, table, tiered_every=2)
+        stream_windows.streaming_event_log_ingest(stream, table, tiered_every=2)
         got_scd2 = sorted(
             tuple(r)
             for r in stream_windows.scd2_from_state(spark, table).collect()

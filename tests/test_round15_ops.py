@@ -15,6 +15,8 @@ from hypothesis import strategies as st
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from flink_snappydata_spark.pipeline import dedup as D
+from flink_snappydata_spark.pipeline import similarity as S
 from flink_snappydata_spark.pipeline import text as T
 from flink_snappydata_spark.util import cell_prefix_sums
 
@@ -109,6 +111,16 @@ def _rate_docs(spark):
     )
 
 
+def _rate_embeddings(spark):
+    return (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .select(
+            F.col("value").alias("vec_id"),
+            F.array_repeat(F.lit(0.5), S.DIM).alias("embedding"),
+        )
+    )
+
+
 @pytest.mark.parametrize(
     "build,error,match",
     [
@@ -133,13 +145,30 @@ def _rate_docs(spark):
             None,
             id="ccnet_buckets",
         ),
+        # the all-pairs row-cap probe (_guard_all_pairs)
+        pytest.param(
+            lambda s: S.cosine_neardup_pairs(_rate_embeddings(s)),
+            AnalysisException,
+            "writeStream.start",
+            id="cosine_neardup_pairs",
+        ),
+        # the shingle-bound probe (_shingle_bound_cleared)
+        pytest.param(
+            lambda s: D.ngram_jaccard_pairs(_rate_docs(s)),
+            AnalysisException,
+            "writeStream.start",
+            id="ngram_jaccard_pairs",
+        ),
     ],
 )
 def test_cell_prefix_sums_rejects_streaming_input(spark, build, error, match):
     """cell_prefix_sums is batch-only: its probe and persist are batch
     actions, and Spark rejects the non-time window a stream would need
     at start(). A streaming frame fails loudly at construction, also
-    through a consumer, never later at start()."""
+    through a consumer, never later at start(). The other eager
+    construction-time probes (the all-pairs row cap, the shingle
+    bound) are batch actions too, so Spark rejects a stream there the
+    same way."""
     with pytest.raises(error, match=match):
         build(spark)
 

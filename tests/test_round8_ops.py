@@ -2507,7 +2507,9 @@ def test_scd2_streamed_equals_batch_after_drain(spark, events):
     from flink_snappydata_spark.operators.analytic import (
         scd2_state_intervals,
     )
-    from flink_snappydata_spark.registry import _scd2_streamed
+    from flink_snappydata_spark.specs.profiling_analytics import (
+        _scd2_streamed,
+    )
 
     got = sorted(
         tuple(r) for r in _scd2_streamed(spark, SF).collect()

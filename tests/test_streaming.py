@@ -735,3 +735,25 @@ def test_streaming_dedup_ingest_matches_batch(spark):
     assert len(got) > 0
     pd.testing.assert_frame_equal(got, want)
     spark.sql(f"DROP TABLE IF EXISTS {parts_t}")
+
+
+def test_state_tables_are_opened_only_by_the_runtime():
+    """Every ``*_from_state`` reader opens its state through
+    ``runtime.read_state_table``, which strips the ``batch_id`` lineage
+    and applies compaction visibility. A direct ``.table(`` call
+    anywhere else in the package would read superseded partitions of a
+    compacting loop. Only the runtime module, which lands and reads the
+    state tables, may call it."""
+    import pathlib
+
+    import flink_snappydata_spark
+
+    pkg = pathlib.Path(flink_snappydata_spark.__file__).parent
+    hits = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "streaming" / "runtime.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ".table(" in line
+    ]
+    assert hits == []

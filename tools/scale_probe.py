@@ -58,6 +58,10 @@ from flink_snappydata_spark.pipeline import similarity as S
 from flink_snappydata_spark.pipeline import text as T
 from flink_snappydata_spark.streaming import joins as SJ
 from flink_snappydata_spark.streaming import windows as W
+from flink_snappydata_spark.streaming.runtime import (
+    land_floor_partition,
+    land_tiered_partition,
+)
 from flink_snappydata_spark.session import get_spark
 from flink_snappydata_spark.util import release_caches
 
@@ -760,9 +764,9 @@ FOLD_OPS = {
 #: loops periodically sweep-merge their fragment log (see
 #: streaming.runtime.ingest_stream_to_tables compaction), so a
 #: long-running stream's fold reads O(live sessions) fragments — the
-#: steady state these entries land: one compacted partition (all but
-#: the last pseudo-batch, folded through the REAL compact callable)
-#: plus the last batch's raw fragments. Compare against the raw
+#: steady state these entries land through the REAL land_floor_partition
+#: path: one compacted partition (all but the last pseudo-batch) plus
+#: the last batch's raw fragments. Compare against the raw
 #: sessions/funnel_from_state rows above to see what compaction buys.
 COMPACTED_FOLD_OPS = {
     # round-13: the mergeable-partial representative (exact sum-of-sums
@@ -852,48 +856,18 @@ def _land_fold_state(spark, df, name, kind, prepare, outputs):
     return tables
 
 
-def _land_tiered_state(spark, df, kind, prepare, compact, every):
-    """Replay every pseudo-batch through the REAL tiered lander
-    (merges fire at their production cadence), leaving the exact
-    steady state a long-running tiered loop accumulates."""
+def _land_replayed_state(spark, df, kind, prepare, compact, every, land):
+    """Replay every pseudo-batch through a REAL compacting lander
+    (``land_tiered_partition`` or ``land_floor_partition``), so merges
+    fire at the given cadence and the fold reads exactly the state a
+    long-running loop accumulates."""
     import uuid
-
-    from flink_snappydata_spark.streaming.runtime import (
-        land_tiered_partition,
-    )
-
-    table = f"probe_tfold_{uuid.uuid4().hex[:8]}"
-    key = _FOLD_KEY[kind]
-    part = F.pmod(F.hash(F.col(key)), F.lit(FOLD_BATCHES))
-    for b in range(FOLD_BATCHES):
-        land_tiered_partition(
-            prepare(df.filter(part == b)), table, b, compact, every
-        )
-    spark.catalog.refreshTable(table)
-    return [table]
-
-
-def _land_compacted_state(spark, df, kind, prepare, compact):
-    """Land the steady state of a COMPACTING twin: everything before
-    the last pseudo-batch folded through the real compact callable
-    (partition 0), the last batch raw (partition 1)."""
-    import uuid
-    from functools import reduce
-
-    from flink_snappydata_spark.streaming.runtime import land_batch_partition
 
     table = f"probe_cfold_{uuid.uuid4().hex[:8]}"
     key = _FOLD_KEY[kind]
     part = F.pmod(F.hash(F.col(key)), F.lit(FOLD_BATCHES))
-    older = [
-        prepare(df.filter(part == b)) for b in range(FOLD_BATCHES - 1)
-    ]
-    land_batch_partition(
-        compact(reduce(lambda a, b: a.unionByName(b), older)), table, 0
-    )
-    land_batch_partition(
-        prepare(df.filter(part == FOLD_BATCHES - 1)), table, 1
-    )
+    for b in range(FOLD_BATCHES):
+        land(prepare(df.filter(part == b)), table, b, compact, every)
     spark.catalog.refreshTable(table)
     return [table]
 
@@ -964,8 +938,8 @@ def _probe_folds(spark, factor, median_time, wanted):
     for name, (kind, prepare, compact, fold, every) in tiered_ops.items():
         times = []
         for df in inputs[kind]:
-            tables = _land_tiered_state(
-                spark, df, kind, prepare, compact, every
+            tables = _land_replayed_state(
+                spark, df, kind, prepare, compact, every, land_tiered_partition
             )
             try:
                 times.append(median_time(lambda: fold(spark, tables)))
@@ -977,7 +951,11 @@ def _probe_folds(spark, factor, median_time, wanted):
     for name, (kind, prepare, compact, fold) in compacted_ops.items():
         times = []
         for df in inputs[kind]:
-            tables = _land_compacted_state(spark, df, kind, prepare, compact)
+            # the floor compaction fires on the second-to-last batch
+            tables = _land_replayed_state(
+                spark, df, kind, prepare, compact,
+                max(FOLD_BATCHES - 2, 1), land_floor_partition,
+            )
             try:
                 times.append(median_time(lambda: fold(spark, tables)))
             finally:
