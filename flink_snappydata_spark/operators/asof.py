@@ -21,20 +21,8 @@ window scan itself is a single ordered pass per key partition.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 
 def asof_join_events(
@@ -93,89 +81,3 @@ def asof_join_events(
         .orderBy("user_id", "right_ts", "right_event_id")
     )
 
-
-ASOF_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("right_event_id", LongType()),
-        StructField("right_ts", TimestampType()),
-        StructField("right_value", DoubleType()),
-        StructField("left_event_id", LongType()),
-        StructField("left_ts", TimestampType()),
-        StructField("left_value", DoubleType()),
-    ]
-)
-
-#: per-key carry state: the latest left event seen (ts as epoch micros).
-ASOF_STATE_SCHEMA = StructType(
-    [
-        StructField("l_event_id", LongType()),
-        StructField("l_ts_us", LongType()),
-        StructField("l_value", DoubleType()),
-    ]
-)
-
-
-def streaming_asof_join(
-    events: DataFrame,
-    left_type: str = "click",
-    right_type: str = "purchase",
-) -> DataFrame:
-    """Streaming as-of enrichment: each ``right_type`` event emitted with
-    the latest ``left_type`` event of the same key seen so far.
-
-    Per-key state is ONE carried left row (O(1), no buffering) via
-    ``applyInPandasWithState`` — the streaming twin of
-    :func:`asof_join_events`. Rows are processed in (ts, left-first,
-    event_id) order within each micro-batch and in arrival order across
-    batches, so on in-order input the output equals the batch operator
-    (equivalence-tested on the events fixture).
-    """
-
-    def process(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            l_id, l_ts_us, l_val = state.get
-        else:
-            l_id = l_ts_us = l_val = None
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.assign(
-                isleft=(pdf["event_type"] == left_type).astype(int)
-            ).sort_values(["ts", "isleft", "event_id"], ascending=[True, False, True])
-            for r in pdf.itertuples():
-                if r.isleft == 1:
-                    l_id = int(r.event_id)
-                    l_ts_us = int(r.ts.value // 1_000)
-                    l_val = float(r.value)
-                elif r.event_type == right_type:
-                    out.append(
-                        (
-                            key[0],
-                            int(r.event_id),
-                            r.ts,
-                            float(r.value),
-                            l_id,
-                            pd.Timestamp(l_ts_us * 1_000) if l_ts_us is not None else None,
-                            l_val,
-                        )
-                    )
-        if l_id is not None:
-            state.update((l_id, l_ts_us, l_val))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in ASOF_OUTPUT_SCHEMA.fields])
-
-    return (
-        events.filter(F.col("event_type").isin(left_type, right_type))
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            process,
-            outputStructType=ASOF_OUTPUT_SCHEMA,
-            stateStructType=ASOF_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )

@@ -291,9 +291,7 @@ def cep_absence_from_state(spark, events_table: str) -> DataFrame:
     (same minimal-sufficient-state argument as :func:`cep_from_state`
     — a later batch can land inside a seen run, so per-batch alert
     fragments are not mergeable). Row-identical to the batch op after
-    a bounded drain; its oracle applies verbatim. The LIVE timer form
-    (alerts push as the watermark passes, instead of at read) is
-    :func:`flink_snappydata_spark.streaming.cep.streaming_cep_absence`."""
+    a bounded drain; its oracle applies verbatim."""
     return cep_absence_alerts(read_state_table(spark, events_table))
 
 
@@ -318,9 +316,7 @@ def cep_nfa_from_state(spark, events_table: str) -> DataFrame:
     mergeable. The mapInPandas kernel sorts per user by
     (ts, event_id), so batching order is irrelevant and the bounded-
     drain result is row-identical to the batch op; its recursive
-    oracle applies verbatim. The LIVE form (matches push in the
-    closing micro-batch instead of at read) is
-    ``streaming_cep_pattern(contiguity="relaxed_nfa")``."""
+    oracle applies verbatim."""
     return cep_funnel_relaxed_nfa(read_state_table(spark, events_table))
 
 
@@ -421,7 +417,7 @@ class PatternStage(NamedTuple):
 
 def stage_label_expr(stages: list[PatternStage]) -> Column:
     """The FIRST-MATCH-WINS stage label (1..k, sentinel -1) shared by
-    the batch compiler and the live state machine — one place owns the
+    the islands compiler and the NFA kernel — one place owns the
     determinism rule for overlapping predicates. Validates the spec."""
     if not stages:
         raise ValueError("pattern needs at least one stage")
@@ -437,6 +433,456 @@ def stage_label_expr(stages: list[PatternStage]) -> Column:
         )
         label = F.when(cond, i) if label is None else label.when(cond, i)
     return label.otherwise(-1)
+
+
+# ---------------------------------------------------------------------------
+# Relaxed-contiguity EXACT NFA (Flink followedBy) — the deterministic
+# multi-branch machine behind ``contiguity="relaxed_nfa"``
+# ---------------------------------------------------------------------------
+
+#: A relaxed-NFA BRANCH: (stage, start_us, last_us, counts) — stage in
+#: 1..k, ``counts`` a k-tuple of consumed-event counts per stage
+#: (counts[stage-1] is the live count, later stages 0), start/last the
+#: first/last CONSUMED event timestamps. The machine state is a tuple
+#: of branches, deduplicated to one (earliest-start) branch per
+#: transition class — see :func:`advance_relaxed_nfa_state`. With
+#: iterative conditions (``rels``) a branch carries two extra slots:
+#: (..., firsts, prev_val) — the FIRST consumed value per stage
+#: (None = not captured) and the last consumed value.
+NfaBranch = tuple[int, int, int, tuple[int, ...]]
+NfaState = tuple[NfaBranch, ...]
+
+#: A relative (iterative) condition on one stage, evaluated per BRANCH
+#: at consumption time (Flink IterativeCondition / MATCH_RECOGNIZE
+#: navigation): ("first", j, op) compares the candidate event's value
+#: against the FIRST consumed value of stage j in this partial match,
+#: ("last", j, op) against stage j's LAST consumed value, and
+#: ("prev", op) against the previously consumed event's value — which
+#: is always the CURRENT stage's last consumed value, so the capture
+#: state is just two k-vectors (firsts, lasts). op in > >= < <=.
+#: Unset references (stage j not consumed yet / no prior event) pass.
+RelSpec = tuple
+
+_REL_OPS = {
+    ">": lambda a, b: a > b,
+    ">=": lambda a, b: a >= b,
+    "<": lambda a, b: a < b,
+    "<=": lambda a, b: a <= b,
+}
+
+
+def _rel_ok(rel: RelSpec | None, firsts, lasts, cur_stage: int, v) -> bool:
+    if rel is None:
+        return True
+    if rel[0] == "prev":
+        # the previously consumed event always belongs to the branch's
+        # current stage (stages only advance by consuming)
+        ref = lasts[cur_stage - 1]
+        op = rel[1]
+    elif rel[0] == "last":
+        ref = lasts[rel[1] - 1]
+        op = rel[2]
+    else:
+        ref = firsts[rel[1] - 1]
+        op = rel[2]
+    if ref is None:
+        return True  # unset reference: vacuously true (Flink: no
+        # events accepted for that pattern yet)
+    return _REL_OPS[op](v, ref)
+
+
+def advance_relaxed_nfa_state(
+    state: NfaState,
+    rows: list[tuple[int, int]],
+    quants: list[tuple[int, int | None]],
+    within_us: int | None = None,
+    after_match: str = "skip_past_last",
+    rels: list[RelSpec | None] | None = None,
+    strict: bool = False,
+    capture: bool = False,
+) -> tuple[list[tuple[int, int, tuple[int, ...]]], NfaState]:
+    """Pure state transition for the EXACT relaxed-contiguity machine
+    (Flink ``followedBy`` with AFTER MATCH SKIP PAST LAST EVENT): fold
+    (ts_us, stage_label) rows — event-time ordered, labels pre-computed
+    JVM-side by ``stage_label_expr`` — through a deterministic
+    multi-branch NFA. Unlike the merged-burst ``relaxed`` mode (which
+    drops sentinels and cuts maximal runs), this machine skips ANY
+    non-consumable event per branch, so a stage can assemble its count
+    across interior other-stage events (``A B A B`` matches
+    ``A{2,2} followedBy B`` from the FIRST A, skipping the interior B)
+    and a bounded stage consumes its run's PREFIX, skipping overflow
+    (Flink's NFA), where merged-burst takes the suffix at the first
+    stage and fails overrun middles.
+
+    Transition rules per branch at (stage i, count c), on label l
+    (first-match-wins labels make take/proceed/ignore MUTUALLY
+    EXCLUSIVE, so the machine is deterministic — no backtracking):
+
+    * TAKE: ``l == i`` and ``c < max_i`` — consume; completing the
+      final stage's bound emits immediately;
+    * PROCEED+TAKE: ``l == i+1`` and ``c >= min_i`` — finalize stage i,
+      consume into stage i+1 (emits when i+1 == k with max_k == 1);
+    * CLOSE: a branch at the FINAL stage with ``c >= min_k`` emits when
+      any OTHER stage's label arrives — the merged maximal run closes
+      (the run-quantified contract every mode of this builder shares;
+      a NON-greedy Flink trailing loop under skip-past-last would emit
+      at min-count instead — that policy is expressible here as
+      ``max_count == min_count``). The closing event is NOT consumed:
+      it is re-processed fresh (it may seed the next match);
+    * IGNORE: anything else — the branch persists unchanged (relaxed
+      contiguity; sentinel labels are invisible to every branch).
+
+    SEEDING: every label-1 event seeds a new branch (Flink's
+    always-live start state) unless the event completed a match
+    (skip-past-last owns it). EMISSION: at the first event where any
+    branch completes, the EARLIEST-START completing branch wins and
+    every live branch is discarded — skip past last event, lossless
+    because no branch can be seeded between the winner's last consumed
+    event and its completion (any stage label in that gap would have
+    closed the winner earlier), so every discarded branch started at or
+    before the match end.
+
+    STATE BOUND: branches whose (stage, capped count) transition class
+    coincides advance in lockstep forever, and the earliest-start one
+    wins every simultaneous completion (earlier starts weakly dominate
+    later seeds in (stage, count) order — an invariant the reference
+    differential in tests/test_relaxed_nfa.py does NOT assume), so the
+    machine keeps one branch per class: state is O(sum of stage bounds)
+    longs, independent of stream length.
+
+    WITHIN (``within_us``): Flink's ``Pattern.within`` prunes PARTIAL
+    matches — a branch whose window ``(start, start + within]`` cannot
+    admit the current event is discarded, which lets a LATER start win
+    a match a post-filter would silently drop (the post-filter contract
+    the other modes keep is strictly weaker: it rejects the found match
+    without re-searching). A satisfiable FINAL-stage branch whose
+    window expires CLOSES (emits) instead — its consumed events all lie
+    within the window, so the match is valid; only its greedy tail
+    growth is cut. Expired branches necessarily started earlier than
+    every in-window branch, so checking closers before consumption-
+    completions preserves the earliest-start winner rule. Under within,
+    branches of one transition class with different starts expire at
+    different times, so the per-class dedup would be lossy — the
+    machine keeps every live branch instead; state is then bounded by
+    the key's event count inside one window (exactly Flink's
+    partial-match state bound), and expiry reclaims it as the stream
+    advances.
+
+    AFTER MATCH (``after_match``): ``"skip_past_last"`` (the default,
+    Flink skipPastLastEvent) emits the earliest-start completion and
+    discards every live branch — matches are disjoint.
+    ``"skip_to_next"`` (Flink skipToNext) emits EVERY completing
+    branch — one match per start position (each deterministic branch's
+    own earliest completion), overlapping matches allowed; only the
+    completing branches are removed, and the per-class dedup is off
+    (every start must emit separately), so live state is bounded by
+    active starts (use ``within`` to bound it by one window's events,
+    exactly as in Flink).
+
+    STRICT mode (``strict=True``, the machine form of ``next``
+    contiguity — MATCH_RECOGNIZE's row-pattern semantics): no event is
+    ever skipped — an event a branch cannot consume (other label,
+    bound full, rel failure, or the -1 sentinel, which must then REACH
+    the fold) closes the branch if it is pattern-satisfiable and
+    discards it otherwise. Seeding at every seed-target event still
+    provides the bounded-first-stage SUFFIX freedom, and bound
+    completion the LAST-stage prefix, so the rel-free strict machine
+    is row-identical to the islands compiler (differentially pinned);
+    rels make per-branch consumability real, which is exactly what
+    SQL MATCH_RECOGNIZE's PREV()/FIRST() DEFINE clauses need — under
+    strict contiguity PREV(row) == the match's previously consumed
+    event, so the ("prev", op) spec IS the SQL-standard semantics.
+
+    ITERATIVE CONDITIONS (``rels``, Flink IterativeCondition): an
+    optional per-stage RELATIVE predicate evaluated per BRANCH at
+    consumption time — ("first", j, op) compares the candidate event's
+    ``value`` against the FIRST value this partial match consumed for
+    stage j, ("prev", op) against its previously consumed event. Rows
+    must then be (ts_us, label, value) triples, branches carry
+    (firsts, prev) capture slots, and per-class dedup is off (captured
+    values differentiate same-class branches). A rel-FAILING event is
+    INVISIBLE to the branch (relaxed skip — it neither consumes nor
+    closes; closes still fire on base-non-consumable stage labels),
+    and unset references pass vacuously, so seeds always capture their
+    first value. Only the base predicates are JVM-evaluated; the rel
+    comparison is the one per-event Python operation the kernel adds.
+
+    Returns ``(matches, new_state)`` with each match
+    ``(start_us, end_us, per-stage counts)``. Associative over splits
+    of an ordered sequence. Labels outside 1..k other than the -1
+    sentinel act as a CLOSE-only flush (end-of-replay records)."""
+    k = len(quants)
+    if k == 1 and quants[0][1] is not None:
+        raise ValueError(
+            "single-stage bounded patterns are rejected by the compiler"
+        )
+    if all(lo == 0 for lo, _ in quants):
+        raise ValueError(
+            "pattern needs at least one mandatory stage (min_count >= 1)"
+        )
+    if any(hi is not None and hi < max(lo, 1) for lo, hi in quants):
+        raise ValueError(f"invalid stage bounds: {quants}")
+    if after_match not in ("skip_past_last", "skip_to_next"):
+        raise ValueError(
+            f"after_match must be skip_past_last|skip_to_next: "
+            f"{after_match!r}"
+        )
+    past_last = after_match == "skip_past_last"
+    use_rels = rels is not None and any(r is not None for r in rels)
+    use_caps = use_rels or capture
+    if use_rels:
+        if len(rels) != k:
+            raise ValueError("rels must have one entry per stage")
+        for r in rels:
+            if r is None:
+                continue
+            if r[0] == "prev":
+                ok = len(r) == 2 and r[1] in _REL_OPS
+            else:
+                ok = (
+                    len(r) == 3
+                    and r[0] in ("first", "last")
+                    and 1 <= r[1] <= k
+                    and r[2] in _REL_OPS
+                )
+            if not ok:
+                raise ValueError(f"invalid rel spec: {r!r}")
+    branches = list(state)
+    matches: list[tuple[int, int, tuple[int, ...]]] = []
+
+    def _cls(b: NfaBranch) -> tuple[int, int]:
+        stage = b[0]
+        lo, hi = quants[stage - 1]
+        cap = lo if hi is None else hi
+        return (stage, min(b[3][stage - 1], cap))
+
+    def _dedup(bs: list[NfaBranch]) -> list[NfaBranch]:
+        best: dict[tuple[int, int], NfaBranch] = {}
+        for b in bs:
+            c = _cls(b)
+            cur = best.get(c)
+            if cur is None or b[1] < cur[1]:
+                best[c] = b
+        return sorted(best.values(), key=lambda b: (b[1], b[0]))
+
+    # OPTIONAL stages (min_count == 0, Flink optional()/times(0,n)):
+    # a proceed may CHAIN through consecutive optional stages —
+    # from stage s the valid targets are s+1 .. max_target[s] (the
+    # first mandatory stage after s, inclusive); seeds use s = 0, so
+    # a pattern with optional leading stages can start mid-pattern.
+    # A branch is pattern-SATISFIABLE at stage j once c >= min_j and
+    # every later stage is optional; a satisfiable branch closes on
+    # the first event it can neither take nor proceed with (or at
+    # window expiry / end of data) — skipped stages emit count 0.
+    max_target = [0] * k
+    for s in range(k):
+        t = s + 1
+        while t < k and quants[t - 1][0] == 0:
+            t += 1
+        max_target[s] = t
+    tail_opt = [False] * (k + 1)
+    tail_opt[k] = True
+    for j in range(k - 1, 0, -1):
+        tail_opt[j] = tail_opt[j + 1] and quants[j][0] == 0
+
+    def _satisf(b: NfaBranch) -> bool:
+        j = b[0]
+        return b[3][j - 1] >= quants[j - 1][0] and tail_opt[j]
+
+    def _consumable(b: NfaBranch, lab: int) -> bool:
+        stage = b[0]
+        lo, hi = quants[stage - 1]
+        c = b[3][stage - 1]
+        if lab == stage:
+            return hi is None or c < hi
+        return stage < lab <= max_target[stage] and c >= lo
+
+    def _emit(b: NfaBranch):
+        if capture:
+            return (b[1], b[2], b[3], b[4], b[5])
+        return (b[1], b[2], b[3])
+
+    for row in rows:
+        ts_us, lab = row[0], row[1]
+        v = row[2] if use_caps else 0.0
+        if lab == -1 and not strict:
+            continue  # relaxed contiguity: sentinels are invisible
+        closers: list[NfaBranch] = []
+        keep: list[NfaBranch] = []
+        in_range = 1 <= lab <= k
+        for b in branches:
+            expired = within_us is not None and ts_us - b[1] > within_us
+            can = in_range and _consumable(b, lab)
+            if strict and can and use_rels:
+                # strict contiguity: a rel failure IS a break, so full
+                # consumability (base + rel) drives the close/discard
+                target = b[0] if lab == b[0] else lab
+                can = _rel_ok(rels[target - 1], b[4], b[5], b[0], v)
+            if _satisf(b) and (expired or not can):
+                closers.append(b)
+            elif expired or (strict and not can):
+                # discarded: timed-out partial (within), or a strict-
+                # contiguity break (other label, bound full, rel fail,
+                # sentinel)
+                pass
+            else:
+                keep.append(b)
+        branches = keep
+        if not in_range:
+            # flush record or (strict-mode) sentinel: close-only
+            # trigger, no transitions or seeding
+            if past_last:
+                cut: int | None = None
+                for b in sorted(closers, key=lambda b: b[1]):
+                    if cut is None or b[1] > cut:
+                        matches.append(_emit(b))
+                        cut = b[2]
+                if cut is not None:
+                    branches = [b for b in keep if b[1] > cut]
+            else:
+                for b in sorted(closers, key=lambda b: b[1]):
+                    matches.append(_emit(b))
+            continue
+        nxt: list[NfaBranch] = []
+        done: list[NfaBranch] = []
+        for b in branches:
+            stage, start, counts = b[0], b[1], b[3]
+            lo, hi = quants[stage - 1]
+            c = counts[stage - 1]
+            if lab == stage and (hi is None or c < hi):
+                if use_rels and not _rel_ok(
+                    rels[stage - 1], b[4], b[5], stage, v
+                ):
+                    nxt.append(b)  # rel-failing event: invisible
+                    continue
+                nc = counts[: stage - 1] + (c + 1,) + counts[stage:]
+                if use_caps:
+                    firsts = b[4]
+                    if firsts[stage - 1] is None:
+                        firsts = (
+                            firsts[: stage - 1] + (v,) + firsts[stage:]
+                        )
+                    lasts = b[5][: stage - 1] + (v,) + b[5][stage:]
+                    nb = (stage, start, ts_us, nc, firsts, lasts)
+                else:
+                    nb = (stage, start, ts_us, nc)
+                if stage == k and hi is not None and c + 1 == hi:
+                    done.append(nb)
+                else:
+                    nxt.append(nb)
+            elif stage < lab <= max_target[stage] and c >= lo:
+                if use_rels and not _rel_ok(
+                    rels[lab - 1], b[4], b[5], stage, v
+                ):
+                    nxt.append(b)  # rel-failing event: invisible
+                    continue
+                nc = counts[:stage] + (0,) * (lab - stage - 1) + (1,)
+                nc = nc + counts[lab:]
+                if use_caps:
+                    firsts = b[4][: lab - 1] + (v,) + b[4][lab:]
+                    lasts = b[5][: lab - 1] + (v,) + b[5][lab:]
+                    nb = (lab, start, ts_us, nc, firsts, lasts)
+                else:
+                    nb = (lab, start, ts_us, nc)
+                if lab == k and quants[lab - 1][1] == 1:
+                    done.append(nb)
+                else:
+                    nxt.append(nb)
+            else:
+                nxt.append(b)  # relaxed IGNORE: skip without consuming
+        if lab <= max_target[0]:
+            # seed (Flink's always-live start state; mid-pattern when
+            # leading stages are optional); an immediately-complete
+            # single-event seed competes like any consumption-completion
+            # (it always has the latest start, so under skip-past-last
+            # it only emits when disjoint from every earlier winner).
+            # A rel on the seed stage passes vacuously (no captures).
+            nc = (0,) * (lab - 1) + (1,) + (0,) * (k - lab)
+            if use_caps:
+                firsts = (None,) * (lab - 1) + (v,) + (None,) * (k - lab)
+                nb = (lab, ts_us, ts_us, nc, firsts, firsts)
+            else:
+                nb = (lab, ts_us, ts_us, nc)
+            if lab == k and quants[lab - 1][1] == 1:
+                done.append(nb)
+            else:
+                nxt.append(nb)
+        if past_last:
+            # UNIFIED completion competition: close-completions (which
+            # do not consume this event) and consumption-completions
+            # compete in ONE greedy disjoint selection by start — each
+            # emission discards everything started at or before its
+            # match end (skip past last EVENT; the start filter also
+            # suppresses this event's seed exactly when an emitted
+            # match consumed the event). Without rels or optional
+            # tails the candidate sets are label-disjoint and at most
+            # one winner exists, reducing to the old two-phase rule;
+            # with them, a later-started branch can close on the very
+            # event an earlier branch completes by consuming, and only
+            # a joint selection picks the true earliest start.
+            if closers or done:
+                cut2: int | None = None
+                for b in sorted(closers + done, key=lambda b: b[1]):
+                    if cut2 is None or b[1] > cut2:
+                        matches.append(_emit(b))
+                        cut2 = b[2]
+                branches = [b for b in nxt if b[1] > cut2]
+            else:
+                branches = (
+                    _dedup(nxt)
+                    if within_us is None and not use_caps
+                    else nxt
+                )
+        else:
+            for b in sorted(closers + done, key=lambda b: b[1]):
+                matches.append(_emit(b))
+            branches = nxt
+    return matches, tuple(branches)
+
+
+def close_relaxed_nfa(
+    state: NfaState,
+    quants: list[tuple[int, int | None]],
+    after_match: str = "skip_past_last",
+    capture: bool = False,
+) -> list[tuple[int, int, tuple[int, ...]]]:
+    """End-of-data close for the relaxed-NFA machine: a pattern-
+    satisfiable branch (its stage's min met, every later stage
+    optional) emits exactly as a non-consumable label would have
+    closed it. Under skip_past_last the earliest start wins (at most
+    ONE match — every stage event after the winner's last consumed one
+    was consumable by it, else it would have closed in-stream, so no
+    later-starting candidate can exist past its end); under
+    skip_to_next every satisfiable branch emits."""
+    k = len(quants)
+    tail_opt = True
+    closers: list[NfaBranch] = []
+    for j in range(k, 0, -1):
+        for b in state:
+            if b[0] == j and tail_opt and b[3][j - 1] >= quants[j - 1][0]:
+                closers.append(b)
+        tail_opt = tail_opt and quants[j - 1][0] == 0
+    if not closers:
+        return []
+
+    def _emit(b):
+        if capture:
+            return (b[1], b[2], b[3], b[4], b[5])
+        return (b[1], b[2], b[3])
+
+    if after_match == "skip_to_next":
+        return [_emit(b) for b in sorted(closers, key=lambda b: b[1])]
+    # skip_past_last: greedy disjoint selection by start — without
+    # iterative conditions at most one satisfiable branch can exist
+    # past the winner's end (see above); with rel-invisible events,
+    # later-started disjoint candidates are real and all emit.
+    out: list = []
+    cut: int | None = None
+    for b in sorted(closers, key=lambda b: b[1]):
+        if cut is None or b[1] > cut:
+            out.append(_emit(b))
+            cut = b[2]
+    return out
 
 
 def _matches_frame(pd, names, uids, matches, measure_specs=None):
@@ -473,9 +919,8 @@ def _cep_match_pattern_nfa(
 ) -> DataFrame:
     """The ``contiguity="relaxed_nfa"`` execution path: EXACT Flink
     ``followedBy`` semantics via the deterministic multi-branch machine
-    (:func:`flink_snappydata_spark.streaming.cep.
-    advance_relaxed_nfa_state` — transition rules, emission policy, and
-    the reference differential are documented there). Unlike the other
+    (:func:`advance_relaxed_nfa_state` — transition rules, emission
+    policy, and the reference differential are documented there). Unlike the other
     modes this is inherently a sequential per-key scan (a branch may
     skip arbitrarily between consumed events, so no change-detection
     islands exist to compile to) — the NFA therefore runs in an
@@ -508,11 +953,6 @@ def _cep_match_pattern_nfa(
         StructField,
         StructType,
         TimestampType,
-    )
-
-    from flink_snappydata_spark.streaming.cep import (
-        advance_relaxed_nfa_state,
-        close_relaxed_nfa,
     )
 
     label = stage_label_expr(stages)
@@ -690,7 +1130,7 @@ def cep_match_pattern(
       overflow) instead of merged-burst's suffix/fail; executed as a
       deterministic multi-branch machine on the same user_id
       partitioning (see ``_cep_match_pattern_nfa`` and the transition
-      rules in ``streaming/cep.py::advance_relaxed_nfa_state``; the
+      rules in :func:`advance_relaxed_nfa_state`; the
       reference differential lives in tests/test_relaxed_nfa.py);
     * a match is ``len(stages)`` CONSECUTIVE runs whose labels are
       stage 1..k in order and whose run lengths lie within each
@@ -739,8 +1179,7 @@ def cep_match_pattern(
     the closed-run history on a quantifier-passing match (skip past
     last row) therefore can never drop a later batch-visible match,
     even when a downstream ``within`` post-filter rejects the emitted
-    one — the invariant the live twin's state machine relies on
-    (``streaming/cep.py``), pinned by
+    one, pinned by
     tests/test_round14_ops.py::test_candidate_matches_always_disjoint.
 
     Returns ``(user_id, match_start, match_end, n_<stage.name>...)``
@@ -804,8 +1243,8 @@ def cep_match_pattern(
                 "realization union grows as 2^optional)"
             )
     if within is not None:
-        # API parity with the streaming twin: validate through the same
-        # fixed-width-unit contract (_window_seconds) BEFORE handing the
+        # validate through the machine modes' fixed-width-unit
+        # contract (_window_seconds) BEFORE handing the
         # string to F.expr — calendar units ('1 month') are rejected
         # here with a clear error instead of silently varying by anchor,
         # and malformed strings fail fast instead of as opaque Spark

@@ -42,7 +42,6 @@ def canonical_pick(
     documents: DataFrame,
     pairs: DataFrame | None = None,
     sort: bool = True,
-    expect_small: bool = True,
 ) -> DataFrame:
     """Canonical-document selection: after near-dup clustering, keep the
     highest-quality member of each duplicate cluster — the step that
@@ -64,14 +63,11 @@ def canonical_pick(
     (``sorted_output=False`` — pair order is irrelevant to the
     clustering that consumes it, and the O(pairs) list must not funnel
     through one partition on a duplicate-heavy corpus). The output sort
-    is gated: ``sort=False`` skips it entirely; ``expect_small=False``
-    keeps it range-partitioned (cluster count is O(n/2) when every
-    document is paired), per :func:`~flink_snappydata_spark.util.
-    presentation_sorted`.
+    is gated: ``sort=False`` skips it entirely.
     """
     if pairs is None:
         pairs = ngram_jaccard_pairs(documents, sorted_output=False)
-    labels = neardup_clusters(pairs, expect_small=expect_small)
+    labels = neardup_clusters(pairs)
     margins = quality_model_scores(documents, sort=False).select(
         "doc_id", "margin"
     )
@@ -90,7 +86,7 @@ def canonical_pick(
     )
     if not sort:
         return out
-    return presentation_sorted(out, "cluster_id", expect_small=expect_small)
+    return presentation_sorted(out, "cluster_id")
 
 
 def leakage_safe_split(

@@ -200,7 +200,6 @@ def _streamed_jaccard(
 def _verified_jaccard(
     sh: DataFrame, cand: DataFrame, threshold: float,
     sorted_output: bool = True,
-    expect_small: bool = True,
     max_set_size: int | None = MAX_PACKED_SHINGLES,
     packed: DataFrame | None = None,
 ) -> DataFrame:
@@ -238,11 +237,6 @@ def _verified_jaccard(
     document is verified by :func:`_streamed_jaccard` instead —
     identical values, ~50x more (small) rows for just those pairs.
     ``max_set_size=None`` disables the probe and bound.
-
-    ``expect_small`` is the presentation-sort size hint
-    (:func:`~flink_snappydata_spark.util.presentation_sorted`): pass
-    ``False`` on a duplicate-heavy corpus where the PAIR LIST itself
-    is O(corpus) so the final sort stays range-partitioned.
     """
     big_ids = None
     if max_set_size is not None:
@@ -325,13 +319,7 @@ def _verified_jaccard(
         .select("doc_a", "doc_b", "jaccard")
     )
     out = packed if streamed is None else packed.unionByName(streamed)
-    return out.transform(
-        lambda d: presentation_sorted(
-            d, "doc_a", "doc_b", expect_small=expect_small
-        )
-        if sorted_output
-        else d
-    )
+    return presentation_sorted(out, "doc_a", "doc_b") if sorted_output else out
 
 
 def _prefix_index(sh: DataFrame, threshold: float) -> DataFrame:
@@ -387,7 +375,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     n: int = SHINGLE_N,
     sorted_output: bool = True,
-    expect_small: bool = True,
     max_set_size: int | None = MAX_PACKED_SHINGLES,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via prefix filtering
@@ -456,8 +443,7 @@ def ngram_jaccard_pairs(
         max_set_size = None  # provably all under bound — skip the probe
     return _verified_jaccard(
         sh, cand, threshold, sorted_output,
-        expect_small=expect_small, max_set_size=max_set_size,
-        packed=packed,
+        max_set_size=max_set_size, packed=packed,
     )
 
 
@@ -767,7 +753,6 @@ def minhash_lsh_candidates(
 def minhash_dedup_pairs(
     documents: DataFrame,
     threshold: float = 0.8,
-    expect_small: bool = True,
     max_set_size: int | None = MAX_PACKED_SHINGLES,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified with exact Jaccard.
@@ -792,8 +777,7 @@ def minhash_dedup_pairs(
         max_set_size = None  # provably all under bound — skip the probe
     return _verified_jaccard(
         sh, cand, threshold,
-        expect_small=expect_small, max_set_size=max_set_size,
-        packed=fused.select("doc_id", "shs"),
+        max_set_size=max_set_size, packed=fused.select("doc_id", "shs"),
     )
 
 
@@ -1101,27 +1085,6 @@ def neardup_clusters(
     return presentation_sorted(labels, "doc_id", expect_small=expect_small)
 
 
-def streaming_exact_dedup(
-    stream: DataFrame,
-    key_cols: tuple[str, ...] = ("text",),
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Exact dedup on an unbounded stream: first occurrence of each key
-    within the watermark horizon passes, later copies are dropped.
-
-    ``dropDuplicatesWithinWatermark`` keeps per-key state only until the
-    watermark passes it — bounded state on an unbounded corpus, which is
-    the streaming-ingest half of :func:`exact_dedup` (dedup-at-ingest
-    before documents ever land in the lake). The watermark is the
-    dedup horizon: duplicates arriving farther apart than it may both
-    survive, the price of bounded state.
-    """
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )
-
-
 def streaming_dedup_ingest(
     stream_docs: DataFrame,
     parts_table: str,
@@ -1273,16 +1236,13 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
 
 
 def simhash_dedup_pairs(
-    documents: DataFrame, max_hamming: int = 3, expect_small: bool = True
+    documents: DataFrame, max_hamming: int = 3
 ) -> DataFrame:
     """SimHash near-dup pairs: 15-bit band blocking + Hamming verify.
 
     Any pair within Hamming distance ≤3 of a 60-bit fingerprint shares
     at least one of the 4 15-bit bands exactly (pigeonhole), so blocking
     on band equality loses no recall at max_hamming ≤ 3.
-
-    ``expect_small=False`` keeps the presentation sort distributed on a
-    duplicate-heavy corpus (pair lists are O(corpus) there).
     """
     band_bits = SIMHASH_BITS // SIMHASH_BANDS
     fps = simhash_fingerprints(documents)
@@ -1322,11 +1282,7 @@ def simhash_dedup_pairs(
         )
         .dropDuplicates(["doc_a", "doc_b"])
         .filter(F.col("hamming") <= max_hamming)
-        .transform(
-            lambda d: presentation_sorted(
-                d, "doc_a", "doc_b", expect_small=expect_small
-            )
-        )
+        .transform(lambda d: presentation_sorted(d, "doc_a", "doc_b"))
     )
 
 

@@ -163,7 +163,6 @@ def cosine_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.45,
     row_cap: int | None = ALL_PAIRS_ROW_CAP,
-    expect_small: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (exact, all pairs a<b).
 
@@ -189,11 +188,7 @@ def cosine_neardup_pairs(
             _cosine(_dot(F.col("qa"), F.col("qb")), F.col("na"), F.col("nb")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
-        .transform(
-            lambda d: presentation_sorted(
-                d, "vec_a", "vec_b", expect_small=expect_small
-            )
-        )
+        .transform(lambda d: presentation_sorted(d, "vec_a", "vec_b"))
     )
 
 
@@ -259,7 +254,6 @@ def lsh_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.9,
     multiprobe_bits: int = 1,
-    expect_small: bool = True,
 ) -> DataFrame:
     """ANN near-dup pairs: candidates collide in ≥1 hash table, then
     exact cosine verify — precision exact, recall ~0.93 at cosine 0.9
@@ -275,8 +269,7 @@ def lsh_neardup_pairs(
 
     Scale: the self-join key is (table_id, bucket); candidate volume is
     Σ bucket² per table, never O(n²); the verify step touches candidates
-    only. ``expect_small=False`` keeps the presentation sort
-    range-partitioned when the pair list itself is corpus-sized.
+    only.
     """
     sigs = lsh_signatures(embeddings)
     qv = quantized(embeddings)
@@ -323,11 +316,7 @@ def lsh_neardup_pairs(
             _cosine(_dot(F.col("qa"), F.col("qb")), F.col("na"), F.col("nb")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
-        .transform(
-            lambda d: presentation_sorted(
-                d, "vec_a", "vec_b", expect_small=expect_small
-            )
-        )
+        .transform(lambda d: presentation_sorted(d, "vec_a", "vec_b"))
     )
 
 
@@ -865,7 +854,6 @@ def semantic_neardup_pairs(
     threshold: float = 0.45,
     n_clusters: int = 8,
     n_iters: int = 2,
-    expect_small: bool = True,
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: cluster the corpus
     with :func:`_kmeans_fit`, then score pairs ONLY within each
@@ -886,10 +874,6 @@ def semantic_neardup_pairs(
     (:func:`cosine_neardup_pairs`): a pair straddling a cluster
     boundary is missed by construction; the fixture recall floor is
     pinned in tests.
-
-    ``expect_small=False`` keeps the presentation sort
-    range-partitioned when the pair list itself is corpus-sized
-    (duplicate-heavy corpora).
     """
     qv = tracked_persist(quantized(embeddings))
     _, assigned = _kmeans_fit(qv, n_clusters, n_iters)
@@ -921,11 +905,7 @@ def semantic_neardup_pairs(
             _cosine(_dot(F.col("qa"), F.col("qb")), F.col("na"), F.col("nb")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
-        .transform(
-            lambda d: presentation_sorted(
-                d, "vec_a", "vec_b", expect_small=expect_small
-            )
-        )
+        .transform(lambda d: presentation_sorted(d, "vec_a", "vec_b"))
     )
 
 

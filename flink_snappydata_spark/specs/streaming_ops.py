@@ -1191,8 +1191,7 @@ def _absence_streamed(spark, sf_dir: str) -> DataFrame:
     notFollowedBy ALERT set (wrong event, late trigger, or trailing
     silence of the bounded stream) over the accumulated raw log —
     row-identical to the batch op after the drain, so its oracle
-    applies verbatim. The push-based live form (event-time timers) is
-    streaming_cep_absence, pinned by its own golden tests."""
+    applies verbatim."""
     from flink_snappydata_spark.specs.llm_pipeline import (
         _stream_state_scored,
     )

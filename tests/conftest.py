@@ -112,9 +112,6 @@ SLOW_NODE_IDS = {
     "tests/test_round12_ops.py::test_ivfpq_saved_index_query_matches_inline",
     "tests/test_round13_ops.py::test_ivf_pq_prebuilt_topk_registered",
     "tests/test_round13_ops.py::test_ivfpq_prebuilt_memo_is_session_keyed",
-    "tests/test_round13_ops.py::test_streaming_absence_expired_run_fires_despite_new_data",
-    "tests/test_round13_ops.py::test_streaming_absence_silence_fires_on_event_time_timer",
-    "tests/test_round13_ops.py::test_streaming_pattern_equals_batch_with_flush",
     "tests/test_round13_ops.py::test_wordcount_compaction_drain_equals_batch",
     "tests/test_round14_ops.py::test_dedup_tiered_reclaims_and_stays_exact_at_8_batches",
     "tests/test_round14_ops.py::test_raw_log_tiered_segments_fold_identically",

@@ -982,11 +982,11 @@ def test_cep_absence_matches_naive(spark, raw):
 def _naive_pattern(rows, quants, relaxed, within=None):
     """Pure reference for cep_match_pattern: label per first-match-wins
     (view=1, click&value>=50=2, purchase=3), per-user order, optional
-    sentinel drop (relaxed), then the LIVE machine's pure fold
-    (advance_pattern_state) with one artificial closing row — the
+    sentinel drop (relaxed), then the reference fold
+    (tests/cep_reference.py::advance_pattern_state) with one artificial closing row — the
     batch compiler treats end-of-data as a run close; folding a label
     no event can carry reproduces that exactly."""
-    from flink_snappydata_spark.streaming.cep import advance_pattern_state
+    from tests.cep_reference import advance_pattern_state
 
     def label(r):
         if r.event_type == "view":
@@ -1022,7 +1022,7 @@ def _naive_pattern(rows, quants, relaxed, within=None):
 @given(_events_strategy)
 def test_cep_match_pattern_matches_machine(spark, raw):
     """The declarative batch compiler (islands + lead conjunction) and
-    the live machine's pure fold must agree on EVERY random sequence,
+    the reference fold must agree on EVERY random sequence,
     under strict AND relaxed contiguity, bounded and unbounded
     quantifiers, with and without a within window — the two
     implementations share only the stage spec."""

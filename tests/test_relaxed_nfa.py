@@ -31,12 +31,11 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from flink_snappydata_spark.streaming.cep import (
-    _pack_nfa_state,
-    _unpack_nfa_state,
+from flink_snappydata_spark.operators.cep import (
     advance_relaxed_nfa_state,
     close_relaxed_nfa,
 )
+from tests.cep_reference import advance_pattern_state
 
 
 # ---------------------------------------------------------------------------
@@ -430,10 +429,10 @@ def test_skip_to_next_equals_reference(quants, labels, within_us):
 def test_rel_fold_is_associative_over_splits(
     quants, data, split, within_us
 ):
-    """Cross-batch continuation WITH iterative conditions: the packed
-    state now carries captured float values (double<->long bit-cast +
-    a None bitmask); folding in two chunks through pack/unpack must
-    equal one fold."""
+    """Split-associativity WITH iterative conditions: folding in two
+    chunks, the carried state holding captured float values, must
+    equal one fold — the batch ``mapInPandas`` kernel carries (user,
+    state) across Arrow chunk boundaries and relies on this."""
     k = len(quants)
     rels = data.draw(_rels_strategy(k))
     raw = data.draw(
@@ -452,11 +451,9 @@ def test_rel_fold_is_associative_over_splits(
         for i, (lab, v) in enumerate(raw)
     ]
     cut = min(split, len(rows))
-    wr = any(r is not None for r in rels)  # the twins' use_rels rule
     m1, s1 = advance_relaxed_nfa_state(
         (), rows[:cut], quants, within_us, "skip_past_last", rels
     )
-    s1 = _unpack_nfa_state(_pack_nfa_state(s1, k, wr)[0], k, wr)
     m2, s2 = advance_relaxed_nfa_state(
         s1, rows[cut:], quants, within_us, "skip_past_last", rels
     )
@@ -475,10 +472,10 @@ def test_rel_fold_is_associative_over_splits(
     within_us=_WITHIN,
 )
 def test_fold_is_associative_over_splits(quants, labels, split, within_us):
-    """Cross-batch continuation: folding rows in two chunks through the
-    packed state equals one fold — the property the live machine's
-    state-store handoff relies on (pack/unpack round-trips too), with
-    and without a within window."""
+    """Split-associativity: folding rows in two chunks equals one fold,
+    with and without a within window — the batch ``mapInPandas`` kernel
+    carries (user, state) across Arrow chunk boundaries and relies on
+    this."""
     k = len(quants)
     rows = [
         (10 * (i + 1), lab if -1 <= lab <= k and lab != 0 else -1)
@@ -486,7 +483,6 @@ def test_fold_is_associative_over_splits(quants, labels, split, within_us):
     ]
     cut = min(split, len(rows))
     m1, s1 = advance_relaxed_nfa_state((), rows[:cut], quants, within_us)
-    s1 = _unpack_nfa_state(_pack_nfa_state(s1, k)[0], k)
     m2, s2 = advance_relaxed_nfa_state(s1, rows[cut:], quants, within_us)
     whole_m, whole_s = advance_relaxed_nfa_state((), rows, quants, within_us)
     assert m1 + m2 == whole_m
@@ -625,22 +621,6 @@ class TestOptionalStages:
         }
         assert got == want_cmp
 
-    def test_live_machine_rejects_strict_optionals(self, spark):
-        from flink_snappydata_spark.operators.cep import PatternStage
-        from flink_snappydata_spark.streaming import runtime
-        from flink_snappydata_spark.streaming.cep import (
-            streaming_cep_pattern,
-        )
-
-        stream = runtime.events_file_stream(spark, "/root/testdata/sf0.001")
-        stages = [
-            PatternStage("view", "view"),
-            PatternStage("click", "click", min_count=0),
-            PatternStage("purchase", "purchase"),
-        ]
-        with pytest.raises(ValueError, match="relaxed_nfa"):
-            streaming_cep_pattern(stream, stages)
-
     def test_compiler_rejections(self, spark):
         from flink_snappydata_spark.operators.cep import (
             PatternStage,
@@ -685,9 +665,6 @@ class TestDivergenceReceipts:
         rows = [(10, 1), (20, 2), (30, 1), (40, 2)]
         quants = [(2, 2), (1, 1)]
         assert engine_relaxed_nfa(rows, quants) == [(10, 40, (2, 1))]
-        from flink_snappydata_spark.streaming.cep import (
-            advance_pattern_state,
-        )
 
         closed = rows + [(50, -99)]
         burst, _ = advance_pattern_state(((), None), closed, quants)
@@ -700,9 +677,6 @@ class TestDivergenceReceipts:
         rows = [(10, 1), (20, 1), (30, 1), (40, 2)]
         quants = [(1, 2), (1, None)]
         assert engine_relaxed_nfa(rows, quants) == [(10, 40, (2, 1))]
-        from flink_snappydata_spark.streaming.cep import (
-            advance_pattern_state,
-        )
 
         closed = rows + [(50, -99)]
         burst, _ = advance_pattern_state(((), None), closed, quants)
@@ -788,53 +762,6 @@ class TestDivergenceReceipts:
             ).count()
             == 0
         )
-
-    def test_live_nfa_machine_contained_in_batch(self, spark):
-        """The live relaxed_nfa machine on a file replay: every emitted
-        match is a batch-op match, and it is non-vacuous (matches whose
-        completion is in-stream — bound completions and stage-label
-        closes — all emit; only a trailing satisfiable run withheld at
-        end-of-stream may be missing, same contract as the other
-        modes)."""
-        import pandas as pd
-
-        from flink_snappydata_spark.catalog import load_table
-        from flink_snappydata_spark.operators.cep import (
-            cep_funnel_relaxed_nfa,
-        )
-        from flink_snappydata_spark.operators.cep import PatternStage as PS
-        from pyspark.sql import functions as F
-        from flink_snappydata_spark.streaming import runtime
-        from flink_snappydata_spark.streaming.cep import (
-            streaming_cep_pattern,
-        )
-
-        sf = "/root/testdata/sf0.001"
-        stream = runtime.events_file_stream(spark, sf)
-        stages = [
-            PS("view", "view", min_count=1, max_count=1),
-            PS(
-                "click",
-                (F.col("event_type") == "click") & (F.col("value") >= 0.5),
-            ),
-            PS("purchase", "purchase", min_count=1, max_count=1),
-        ]
-        live = streaming_cep_pattern(stream, stages, contiguity="relaxed_nfa")
-        runtime.run_to_memory_sink(live, "nfa_live", "append")
-        got = spark.table("nfa_live").toPandas()
-        want = cep_funnel_relaxed_nfa(load_table(spark, sf, "events")).toPandas()
-        cols = [
-            "user_id",
-            "match_start",
-            "match_end",
-            "n_view",
-            "n_click",
-            "n_purchase",
-        ]
-        got = got[cols].sort_values(cols).reset_index(drop=True)
-        merged = got.merge(want[cols], how="left", indicator=True)
-        assert (merged["_merge"] == "both").all(), "live ⊄ batch"
-        assert len(got) >= 1, "non-vacuous"
 
     def test_within_prunes_partials_so_later_starts_win(self):
         # A fBy B within 25: A1 at t=10 never reaches a B inside its
@@ -935,45 +862,6 @@ class TestDivergenceReceipts:
             (30, 30, (1,)),
         ]
 
-    def test_live_rel_machine_contained_in_batch(self, spark):
-        """The live machine with an iterative condition (captured
-        floats riding the long-array state via bit-cast): replay
-        containment against the registered batch query."""
-        from flink_snappydata_spark.catalog import load_table
-        from flink_snappydata_spark.operators.cep import (
-            PatternStage as PS,
-            cep_funnel_iterative,
-        )
-        from pyspark.sql import functions as F
-        from flink_snappydata_spark.streaming import runtime
-        from flink_snappydata_spark.streaming.cep import (
-            streaming_cep_pattern,
-        )
-
-        sf = "/root/testdata/sf0.001"
-        stream = runtime.events_file_stream(spark, sf)
-        stages = [
-            PS("view", "view", min_count=1, max_count=1),
-            PS(
-                "click",
-                (F.col("event_type") == "click") & (F.col("value") >= 0.5),
-                rel=("first", 1, ">"),
-            ),
-            PS("purchase", "purchase", min_count=1, max_count=1),
-        ]
-        live = streaming_cep_pattern(stream, stages, contiguity="relaxed_nfa")
-        runtime.run_to_memory_sink(live, "rel_live", "append")
-        got = spark.table("rel_live").toPandas()
-        want = cep_funnel_iterative(load_table(spark, sf, "events")).toPandas()
-        cols = [
-            "user_id", "match_start", "match_end",
-            "n_view", "n_click", "n_purchase",
-        ]
-        got = got[cols].sort_values(cols).reset_index(drop=True)
-        merged = got.merge(want[cols], how="left", indicator=True)
-        assert (merged["_merge"] == "both").all(), "live ⊄ batch"
-        assert len(got) >= 1, "non-vacuous"
-
     def test_close_and_consume_completions_compete_jointly(self):
         # THE bug the strict brute found: under strict contiguity with
         # a trailing optional stage and a rel, a LATER-started branch
@@ -999,50 +887,6 @@ class TestDivergenceReceipts:
             rows, quants, None, "skip_past_last", None, True
         ) == []
         assert engine_relaxed_nfa(rows, quants) == [(10, 30, (1, 1))]
-
-    def test_live_strict_navigation_contained_in_batch(self, spark):
-        """LIVE MATCH_RECOGNIZE navigation: the strict machine mode on
-        a stream (sentinels shipped — they break matches in the fold)
-        with a PREV rel, replay-contained in the registered batch
-        ascending-run query."""
-        from flink_snappydata_spark.catalog import load_table
-        from flink_snappydata_spark.operators.cep import PatternStage as PS
-        from flink_snappydata_spark.operators.match_recognize import (
-            match_recognize,
-        )
-        from pyspark.sql import functions as F
-        from flink_snappydata_spark.streaming import runtime
-        from flink_snappydata_spark.streaming.cep import (
-            streaming_cep_pattern,
-        )
-
-        sf = "/root/testdata/sf0.001"
-        stream = runtime.events_file_stream(spark, sf)
-        stages = [
-            PS("v", "view", min_count=1, max_count=1),
-            PS(
-                "ascend",
-                F.col("event_type") == "click",
-                rel=("prev", ">"),
-            ),
-        ]
-        live = streaming_cep_pattern(stream, stages, contiguity="strict_nfa")
-        runtime.run_to_memory_sink(live, "strict_nav_live", "append")
-        got = spark.table("strict_nav_live").toPandas()
-        want = match_recognize(
-            load_table(spark, sf, "events"),
-            """
-            PATTERN (v ascend+)
-            DEFINE v AS event_type = 'view',
-                   ascend AS event_type = 'click'
-                             AND ascend.value > PREV(ascend.value)
-            """,
-        ).toPandas()
-        cols = ["user_id", "match_start", "match_end", "n_v", "n_ascend"]
-        got = got[cols].sort_values(cols).reset_index(drop=True)
-        merged = got.merge(want[cols], how="left", indicator=True)
-        assert (merged["_merge"] == "both").all(), "live ⊄ batch"
-        assert len(got) >= 1, "non-vacuous"
 
     def test_sentinels_invisible_and_flush_closes(self):
         rows = [(10, 1), (20, -1), (30, 2), (40, -1)]

@@ -85,65 +85,6 @@ def test_cep_matches_are_disjoint_maximal_runs(spark):
             assert a.run_end <= b.run_start, "matches must be disjoint"
 
 
-def test_streaming_cep_match_equals_batch(spark):
-    """The live applyInPandasWithState pattern matcher must emit
-    exactly the batch op's matches on an event-time-ordered replay
-    (the fixture arrives as one micro-batch — same harness contract
-    as the count-window streaming test)."""
-    import pandas as pd
-
-    from flink_snappydata_spark.operators.cep import cep_pattern_match
-    from flink_snappydata_spark.streaming import runtime
-    from flink_snappydata_spark.streaming.cep import streaming_cep_match
-
-    stream = runtime.events_file_stream(spark, SF_SMOKE)
-    live = streaming_cep_match(stream)
-    runtime.run_to_memory_sink(live, "cep_live_smoke", output_mode="append")
-    got = spark.table("cep_live_smoke").toPandas()
-    want = cep_pattern_match(load_table(spark, SF_SMOKE, "events")).toPandas()
-    cols = ["user_id", "run_start", "run_end", "n_run", "trigger_ts"]
-    got = got[cols].sort_values(cols).reset_index(drop=True)
-    want = want[cols].sort_values(cols).reset_index(drop=True)
-    assert len(got), "non-vacuous"
-    pd.testing.assert_frame_equal(got, want)
-
-
-def test_cep_state_machine_is_split_invariant(spark):
-    """advance_cep_state folded across EVERY split point of an ordered
-    sequence must equal the single-pass result — the cross-batch
-    continuation contract (an open run rides the state store)."""
-    from flink_snappydata_spark.operators.cep import cep_pattern_match
-    from flink_snappydata_spark.streaming.cep import advance_cep_state
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    uid = ev.filter(ev.event_type == "click").groupBy("user_id").count() \
-        .orderBy(F.col("count").desc()).first().user_id
-    rows = [
-        (int(r.ts.timestamp() * 1_000_000), r.event_type)
-        for r in ev.filter(ev.user_id == uid)
-        .orderBy("ts", "event_id")
-        .collect()
-    ]
-    single, end_state = advance_cep_state((0, 0, 0), rows)
-    assert single, "chosen user must produce at least one match"
-    for cut in range(len(rows) + 1):
-        f1, s1 = advance_cep_state((0, 0, 0), rows[:cut])
-        f2, s2 = advance_cep_state(s1, rows[cut:])
-        assert f1 + f2 == single, f"split at {cut} diverged"
-        assert s2 == end_state
-    # and the machine agrees with the declarative batch op for this key
-    want = sorted(
-        (
-            int(r.run_start.timestamp() * 1_000_000),
-            int(r.run_end.timestamp() * 1_000_000),
-            r.n_run,
-            int(r.trigger_ts.timestamp() * 1_000_000),
-        )
-        for r in cep_pattern_match(ev.filter(ev.user_id == uid)).collect()
-    )
-    assert sorted(single) == want
-
-
 def test_cep_absence_partitions_the_run_set(spark):
     """matches ∪ alerts must be EXACTLY the set of maximal runs of
     >= min_run clicks, disjointly — absence is the true complement

@@ -1,7 +1,6 @@
 """Round-13 operators and fixes: the gated presentation sort on
 temporal_table_join, fixed-width interval parsing for the banded-join
-family, the event-time-timeout live CEP absence path, and the general
-CEP pattern builder.
+family, and the general CEP pattern builder.
 
 Oracle parity for the registered queries is covered by
 test_oracle_parity; the tests here pin the library-path behaviors the
@@ -451,352 +450,3 @@ def test_pattern_builder_relaxed_contiguity_and_within(spark):
 
     with _pytest.raises(ValueError, match="strict|relaxed"):
         cep_match_pattern(ev, stages, contiguity="skip_till_next")
-
-
-# ----------------------------- live general pattern state machine
-
-
-def test_pattern_machine_is_split_invariant(spark):
-    """advance_pattern_state folded across EVERY split point of an
-    ordered label sequence must equal the single-pass result — the
-    cross-batch continuation contract (closed prefix + open run ride
-    the state store)."""
-    from flink_snappydata_spark.operators.cep import stage_label_expr
-    from flink_snappydata_spark.streaming.cep import advance_pattern_state
-
-    from flink_snappydata_spark.operators.cep import PatternStage as PS
-
-    stages = [PS("view", "view"), PS("click", "click", 2), PS("buy", "purchase")]
-    quants = [(s.min_count, s.max_count) for s in stages]
-    ev = load_table(spark, SF_SMOKE, "events")
-    labeled = ev.select(
-        "user_id", "ts", "event_id", stage_label_expr(stages).alias("lab")
-    )
-    # the fixture user with the most stage-participating events
-    uid = (
-        labeled.filter(F.col("lab") > 0)
-        .groupBy("user_id")
-        .count()
-        .orderBy(F.col("count").desc(), "user_id")
-        .first()
-        .user_id
-    )
-    rows = [
-        (int(r.ts.timestamp() * 1_000_000), r.lab)
-        for r in labeled.filter(F.col("user_id") == uid)
-        .orderBy("ts", "event_id")
-        .collect()
-    ]
-    single, end_state = advance_pattern_state(((), None), rows, quants)
-    for cut in range(len(rows) + 1):
-        m1, s1 = advance_pattern_state(((), None), rows[:cut], quants)
-        m2, s2 = advance_pattern_state(s1, rows[cut:], quants)
-        assert m1 + m2 == single, f"split at {cut} diverged"
-        assert s2 == end_state
-
-
-def test_streaming_pattern_equals_batch_with_flush(spark, tmp_path):
-    """Two-batch replay of the fixture followed by per-key FLUSH
-    records (sentinel type, after each user's last event — they close
-    every trailing run and can never join a match): the live machine's
-    matches must be row-identical to the batch compiler over the
-    ORIGINAL events (batch end-of-data closes runs implicitly; the
-    flush makes the live machine see the same closures)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from flink_snappydata_spark.operators.cep import cep_funnel_pattern
-    from flink_snappydata_spark.operators.cep import PatternStage as PS
-    from flink_snappydata_spark.streaming import runtime
-    from flink_snappydata_spark.streaming.cep import streaming_cep_pattern
-
-    ev = load_table(spark, SF_SMOKE, "events").select(
-        "user_id", "ts", "event_id", "event_type", "value"
-    )
-    pdf = ev.toPandas().sort_values(["user_id", "ts", "event_id"])
-    halves = [pdf.iloc[: len(pdf) // 2], pdf.iloc[len(pdf) // 2 :]]
-    flush = (
-        pdf.groupby("user_id")
-        .agg(last_ts=("ts", "max"), last_eid=("event_id", "max"))
-        .reset_index()
-    )
-    base = str(tmp_path / "pstream")
-    for i, half in enumerate(halves):
-        spark.createDataFrame(half).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/f{i}.parquet")
-    flush_rows = [
-        (
-            int(r.user_id),
-            r.last_ts.to_pydatetime() + dt.timedelta(days=400),
-            int(r.last_eid) + 10_000_000,
-            "__flush__",
-            0.0,
-        )
-        for r in flush.itertuples()
-    ]
-    spark.createDataFrame(
-        flush_rows,
-        "user_id long, ts timestamp, event_id long, event_type string,"
-        " value double",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{base}/f2.parquet")
-    import os
-
-    for i, mt in enumerate((1_700_000_000, 1_700_000_100, 1_700_000_200)):
-        d = f"{base}/f{i}.parquet"
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (mt, mt))
-        os.utime(d, (mt, mt))
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, event_type string,"
-            " value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/*.parquet")
-    )
-    stages = [
-        PS("view", "view"),
-        PS(
-            "click",
-            (F.col("event_type") == "click") & (F.col("value") >= 0.5),
-            min_count=2,
-        ),
-        PS("purchase", "purchase"),
-    ]
-    live = streaming_cep_pattern(stream, stages)
-    runtime.run_to_memory_sink(live, "pattern_live", output_mode="append")
-    got = spark.table("pattern_live").toPandas()
-    want = cep_funnel_pattern(ev).toPandas()
-    cols = ["user_id", "match_start", "match_end", "n_view", "n_click", "n_purchase"]
-    got = got[cols].sort_values(cols).reset_index(drop=True)
-    want = want[cols].sort_values(cols).reset_index(drop=True)
-    assert len(got), "non-vacuous"
-    pd.testing.assert_frame_equal(got, want)
-
-
-def test_streaming_pattern_relaxed_within_matches_batch(spark):
-    """The live machine under contiguity='relaxed' + within must agree
-    with the batch builder on a single-batch replay (relaxed drops the
-    sentinel rows JVM-side, so every run is closed by the next stage
-    event or the flushless end counts only via closed runs — compare
-    on the batch matches whose final run is closed in-stream)."""
-    import pandas as pd
-
-    from flink_snappydata_spark.operators.cep import (
-        cep_funnel_pattern_relaxed,
-        _funnel_stages,
-    )
-    from flink_snappydata_spark.streaming import runtime
-    from flink_snappydata_spark.streaming.cep import streaming_cep_pattern
-
-    stream = runtime.events_file_stream(spark, SF_SMOKE)
-    live = streaming_cep_pattern(
-        stream, _funnel_stages(), contiguity="relaxed", within="2 days"
-    )
-    runtime.run_to_memory_sink(live, "pattern_relaxed_live", "append")
-    got = spark.table("pattern_relaxed_live").toPandas()
-    want = cep_funnel_pattern_relaxed(
-        load_table(spark, SF_SMOKE, "events")
-    ).toPandas()
-    cols = ["user_id", "match_start", "match_end", "n_view", "n_click",
-            "n_purchase"]
-    got = got[cols].sort_values(cols).reset_index(drop=True)
-    # live withholds matches whose final purchase run is still open at
-    # end-of-stream (no flush here); every emitted match must be a
-    # batch match, and matches closed in-stream must all emit
-    merged = got.merge(want[cols], how="left", indicator=True)
-    assert (merged["_merge"] == "both").all(), "live ⊄ batch"
-    assert len(got) >= 1, "non-vacuous"
-
-
-# --------------------- live absence (notFollowedBy, event-time timer)
-
-
-def test_absence_state_machine_is_split_invariant(spark):
-    """advance_absence_state folded across EVERY split point of an
-    ordered sequence must equal the single-pass result, and its
-    in-stream alerts must agree with the batch cep_absence_alerts rows
-    whose runs are closed by an event (next_type non-null)."""
-    from flink_snappydata_spark.operators.cep import cep_absence_alerts
-    from flink_snappydata_spark.streaming.cep import advance_absence_state
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    uid = (
-        ev.filter(ev.event_type == "click")
-        .groupBy("user_id")
-        .count()
-        .orderBy(F.col("count").desc())
-        .first()
-        .user_id
-    )
-    rows = [
-        (int(r.ts.timestamp() * 1_000_000), r.event_type)
-        for r in ev.filter(ev.user_id == uid)
-        .orderBy("ts", "event_id")
-        .collect()
-    ]
-    single, end_state = advance_absence_state((0, 0, 0), rows)
-    for cut in range(len(rows) + 1):
-        f1, s1 = advance_absence_state((0, 0, 0), rows[:cut])
-        f2, s2 = advance_absence_state(s1, rows[cut:])
-        assert f1 + f2 == single, f"split at {cut} diverged"
-        assert s2 == end_state
-    want = sorted(
-        (
-            int(r.run_start.timestamp() * 1_000_000),
-            int(r.run_end.timestamp() * 1_000_000),
-            r.n_run,
-            r.next_type,
-            int(r.next_ts.timestamp() * 1_000_000),
-        )
-        for r in cep_absence_alerts(ev.filter(ev.user_id == uid)).collect()
-        if r.next_type is not None  # silence rows are the timer's job
-    )
-    assert sorted(single) == want
-    assert want, "chosen user must produce at least one in-stream alert"
-
-
-def _write_event_file(spark, path, rows, mtime):
-    """One parquet file of (user_id, ts, event_id, event_type) rows
-    with a pinned mtime — the file source processes files in mtime
-    order, so tests control micro-batch boundaries exactly."""
-    import os
-
-    df = spark.createDataFrame(
-        [(u, ts, eid, et) for u, ts, eid, et in rows],
-        "user_id long, ts timestamp, event_id long, event_type string",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-    for f in os.listdir(path):
-        os.utime(os.path.join(path, f), (mtime, mtime))
-    os.utime(path, (mtime, mtime))
-
-
-def test_streaming_absence_silence_fires_on_event_time_timer(spark, tmp_path):
-    """THE notFollowedBy silence case, live: a qualifying click run
-    with NO closing event must alert (null next_type/next_ts) once the
-    event-time watermark passes run_end + within — fired by the
-    EventTimeTimeout timer, not by any closing event. Three files =
-    three micro-batches: (1) the run, (2) an unrelated user advancing
-    max event time, (3) another unrelated event so the batch-2
-    watermark (which excludes batch 2's own rows) passes the deadline
-    and the timer fires."""
-    import datetime as dt
-
-    from flink_snappydata_spark.streaming import runtime
-    from flink_snappydata_spark.streaming.cep import streaming_cep_absence
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    base = str(tmp_path / "stream")
-    day = dt.timedelta(days=1)
-    _write_event_file(
-        spark,
-        f"{base}/f1.parquet",
-        [(1, t0, 10, "click"), (1, t0 + dt.timedelta(minutes=1), 11, "click")],
-        mtime=1_700_000_000,
-    )
-    _write_event_file(
-        spark,
-        f"{base}/f2.parquet",
-        [(999, t0 + 3 * day, 20, "view")],
-        mtime=1_700_000_100,
-    )
-    _write_event_file(
-        spark,
-        f"{base}/f3.parquet",
-        [(998, t0 + 4 * day, 30, "view")],
-        mtime=1_700_000_200,
-    )
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/*.parquet")
-    )
-    alerts = streaming_cep_absence(stream, within="1 day")
-    runtime.run_to_memory_sink(alerts, "absence_live", output_mode="append")
-    got = spark.table("absence_live").collect()
-    assert len(got) == 1, f"exactly one silence alert expected, got {got}"
-    a = got[0]
-    assert a.user_id == 1 and a.n_run == 2
-    assert a.run_start == t0
-    assert a.run_end == t0 + dt.timedelta(minutes=1)
-    assert a.next_type is None and a.next_ts is None
-
-
-def test_streaming_absence_expired_run_fires_despite_new_data(spark, tmp_path):
-    """Batching-invariance of the silence alert (review finding r13):
-    when a key receives NEW data in the batch where its pattern window
-    is already watermark-expired (hasTimedOut only fires for keys
-    without data), the stored run must alert and reset BEFORE the fold
-    — not silently extend across the expired gap. Batch 1: a 2-click
-    run + an unrelated event 5 days out (watermark passes the 1-day
-    deadline). Batch 2: the SAME user clicks again at day 10 — the
-    day-0 run must emit a silence alert with n_run=2, and the new
-    click must start a fresh run (no n_run=3 merge, no lost alert)."""
-    import datetime as dt
-
-    from flink_snappydata_spark.streaming import runtime
-    from flink_snappydata_spark.streaming.cep import streaming_cep_absence
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    day = dt.timedelta(days=1)
-    base = str(tmp_path / "stream")
-    _write_event_file(
-        spark,
-        f"{base}/f1.parquet",
-        [
-            (1, t0, 10, "click"),
-            (1, t0 + dt.timedelta(minutes=1), 11, "click"),
-            (999, t0 + 5 * day, 20, "view"),
-        ],
-        mtime=1_700_000_000,
-    )
-    _write_event_file(
-        spark,
-        f"{base}/f2.parquet",
-        [(1, t0 + 10 * day, 30, "click")],
-        mtime=1_700_000_100,
-    )
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/*.parquet")
-    )
-    alerts = streaming_cep_absence(stream, within="1 day")
-    runtime.run_to_memory_sink(alerts, "absence_expiry", output_mode="append")
-    got = spark.table("absence_expiry").collect()
-    assert len(got) == 1, f"exactly the day-0 silence alert expected: {got}"
-    a = got[0]
-    assert a.user_id == 1 and a.n_run == 2
-    assert a.run_end == t0 + dt.timedelta(minutes=1)
-    assert a.next_type is None and a.next_ts is None
-
-
-def test_streaming_absence_in_stream_close_matches_batch(spark):
-    """Single-batch replay of the fixture: every live alert closed by
-    an in-stream event must be exactly the batch op's non-silence
-    alert set (the containment the module docstring declares)."""
-    import pandas as pd
-
-    from flink_snappydata_spark.operators.cep import cep_absence_alerts
-    from flink_snappydata_spark.streaming import runtime
-    from flink_snappydata_spark.streaming.cep import streaming_cep_absence
-
-    stream = runtime.events_file_stream(spark, SF_SMOKE)
-    live = streaming_cep_absence(stream)
-    runtime.run_to_memory_sink(live, "absence_live_smoke", output_mode="append")
-    got = spark.table("absence_live_smoke").toPandas()
-    got = got[got["next_type"].notna()]
-    want = cep_absence_alerts(load_table(spark, SF_SMOKE, "events")).toPandas()
-    want = want[want["next_type"].notna()]
-    cols = ["user_id", "run_start", "run_end", "n_run", "next_type", "next_ts"]
-    got = got[cols].sort_values(cols).reset_index(drop=True)
-    want = want[cols].sort_values(cols).reset_index(drop=True)
-    assert len(got), "non-vacuous"
-    pd.testing.assert_frame_equal(got, want)

@@ -2,8 +2,8 @@
 the general CEP pattern builder, pinned differentially against a tiny
 reference NFA implementing Flink's strict-contiguity greedy matching
 with AFTER MATCH SKIP PAST LAST EVENT (the r13 verdict's task 2), plus
-the candidate-disjointness invariant the live machine's skip-past-last
-history clearing relies on (ADVICE r13).
+the candidate-disjointness invariant the reference fold's
+skip-past-last history clearing relies on (ADVICE r13).
 
 Reference semantics (FlinkCEP, public docs + NFA.java behavior for
 ``Pattern.begin(s1).next(s2)...`` with ``times(m, n)`` quantifiers and
@@ -92,7 +92,7 @@ def engine_matches(
     close (a label no event carries closes the trailing run, exactly
     what bounded input does for the declarative compiler — their
     equivalence is pinned by test_cep_match_pattern_matches_machine)."""
-    from flink_snappydata_spark.streaming.cep import advance_pattern_state
+    from tests.cep_reference import advance_pattern_state
 
     if not rows:
         return []
@@ -168,7 +168,7 @@ def test_single_stage_bounded_rejected(spark):
         PatternStage,
         cep_match_pattern,
     )
-    from flink_snappydata_spark.streaming.cep import advance_pattern_state
+    from tests.cep_reference import advance_pattern_state
 
     with pytest.raises(ValueError, match="single-stage"):
         cep_match_pattern(
@@ -184,7 +184,7 @@ def test_single_stage_bounded_rejected(spark):
 
 def test_within_validated_before_interval_expr(spark):
     """ADVICE r13: the batch builder validates `within` through the
-    fixed-width-unit contract (mirroring the streaming twin) instead
+    fixed-width-unit contract (as the machine modes do) instead
     of interpolating it raw into F.expr."""
     from flink_snappydata_spark.operators.cep import (
         PatternStage,
@@ -406,7 +406,7 @@ class TestMatchRecognizeParser:
 
 
 # ---------------------------------------------------------------------------
-# Candidate-disjointness invariant (ADVICE r13: the live machine clears
+# Candidate-disjointness invariant (ADVICE r13: the reference fold clears
 # its closed-run history on any quantifier-passing match BEFORE the
 # JVM-side `within` post-filter — lossless only if candidates never
 # overlap)
@@ -695,7 +695,7 @@ def test_candidate_matches_always_disjoint(quants, labels):
     matches occupy k consecutive runs labeled exactly 1..k, so two
     candidates can never overlap — clearing history on a match cannot
     drop a later batch-visible match even when `within` rejects the
-    emitted one. This is the invariant that makes the live twin's
+    emitted one. This is the invariant that makes the reference fold's
     pre-within skip-past-last clearing exact."""
     k = len(quants)
     rows = [
