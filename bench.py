@@ -101,10 +101,13 @@ RAW_SKETCHES = {
 # reopened from parquet — file-backed scans, so the query plan carries
 # zero training lineage (the A/B-rejected persist-the-lineage variant
 # kept the 60-exchange DAG in every plan) and survives the per-rep
-# release_caches(). The warm-up rep pays build+save; timed reps
-# measure only probe→ADC→shortlist→re-rank. The build/load helper is
-# shared with the registered ivf_pq_prebuilt_topk query (the
-# driver-stamped production path) — one memoized index per sf_dir.
+# release_caches(). The index is kept in the store (under the
+# warehouse dir, named by an input fingerprint), so only a run that
+# finds none there pays build+save, in its warm-up rep; every timed
+# rep reopens it with declared schemas (no job) and measures only
+# probe→ADC→shortlist→re-rank. The build/open helper is shared with
+# the registered ivf_pq_prebuilt_topk query (the oracle-checked
+# production path).
 from flink_snappydata_spark.specs.embeddings_quality import (  # noqa: E402
     ivfpq_prebuilt_index,
 )

@@ -98,21 +98,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def register_tables(
     spark: SparkSession,
     sf_dir: str = DEFAULT_SF_DIR,
-    cache: bool = False,
     tables: tuple[str, ...] = TABLES,
 ) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view (idempotent).
-
-    With ``cache=True`` the views become in-memory columnar tables
-    (the SnappyData analog). Leave it off for one-shot correctness runs,
-    where the scan-once cost beats cache materialization.
-    """
+    """Register every fixture table as a temp view (idempotent)."""
     out: dict[str, DataFrame] = {}
     for name in tables:
         df = load_table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
-        if cache:
-            spark.catalog.cacheTable(name)
         out[name] = df
     return out
 

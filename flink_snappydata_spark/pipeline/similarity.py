@@ -28,6 +28,7 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from flink_snappydata_spark.streaming.runtime import (
     ingest_stream_to_tables,
@@ -1982,11 +1983,26 @@ class IvfPqIndex(NamedTuple):
         O(m·k) rows by construction) coalesce to one file so reopening
         them is a single-split scan; the corpus-sized frames keep the
         caller's partitioning (at 100 TB that IS the layout — callers
-        on tiny harness data can pre-``coalesce`` qv/codes)."""
+        on tiny harness data can pre-``coalesce`` qv/codes). Raises
+        ``ValueError`` when a frame drifts from its
+        :data:`IVF_PQ_SCHEMAS` entry, which the reopen trusts."""
         for name, df in self._asdict().items():
+            want = T.StructType.fromDDL(IVF_PQ_SCHEMAS[name]).simpleString()
+            if df.schema.simpleString() != want:
+                raise ValueError(f"IvfPqIndex.{name} is {df.schema}, not {want}")
             if name in ("cents", "pq_cents"):
                 df = df.coalesce(1)
             df.write.mode("overwrite").parquet(f"{base}/{name}")
+
+
+#: Parquet schema of each :class:`IvfPqIndex` artifact. Reopening with
+#: a declared schema reads no footers, so it launches no Spark job.
+IVF_PQ_SCHEMAS = {
+    "qv": "vec_id BIGINT, qe ARRAY<BIGINT>, norm_sq BIGINT",
+    "cents": "cent_id BIGINT, ce ARRAY<BIGINT>, cn BIGINT",
+    "pq_cents": "m BIGINT, cent_id BIGINT, ce ARRAY<BIGINT>",
+    "codes": "vec_id BIGINT, m BIGINT, cent_id BIGINT, list_id BIGINT",
+}
 
 
 def ivf_pq_index_load(spark, base: str) -> IvfPqIndex:
@@ -1997,7 +2013,7 @@ def ivf_pq_index_load(spark, base: str) -> IvfPqIndex:
     explicit broadcasts are the only hints needed."""
     return IvfPqIndex(
         **{
-            name: spark.read.parquet(f"{base}/{name}")
+            name: spark.read.schema(IVF_PQ_SCHEMAS[name]).parquet(f"{base}/{name}")
             for name in IvfPqIndex._fields
         }
     )
@@ -2015,7 +2031,8 @@ def ivf_pq_index(
     Build-time intermediates ride :func:`tracked_persist`; a consumer
     that needs the index to OUTLIVE ``release_caches`` stores it with
     :meth:`IvfPqIndex.save` and reopens via :func:`ivf_pq_index_load`
-    (what the bench's prebuilt-query receipt does).
+    (what ``specs.embeddings_quality.ivfpq_prebuilt_index`` does for
+    the store's copy under the warehouse dir).
 
     Scale: the two corpus-sized joins pin ``shuffle_hash`` (both sides
     corpus-sized by construction); centroid/codebook frames are

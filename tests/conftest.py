@@ -109,9 +109,7 @@ SLOW_NODE_IDS = {
     "tests/test_round11_ops.py::test_ivf_pq_exact_when_probing_everything",
     "tests/test_round11_ops.py::test_ivf_pq_recall_overlap",
     "tests/test_round12_ops.py::test_funnel_compaction_drain_equals_batch",
-    "tests/test_round12_ops.py::test_ivfpq_saved_index_query_matches_inline",
     "tests/test_round13_ops.py::test_ivf_pq_prebuilt_topk_registered",
-    "tests/test_round13_ops.py::test_ivfpq_prebuilt_memo_is_session_keyed",
     "tests/test_round13_ops.py::test_wordcount_compaction_drain_equals_batch",
     "tests/test_round14_ops.py::test_dedup_tiered_reclaims_and_stays_exact_at_8_batches",
     "tests/test_round14_ops.py::test_raw_log_tiered_segments_fold_identically",

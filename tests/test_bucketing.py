@@ -76,6 +76,22 @@ def test_table_cache_toggle(spark):
     assert not c.storageLevel.useMemory
 
 
+def test_register_tables_views_are_idempotent(spark):
+    from flink_snappydata_spark.catalog import register_tables
+
+    tables = ("region", "nation")
+    try:
+        for _ in range(2):  # registering again replaces, never raises
+            out = register_tables(spark, SF_SMOKE, tables=tables)
+            assert set(out) == set(tables)
+            for name in tables:
+                assert spark.catalog.tableExists(name)
+                assert spark.table(name).count() == out[name].count() > 0
+    finally:
+        for name in tables:
+            spark.catalog.dropTempView(name)
+
+
 def test_spread_noop_on_wide_input(spark):
     from flink_snappydata_spark.util import spread
 

@@ -1,12 +1,11 @@
-"""Round-12 operators: the FULL OUTER windowed stream-stream join,
-the IVFADC build/query split (prebuilt-index path), and the
-session/funnel fragment compaction.
+"""Round-12 operators: the FULL OUTER windowed stream-stream join and
+the session/funnel fragment compaction. (The IVFADC prebuilt-index
+path is pinned in test_round13_ops.py.)
 
 Oracle parity for ``stream_join_full_outer`` is covered by
 test_oracle_parity; the tests here pin what the oracle can't see —
 the streaming watermark-gated emission contract (mirroring the
-left-outer pin in test_round11_ops.py), prebuilt-index equivalence,
-and compaction exactness.
+left-outer pin in test_round11_ops.py) and compaction exactness.
 """
 
 from __future__ import annotations
@@ -17,33 +16,6 @@ from flink_snappydata_spark.catalog import load_table
 
 SF = "/root/testdata/sf0.01"
 SF_SMOKE = "/root/testdata/sf0.001"
-
-
-# --------------------------------------- IVFADC build/query split
-
-
-def test_ivfpq_saved_index_query_matches_inline(spark, tmp_path):
-    """ivf_pq_topk against a saved-then-reloaded IvfPqIndex must be
-    row-identical to the inline-trained registered query — the
-    amortized production path (build once, persist, query many) cannot
-    diverge from the oracle-checked shape. Also pins that the reloaded
-    query plan is training-free: it must reference no more than the
-    four index scans plus the corpus, i.e. contain no kmeans iteration
-    joins (exchange count well below the inline plan's)."""
-    from flink_snappydata_spark.pipeline import similarity
-    from flink_snappydata_spark.util import release_caches
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    inline = [tuple(r) for r in similarity.ivf_pq_topk(emb).collect()]
-    base = str(tmp_path / "ivfpq")
-    similarity.ivf_pq_index(emb).save(base)
-    release_caches()
-    idx = similarity.ivf_pq_index_load(spark, base)
-    reloaded = similarity.ivf_pq_topk(emb, index=idx)
-    assert [tuple(r) for r in reloaded.collect()] == inline
-    plan = reloaded._jdf.queryExecution().optimizedPlan().toString()
-    n_joins = plan.count("Join")
-    assert n_joins <= 8, f"reloaded plan still carries training ({n_joins} joins)"
 
 
 # ---------------------------- CEP / window funnel / temporal join

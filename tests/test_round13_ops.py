@@ -91,67 +91,105 @@ def test_temporal_table_join_sort_gate(spark):
 def test_ivf_pq_prebuilt_topk_registered(spark):
     """The driver-stamped production ANN path: the registered
     ivf_pq_prebuilt_topk query must (a) return rows identical to the
-    inline-training ivf_pq_topk (same oracle applies), and (b) carry a
-    training-free plan — file-backed index scans, <= 15 exchanges
-    (the inline DAG optimizes to ~60)."""
+    inline-training ivf_pq_topk (same oracle applies), (b) carry a
+    training-free plan — file-backed index scans, <= 8 joins and
+    <= 15 exchanges (the inline DAG optimizes to ~60) — and (c) keep
+    the index in the store: a new session opens the same directory
+    and launches at most the one job that infers the embeddings
+    schema, never a rebuild."""
+    from flink_snappydata_spark.plans.inspect import exchange_count
     from flink_snappydata_spark.registry import QUERIES, queries
+    from flink_snappydata_spark.specs import embeddings_quality as eq
 
     spec = QUERIES["ivf_pq_prebuilt_topk"]
     assert spec.oracle == QUERIES["ivf_pq_topk"].oracle
     qs = queries()
     prebuilt = qs["ivf_pq_prebuilt_topk"](spark, SF_SMOKE)
     inline = qs["ivf_pq_topk"](spark, SF_SMOKE)
-    assert [tuple(r) for r in prebuilt.collect()] == [
-        tuple(r) for r in inline.collect()
-    ]
-    from flink_snappydata_spark.plans.inspect import exchange_count
-
+    rows = [tuple(r) for r in prebuilt.collect()]
+    assert rows == [tuple(r) for r in inline.collect()]
+    plan = prebuilt._jdf.queryExecution().optimizedPlan().toString()
+    n_joins = plan.count("Join")
+    assert n_joins <= 8, f"prebuilt plan still carries training ({n_joins} joins)"
     n_ex = exchange_count(prebuilt)  # shuffle exchanges, gauge metric
     assert n_ex <= 15, f"prebuilt plan still carries training ({n_ex} exchanges)"
 
+    other = spark.newSession()
+    assert eq.ivfpq_store_dir(other, SF_SMOKE) == eq.ivfpq_store_dir(spark, SF_SMOKE)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    reopened = qs["ivf_pq_prebuilt_topk"](other, SF_SMOKE)
+    n_jobs = dag.numTotalJobs() - before
+    assert n_jobs <= 1, f"new session rebuilt the stored index ({n_jobs} jobs)"
+    assert [tuple(r) for r in reopened.collect()] == rows
 
-def test_ivfpq_prebuilt_memo_is_session_keyed(spark, tmp_path):
-    """Review-fix pin (r13 + the r14 concurrent-session hardening):
-    the prebuilt-index memo is keyed by (session identity, sf_dir) —
-    a dead session's entry must not be returned and its on-disk
-    directory IS reclaimed on the next build, while a CONCURRENTLY
-    LIVE session's entry and directory must survive another session's
-    rebuild (its loaded qv/codes frames still point at those files)."""
+
+def test_ivfpq_store_dir_fingerprint(spark, tmp_path):
+    """The stored index's directory is a pure function of its inputs:
+    the same inputs name the same dir, and each input that can change
+    the index (a file's mtime or size, the build parameters, the
+    fixture dir) names a different one. A warehouse that is not a
+    local path is refused."""
     import os
+    import shutil
+    from types import SimpleNamespace
 
     from flink_snappydata_spark.specs import embeddings_quality as eq
 
-    idx = eq.ivfpq_prebuilt_index(spark, SF_SMOKE)
-    assert eq.ivfpq_prebuilt_index(spark, SF_SMOKE) is idx, "same-session hit"
-    live_key = (id(spark), SF_SMOKE)
-    _, live_idx, live_dir = eq._IVFPQ_PREBUILT[live_key]
+    def fixture(name):
+        d = tmp_path / name
+        d.mkdir()
+        shutil.copy2(f"{SF_SMOKE}/embeddings.parquet", d / "embeddings.parquet")
+        return str(d)
 
-    # (a) dead-session entry (no SparkContext => confirmed stopped):
-    #     reclaimed on the next build
-    stale_dir = str(tmp_path / "stale-ivfpq")
-    os.makedirs(stale_dir, exist_ok=True)
-    dead_owner = object()
-    eq._IVFPQ_PREBUILT[(id(dead_owner), SF_SMOKE)] = (
-        dead_owner, live_idx, stale_dir,
+    sf_a, sf_b = fixture("a"), fixture("b")
+    emb = os.path.join(sf_a, "embeddings.parquet")
+
+    def touch_mtime():
+        st = os.stat(emb)
+        os.utime(emb, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+
+    def grow():  # same mtime, one byte longer
+        st = os.stat(emb)
+        with open(emb, "ab") as f:
+            f.write(b"\0")
+        os.utime(emb, ns=(st.st_atime_ns, st.st_mtime_ns))
+
+    base = eq.ivfpq_store_dir(spark, sf_a)
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    assert os.path.dirname(base) == os.path.join(warehouse, "ivfpq")
+    assert eq.ivfpq_store_dir(spark, sf_a) == base, "same inputs, same dir"
+    assert eq.ivfpq_store_dir(spark, sf_b) != base, "different sf_dir"
+    assert eq.ivfpq_store_dir(
+        spark, sf_a, {**eq.IVFPQ_PARAMS, "n_iters": 3}
+    ) != base, "different build parameters"
+    seen = {base}
+    for change, label in ((touch_mtime, "changed mtime"), (grow, "changed size")):
+        change()
+        d = eq.ivfpq_store_dir(spark, sf_a)
+        assert d not in seen, label
+        seen.add(d)
+
+    remote = SimpleNamespace(conf=SimpleNamespace(get=lambda key: "hdfs://nn/wh"))
+    with pytest.raises(ValueError, match="needs a local warehouse"):
+        eq.ivfpq_store_dir(remote, sf_a)
+
+
+def test_ivfpq_save_rejects_undeclared_schema(spark, tmp_path):
+    """The reopen trusts IVF_PQ_SCHEMAS instead of reading footers, so
+    save must refuse a frame whose schema differs from its declared
+    one, before anything is written."""
+    import os
+
+    from flink_snappydata_spark.pipeline.similarity import IvfPqIndex
+
+    qv = spark.range(2).selectExpr(
+        "id AS vec_id", "array(id) AS qe", "CAST(id AS INT) AS norm_sq"
     )
-    # (b) concurrently-live entry (this session, different sf_dir key):
-    #     must NOT be reclaimed by another key's rebuild
-    peer_dir = str(tmp_path / "peer-ivfpq")
-    os.makedirs(peer_dir, exist_ok=True)
-    peer_key = (id(spark), str(tmp_path / "peer-sf"))
-    eq._IVFPQ_PREBUILT[peer_key] = (spark, live_idx, peer_dir)
-    # force a rebuild of the live key by dropping it
-    del eq._IVFPQ_PREBUILT[live_key]
-    try:
-        rebuilt = eq.ivfpq_prebuilt_index(spark, SF_SMOKE)
-        assert eq._IVFPQ_PREBUILT[live_key][0] is spark, "re-keyed to session"
-        assert not os.path.exists(stale_dir), "dead session dir reclaimed"
-        assert os.path.exists(peer_dir), "live session dir must survive"
-        assert peer_key in eq._IVFPQ_PREBUILT, "live entry must survive"
-        assert len(rebuilt.qv.take(1)) == 1, "rebuilt index is live"
-    finally:
-        eq._IVFPQ_PREBUILT.pop(peer_key, None)
-        assert eq._IVFPQ_PREBUILT[live_key][0] is spark
+    bad = IvfPqIndex(qv=qv, cents=qv, pq_cents=qv, codes=qv)
+    with pytest.raises(ValueError, match="IvfPqIndex.qv is"):
+        bad.save(str(tmp_path / "idx"))
+    assert not os.path.exists(tmp_path / "idx")
 
 
 # ------------------- mergeable-partial compaction (wordcount loop)
