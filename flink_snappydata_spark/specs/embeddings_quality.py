@@ -859,23 +859,19 @@ _register(
 # — then the SAME search against it. Values are bit-identical, so
 # ivf_pq_topk's oracle applies verbatim.
 
-#: Build parameters of the stored index (ivf_pq_index's defaults);
-#: part of its fingerprint.
-IVFPQ_PARAMS = {"n_coarse": 8, "n_pq_centroids": 8, "n_iters": 2}
-
-
-def ivfpq_store_dir(spark, sf_dir: str, params: dict = IVFPQ_PARAMS) -> str:
+def ivfpq_store_dir(spark, sf_dir: str) -> str:
     """``<warehouse>/ivfpq/<fingerprint>``: the fingerprint hashes
     ``sf_dir``, its ``embeddings.parquet`` and every file under that
-    (relative path, size, mtime_ns), the build ``params`` and the
-    trainer's source (``pipeline/similarity.py``), so a changed input
-    or trainer never reopens an index built from older ones."""
+    (relative path, size, mtime_ns) and the trainer's source
+    (``pipeline/similarity.py``, which holds the build parameters'
+    defaults), so a changed input, trainer or parameter never reopens
+    an index built from older ones."""
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
     if wh.scheme not in ("", "file"):
         raise ValueError(f"IVF-PQ store needs a local warehouse, not {wh.geturl()}")
     root = os.path.join(sf_dir, "embeddings.parquet")
     under = sorted(os.path.join(d, n) for d, _, ns in os.walk(root) for n in ns)
-    h = hashlib.sha256(f"{os.path.abspath(sf_dir)}|{sorted(params.items())}".encode())
+    h = hashlib.sha256(os.path.abspath(sf_dir).encode())
     for f in [root, *under]:
         st = os.stat(f)
         h.update(f"|{os.path.relpath(f, root)}|{st.st_size}|{st.st_mtime_ns}".encode())
@@ -889,26 +885,26 @@ def ivfpq_prebuilt_index(spark, sf_dir: str) -> similarity.IvfPqIndex:
     receipt: opened from :func:`ivfpq_store_dir` when present, else
     built, saved to a unique sibling and published with one rename, so
     a crashed build never leaves a partial index where it can be
-    opened; when a concurrent build published first, its index wins.
+    opened; a failed build deletes its sibling, and when a concurrent
+    build published first, its index wins.
     Harness-scale file layout: at sf<=0.1 the corpus frames are a few
     MB, so qv/codes coalesce to 4 files (at real scale the build's
     natural partitioning stands and this coalesce is wrong)."""
     base = ivfpq_store_dir(spark, sf_dir)
     if not os.path.isdir(base):
         tmp = f"{base}.tmp-{os.urandom(8).hex()}"
-        built = similarity.ivf_pq_index(
-            load_table(spark, sf_dir, "embeddings"), **IVFPQ_PARAMS
-        )
-        built._replace(
-            qv=built.qv.coalesce(4), codes=built.codes.coalesce(4)
-        ).save(tmp)
-        release_caches()  # build-time persists aren't part of the index
+        built = similarity.ivf_pq_index(load_table(spark, sf_dir, "embeddings"))
         try:
+            built._replace(
+                qv=built.qv.coalesce(4), codes=built.codes.coalesce(4)
+            ).save(tmp)
             os.rename(tmp, base)
-        except OSError:
-            if not os.path.isdir(base):
+        except Exception:
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.isdir(base):  # else the concurrent build's index wins
                 raise
-            shutil.rmtree(tmp)  # the concurrent build's index wins
+        finally:
+            release_caches()  # build-time persists aren't part of the index
     return similarity.ivf_pq_index_load(spark, base)
 
 

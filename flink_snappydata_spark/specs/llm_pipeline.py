@@ -93,9 +93,9 @@ def _stream_state_scored(spark, docs, prefix, table_kinds, ingest, score):
     equivalence tests, so the per-round correctness sweep does not pay
     4 trigger + catalog-write rounds per twin) through ``ingest``,
     score the accumulated state with ``score``, then clean up EVERY
-    piece of state — the temp parquet copy, the checkpoint dir, and the
-    managed state tables — in a ``finally``, so repeated correctness
-    runs cannot accumulate warehouse garbage. The scored frame is
+    piece of state — the temp dir holding the parquet copy and the
+    checkpoint, and the managed state tables — on every exit path, so
+    repeated correctness runs cannot accumulate warehouse garbage. The scored frame is
     ``localCheckpoint``-ed (eagerly materialized, lineage truncated)
     first, so dropping the state tables cannot invalidate it.
 
@@ -103,28 +103,26 @@ def _stream_state_scored(spark, docs, prefix, table_kinds, ingest, score):
     LOCATIONS in the shared warehouse outlive a crashed previous
     process's catalog, where a fixed name would collide with a leftover
     directory this session's DROP TABLE cannot see."""
-    import shutil
     import tempfile
     import uuid
 
-    tmp = tempfile.mkdtemp(prefix=f"fss-{prefix}stream-")
-    ckpt = tempfile.mkdtemp(prefix=f"fss-{prefix}ckpt-")
     tag = uuid.uuid4().hex[:8]
     names = [f"fss_{prefix}_{kind}_{tag}" for kind in table_kinds]
-    try:
-        docs.repartition(2).write.mode("overwrite").parquet(tmp)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
-        )
-        ingest(stream, *names, checkpoint=ckpt)
-        return score(spark, *names).localCheckpoint(eager=True)
-    finally:
-        for n in names:
-            spark.sql(f"DROP TABLE IF EXISTS {n}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with tempfile.TemporaryDirectory(
+        prefix=f"fss-{prefix}stream-", ignore_cleanup_errors=True
+    ) as tmp:
+        try:
+            docs.repartition(2).write.mode("overwrite").parquet(f"{tmp}/src")
+            stream = (
+                spark.readStream.schema(docs.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(f"{tmp}/src")
+            )
+            ingest(stream, *names, checkpoint=f"{tmp}/ckpt")
+            return score(spark, *names).localCheckpoint(eager=True)
+        finally:
+            for n in names:
+                spark.sql(f"DROP TABLE IF EXISTS {n}")
 
 
 def _novelty_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -88,7 +88,7 @@ def test_temporal_table_join_sort_gate(spark):
 # --------------------------- IVFADC prebuilt path, registered query
 
 
-def test_ivf_pq_prebuilt_topk_registered(spark):
+def test_ivf_pq_prebuilt_topk_registered(spark, tmp_path, monkeypatch):
     """The driver-stamped production ANN path: the registered
     ivf_pq_prebuilt_topk query must (a) return rows identical to the
     inline-training ivf_pq_topk (same oracle applies), (b) carry a
@@ -96,15 +96,28 @@ def test_ivf_pq_prebuilt_topk_registered(spark):
     <= 15 exchanges (the inline DAG optimizes to ~60) — and (c) keep
     the index in the store: a new session opens the same directory
     and launches at most the one job that infers the embeddings
-    schema, never a rebuild."""
+    schema, never a rebuild. The store is redirected into ``tmp_path``
+    so every run builds, saves and publishes a fresh index."""
+    import os
+
     from flink_snappydata_spark.plans.inspect import exchange_count
     from flink_snappydata_spark.registry import QUERIES, queries
     from flink_snappydata_spark.specs import embeddings_quality as eq
 
     spec = QUERIES["ivf_pq_prebuilt_topk"]
     assert spec.oracle == QUERIES["ivf_pq_topk"].oracle
+    real_dir = eq.ivfpq_store_dir
+    other = spark.newSession()
+    assert real_dir(other, SF_SMOKE) == real_dir(spark, SF_SMOKE)
+    store = tmp_path / "ivfpq"
+    monkeypatch.setattr(
+        eq, "ivfpq_store_dir",
+        lambda s, d: str(store / os.path.basename(real_dir(s, d))),
+    )
     qs = queries()
     prebuilt = qs["ivf_pq_prebuilt_topk"](spark, SF_SMOKE)
+    published = os.listdir(store)
+    assert published == [os.path.basename(real_dir(spark, SF_SMOKE))]
     inline = qs["ivf_pq_topk"](spark, SF_SMOKE)
     rows = [tuple(r) for r in prebuilt.collect()]
     assert rows == [tuple(r) for r in inline.collect()]
@@ -114,26 +127,29 @@ def test_ivf_pq_prebuilt_topk_registered(spark):
     n_ex = exchange_count(prebuilt)  # shuffle exchanges, gauge metric
     assert n_ex <= 15, f"prebuilt plan still carries training ({n_ex} exchanges)"
 
-    other = spark.newSession()
-    assert eq.ivfpq_store_dir(other, SF_SMOKE) == eq.ivfpq_store_dir(spark, SF_SMOKE)
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     before = dag.numTotalJobs()
     reopened = qs["ivf_pq_prebuilt_topk"](other, SF_SMOKE)
     n_jobs = dag.numTotalJobs() - before
     assert n_jobs <= 1, f"new session rebuilt the stored index ({n_jobs} jobs)"
+    assert os.listdir(store) == published
     assert [tuple(r) for r in reopened.collect()] == rows
 
 
-def test_ivfpq_store_dir_fingerprint(spark, tmp_path):
+def test_ivfpq_store_dir_fingerprint(spark, tmp_path, monkeypatch):
     """The stored index's directory is a pure function of its inputs:
     the same inputs name the same dir, and each input that can change
     the index (a file's mtime or size, the build parameters, the
-    fixture dir) names a different one. A warehouse that is not a
-    local path is refused."""
+    fixture dir) names a different one. The build parameters are the
+    trainer's defaults, so a trainer whose defaults differ names a
+    different dir too. A warehouse that is not a local path is
+    refused."""
     import os
     import shutil
+    from pathlib import Path
     from types import SimpleNamespace
 
+    from flink_snappydata_spark.pipeline import similarity
     from flink_snappydata_spark.specs import embeddings_quality as eq
 
     def fixture(name):
@@ -160,9 +176,15 @@ def test_ivfpq_store_dir_fingerprint(spark, tmp_path):
     assert os.path.dirname(base) == os.path.join(warehouse, "ivfpq")
     assert eq.ivfpq_store_dir(spark, sf_a) == base, "same inputs, same dir"
     assert eq.ivfpq_store_dir(spark, sf_b) != base, "different sf_dir"
-    assert eq.ivfpq_store_dir(
-        spark, sf_a, {**eq.IVFPQ_PARAMS, "n_iters": 3}
-    ) != base, "different build parameters"
+    trainer = tmp_path / "similarity.py"
+    src = Path(similarity.__file__).read_text()
+    sig = "n_pq_centroids: int = 8,\n    n_iters: int = 2,\n) -> IvfPqIndex:"
+    assert src.count(sig) == 1, "ivf_pq_index's signature moved"
+    trainer.write_text(src.replace(sig, sig.replace("n_iters: int = 2", "n_iters: int = 3")))
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "__file__", str(trainer))
+        assert eq.ivfpq_store_dir(spark, sf_a) != base, "different build parameters"
+    assert eq.ivfpq_store_dir(spark, sf_a) == base
     seen = {base}
     for change, label in ((touch_mtime, "changed mtime"), (grow, "changed size")):
         change()
@@ -173,6 +195,43 @@ def test_ivfpq_store_dir_fingerprint(spark, tmp_path):
     remote = SimpleNamespace(conf=SimpleNamespace(get=lambda key: "hdfs://nn/wh"))
     with pytest.raises(ValueError, match="needs a local warehouse"):
         eq.ivfpq_store_dir(remote, sf_a)
+
+
+def test_ivfpq_failed_or_lost_build_leaves_no_tmp_dir(spark, tmp_path, monkeypatch):
+    """A build whose save raises deletes its tmp sibling and re-raises;
+    a build that loses the publish race to a concurrent one deletes its
+    tmp sibling and opens the winner's directory. Training, saving and
+    reopening are stubbed, so only the publish protocol runs."""
+    import os
+
+    from flink_snappydata_spark.pipeline import similarity
+    from flink_snappydata_spark.specs import embeddings_quality as eq
+
+    store = tmp_path / "ivfpq"
+    base = str(store / "fp")
+    one = spark.range(1)
+    monkeypatch.setattr(eq, "ivfpq_store_dir", lambda s, d: base)
+    monkeypatch.setattr(
+        similarity, "ivf_pq_index", lambda emb: similarity.IvfPqIndex(one, one, one, one)
+    )
+    monkeypatch.setattr(similarity, "ivf_pq_index_load", lambda s, b: b)
+
+    def failing_save(self, path):
+        os.makedirs(f"{path}/qv")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(similarity.IvfPqIndex, "save", failing_save)
+    with pytest.raises(OSError, match="disk full"):
+        eq.ivfpq_prebuilt_index(spark, SF_SMOKE)
+    assert os.listdir(store) == []
+
+    def racing_save(self, path):
+        os.makedirs(f"{path}/qv")
+        os.makedirs(f"{base}/qv")  # a concurrent build publishes first
+
+    monkeypatch.setattr(similarity.IvfPqIndex, "save", racing_save)
+    assert eq.ivfpq_prebuilt_index(spark, SF_SMOKE) == base
+    assert os.listdir(store) == ["fp"]
 
 
 def test_ivfpq_save_rejects_undeclared_schema(spark, tmp_path):
