@@ -130,131 +130,81 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 #: this, a document's set is not packed into a single array row (at
 #: ~60-100 bytes per word-trigram shingle, 1e6 shingles ≈ a 60-100 MB
 #: record — near the practical ceiling for one shuffle record) and its
-#: pairs take the streamed gated join instead. Results are identical;
-#: only the physical verify strategy changes. Exposure note: callers
-#: that persist the packed kernel output (`doc_shingle_arrays`) cache
-#: each document's full array once — including an oversized one — but
-#: `_verified_jaccard` never SHUFFLES such a record: with oversized
-#: docs present the verify sets are rebuilt from the exploded index
-#: (narrow rows filtered before the regroup), not anti-joined from the
-#: packed frame.
+#: pairs take :func:`_verified_overlap`'s streamed per-shingle count
+#: join instead. Results are identical; only the physical verify
+#: strategy changes. Exposure note: callers that persist the packed
+#: kernel output (`doc_shingle_arrays`) cache each document's full
+#: array once — including an oversized one — but `_verified_overlap`
+#: never SHUFFLES such a record: with oversized docs present the verify
+#: sets are rebuilt from the exploded index (narrow rows filtered
+#: before the regroup), not anti-joined from the packed frame.
 MAX_PACKED_SHINGLES = 1_000_000
 
 
-def _shingle_bound_cleared(documents: DataFrame, max_set_size: int | None):
-    """Cheap pre-probe: a document's distinct shingle count is at most
-    its word count, which is at most its character length — so when
-    ``max(length(text)) <= max_set_size``, NO document can exceed the
-    packed bound and :func:`_verified_jaccard` may skip its per-doc
-    shingle-count probe (a groupBy over the whole shingle index). One
-    partial-max column aggregate on the (cached) documents scan, no
-    shuffle of anything wider than a long.
-    """
-    if max_set_size is None:
-        return True
-    row = documents.agg(
-        F.max(F.length("text")).alias("max_len")
-    ).first()
-    return (row["max_len"] or 0) <= max_set_size
-
-
-def _streamed_jaccard(
-    sh: DataFrame, cand: DataFrame, threshold: float
-) -> DataFrame:
-    """Streamed exact Jaccard for candidate pairs: count matching
-    per-shingle index rows per pair, join set sizes separately — never
-    packs a document's shingles into one record, so a single
-    pathological giant document costs (pair × its shingles) ROWS, not
-    one giant shuffle record. ~|cand|·avg_shingles intermediate rows —
-    use only for the pairs the packed path cannot take.
-    """
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sha = sh.select(F.col("doc_id").alias("doc_a"), "sh")
-    shb = sh.select(F.col("doc_id").alias("doc_b"), "sh")
-    # index/counts sides are corpus-sized — pinned SMJ, never an
-    # estimate-driven broadcast (see _prefix_index's note)
-    inter = (
-        cand.join(sha.hint("merge"), "doc_a")
-        .join(shb.hint("merge"), ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        # Left join + coalesce: a zero-overlap candidate (possible from
-        # LSH band collisions) must still score jaccard=0, matching the
-        # packed path exactly for ANY threshold including 0.
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .withColumn("n_inter", F.coalesce("n_inter", F.lit(0)))
-        .join(counts.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")).hint("merge"), "doc_a")
-        .join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")).hint("merge"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def _verified_jaccard(
-    sh: DataFrame, cand: DataFrame, threshold: float,
-    sorted_output: bool = True,
-    max_set_size: int | None = MAX_PACKED_SHINGLES,
+def _verified_overlap(
+    documents: DataFrame,
+    sh: DataFrame,
+    cand: DataFrame,
     packed: DataFrame | None = None,
+    max_set_size: int | None = MAX_PACKED_SHINGLES,
 ) -> DataFrame:
-    """Exact Jaccard over (doc_a, doc_b) candidate pairs against the
-    full shingle index ``sh``: each doc's distinct shingles are packed
-    into one array row, candidates join the packed sets twice, and
-    |A∩B| = ``size(array_intersect(...))`` — integer counts and one
-    double division, engine-exact values regardless of how the
-    candidates were generated.
+    """(doc_a, doc_b, n_inter, na, nb) — the exact shingle-set overlap
+    |A∩B| and both set sizes, as integer counts, for every (doc_a,
+    doc_b) candidate pair, against the full shingle index ``sh`` of
+    ``documents``. It is the one verifier of the Jaccard and
+    containment pair queries; each caller applies its own metric,
+    threshold and sort. Values are engine-exact however the candidates
+    were generated, and a zero-overlap candidate keeps ``n_inter = 0``.
 
-    Scale: the packed-sets frame is one row per document (the same
-    order of bytes as the corpus text itself, partitioned by doc id);
-    joining candidates against it twice moves each set once per side
-    instead of exploding to (pair x shingle) rows — the previous gated
-    join shuffled |cand|·avg_shingles intermediate rows, ~50x more. At
-    test scale AQE broadcasts the sets frame outright; at 100 TB both
-    joins hash-partition on doc id with no row multiplication. The
-    per-pair intersect is linear in set size, JVM-side.
+    Packed path: each document's distinct shingles are one array row,
+    candidates join the packed sets twice (pinned sort-merge), and
+    |A∩B| = ``size(array_intersect(...))``. The sets frame is one row
+    per document, about the size of the corpus text, so each set moves
+    once per side instead of exploding to (pair × shingle) rows (~50x
+    fewer rows than the streamed join). ``packed`` (doc_id, shs) —
+    per-doc arrays the caller already holds from its kernel pass —
+    replaces the ``collect_list`` regroup of ``sh``; element order is
+    irrelevant to set operations.
 
     Per-document size bound (``max_set_size``, default
     :data:`MAX_PACKED_SHINGLES`): packing makes one shuffle RECORD per
-    document (~n_shingles × avg_shingle_len bytes ≈ the document's own
-    size × word-n-gram overlap factor ~n), so a pathological multi-GB
-    document would become a single multi-hundred-MB record. A probe
-    checks whether any document exceeds the bound: one per-doc shingle
-    count aggregation over the persisted index, with a ``limit(1)``
-    that early-exits only when an oversized document EXISTS — proving
-    the common all-small case requires completing the full aggregation
-    pass (map-side-combined counts, one narrow row per document; cheap
-    relative to the candidate join, but a full pass, not a lookup). In
-    that all-small case the plan below is untouched. When oversized
-    documents exist, only sub-bound documents are packed (they are
-    filtered out BEFORE the ``collect_list`` shuffle, so the giant
-    record is never built) and every pair touching an oversized
-    document is verified by :func:`_streamed_jaccard` instead —
-    identical values, ~50x more (small) rows for just those pairs.
-    ``max_set_size=None`` disables the probe and bound.
+    document, so a pathological multi-GB document would become one
+    multi-hundred-MB record. The packed/streamed decision is made here
+    and nowhere else, in three steps:
+
+    1. Pre-probe: a document's distinct shingle count is at most its
+       word count, which is at most its character length, so when
+       ``max(length(text)) <= max_set_size`` no document can exceed
+       the bound. One partial-max aggregate over the documents scan;
+       the common all-small case stops here with the plan untouched.
+    2. Otherwise a per-doc shingle count over ``sh`` looks for
+       oversized documents. Its ``limit(1)`` early-exits only when one
+       EXISTS; proving there is none takes the full aggregation pass.
+    3. If any exist, only sub-bound documents are packed (the others
+       are filtered out as narrow rows BEFORE the ``collect_list``
+       shuffle, and ``packed`` is not used, so the giant record is
+       never built or moved), and every pair touching an oversized
+       document takes the streamed join: count the matching
+       per-shingle index rows per pair and join the set sizes
+       separately, (pair × its shingles) small rows. The counts are
+       then BIGINT on both branches; the values are identical.
+
+    ``max_set_size=None`` disables the probes and the bound.
     """
+    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     big_ids = None
-    if max_set_size is not None:
-        big_ids = (
-            sh.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_sh"))
-            .filter(F.col("n_sh") > max_set_size)
-            .select("doc_id")
-        )
+    if max_set_size is not None and (
+        documents.agg(F.max(F.length("text"))).first()[0] or 0
+    ) > max_set_size:
+        big_ids = counts.filter(F.col("n_sh") > max_set_size).select("doc_id")
         if big_ids.limit(1).count() == 0:
             big_ids = None
 
+    streamed = None
     if big_ids is None:
-        pack_src, pairs = sh, cand
-        streamed = None
+        pairs = cand
     else:
         big_ids = tracked_persist(big_ids)
-        pack_src = sh.join(big_ids, "doc_id", "left_anti")
         # The candidate frame is usually an expensive prefix/band join;
         # persist it so the small/big split doesn't run it twice.
         pairs_all = tracked_persist(cand)
@@ -269,33 +219,38 @@ def _verified_jaccard(
             pairs_all.join(big_a, "doc_a", "left_anti")
             .join(big_b, "doc_b", "left_anti")
         )
-        streamed = _streamed_jaccard(sh, touching_big, threshold)
-
-    # ``packed`` (doc_id, shs) short-circuits the explode→regroup when
-    # the caller already holds per-doc shingle arrays (the fused
-    # MinHash kernel): same sets, one less corpus-sized aggregation.
-    # Intersection/size are set operations, so element order within
-    # each array is irrelevant. The shortcut applies ONLY when no
-    # document exceeds the packed bound: with oversized docs present,
-    # anti-joining the packed frame would shuffle the giant array
-    # records before dropping them, so the small-doc sets are rebuilt
-    # from the exploded index instead — oversized docs filtered as
-    # narrow rows BEFORE the collect_list regroup, the giant record
-    # never entering a shuffle (ADVICE r14; the caller's persisted
-    # packed frame still caches the oversized array once, without
-    # moving it).
-    if packed is not None and big_ids is None:
-        sets = packed
-    else:
-        sets = pack_src.groupBy("doc_id").agg(
-            F.collect_list("sh").alias("shs")
+        sha = sh.select(F.col("doc_id").alias("doc_a"), "sh")
+        shb = sh.select(F.col("doc_id").alias("doc_b"), "sh")
+        # index/counts sides are corpus-sized — pinned SMJ, never an
+        # estimate-driven broadcast (see _prefix_index's note)
+        inter = (
+            touching_big.join(sha.hint("merge"), "doc_a")
+            .join(shb.hint("merge"), ["doc_b", "sh"])
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("n_inter"))
         )
-    pa = sets.select(
+        streamed = (
+            # Left join + coalesce: a zero-overlap candidate (possible
+            # from LSH band collisions) keeps n_inter = 0, as on the
+            # packed path, so any threshold including 0 agrees.
+            touching_big.join(inter, ["doc_a", "doc_b"], "left")
+            .withColumn("n_inter", F.coalesce("n_inter", F.lit(0)))
+            .join(counts.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")).hint("merge"), "doc_a")
+            .join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")).hint("merge"), "doc_b")
+            .select("doc_a", "doc_b", "n_inter", "na", "nb")
+        )
+        # pack only the sub-bound docs, regrouped from narrow index
+        # rows — never the caller's packed frame with the giant arrays
+        packed, sh = None, sh.join(big_ids, "doc_id", "left_anti")
+
+    if packed is None:
+        packed = sh.groupBy("doc_id").agg(F.collect_list("sh").alias("shs"))
+    pa = packed.select(
         F.col("doc_id").alias("doc_a"),
         F.col("shs").alias("shs_a"),
         F.size("shs").alias("na"),
     )
-    pb = sets.select(
+    pb = packed.select(
         F.col("doc_id").alias("doc_b"),
         F.col("shs").alias("shs_b"),
         F.size("shs").alias("nb"),
@@ -306,11 +261,24 @@ def _verified_jaccard(
     # broadcast of the sets frame (see _prefix_index's note; SMJ over
     # shuffle_hash because the build rows here are wide arrays and SMJ
     # spills gracefully).
-    packed = (
+    out = (
         pairs.join(pa.hint("merge"), "doc_a")
         .join(pb.hint("merge"), "doc_b")
         .withColumn("n_inter", F.size(F.array_intersect("shs_a", "shs_b")))
-        .withColumn(
+        .drop("shs_a", "shs_b")
+    )
+    return out if streamed is None else out.unionByName(streamed)
+
+
+def _jaccard_pairs(
+    overlap: DataFrame, threshold: float, sorted_output: bool = True
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) with ``jaccard = n_inter / (na + nb −
+    n_inter) >= threshold`` from :func:`_verified_overlap`'s counts —
+    integer counts and one double division — presentation-sorted on
+    (doc_a, doc_b) unless ``sorted_output`` is False."""
+    out = (
+        overlap.withColumn(
             "jaccard",
             F.col("n_inter").cast("double")
             / (F.col("na") + F.col("nb") - F.col("n_inter")),
@@ -318,7 +286,6 @@ def _verified_jaccard(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    out = packed if streamed is None else packed.unionByName(streamed)
     return presentation_sorted(out, "doc_a", "doc_b") if sorted_output else out
 
 
@@ -389,7 +356,7 @@ def ngram_jaccard_pairs(
     finds every qualifying pair with zero recall loss. A size-ratio
     prune (j ≥ t ⟹ t·|B| ≤ |A| ≤ |B|/t) rides the join condition.
     Candidates are then verified with the exact Jaccard over the
-    *full* shingle sets (:func:`_verified_jaccard`), so precision and
+    *full* shingle sets (:func:`_verified_overlap`), so precision and
     values are engine-exact.
 
     Scale: this kills the inverted-index join's hot-key explosion by
@@ -439,12 +406,8 @@ def ngram_jaccard_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    if _shingle_bound_cleared(documents, max_set_size):
-        max_set_size = None  # provably all under bound — skip the probe
-    return _verified_jaccard(
-        sh, cand, threshold, sorted_output,
-        max_set_size=max_set_size, packed=packed,
-    )
+    overlap = _verified_overlap(documents, sh, cand, packed, max_set_size)
+    return _jaccard_pairs(overlap, threshold, sorted_output)
 
 
 def containment_pairs(
@@ -479,13 +442,11 @@ def containment_pairs(
     Scale: the prefix side is rarest-first (hot stopword shingles
     enter nobody's prefix), but the full-index side pays df(sh) fanout
     per matched prefix shingle — the irreducible cost of a containment
-    join, minimized by the rarest-first prefix choice. Verification
-    packs each doc's shingle set into one array row and joins
-    candidates against it twice (|A∩B| = ``array_intersect``, one row
-    per pair), exactly like the Jaccard verify; when the
-    :func:`_shingle_bound_cleared` probe cannot prove every document
-    under ``max_set_size``, ALL pairs take the streamed per-shingle
-    count join instead (identical values, no giant packed record).
+    join, minimized by the rarest-first prefix choice. Verification is
+    the Jaccard queries' own :func:`_verified_overlap`: packed-set
+    ``array_intersect`` per pair, and only the pairs that touch a
+    document over ``max_set_size`` shingles take the streamed
+    per-shingle count join (identical values, no giant packed record).
     Output is bounded by qualifying pairs and presented unsorted.
     """
     # one kernel pass in packed form (see ngram_jaccard_pairs): the
@@ -522,71 +483,28 @@ def containment_pairs(
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    if _shingle_bound_cleared(documents, max_set_size):
-        sets = packed  # per-doc arrays straight from the kernel pass
-        pa = sets.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("shs").alias("shs_a"),
-            F.size("shs").alias("na"),
+    return (
+        _verified_overlap(documents, sh, cand, packed, max_set_size)
+        .select(
+            "doc_a",
+            "doc_b",
+            (F.col("n_inter").cast("double") / F.least("na", "nb")).alias(
+                "containment"
+            ),
         )
-        pb = sets.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("shs").alias("shs_b"),
-            F.size("shs").alias("nb"),
-        )
-        # same pinned-SMJ rationale as _verified_jaccard's packed joins
-        scored = (
-            cand.join(pa.hint("merge"), "doc_a")
-            .join(pb.hint("merge"), "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                (
-                    F.size(F.array_intersect("shs_a", "shs_b")).cast("double")
-                    / F.least("na", "nb")
-                ).alias("containment"),
-            )
-        )
-    else:
-        sha = sh.select(F.col("doc_id").alias("doc_a"), "sh")
-        shb = sh.select(F.col("doc_id").alias("doc_b"), "sh")
-        inter = (
-            cand.join(sha.hint("merge"), "doc_a")
-            .join(shb.hint("merge"), ["doc_b", "sh"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-        scored = (
-            cand.join(inter, ["doc_a", "doc_b"], "left")
-            .withColumn("n_inter", F.coalesce("n_inter", F.lit(0)))
-            # counts is corpus-sized — pinned SMJ (see _prefix_index)
-            .join(
-                counts.select(
-                    F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")
-                ).hint("merge"),
-                "doc_a",
-            )
-            .join(
-                counts.select(
-                    F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")
-                ).hint("merge"),
-                "doc_b",
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                (
-                    F.col("n_inter").cast("double") / F.least("na", "nb")
-                ).alias("containment"),
-            )
-        )
-    return scored.filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= threshold)
+    )
 
 
 def minhash_band_hashes(
     documents: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
 ) -> DataFrame:
     """(doc_id, band_id, band_hash) — LSH band buckets, fully kernel-side.
+
+    No query calls it: :func:`minhash_dedup_pairs` takes its bands from
+    the fused kernel (:func:`_minhash_fused`). It is kept as the
+    single-purpose reference that the fused kernel's band hashes are
+    tested against.
 
     The signature matrix never leaves the Arrow batch: the kernel takes
     the per-band FNV-style polynomial combine of the ``rows`` MinHash
@@ -715,26 +633,14 @@ def _minhash_fused(
     )
 
 
-def minhash_lsh_candidates(
-    documents: DataFrame,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-    banded: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_a, doc_b) candidate pairs from banded MinHash signatures.
-
-    Signature split into ``bands`` bands of ``rows`` hashes; docs
-    colliding in any band pair up. Self-join key is (band_id,
-    band_hash) — candidate volume is data-dependent but never O(n²).
-
-    ``banded`` lets a caller that already has the (doc_id, band_id,
-    band_hash) frame (:func:`minhash_dedup_pairs`'s fused kernel) skip
-    the standalone band pass.
+def minhash_lsh_candidates(banded: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) candidate pairs from the (doc_id, band_id,
+    band_hash) LSH band table (:func:`minhash_dedup_pairs`' fused
+    kernel): docs colliding in any band pair up. Self-join key is
+    (band_id, band_hash) — candidate volume is data-dependent but
+    never O(n²). Both self-join sides read ``banded``, so the caller
+    derives it from a persisted frame.
     """
-    # Persist: both self-join sides read the banded signatures — without
-    # it the whole shingle→signature pipeline runs twice.
-    if banded is None:
-        banded = tracked_persist(minhash_band_hashes(documents, bands, rows))
     # corpus × corpus band self-join: estimate-independent shuffle
     # join, never a statically-planned broadcast (see _prefix_index)
     l, r = banded.alias("l"), banded.alias("r").hint("shuffle_hash")
@@ -772,13 +678,11 @@ def minhash_dedup_pairs(
     banded = fused.select(
         "doc_id", F.posexplode("bands").alias("band_id", "band_hash")
     )
-    cand = minhash_lsh_candidates(documents, banded=banded)
-    if _shingle_bound_cleared(documents, max_set_size):
-        max_set_size = None  # provably all under bound — skip the probe
-    return _verified_jaccard(
-        sh, cand, threshold,
-        max_set_size=max_set_size, packed=fused.select("doc_id", "shs"),
+    overlap = _verified_overlap(
+        documents, sh, minhash_lsh_candidates(banded),
+        fused.select("doc_id", "shs"), max_set_size,
     )
+    return _jaccard_pairs(overlap, threshold)
 
 
 def decontaminate(

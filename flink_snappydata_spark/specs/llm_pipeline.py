@@ -50,6 +50,15 @@ _SHINGLES_SQL = r"""
     ), sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id)
 """
 
+#: Shared-shingle count per document pair (a < b) over ``sh`` — the
+#: |A∩B| CTE of the Jaccard and containment oracles.
+_INTER_SQL = """
+    inter AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
+        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id)
+"""
+
 _register(
     "dedup_exact",
     ["documents"],
@@ -160,10 +169,7 @@ _register(
     dedup.ngram_jaccard_pairs,
     f"""
     WITH {_SHINGLES_SQL},
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id)
+    {_INTER_SQL}
     SELECT doc_a, doc_b,
            n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
     FROM inter
@@ -182,10 +188,7 @@ _register(
     dedup.containment_pairs,
     f"""
     WITH {_SHINGLES_SQL},
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id)
+    {_INTER_SQL}
     SELECT doc_a, doc_b,
            n_inter * 1.0 / LEAST(sa.n_sh, sb.n_sh) AS containment
     FROM inter
@@ -305,10 +308,7 @@ def _neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: dedup_clusters oracle and the canonical-pick oracle built on top.
 _CC_CTES = f"""
     {_SHINGLES_SQL},
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id),
+    {_INTER_SQL},
     pairs AS (
         SELECT doc_a, doc_b
         FROM inter
@@ -353,20 +353,7 @@ _register(
     "dedup_minhash",
     ["documents"],
     dedup.minhash_dedup_pairs,
-    f"""
-    WITH {_SHINGLES_SQL},
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id)
-    SELECT doc_a, doc_b,
-           n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) >= 0.8
-    ORDER BY doc_a, doc_b
-    """,
+    QUERIES["dedup_ngram_jaccard"].oracle,
     doc="MinHash(64)+LSH(16x4) banded candidates, exact-Jaccard verified; "
         "oracle = the exact shingle join (LSH recall 1 at the threshold on "
         "the fixtures, pinned by tests).",

@@ -4,12 +4,21 @@ catalog tables, with the plan gauges proving the scale payoff."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
 from flink_snappydata_spark.catalog import load_table, save_bucketed, save_partitioned
 from flink_snappydata_spark.plans import exchange_count, partition_filters
 from tests.conftest import SF_SMOKE
+
+
+def _fresh_name(base: str) -> str:
+    """A per-run managed-table name: a fixed name would collide with the
+    LOCATION a killed earlier run left in the shared warehouse, which
+    this session's catalog can neither see nor drop."""
+    return f"{base}_{uuid.uuid4().hex[:8]}"
 
 
 @pytest.fixture(scope="module")
@@ -20,11 +29,14 @@ def bucketed_tables(spark):
     orders = load_table(spark, SF_SMOKE, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
     )
-    save_bucketed(li, "li_bkt", "l_orderkey", n_buckets=8)
-    save_bucketed(orders, "ord_bkt", "l_orderkey", n_buckets=8)
-    yield "li_bkt", "ord_bkt"
-    spark.sql("DROP TABLE IF EXISTS li_bkt")
-    spark.sql("DROP TABLE IF EXISTS ord_bkt")
+    names = _fresh_name("li_bkt"), _fresh_name("ord_bkt")
+    try:
+        save_bucketed(li, names[0], "l_orderkey", n_buckets=8)
+        save_bucketed(orders, names[1], "l_orderkey", n_buckets=8)
+        yield names
+    finally:
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
@@ -50,14 +62,15 @@ def test_bucketed_aggregation_reuses_bucketing(spark, bucketed_tables):
 
 def test_partitioned_write_prunes(spark):
     events = load_table(spark, SF_SMOKE, "events")
-    save_partitioned(events, "events_part", "event_type")
+    name = _fresh_name("events_part")
     try:
-        q = spark.table("events_part").filter(F.col("event_type") == "click")
+        save_partitioned(events, name, "event_type")
+        q = spark.table(name).filter(F.col("event_type") == "click")
         pf = partition_filters(q)
         assert any("event_type" in f for f in pf), "scan must prune partitions"
         assert q.count() == events.filter(F.col("event_type") == "click").count()
     finally:
-        spark.sql("DROP TABLE IF EXISTS events_part")
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_table_cache_toggle(spark):

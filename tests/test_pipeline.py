@@ -1026,13 +1026,47 @@ def test_new_ops_handle_degenerate_inputs(spark):
 def test_verified_jaccard_streamed_fallback_identical(spark):
     """Forcing EVERY document over the packed bound (max_set_size=1)
     routes all pairs through the streamed gated join — results must be
-    byte-identical to the packed path, for both candidate generators."""
+    byte-identical to the packed path, for every candidate generator
+    (containment's output is unsorted, so its rows compare as sets)."""
     docs = load_table(spark, SF_SMOKE, "documents")
-    for fn in (dedup.ngram_jaccard_pairs, dedup.minhash_dedup_pairs):
+    for fn in (
+        dedup.ngram_jaccard_pairs,
+        dedup.minhash_dedup_pairs,
+        dedup.containment_pairs,
+    ):
+        order = sorted if fn is dedup.containment_pairs else list
         packed = fn(docs, threshold=0.8, max_set_size=None).collect()
         streamed = fn(docs, threshold=0.8, max_set_size=1).collect()
         assert len(packed) > 0
-        assert [tuple(r) for r in packed] == [tuple(r) for r in streamed]
+        assert order(tuple(r) for r in packed) == order(
+            tuple(r) for r in streamed
+        )
+
+
+def test_containment_streams_only_pairs_touching_oversized_docs(spark):
+    """One document over a small shingle bound must not send every
+    containment pair down the streamed join: the small-small pair is
+    still verified packed (array_intersect in the plan), the pair with
+    the oversized document is streamed, and the rows equal the
+    unbounded run."""
+    from flink_snappydata_spark.plans.inspect import formatted_plan
+
+    big = " ".join(f"w{i:02d}" for i in range(30))  # 28 shingles
+    docs = spark.createDataFrame(
+        [
+            (1, big),
+            (10, " ".join(f"w{i:02d}" for i in range(8))),  # inside doc 1
+            (11, "alpha beta gamma delta epsilon zeta eta"),
+            (12, "alpha beta gamma delta epsilon zeta eta theta"),
+        ],
+        ["doc_id", "text"],
+    )
+    got = dedup.containment_pairs(docs, threshold=0.9, max_set_size=20)
+    want = dedup.containment_pairs(docs, threshold=0.9, max_set_size=None)
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == sorted(tuple(r) for r in want.collect())
+    assert {(a, b) for a, b, _ in rows} == {(1, 10), (11, 12)}
+    assert "array_intersect" in formatted_plan(got)
 
 
 def test_giant_document_never_packed_and_pairs_survive(spark):
@@ -1091,8 +1125,12 @@ def test_zero_overlap_candidates_score_zero_on_both_paths(spark):
     )
     sh = dedup.shingles(docs)
     cand = spark.createDataFrame([(1, 2)], ["doc_a", "doc_b"])
-    packed = dedup._verified_jaccard(sh, cand, 0.0, max_set_size=None).collect()
-    streamed = dedup._verified_jaccard(sh, cand, 0.0, max_set_size=1).collect()
+    packed, streamed = (
+        dedup._jaccard_pairs(
+            dedup._verified_overlap(docs, sh, cand, max_set_size=bound), 0.0
+        ).collect()
+        for bound in (None, 1)
+    )
     assert [tuple(r) for r in packed] == [tuple(r) for r in streamed]
     assert len(packed) == 1 and packed[0].jaccard == 0.0
 

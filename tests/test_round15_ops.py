@@ -152,7 +152,7 @@ def _rate_embeddings(spark):
             "writeStream.start",
             id="cosine_neardup_pairs",
         ),
-        # the shingle-bound probe (_shingle_bound_cleared)
+        # the shingle-bound pre-probe (dedup._verified_overlap)
         pytest.param(
             lambda s: D.ngram_jaccard_pairs(_rate_docs(s)),
             AnalysisException,
