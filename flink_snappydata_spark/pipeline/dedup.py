@@ -3,15 +3,17 @@
 All candidate generation is sub-quadratic:
 
 * exact — hash groupBy on the full text (one shuffle on a digest key);
-* n-gram Jaccard — prefix-filtered inverted-index join (only each
-  doc's rarest shingles generate candidates), never a cross join;
+* n-gram Jaccard — prefix filtering over shingle posting lists (only
+  each doc's rarest shingles generate candidates, paired inside each
+  list), never a cross join, then one exact packed-set verify;
 * MinHash+LSH — banded signatures; only same-band-bucket pairs are
-  candidates, verified with exact Jaccard;
+  candidates, verified by the same exact set-overlap verify;
 * SimHash — 15-bit band blocking over 60-bit portable (md5-derived)
   fingerprints, verified with Hamming distance.
 
 Candidate generation and verification are JVM column expressions
-(explode / xxhash64 / joins / aggregation); shingling and MinHash
+(explode / xxhash64 / joins / aggregation), written as SQL expression
+strings where that saves driver round trips; shingling and MinHash
 signatures run as Arrow-batched numpy kernels (the sanctioned
 vectorized-Python path — interpreted higher-order functions and wide
 min-agg fan-outs measured 5-10x slower). Determinism comes from fixed
@@ -23,7 +25,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from flink_snappydata_spark.streaming.runtime import (
@@ -156,15 +158,20 @@ def _verified_overlap(
     threshold and sort. Values are engine-exact however the candidates
     were generated, and a zero-overlap candidate keeps ``n_inter = 0``.
 
-    Packed path: each document's distinct shingles are one array row,
-    candidates join the packed sets twice (pinned sort-merge), and
-    |A∩B| = ``size(array_intersect(...))``. The sets frame is one row
-    per document, about the size of the corpus text, so each set moves
-    once per side instead of exploding to (pair × shingle) rows (~50x
-    fewer rows than the streamed join). ``packed`` (doc_id, shs) —
-    per-doc arrays the caller already holds from its kernel pass —
-    replaces the ``collect_list`` regroup of ``sh``; element order is
-    irrelevant to set operations.
+    ``cand`` may repeat a pair (once per shared prefix shingle or LSH
+    band): the verify folds repeats, so generators need no distinct
+    shuffle of their own.
+
+    Packed path: each document's distinct shingles are one array row.
+    Each candidate explodes into its two ends, the ends meet the sets
+    in ONE pinned sort-merge join on doc_id, and one regroup on the
+    pair holds both sets — |A∩B| = ``size(array_intersect(...))``. Two
+    shuffles of pair-sized rows plus one of the sets frame (one row per
+    document, about the size of the corpus text), instead of exploding
+    to (pair × shingle) rows (~50x fewer rows than the streamed join).
+    ``packed`` (doc_id, shs) — per-doc arrays the caller already holds
+    from its kernel pass — replaces the ``collect_list`` regroup of
+    ``sh``; element order is irrelevant to set operations.
 
     Per-document size bound (``max_set_size``, default
     :data:`MAX_PACKED_SHINGLES`): packing makes one shuffle RECORD per
@@ -173,10 +180,11 @@ def _verified_overlap(
     and nowhere else, in three steps:
 
     1. Pre-probe: a document's distinct shingle count is at most its
-       word count, which is at most its character length, so when
-       ``max(length(text)) <= max_set_size`` no document can exceed
-       the bound. One partial-max aggregate over the documents scan;
-       the common all-small case stops here with the plan untouched.
+       word count, which is at most its character length, so when no
+       text is longer than ``max_set_size`` no document can exceed the
+       bound. One ``isEmpty`` scan of the documents (one job on a
+       single-split table; it stops at the first long text); the
+       common all-small case stops here with the plan untouched.
     2. Otherwise a per-doc shingle count over ``sh`` looks for
        oversized documents. Its ``limit(1)`` early-exits only when one
        EXISTS; proving there is none takes the full aggregation pass.
@@ -193,9 +201,9 @@ def _verified_overlap(
     """
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     big_ids = None
-    if max_set_size is not None and (
-        documents.agg(F.max(F.length("text"))).first()[0] or 0
-    ) > max_set_size:
+    if max_set_size is not None and not documents.where(
+        f"length(text) > {int(max_set_size)}"
+    ).isEmpty():
         big_ids = counts.filter(F.col("n_sh") > max_set_size).select("doc_id")
         if big_ids.limit(1).count() == 0:
             big_ids = None
@@ -244,28 +252,27 @@ def _verified_overlap(
         packed, sh = None, sh.join(big_ids, "doc_id", "left_anti")
 
     if packed is None:
-        packed = sh.groupBy("doc_id").agg(F.collect_list("sh").alias("shs"))
-    pa = packed.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shs").alias("shs_a"),
-        F.size("shs").alias("na"),
-    )
-    pb = packed.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shs").alias("shs_b"),
-        F.size("shs").alias("nb"),
-    )
-    # Packed sets are corpus-sized (one wide array row per document):
-    # the verify joins are pinned sort-merge so they hash-partition on
-    # doc id at ANY scale and can never ride an estimate-driven
-    # broadcast of the sets frame (see _prefix_index's note; SMJ over
-    # shuffle_hash because the build rows here are wide arrays and SMJ
-    # spills gracefully).
+        packed = sh.groupBy("doc_id").agg(F.expr("collect_list(sh) AS shs"))
+    # One join of the packed sets: each candidate explodes into its two
+    # ends, the ends meet the sets on doc_id, and the regroup on the
+    # pair puts both sets in one row (doc_a < doc_b, so the lesser
+    # (doc_id, shs) end is A). The set of ends also folds repeated
+    # candidates, map-side. The sets frame is corpus-sized (one wide
+    # array row per document): the join is pinned sort-merge so it
+    # hash-partitions on doc id at ANY scale and can never ride an
+    # estimate-driven broadcast of the sets (see _prefix_index's note;
+    # SMJ over shuffle_hash because the build rows are wide arrays and
+    # SMJ spills gracefully).
     out = (
-        pairs.join(pa.hint("merge"), "doc_a")
-        .join(pb.hint("merge"), "doc_b")
-        .withColumn("n_inter", F.size(F.array_intersect("shs_a", "shs_b")))
-        .drop("shs_a", "shs_b")
+        pairs.selectExpr("doc_a", "doc_b", "explode(array(doc_a, doc_b)) AS doc_id")
+        .join(packed.hint("merge"), "doc_id")
+        .groupBy("doc_a", "doc_b")
+        .agg(F.expr("collect_set(struct(doc_id, shs)) AS ends"))
+        .selectExpr(
+            "doc_a", "doc_b",
+            "size(array_intersect(array_min(ends).shs, array_max(ends).shs)) AS n_inter",
+            "size(array_min(ends).shs) AS na", "size(array_max(ends).shs) AS nb",
+        )
     )
     return out if streamed is None else out.unionByName(streamed)
 
@@ -277,15 +284,9 @@ def _jaccard_pairs(
     n_inter) >= threshold`` from :func:`_verified_overlap`'s counts —
     integer counts and one double division — presentation-sorted on
     (doc_a, doc_b) unless ``sorted_output`` is False."""
-    out = (
-        overlap.withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    out = overlap.selectExpr(
+        "doc_a", "doc_b", "CAST(n_inter AS DOUBLE) / (na + nb - n_inter) AS jaccard"
+    ).where(f"jaccard >= {_dbl(threshold)}")
     return presentation_sorted(out, "doc_a", "doc_b") if sorted_output else out
 
 
@@ -294,47 +295,49 @@ def _prefix_index(sh: DataFrame, threshold: float) -> DataFrame:
     ``n_sh − ⌈t·n_sh⌉ + 1`` globally rarest shingles, ranked by
     ascending document frequency with ties on shingle text.
 
-    Ranks each doc's shingles by (df, sh) with ONE aggregation + a
-    per-doc ``array_sort``/``slice`` instead of two window functions —
-    same order, one fewer shuffle, and the slice discards the ~80%
-    non-prefix rows before the explode. Exposed separately so tests can
-    assert the scale property directly: hot (high-DF) shingles never
-    enter the candidate join.
+    Two shuffles, no join: grouping the index by shingle ONCE gives
+    each shingle's posting list, whose size is its document frequency,
+    and the explode of that list hands ``df_sh`` back to every
+    (doc_id, sh) row; one per-doc aggregation + ``sort_array``/``slice``
+    then ranks each doc's shingles by (df, sh) and discards the ~80%
+    non-prefix rows before the explode (``sort_array``: ``array_sort``
+    would run an interpreted lambda comparator). Exposed separately so
+    tests can assert the scale property directly: hot (high-DF)
+    shingles never enter the candidate generation.
 
-    The DF join is pinned ``shuffle_hash``: both sides are
-    corpus-sized, so it must NEVER ride an estimate-driven broadcast —
-    on a memory-sourced input (a range-derived frame, a foreachBatch
-    backfill) Catalyst's size estimate can be 100× under the true
-    size, and the statically-planned broadcast then dies building a
-    GB-scale hash relation ("Not enough memory to build and broadcast"
-    — observed at the 100× synthdocs decade). An explicit shuffle hint
-    keeps the decision estimate-independent at every scale.
+    Estimate safety (the note every pinned join in the engine points
+    to): a corpus × corpus join must NEVER ride an estimate-driven
+    broadcast — on a memory-sourced input (a range-derived frame, a
+    foreachBatch backfill) Catalyst's size estimate can be 100× under
+    the true size, and the statically-planned broadcast then dies
+    building a GB-scale hash relation ("Not enough memory to build and
+    broadcast" — observed at the 100× synthdocs decade). Such joins
+    carry an explicit ``shuffle_hash``/``merge`` hint, which keeps the
+    decision estimate-independent at every scale; this function avoids
+    the question by having no join at all.
     """
-    dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df_sh"))
+    t = _dbl(threshold)
     return (
-        sh.join(dfreq.hint("shuffle_hash"), "sh")
+        sh.groupBy("sh")
+        .agg(F.expr("collect_list(doc_id) AS docs"))
+        .selectExpr("explode(docs) AS doc_id", "sh", "size(docs) AS df_sh")
         .groupBy("doc_id")
-        .agg(F.collect_list(F.struct("df_sh", "sh")).alias("items"))
-        .select(
+        .agg(F.expr("collect_list(struct(df_sh, sh)) AS items"))
+        .selectExpr(
             "doc_id",
-            F.size("items").alias("n_sh"),
-            F.posexplode(
-                F.slice(
-                    F.array_sort("items"),
-                    1,
-                    (
-                        F.size("items")
-                        - F.ceil(F.size("items") * threshold - 1e-9)
-                        + 1
-                    ).cast("int"),
-                )
-            ).alias("pos", "e"),
+            "size(items) AS n_sh",
+            "posexplode(slice(sort_array(items), 1, CAST(size(items)"
+            f" - ceil(size(items) * {t} - 1e-9) + 1 AS INT))) AS (pos, e)",
         )
-        .select(
-            "doc_id", "n_sh", (F.col("pos") + 1).alias("rnk"),
-            F.col("e.sh").alias("sh"),
-        )
+        .selectExpr("doc_id", "n_sh", "pos + 1 AS rnk", "e.sh AS sh")
     )
+
+
+def _dbl(x: float) -> str:
+    """``x`` as a SQL DOUBLE literal, so threshold arithmetic in
+    expression strings stays binary-double (a bare ``0.8`` would parse
+    as DECIMAL)."""
+    return f"{float(x)!r}D"
 
 
 def ngram_jaccard_pairs(
@@ -349,24 +352,31 @@ def ngram_jaccard_pairs(
 
     Only each document's *prefix* — its ``n_sh − ⌈t·n_sh⌉ + 1``
     globally rarest shingles (global order = ascending document
-    frequency, ties by shingle text) — enters the candidate self-join.
-    Any pair with Jaccard ≥ t overlaps in ≥ ``⌈t·max(|A|,|B|)⌉``
-    shingles (the union contains both sets), so the order-smallest
-    shared shingle provably sits inside BOTH prefixes: prefix ⋈ prefix
-    finds every qualifying pair with zero recall loss. A size-ratio
-    prune (j ≥ t ⟹ t·|B| ≤ |A| ≤ |B|/t) rides the join condition.
-    Candidates are then verified with the exact Jaccard over the
-    *full* shingle sets (:func:`_verified_overlap`), so precision and
-    values are engine-exact.
+    frequency, ties by shingle text) — generates candidates. Any pair
+    with Jaccard ≥ t overlaps in ≥ ``⌈t·max(|A|,|B|)⌉`` shingles (the
+    union contains both sets), so the order-smallest shared shingle
+    provably sits inside BOTH prefixes: pairing the documents of each
+    prefix posting list finds every qualifying pair with zero recall
+    loss. A size-ratio prune (j ≥ t ⟹ t·|B| ≤ |A| ≤ |B|/t) and the
+    PPJoin positional filter drop pairs inside each list. Candidates
+    are then verified with the exact Jaccard over the *full* shingle
+    sets (:func:`_verified_overlap`), so precision and values are
+    engine-exact.
+
+    Shuffles: the prefix index is built once (two shuffles, see
+    :func:`_prefix_index`), the posting lists are one more, and the
+    verify is a join and a regroup — no self-join, so no subtree of the
+    plan runs twice.
 
     Scale: this kills the inverted-index join's hot-key explosion by
     construction — a stopword-run shingle shared by 1 M documents is,
     by definition of the frequency order, in (almost) nobody's prefix,
-    so it never self-joins; no DF cap, no recall caveat. At t=0.8 only
-    ~20% of index rows (the rarest, hence least-skewed, keys) enter the
-    join. Float guards: prefix length and ratio bounds are padded by
-    1e-9 toward MORE candidates, so binary-double threshold arithmetic
-    can only add a candidate (verified away later), never drop one.
+    so it never forms a long posting list; no DF cap, no recall caveat.
+    At t=0.8 only ~20% of index rows (the rarest, hence least-skewed,
+    keys) enter the lists. Float guards: prefix length and ratio bounds
+    are padded by 1e-9 toward MORE candidates, so binary-double
+    threshold arithmetic can only add a candidate (verified away
+    later), never drop one.
     """
     # ONE kernel pass, persisted in packed (per-doc array) form: the
     # exploded index (DF agg, prefix ranking, any streamed-verify
@@ -375,36 +385,33 @@ def ngram_jaccard_pairs(
     # corpus. Callers own cache cleanup for repeated runs (bench
     # clears between queries).
     packed = tracked_persist(doc_shingle_arrays(documents, n))
-    sh = packed.select("doc_id", F.explode("shs").alias("sh"))
-    prefix = _prefix_index(sh, threshold)
-    # The prefix self-join is corpus × corpus: pin shuffle_hash so a
-    # bad size estimate on a memory-sourced input can never statically
-    # broadcast one side (see _prefix_index's note).
-    a, b = prefix.alias("a"), prefix.alias("b").hint("shuffle_hash")
-    # Positional filter (PPJoin): all shared shingles sort at-or-after
+    sh = packed.selectExpr("doc_id", "explode(shs) AS sh")
+    t = _dbl(threshold)
+    # Candidates come from posting lists, not a prefix self-join: the
+    # prefix rows group by shingle once, and each list (a shingle's
+    # prefix documents; singletons pair with nobody) emits its pairs
+    # in-row. Size-ratio prune (j ≥ t ⟹ t·|B| ≤ |A| ≤ |B|/t) and
+    # positional filter (PPJoin): all shared shingles sort at-or-after
     # the matched one, so overlap ≤ min(remaining_a, remaining_b) + 1;
     # a qualifying pair needs overlap ≥ ⌈t·max(na,nb)⌉, and its
-    # order-smallest shared shingle (guaranteed matched by the prefix
-    # join) carries the largest bound — so dropping rows whose bound
-    # falls short never drops a qualifying pair.
+    # order-smallest shared shingle (in both prefixes) carries the
+    # largest bound — so dropping elements whose bound falls short
+    # never drops a qualifying pair. A pair sharing several prefix
+    # shingles is emitted once per list; the verify folds repeats.
     cand = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("a.n_sh") >= F.col("b.n_sh") * threshold - 1e-9)
-            & (F.col("b.n_sh") >= F.col("a.n_sh") * threshold - 1e-9)
-            & (
-                F.least(
-                    F.col("a.n_sh") - F.col("a.rnk"),
-                    F.col("b.n_sh") - F.col("b.rnk"),
-                )
-                + 1
-                >= F.greatest(F.col("a.n_sh"), F.col("b.n_sh")) * threshold - 1e-9
-            ),
+        _prefix_index(sh, threshold)
+        .groupBy("sh")
+        .agg(F.expr("collect_list(struct(doc_id, n_sh, rnk)) AS p"))
+        .where("size(p) > 1")
+        .selectExpr("p", "explode(p) AS a")
+        .selectExpr("a", "explode(p) AS b")
+        .where(
+            f"a.doc_id < b.doc_id AND a.n_sh >= b.n_sh * {t} - 1e-9"
+            f" AND b.n_sh >= a.n_sh * {t} - 1e-9"
+            " AND least(a.n_sh - a.rnk, b.n_sh - b.rnk) + 1"
+            f" >= greatest(a.n_sh, b.n_sh) * {t} - 1e-9"
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
+        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
     )
     overlap = _verified_overlap(documents, sh, cand, packed, max_set_size)
     return _jaccard_pairs(overlap, threshold, sorted_output)
@@ -432,10 +439,8 @@ def containment_pairs(
     globally rarest shingles, the same :func:`_prefix_index` frame the
     Jaccard join uses — must contain a shared shingle. Candidates are
     therefore ``prefix(smaller) ⋈ full-index(larger)`` (size order
-    enforced in the join condition; equal sizes tie-break on doc_id),
-    plus the positional prune ``na − rnk + 1 >= ceil(t·na)``, which
-    provably keeps the smallest-rank matched row of every qualifying
-    pair. No size-ratio prune exists for containment — any tiny
+    enforced in the join condition; equal sizes tie-break on doc_id).
+    No size-ratio prune exists for containment — any tiny
     document may be contained in any huge one; that asymmetry is the
     metric, not a bug.
 
@@ -450,49 +455,35 @@ def containment_pairs(
     Output is bounded by qualifying pairs and presented unsorted.
     """
     # one kernel pass in packed form (see ngram_jaccard_pairs): the
-    # index/counts are explodes/sizes over it, the verify reads the
-    # arrays directly
+    # index and its set sizes are one explode over it, the verify
+    # reads the arrays directly
     packed = tracked_persist(doc_shingle_arrays(documents, n))
-    sh = packed.select("doc_id", F.explode("shs").alias("sh"))
-    counts = packed.select("doc_id", F.size("shs").cast("long").alias("n_sh"))
-    full = sh.join(counts.hint("shuffle_hash"), "doc_id")
-    prefix = _prefix_index(sh, threshold)
+    sh = packed.selectExpr("doc_id", "explode(shs) AS sh")
+    full = packed.selectExpr("doc_id", "size(shs) AS n_sh", "explode(shs) AS sh")
     # prefix × full-index is corpus × corpus: estimate-independent
-    # shuffle join, never a statically-planned broadcast (see
-    # _prefix_index's note). The hint rides the PREFIX side — the
+    # shuffle join, never a statically-planned broadcast (see the note
+    # in _prefix_index). The hint rides the PREFIX side — the
     # hinted side is the hash build side, and the prefix is ~20% of
-    # index rows by construction.
-    a, b = prefix.alias("a").hint("shuffle_hash"), full.alias("b")
-    smaller_first = (F.col("a.n_sh") < F.col("b.n_sh")) | (
-        (F.col("a.n_sh") == F.col("b.n_sh"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-    )
+    # index rows by construction. Every prefix row already satisfies
+    # the positional bound ``na − rnk + 1 >= ceil(t·na)``: that is how
+    # the prefix length is defined.
     cand = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & smaller_first
-            & (
-                F.col("a.n_sh") - F.col("a.rnk") + 1
-                >= F.col("a.n_sh") * threshold - 1e-9
-            ),
+        _prefix_index(sh, threshold).alias("a").hint("shuffle_hash")
+        .join(full.alias("b"), "sh")
+        .where(
+            "a.n_sh < b.n_sh OR (a.n_sh = b.n_sh AND a.doc_id < b.doc_id)"
         )
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
+        .selectExpr(
+            "least(a.doc_id, b.doc_id) AS doc_a",
+            "greatest(a.doc_id, b.doc_id) AS doc_b",
         )
-        .dropDuplicates(["doc_a", "doc_b"])
     )
     return (
         _verified_overlap(documents, sh, cand, packed, max_set_size)
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("n_inter").cast("double") / F.least("na", "nb")).alias(
-                "containment"
-            ),
+        .selectExpr(
+            "doc_a", "doc_b", "CAST(n_inter AS DOUBLE) / least(na, nb) AS containment"
         )
-        .filter(F.col("containment") >= threshold)
+        .where(f"containment >= {_dbl(threshold)}")
     )
 
 
@@ -636,23 +627,20 @@ def _minhash_fused(
 def minhash_lsh_candidates(banded: DataFrame) -> DataFrame:
     """(doc_a, doc_b) candidate pairs from the (doc_id, band_id,
     band_hash) LSH band table (:func:`minhash_dedup_pairs`' fused
-    kernel): docs colliding in any band pair up. Self-join key is
+    kernel): docs colliding in any band pair up, once per shared band
+    (:func:`_verified_overlap` folds the repeats in its pair regroup,
+    so no separate distinct shuffle runs). Self-join key is
     (band_id, band_hash) — candidate volume is data-dependent but
     never O(n²). Both self-join sides read ``banded``, so the caller
     derives it from a persisted frame.
     """
     # corpus × corpus band self-join: estimate-independent shuffle
     # join, never a statically-planned broadcast (see _prefix_index)
-    l, r = banded.alias("l"), banded.alias("r").hint("shuffle_hash")
     return (
-        l.join(
-            r,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .dropDuplicates()
+        banded.alias("l")
+        .join(banded.alias("r").hint("shuffle_hash"), ["band_id", "band_hash"])
+        .where("l.doc_id < r.doc_id")
+        .selectExpr("l.doc_id AS doc_a", "r.doc_id AS doc_b")
     )
 
 
@@ -674,10 +662,8 @@ def minhash_dedup_pairs(
     # crossing — the band table and the shingle index are JVM explodes
     # over it, so the corpus text is tokenized exactly once.
     fused = tracked_persist(_minhash_fused(documents))
-    sh = fused.select("doc_id", F.explode("shs").alias("sh"))
-    banded = fused.select(
-        "doc_id", F.posexplode("bands").alias("band_id", "band_hash")
-    )
+    sh = fused.selectExpr("doc_id", "explode(shs) AS sh")
+    banded = fused.selectExpr("doc_id", "posexplode(bands) AS (band_id, band_hash)")
     overlap = _verified_overlap(
         documents, sh, minhash_lsh_candidates(banded),
         fused.select("doc_id", "shs"), max_set_size,
@@ -876,105 +862,82 @@ def neardup_clusters(
     reachable through the pair graph — the "keep one canonical document
     per duplicate cluster" step that follows any pairwise dedup.
 
-    Min-label propagation with pointer jumping: each iteration every
-    vertex takes the min of (its own label, its neighbors' labels — one
-    edge hop — and its label's label — one pointer jump through the
-    previous round's labels). The jump lets the minimum travel through
-    already-labelled vertices, so a chain of length d converges in
-    O(log d) rounds instead of the O(d) of plain propagation — a
-    1000-document drift chain needs ~10 rounds, not 1000. The loop stops
-    as soon as an iteration changes nothing, and **raises** if
-    ``max_iter`` rounds were not enough: a silently non-converged
-    labelling would merge-split clusters wrongly with no signal to the
-    caller.
+    Min-label propagation with pointer jumping: each round every
+    vertex takes the min of its own label and its neighbours' labels
+    (one edge hop), then the lesser of that and its new label's own
+    new label (one pointer jump through this round's labels). The jump
+    lets the minimum travel through already-labelled vertices, so a
+    chain of length d converges in O(log d) rounds instead of the O(d)
+    of plain propagation — the distance covered grows as d → 2d + 2
+    per round, so a 1000-document drift chain needs ~9 rounds, not
+    1000. Round 0 (a hop and a jump from the identity labels) always
+    changes something and is not counted; the loop stops as soon as a
+    counted round changes nothing, and **raises** if ``max_iter``
+    rounds were not enough: a silently non-converged labelling would
+    merge-split clusters wrongly with no signal to the caller.
 
-    Each iteration is ONE Spark job: the new labels are lazily
-    ``localCheckpoint``-ed and the convergence filter-count is the
-    action that materializes them — no separate checkpoint job (the old
-    hop-then-jump formulation paid two jobs per round and recomputed
-    the hop frame on both sides of its self-join; jumping through the
-    checkpointed previous labels makes every join input a cached scan).
-    The checkpoint truncates lineage so iteration N's plan does not
-    re-optimize (and on cache eviction re-execute) iterations 1..N-1.
-    The driver sees only the converged flag, never the data.
+    Each vertex carries its neighbour list and old label through the
+    rounds, so a round is two shuffles and no join: the hop regroups
+    the labels sent along the lists on the receiver, the jump regroups
+    on the label (see :func:`_pointer_jump`). Every round reads the
+    previous one once, so the pair pipeline under round 0 runs once
+    with no checkpoint of its own. Each counted round ends in an eager
+    ``localCheckpoint`` whose own job also yields the convergence count
+    (an observed metric) — no separate counting job. Under AQE each
+    shuffle stage is a job of its own: a round is three jobs, or one
+    when its input is a single partition (a presentation-sorted pair
+    list satisfies both shuffles, so round 0 and round 1 then run as
+    one stage). The checkpoint truncates lineage so round N's plan does
+    not re-optimize (and on cache eviction re-execute) rounds 1..N-1.
+    The driver sees only the change count, never the data.
 
     ``expect_small=True`` (the near-dup case: output bounded by pairs)
     presents via a single-partition sort; pass ``False`` for a
     duplicate-heavy corpus where one row per paired document is still
     big — the output then uses a range-partitioned ``orderBy``.
     """
-    # Symmetrize in ONE pass over the (possibly expensive — e.g. a full
-    # MinHash or n-gram verify pipeline) pairs input: explode each edge
-    # into both directions, so the pairs plan is read once, inside the
-    # same job that materializes the checkpoint every iteration reuses.
-    sym = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-                    ),
-                )
-            ).alias("e")
+    # Round 0 from identity labels: ONE shuffle groups each vertex's
+    # neighbour list, and its hop label is min(own id, neighbours) —
+    # the ids ARE the initial labels. Its jump runs uncounted into
+    # round 1: from identity labels every non-minimal vertex changes.
+    state = _pointer_jump(
+        pairs.selectExpr(
+            "inline(array(struct(doc_a AS doc_id, doc_b AS nbr),"
+            " struct(doc_b AS doc_id, doc_a AS nbr)))"
         )
-        .select("e.src", "e.dst")
-        .localCheckpoint()
-    )
-    # Seed each vertex with min(own id, direct-neighbor min): identical
-    # to the first edge-hop round (neighbors' initial labels ARE their
-    # ids) for the price of one aggregation instead of a join round.
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("nbr0"))
-        .select(
-            F.col("src").alias("doc_id"),
-            F.least(F.col("src"), F.col("nbr0")).alias("cluster_id"),
+        .groupBy("doc_id")
+        .agg(F.expr("collect_list(nbr) AS nbrs"))
+        .selectExpr(
+            "doc_id", "nbrs", "doc_id AS old", "least(doc_id, array_min(nbrs)) AS hop"
         )
-        .localCheckpoint(eager=False)
     )
     changed = -1
     for _ in range(max_iter):
-        # edges × labels are both pair-graph-sized — pinned SMJ (see
-        # _prefix_index's estimate-safety note), as are the label-map
-        # joins below
-        nbr_min = sym.join(
-            labels.hint("merge"), sym["dst"] == labels["doc_id"]
-        ).groupBy("src").agg(F.min("cluster_id").alias("nbr_min"))
-        # Pointer jump: a label is always some vertex's doc_id, so the
-        # label of my label is defined — chase it one level through the
-        # PREVIOUS round's labels (a checkpointed scan, so this self-
-        # join re-reads a cache instead of recomputing the aggregation).
-        # Combined with the edge hop, the distance to the component
-        # minimum roughly halves per round.
-        ref = labels.select(
-            F.col("doc_id").alias("ref_id"),
-            F.col("cluster_id").alias("ref_label"),
-        )
-        upd = (
-            labels.join(
-                nbr_min.hint("merge"), labels["doc_id"] == nbr_min["src"], "left"
+        # Edge hop: one explode sends every vertex's label along its
+        # neighbour list (element 0 is the vertex itself, carrying the
+        # list and the old label) and ONE shuffle on the receiver takes
+        # the min — the edge list is never re-joined.
+        hop = (
+            state.selectExpr(
+                "posexplode(concat(array(doc_id), nbrs)) AS (i, to)", "nbrs", "label"
             )
-            .join(ref.hint("merge"), labels["cluster_id"] == ref["ref_id"], "left")
-            .select(
-                "doc_id",
-                F.col("cluster_id").alias("old_cluster_id"),
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-                    F.coalesce(F.col("ref_label"), F.col("cluster_id")),
-                ).alias("cluster_id"),
+            .selectExpr(
+                "i", "to AS doc_id", "IF(i = 0, nbrs, NULL) AS nbrs", "label AS old",
+                "min(label) OVER (PARTITION BY to) AS hop",
             )
-            .localCheckpoint(eager=False)
+            .where("i = 0")
         )
-        # The convergence count is the action that materializes the
-        # checkpoint — one job per iteration, not checkpoint + count.
-        changed = upd.filter(
-            F.col("cluster_id") != F.col("old_cluster_id")
-        ).count()
-        labels = upd.select("doc_id", "cluster_id")
+        # The convergence count is an observed metric of the eager
+        # checkpoint's own job — no separate counting job. The
+        # checkpoint cuts lineage, so round N's plan does not
+        # re-optimize (or on cache eviction re-execute) rounds 1..N-1.
+        seen = Observation()
+        state = (
+            _pointer_jump(hop)
+            .observe(seen, F.expr("count_if(label != old) AS changed"))
+            .localCheckpoint()
+        )
+        changed = seen.get["changed"]
         if changed == 0:
             break
     if changed != 0:
@@ -986,7 +949,36 @@ def neardup_clusters(
     # curated corpus (single-partition sort, no range-sampling job);
     # range-partitioned orderBy when the caller expects one row per
     # paired document to still be big.
-    return presentation_sorted(labels, "doc_id", expect_small=expect_small)
+    return presentation_sorted(
+        state.selectExpr("doc_id", "label AS cluster_id"),
+        "doc_id",
+        expect_small=expect_small,
+    )
+
+
+def _pointer_jump(hop: DataFrame) -> DataFrame:
+    """(doc_id, nbrs, old, label) from one round's (doc_id, nbrs, old,
+    hop): each vertex's label becomes the lesser of its hop label and
+    that label's own hop label — the pointer jump through this round's
+    labels. It is a self-join done as ONE shuffle on a single reading
+    of ``hop``: every row is also emitted under its own id as the
+    target of the vertices pointing at it, and a window over the key
+    hands the target's label to each of them (a window streams and
+    spills, so a giant cluster never becomes one in-memory list). A
+    label is always some vertex's doc_id, so every key has a target.
+    """
+    return (
+        hop.selectExpr(
+            "inline(array(struct(hop AS key, doc_id, nbrs, old, hop),"
+            " struct(doc_id AS key, NULL AS doc_id, NULL AS nbrs, NULL AS old, hop)))"
+        )
+        .selectExpr(
+            "doc_id", "nbrs", "old",
+            "least(hop, min(IF(doc_id IS NULL, hop, NULL)) OVER (PARTITION BY key))"
+            " AS label",
+        )
+        .where("doc_id IS NOT NULL")
+    )
 
 
 def streaming_dedup_ingest(

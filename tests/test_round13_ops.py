@@ -234,6 +234,43 @@ def test_ivfpq_failed_or_lost_build_leaves_no_tmp_dir(spark, tmp_path, monkeypat
     assert os.listdir(store) == ["fp"]
 
 
+def test_ivfpq_publish_sweeps_stale_entries_of_its_fixture_dir(
+    spark, tmp_path, monkeypatch
+):
+    """A successful publish deletes the other entries of its own
+    fixture dir — an older fingerprint and the tmp sibling of a build
+    killed mid-save — and keeps another fixture dir's index. Training,
+    saving and reopening are stubbed, so only the store protocol runs."""
+    import os
+
+    from flink_snappydata_spark.pipeline import similarity
+    from flink_snappydata_spark.specs import embeddings_quality as eq
+
+    real_dir = eq.ivfpq_store_dir
+    store = tmp_path / "ivfpq"
+    monkeypatch.setattr(
+        eq, "ivfpq_store_dir",
+        lambda s, d: str(store / os.path.basename(real_dir(s, d))),
+    )
+    one = spark.range(1)
+    monkeypatch.setattr(
+        similarity, "ivf_pq_index", lambda emb: similarity.IvfPqIndex(one, one, one, one)
+    )
+    monkeypatch.setattr(similarity, "ivf_pq_index_load", lambda s, b: b)
+    monkeypatch.setattr(
+        similarity.IvfPqIndex, "save", lambda self, path: os.makedirs(f"{path}/qv")
+    )
+    name = os.path.basename(eq.ivfpq_store_dir(spark, SF_SMOKE))
+    key, _ = name.split("-", 1)
+    other = os.path.basename(real_dir(spark, SF))
+    assert not other.startswith(key)
+    for stale in (f"{key}-{'0' * 32}", f"{name}.tmp-deadbeef", other):
+        os.makedirs(store / stale / "qv")
+
+    assert eq.ivfpq_prebuilt_index(spark, SF_SMOKE) == str(store / name)
+    assert sorted(os.listdir(store)) == sorted([name, other])
+
+
 def test_ivfpq_save_rejects_undeclared_schema(spark, tmp_path):
     """The reopen trusts IVF_PQ_SCHEMAS instead of reading footers, so
     save must refuse a frame whose schema differs from its declared

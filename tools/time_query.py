@@ -1,9 +1,11 @@
 #!/usr/bin/env python
 """Time a single registry query with the bench's methodology (table
 cache on, noop sink, warm-up rep + median of N) — the per-query A/B
-harness for optimization rounds.
+harness for optimization rounds. Next to the seconds it prints the
+Spark jobs the query launched while being built and while being
+forced (DAGScheduler job counter): a count that host drift cannot move.
 
-Usage: python tools/time_query.py name [reps]
+Usage: python tools/time_query.py name [reps] [sf_dir]
 """
 
 from __future__ import annotations
@@ -28,24 +30,33 @@ SF_DIR = "/root/testdata/sf0.1"
 def main() -> None:
     name = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 5
+    sf_dir = sys.argv[3] if len(sys.argv) > 3 else SF_DIR
     spark = get_spark(app_name=f"fss-ab-{name}")
     spark.sparkContext.setLogLevel("ERROR")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
     enable_table_cache()
     for t in TABLES:
-        load_table(spark, SF_DIR, t).count()
+        load_table(spark, sf_dir, t).count()
     fn = registry.queries()[name]
     runs = []
     for i in range(reps + 1):
         release_caches()
+        j0 = dag.numTotalJobs()
         start = time.perf_counter()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        df = fn(spark, sf_dir)
+        j1 = dag.numTotalJobs()
+        df.write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - start
         if i > 0:  # rep 0 is warm-up
-            runs.append(dt)
-    runs.sort()
+            runs.append((dt, j1 - j0, dag.numTotalJobs() - j1))
+    secs = sorted(r[0] for r in runs)
+    build = sorted({r[1] for r in runs})
+    force = sorted({r[2] for r in runs})
     print(
-        f"{name}: median {runs[len(runs) // 2]:.3f}s "
-        f"min {runs[0]:.3f} max {runs[-1]:.3f} n={len(runs)}"
+        f"{name}: median {secs[len(secs) // 2]:.3f}s "
+        f"min {secs[0]:.3f} max {secs[-1]:.3f} n={len(secs)} "
+        f"jobs build {'/'.join(map(str, build))} "
+        f"force {'/'.join(map(str, force))}"
     )
 
 
