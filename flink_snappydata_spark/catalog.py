@@ -44,6 +44,12 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _CACHE_ENABLED = False
 
+#: Parquet schemas ``load_table`` inferred, keyed on the absolute path,
+#: the ``nanosAsLong`` conf (it changes the inferred ``ts`` type) and
+#: the (path, size, mtime_ns) of the file and of every file under it,
+#: so a rewritten fixture is read afresh.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
 
 def enable_table_cache(enabled: bool = True) -> None:
     """Toggle the in-memory table cache for subsequent ``load_table``
@@ -80,18 +86,41 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     stays in int64 the whole way (a double division would lose
     precision above 2^53), matching DuckDB's own ns→µs truncation
     bit-for-bit. Plain timestamp columns pass through untouched.
+
+    The footer is read once per file version (:func:`_read_parquet`),
+    so a repeat load with the table cache off launches no Spark job.
     """
     key = (spark.sparkContext.applicationId, sf_dir, name)
     if _CACHE_ENABLED and key in _CACHE:
         return _CACHE[key]
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if _CACHE_ENABLED:
         df = df.cache()
         _CACHE[key] = df
+    return df
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema memoized:
+    inferring it reads the footers in a Spark job, and every later read
+    of the same file version passes it with ``.schema(...)`` instead.
+    Paths that are not local files read as before."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    files = [path, *(os.path.join(d, n) for d, _, ns in os.walk(path) for n in ns)]
+    key = (
+        os.path.abspath(path),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
+        tuple((f, (st := os.stat(f)).st_size, st.st_mtime_ns) for f in sorted(files)),
+    )
+    if key in _SCHEMAS:
+        return spark.read.schema(_SCHEMAS[key]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
     return df
 
 

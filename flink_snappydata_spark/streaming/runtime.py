@@ -191,7 +191,12 @@ def run_to_memory_sink(
     return q
 
 
-def land_batch_partition(df: DataFrame, table: str, batch_id: int) -> None:
+def land_batch_partition(
+    df: DataFrame,
+    table: str,
+    batch_id: int,
+    stamp: tuple[str, int] | None = None,
+) -> None:
     """Idempotently land one micro-batch's rows as partition
     ``batch_id=N`` of a managed catalog table. First write creates the
     table partitioned by ``batch_id``; later writes use dynamic
@@ -200,14 +205,25 @@ def land_batch_partition(df: DataFrame, table: str, batch_id: int) -> None:
     (a foreachBatch retry) rewrites its own partition instead of
     appending a duplicate copy. The dynamic-overwrite conf is set on
     the frame's own session (inside foreachBatch that is the per-batch
-    cloned session, so the setting cannot leak to the parent)."""
+    cloned session, so the setting cannot leak to the parent).
+
+    ``stamp=(column, value)`` adds a second partition column after
+    ``batch_id`` — the compaction marker of a compacting loop — so the
+    table is laid out ``batch_id=N/<column>=<value>``. The stamp must be
+    a deterministic function of the batch: a retry then rewrites the
+    same ``(batch_id, stamp)`` partition."""
     spark = df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    out = df.withColumn("batch_id", F.lit(batch_id).cast("long"))
+    parts = {"batch_id": batch_id}
+    if stamp:
+        parts[stamp[0]] = stamp[1]
+    out = df.select(
+        "*", *(F.lit(v).cast("long").alias(k) for k, v in parts.items())
+    )
     if spark.catalog.tableExists(table):
         out.write.mode("overwrite").insertInto(table)
     else:
-        out.write.partitionBy("batch_id").saveAsTable(table)
+        out.write.partitionBy(*parts).saveAsTable(table)
 
 
 def ingest_stream_to_tables(
@@ -252,19 +268,27 @@ def ingest_stream_to_tables(
     reader folds through the SAME function:
     ``finalize(compact(read_state_table(spark, table)))``. A merge
     written once is what makes compaction invisible to the reader.
-    Every ``compact_every``-th micro-batch (:func:`land_floor_partition`)
-    folds the accumulated live rows plus the current batch through
-    ``compact`` and lands the result in the CURRENT batch's
-    partition with a ``floor`` column stamped to this batch_id; normal
-    batches stamp ``floor=0``. Readers (:func:`read_state_table`)
-    keep only partitions ``batch_id >= max(floor)``, so a compaction
+    The table is partitioned by ``(batch_id, floor)``: normal batches
+    land at ``floor=0``; every ``compact_every``-th micro-batch
+    (:func:`land_floor_partition`) folds the live rows plus the current
+    batch through ``compact`` and lands the result at ``batch_id=N/
+    floor=N``. The compaction boundary is therefore partition
+    METADATA: the live rows are the partitions ``batch_id >= max(floor)``
+    and one ``SHOW PARTITIONS`` listing (a catalog command, no Spark
+    job) yields it, the way Structured Streaming reads its committed
+    epoch from its logs rather than from the data. A compaction
     supersedes everything before it ATOMICALLY with its own landing —
-    one dynamic-partition write is the only state mutation, making a
-    retried compaction batch recompute byte-identical output from the
+    one dynamic-partition write is the only state mutation. The stamp
+    is a deterministic function of the batch (a batch compacts iff its
+    id is a multiple of ``compact_every`` and an earlier partition
+    exists; a first landed batch stamps 0 even at a multiple), so a
+    retried batch rewrites its own ``(batch_id, floor)`` partition, and
+    a retried compaction recomputes byte-identical output from the
     untouched pre-floor partitions (the exactly-once argument above,
-    unchanged). Superseded partitions are dropped lazily AFTER the
-    landing commits — pure space reclamation; a crash mid-drop leaves
-    rows every reader and every future compaction already ignores.
+    unchanged). Superseded partitions are dropped AFTER the landing
+    commits, in one ``ALTER TABLE … DROP`` with full partition specs —
+    pure space reclamation; a crash mid-drop leaves rows every reader
+    and every future compaction already ignores.
 
     TIERED COMPACTION (``compact_mode="tiered"``): the floor mode
     above rewrites the ENTIRE live state every ``compact_every``
@@ -272,20 +296,21 @@ def ingest_stream_to_tables(
     trade for loops whose live state is corpus-sized (the dedup
     partials log: one row per distinct text, carrying the text).
     Tiered mode instead merges only the RAW batch partitions landed
-    since the previous merge: every ``compact_every``-th micro-batch
+    since the previous merge. The table is partitioned by
+    ``(batch_id, covered_to)``: normal batches land raw at
+    ``covered_to=0``; every ``compact_every``-th micro-batch
     (:func:`land_tiered_partition`) folds those raws plus the current
-    batch through ``compact`` and lands the result in the CURRENT
-    batch's partition stamped
-    ``covered_to = batch_id``; normal batches stamp ``covered_to=0``.
-    Each row is therefore rewritten exactly ONCE ever (raw → its
-    window's merged partition) — total write amplification 2x,
-    independent of stream age — while the read fold opens
+    batch through ``compact`` and lands the result at ``batch_id=N/
+    covered_to=N``. Each row is therefore rewritten exactly ONCE ever
+    (raw → its window's merged partition) — total write amplification
+    2x, independent of stream age — while the read fold opens
     O(age / compact_every) merged partitions plus <= compact_every
-    trailing raws instead of O(age) raw partitions. Readers
-    (:func:`read_state_table`) keep merged rows (``covered_to > 0``)
-    plus raw rows with ``batch_id > max(covered_to)`` — the one-write
-    atomic-supersede argument of the floor mode, unchanged, because
-    merges always cover a CONTIGUOUS prefix extension
+    trailing raws instead of O(age) raw partitions. The live rows are
+    the merged partitions (``covered_to > 0``) plus the raw partitions
+    with ``batch_id > max(covered_to)``, all read from the same
+    partition listing. The one-write atomic-supersede and
+    deterministic-stamp arguments of the floor mode hold unchanged,
+    because merges always cover a CONTIGUOUS prefix extension
     ``(prev_covered, batch_id]``. Reclamation is delayed one merge
     (drop raw partitions below the PREVIOUS covered boundary), so a
     retried merge batch recomputes byte-identical output from raws a
@@ -356,6 +381,60 @@ def ingest_stream_to_tables(
     return q
 
 
+def _check_layout(table: str, columns: list[str], stamp: str) -> None:
+    """A compacting loop's state table is laid out
+    ``batch_id=N/<stamp>=M``, so its partition columns close its schema
+    in that order. A table that carries the stamp column in any other
+    place (written before the stamp became a partition column) cannot
+    answer its compaction boundary from the partition listing, and
+    guessing would return superseded rows: raise instead."""
+    if columns[-2:] != ["batch_id", stamp]:
+        raise ValueError(
+            f"state table {table} is not partitioned by (batch_id, {stamp}),"
+            " the layout of compacting ingest loops: drop and re-ingest it"
+        )
+
+
+def _stamped_partitions(spark, table: str, stamp: str) -> list[tuple[int, int]]:
+    """``(batch_id, stamp)`` of every partition of a compacting loop's
+    state table, from one ``SHOW PARTITIONS`` listing — a catalog
+    command, so it launches no Spark job."""
+    out = []
+    for (spec,) in spark.sql(f"SHOW PARTITIONS {table}").collect():
+        kv = dict(p.split("=", 1) for p in spec.split("/"))
+        out.append((int(kv["batch_id"]), int(kv[stamp])))
+    return out
+
+
+def _earlier_partitions(
+    spark, table: str, stamp: str, batch_id: int, compact_every: int
+) -> list[tuple[int, int]]:
+    """The ``(batch_id, stamp)`` partitions landed before ``batch_id``
+    when ``batch_id`` is a multiple of ``compact_every`` (only those
+    batches compact, so only they pay the listing); ``[]`` for every
+    other batch and before the table exists. Never this batch's own
+    partition: a retry may have left a complete one, and the recompute
+    must neither read its own prior output nor move its boundary."""
+    if not spark.catalog.tableExists(table):
+        return []
+    _check_layout(table, spark.table(table).columns, stamp)
+    if batch_id % compact_every:
+        return []
+    return [p for p in _stamped_partitions(spark, table, stamp) if p[0] < batch_id]
+
+
+def _drop_partitions(spark, table: str, stamp: str, dead) -> None:
+    """Drop the listed ``(batch_id, stamp)`` partitions in ONE statement.
+    Each spec names both partition columns: a partial spec such as
+    ``PARTITION (batch_id=N)`` matches nothing on the two-column layout
+    and ``IF EXISTS`` would drop nothing without a word."""
+    if dead:
+        specs = ", ".join(
+            f"PARTITION (batch_id={b}, {stamp}={s})" for b, s in dead
+        )
+        spark.sql(f"ALTER TABLE {table} DROP IF EXISTS {specs}")
+
+
 def land_floor_partition(
     base: DataFrame,
     table: str,
@@ -365,45 +444,32 @@ def land_floor_partition(
 ) -> None:
     """One micro-batch of the FLOOR-compacting ingest (module-level,
     like :func:`land_tiered_partition`, so the fold scale probe drives
-    the identical code path the stream does): normal batches land with
-    ``floor=0``; every ``compact_every``-th batch folds the live rows
-    plus the current batch through ``compact`` and lands the result
-    stamped ``floor = batch_id``. See :func:`ingest_stream_to_tables`'s
-    COMPACTION section for the visibility/exactly-once argument."""
+    the identical code path the stream does): normal batches land at
+    ``batch_id=N/floor=0``; every ``compact_every``-th batch that has
+    earlier state folds the live rows plus the current batch through
+    ``compact`` and lands the result at ``batch_id=N/floor=N``. The
+    previous floor and the drop list come from the partition listing,
+    not from a scan. See :func:`ingest_stream_to_tables`' COMPACTION
+    section for the visibility/exactly-once argument."""
     spark = base.sparkSession
-    out = base.withColumn("floor", F.lit(0).cast("long"))
-    is_compaction = (
-        batch_id > 0
-        and batch_id % compact_every == 0
-        and spark.catalog.tableExists(table)
-    )
-    prev_floor = 0
-    if is_compaction:
-        # Pre-floor state only, and NEVER this batch's own partition
-        # (a retry may have left a partial/complete one — the
-        # recompute must not read its own prior output).
-        state = spark.table(table).filter(F.col("batch_id") < batch_id)
-        # bounded driver fetch: one scalar (the current floor)
-        prev_floor = state.agg(F.max("floor")).collect()[0][0] or 0
+    earlier = _earlier_partitions(spark, table, "floor", batch_id, compact_every)
+    prev_floor = max((s for _, s in earlier), default=0)
+    stamp = batch_id if earlier else 0
+    if stamp:
         live = (
-            state.filter(F.col("batch_id") >= prev_floor)
+            spark.table(table)
+            .filter(F.col("batch_id").between(prev_floor, batch_id - 1))
             .drop("batch_id", "floor")
         )
-        out = compact(live.unionByName(base)).withColumn(
-            "floor", F.lit(batch_id).cast("long")
+        base = compact(live.unionByName(base))
+    land_batch_partition(base, table, batch_id, ("floor", stamp))
+    if stamp:
+        # space reclamation of partitions no reader can see (the floor
+        # is now batch_id; anything below prev_floor was already
+        # invisible before this compaction committed)
+        _drop_partitions(
+            spark, table, "floor", [p for p in earlier if p[0] < prev_floor]
         )
-    land_batch_partition(out, table, batch_id)
-    if is_compaction:
-        # lazy space reclamation of partitions no reader can see
-        # (floor is now batch_id; anything below prev_floor was
-        # already invisible before this compaction committed)
-        for row in spark.sql(f"SHOW PARTITIONS {table}").collect():
-            pid = int(row[0].split("=", 1)[1])
-            if pid < prev_floor:
-                spark.sql(
-                    f"ALTER TABLE {table} DROP IF EXISTS "
-                    f"PARTITION (batch_id={pid})"
-                )
 
 
 def land_tiered_partition(
@@ -415,117 +481,76 @@ def land_tiered_partition(
 ) -> None:
     """One micro-batch of the TIERED ingest (module-level so the fold
     scale probe and the retry tests drive the identical code path the
-    stream does): normal batches land raw (``covered_to=0``); every
-    ``compact_every``-th batch folds the raw partitions landed since
-    the previous merge plus the current batch through ``compact`` and
-    lands the merged result stamped ``covered_to = batch_id``. See
-    :func:`ingest_stream_to_tables`'s TIERED COMPACTION section for
-    the visibility/exactly-once argument."""
+    stream does): normal batches land raw at ``batch_id=N/
+    covered_to=0``; every ``compact_every``-th batch that has earlier
+    state folds the raw partitions landed since the previous merge plus
+    the current batch through ``compact`` and lands the merged result
+    at ``batch_id=N/covered_to=N``. The previous boundary, the merged
+    ids and the drop list come from the partition listing. See
+    :func:`ingest_stream_to_tables`' TIERED COMPACTION section for the
+    visibility/exactly-once argument."""
     spark = base.sparkSession
-    out = base.withColumn("covered_to", F.lit(0).cast("long"))
-    is_merge = (
-        batch_id > 0
-        and batch_id % compact_every == 0
-        and spark.catalog.tableExists(table)
+    earlier = _earlier_partitions(
+        spark, table, "covered_to", batch_id, compact_every
     )
-    prev_cov = 0
-    if is_merge:
-        # Pre-batch state only, NEVER this batch's own partition (a
-        # retry may have left a partial/complete one — the recompute
-        # must not read its own prior output).
-        state = spark.table(table).filter(F.col("batch_id") < batch_id)
-        # bounded driver fetch: one scalar (previous merge boundary).
-        # Merges only ever land at multiples of compact_every, so the
-        # boundary scan partition-prunes to those candidate ids instead
-        # of reading the whole log (an O(age) scan per merge would make
-        # total landing cost quadratic in stream age).
-        # covered_to=0 marks RAW rows, so "no merge yet" also reads 0 —
-        # normalize to -1 so the first merge's (prev_cov, batch_id]
-        # window includes batch 0.
-        candidates = list(range(compact_every, batch_id, compact_every))
-        prev_cov = (
-            state.filter(F.col("batch_id").isin(candidates))
-            .agg(F.max("covered_to"))
-            .collect()[0][0]
-            if candidates
-            else None
-        ) or -1
-        prev_cov = prev_cov if prev_cov > 0 else -1
-        raws = state.filter(
-            (F.col("covered_to") == 0) & (F.col("batch_id") > prev_cov)
-        ).drop("batch_id", "covered_to")
-        out = compact(raws.unionByName(base)).withColumn(
-            "covered_to", F.lit(batch_id).cast("long")
+    # merged partitions are the ones with covered_to > 0; -1 when no
+    # merge committed yet, so the first window includes batch 0
+    prev_cov = max((c for _, c in earlier if c > 0), default=-1)
+    stamp = batch_id if earlier else 0
+    if stamp:
+        raws = (
+            spark.table(table)
+            .filter(
+                (F.col("covered_to") == 0)
+                & F.col("batch_id").between(prev_cov + 1, batch_id - 1)
+            )
+            .drop("batch_id", "covered_to")
         )
-    land_batch_partition(out, table, batch_id)
-    if is_merge and prev_cov > 0:
+        base = compact(raws.unionByName(base))
+    land_batch_partition(base, table, batch_id, ("covered_to", stamp))
+    if stamp and prev_cov > 0:
         # Delayed space reclamation (one merge of lag): raw partitions
         # below the PREVIOUS boundary were superseded by the merge
         # that committed prev_cov — no reader and no future recompute
         # (which only reads > prev_cov) can need them. Merged
-        # partitions live at their covered_to id and stay visible
-        # forever; everything else below prev_cov is raw and dead. A
-        # crash mid-drop leaves invisible rows only.
-        merged_ids = {
-            int(r[0])
-            for r in spark.table(table)
-            # merges only land at multiples of compact_every: prune the
-            # id scan to those partitions (bounded: one per merge ever)
-            .filter(
-                F.col("batch_id").isin(candidates)
-                & (F.col("covered_to") > 0)
-            )
-            .select("batch_id")
-            .distinct()
-            .collect()
-        }
-        for row in spark.sql(f"SHOW PARTITIONS {table}").collect():
-            pid = int(row[0].split("=", 1)[1])
-            if pid < prev_cov and pid not in merged_ids:
-                spark.sql(
-                    f"ALTER TABLE {table} DROP IF EXISTS "
-                    f"PARTITION (batch_id={pid})"
-                )
+        # partitions stay visible forever. A crash mid-drop leaves
+        # invisible rows only.
+        _drop_partitions(
+            spark,
+            table,
+            "covered_to",
+            [(b, c) for b, c in earlier if c == 0 and b < prev_cov],
+        )
 
 
 def read_state_table(spark, table: str) -> DataFrame:
     """Open an ingest-loop state table for folding: strips the
-    ``batch_id`` lineage column and, when the loop compacts (``floor``
-    column present), keeps only the live rows ``batch_id >=
-    max(floor)`` — the partitions at or after the latest compaction.
-    For TIERED loops (``covered_to`` column present) the live rows are
-    every merged row (``covered_to > 0``) plus the raw rows newer than
-    the latest merge boundary (``batch_id > max(covered_to)``). Either
-    scalar is a broadcast one-row aggregate joined into the scan, not
-    a driver collect, so the read stays one distributed plan. Tables
-    from non-compacting loops pass through unfiltered — same behavior
-    as the plain ``drop``."""
+    ``batch_id`` lineage column and, for compacting loops, the stamp
+    partition column, keeping only the live rows. FLOOR loops (``floor``
+    partition column) keep the partitions ``batch_id >= max(floor)``;
+    TIERED loops (``covered_to`` partition column) keep every merged
+    partition (``covered_to > 0``) plus the raw partitions newer than
+    the latest merge (``batch_id > max(covered_to)``). The boundary is
+    read from one ``SHOW PARTITIONS`` listing when the frame is built
+    and enters the plan as a literal partition filter, so building the
+    reader launches no Spark job and the scan prunes superseded
+    partitions with no aggregate and no join. Build the reader after
+    the ingest it should see: a frame built earlier keeps its boundary.
+    Tables from non-compacting loops pass through unfiltered — same
+    behavior as the plain ``drop``."""
     df = spark.table(table)
-    if "covered_to" in df.columns:
-        # plain max() so the subquery stays parquet-aggregate-pushdown
-        # eligible (footer stats answer it without reading rows);
-        # covered_to=0 marks raws, so max()==0 means "no merge yet" —
-        # normalized to -1 POST-join so every raw partition stays live
-        mc = df.groupBy().agg(F.max("covered_to").alias("_mc"))
-        boundary = F.when(F.col("_mc") > 0, F.col("_mc")).otherwise(
-            F.lit(-1)
-        )
-        return (
-            df.join(F.broadcast(mc))
-            .filter(
-                (F.col("covered_to") > 0)
-                | (F.col("batch_id") > F.coalesce(boundary, F.lit(-1)))
-            )
-            .drop("batch_id", "covered_to", "_mc")
-        )
-    if "floor" not in df.columns:
+    stamp = next((c for c in ("covered_to", "floor") if c in df.columns), None)
+    if stamp is None:
         return df.drop("batch_id")
-    fl = df.groupBy().agg(F.max("floor").alias("_fl"))
-    return (
-        df.join(F.broadcast(fl))
-        .filter(F.col("batch_id") >= F.coalesce(F.col("_fl"), F.lit(0)))
-        .drop("batch_id", "floor", "_fl")
-    )
+    _check_layout(table, df.columns, stamp)
+    top = max((s for _, s in _stamped_partitions(spark, table, stamp)), default=0)
+    if top > 0:
+        df = df.filter(
+            F.col("batch_id") >= top
+            if stamp == "floor"
+            else (F.col("covered_to") > 0) | (F.col("batch_id") > top)
+        )
+    return df.drop("batch_id", stamp)
 
 
 def stream_to_table(

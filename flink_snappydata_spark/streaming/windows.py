@@ -169,19 +169,16 @@ def rollup_multires(events: DataFrame) -> DataFrame:
     identical in Spark and ANSI engines).
 
     Scale: raw events are scanned ONCE — the hourly aggregate is
-    computed first (partial aggs combine map-side), persisted, and the
-    day and week grains FOLD THE HOURLY ROLLUP, not the raw table:
-    counts add and cent-sums add, so coarsening is a tiny aggregation
-    over (hours × types) rows. At 100 TB the raw scan dominates and
-    happens exactly once; the two re-aggregations touch data three
-    orders of magnitude smaller. The exact cent sums make the fold
-    lossless (double sums would drift between the direct and folded
-    spellings).
+    computed first (partial aggs combine map-side), and the day and
+    week grains FOLD THE HOURLY ROLLUP, not the raw table: counts add
+    and cent-sums add, so every grain comes out of ONE aggregation over
+    (hours × types) × 3 rows, and the hourly rollup is read once (no
+    persist). At 100 TB the raw scan dominates and happens exactly
+    once; the fold touches data three orders of magnitude smaller. The
+    exact cent sums make the fold lossless (double sums would drift
+    between the direct and folded spellings).
     """
-    from flink_snappydata_spark.util import tracked_persist
-
-    hourly = tracked_persist(_hourly_rollup(events))
-    return _multires_from_hourly(hourly)
+    return _multires_from_hourly(_hourly_rollup(events))
 
 
 def _hourly_rollup(events: DataFrame) -> DataFrame:
@@ -198,29 +195,35 @@ def _hourly_rollup(events: DataFrame) -> DataFrame:
 
 def _multires_from_hourly(hourly: DataFrame) -> DataFrame:
     """Fold an hourly rollup into the tagged hour/day/week frame —
-    shared by the batch op and the streaming state fold."""
-
-    def _coarsen(grain: str) -> DataFrame:
-        return hourly.groupBy(
-            F.date_trunc(grain, F.col("bucket_start")).alias("bucket_start"),
-            "event_type",
-        ).agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_cents").alias("sum_cents"),
+    shared by the batch op and the streaming state fold. Each hourly
+    row explodes into its three ``(grain, date_trunc(grain))`` buckets
+    and ONE aggregation sums them (``date_trunc('hour')`` of an hour
+    bucket is itself). The hourly rollup is bounded by hours × types,
+    so the fold runs on one partition (``util.small_sorted``'s idiom,
+    applied before the aggregation instead of after it): the
+    aggregation and the presentation sort then need no exchange of
+    their own."""
+    buckets = F.explode(
+        F.array(
+            *(
+                F.struct(
+                    F.lit(g).alias("grain"),
+                    F.date_trunc(g, F.col("bucket_start")).alias("bucket_start"),
+                )
+                for g in ("hour", "day", "week")
+            )
         )
-
-    tagged = (
-        hourly.withColumn("grain", F.lit("hour"))
-        .unionByName(_coarsen("day").withColumn("grain", F.lit("day")))
-        .unionByName(_coarsen("week").withColumn("grain", F.lit("week")))
     )
-    return tagged.select(
-        "grain",
-        "bucket_start",
-        "event_type",
-        "n_events",
-        (F.col("sum_cents") / F.lit(100.0)).alias("sum_value"),
-    ).orderBy("grain", "bucket_start", "event_type")
+    return (
+        hourly.repartition(1)
+        .select(buckets.alias("b"), "event_type", "n_events", "sum_cents")
+        .groupBy("b.grain", "b.bucket_start", "event_type")
+        .agg(
+            F.sum("n_events").alias("n_events"),
+            (F.sum("sum_cents") / F.lit(100.0)).alias("sum_value"),
+        )
+        .sortWithinPartitions("grain", "bucket_start", "event_type")
+    )
 
 
 def streaming_rollup_ingest(

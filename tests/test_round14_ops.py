@@ -539,7 +539,7 @@ def test_dedup_tiered_reclaims_and_stays_exact_at_8_batches(spark, tmp_path):
         )
         assert got == want
         pids = sorted(
-            int(r[0].split("=", 1)[1])
+            int(r[0].split("/")[0].split("=", 1)[1])
             for r in spark.sql(f"SHOW PARTITIONS {table}").collect()
         )
         boundaries = sorted(
@@ -619,7 +619,7 @@ def test_raw_log_tiered_segments_fold_identically(spark, tmp_path):
         )
         assert boundaries == [2, 4, 6]
         pids = {
-            int(r[0].split("=", 1)[1])
+            int(r[0].split("/")[0].split("=", 1)[1])
             for r in spark.sql(f"SHOW PARTITIONS {table}").collect()
         }
         assert not {0, 1, 3} & pids, "consolidated raws reclaimed"

@@ -765,8 +765,10 @@ FOLD_OPS = {
 #: streaming.runtime.ingest_stream_to_tables compaction), so a
 #: long-running stream's fold reads O(live sessions) fragments — the
 #: steady state these entries land through the REAL land_floor_partition
-#: path: one compacted partition (all but the last pseudo-batch) plus
-#: the last batch's raw fragments. Compare against the raw
+#: path: one compacted partition (all but the last pseudo-batch, laid
+#: out ``batch_id=N/floor=N``) plus the last batch's raw fragments
+#: (``floor=0``); the reader takes the floor from the partition listing
+#: and prunes the superseded partitions. Compare against the raw
 #: sessions/funnel_from_state rows above to see what compaction buys.
 COMPACTED_FOLD_OPS = {
     # round-13: the mergeable-partial representative (exact sum-of-sums
@@ -796,8 +798,10 @@ COMPACTED_FOLD_OPS = {
 #: O(corpus) amplification. The lander replays every pseudo-batch
 #: through the REAL land_tiered_partition path (merges included), so
 #: the fold reads exactly the tiered steady state production
-#: accumulates: one merged partition per compact_every window plus the
-#: raw tail. Compare against the raw dedup_from_state row.
+#: accumulates: one merged partition per compact_every window
+#: (``batch_id=N/covered_to=N``) plus the raw tail (``covered_to=0``),
+#: every boundary read from the partition listing. Compare against the
+#: raw dedup_from_state row.
 #: name -> (input kind, prepare, compact, fold, compact_every)
 TIERED_FOLD_OPS = {
     "dedup_from_state_tiered": (
@@ -859,8 +863,9 @@ def _land_fold_state(spark, df, name, kind, prepare, outputs):
 def _land_replayed_state(spark, df, kind, prepare, compact, every, land):
     """Replay every pseudo-batch through a REAL compacting lander
     (``land_tiered_partition`` or ``land_floor_partition``), so merges
-    fire at the given cadence and the fold reads exactly the state a
-    long-running loop accumulates."""
+    fire at the given cadence, land in the same two-column partition
+    layout, and the fold reads exactly the state a long-running loop
+    accumulates."""
     import uuid
 
     table = f"probe_cfold_{uuid.uuid4().hex[:8]}"
