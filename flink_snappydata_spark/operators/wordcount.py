@@ -10,7 +10,7 @@ span — no Python on the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_snappydata_spark.streaming.runtime import (
@@ -22,6 +22,15 @@ from flink_snappydata_spark.util import small_sorted, spread
 #: The reference tokenizes with ``line.toLowerCase.split("\\W+")``
 #: (``WordCount.scala:30``).
 TOKEN_SPLIT_PATTERN = r"\W+"
+
+
+def words(col: Column) -> Column:
+    """The lower-cased non-empty words of a text column, as one array —
+    the per-row form of :func:`tokenize`'s split and empty filter, for
+    operators that keep each document's words together."""
+    return F.filter(
+        F.split(F.lower(col), TOKEN_SPLIT_PATTERN), lambda w: w != F.lit("")
+    )
 
 
 def tokenize(df: DataFrame, col: str = "text") -> DataFrame:

@@ -24,10 +24,12 @@ parallelism.
 from __future__ import annotations
 
 import random
+import re
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from flink_snappydata_spark.operators import wordcount
 from flink_snappydata_spark.streaming.runtime import (
     ingest_stream_to_tables,
     read_state_table,
@@ -52,6 +54,20 @@ _rng = random.Random(42)
 _HASH_A = [_rng.randrange(1, _P32) % (1 << 31) + 1 for _ in range(MINHASH_K)]
 _HASH_B = [_rng.randrange(0, _P32) % (1 << 31) for _ in range(MINHASH_K)]
 
+#: ``re.ASCII`` reproduces Java's and RE2's ASCII ``\W`` class, so the
+#: Python kernels split words exactly as the JVM and DuckDB oracles do.
+_ASCII_NONWORD = re.compile(r"\W+", re.ASCII)
+
+
+def _shingle_set(text: str, n: int) -> dict:
+    """The distinct word n-grams of ``text`` as dict keys, in first-seen
+    order — the one tokenizer + shingler of the Python kernels. A text
+    of fewer than ``n`` words is one whole-text shingle."""
+    ws = [w for w in _ASCII_NONWORD.split(text.lower()) if w]
+    if len(ws) < n:
+        return {" ".join(ws): None}
+    return dict.fromkeys(" ".join(ws[i : i + n]) for i in range(len(ws) - n + 1))
+
 
 def doc_shingle_arrays(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """(doc_id, shs: array<string>) — each document's distinct word
@@ -62,34 +78,18 @@ def doc_shingle_arrays(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     (``transform(sequence(...))`` with per-gram ``concat_ws``) runs as
     interpreted higher-order functions and dominated the whole dedup
     pipeline (6.1 s vs <1 s at sf0.1). Tokenization semantics match the
-    JVM/DuckDB oracles exactly: ``re.ASCII`` reproduces Java's and RE2's
-    ASCII ``\\W`` class; short documents fall back to one whole-text
-    shingle.
+    JVM/DuckDB oracles exactly (see :func:`_shingle_set`).
 
     Callers that need BOTH the exploded index and per-doc sets
     (:func:`ngram_jaccard_pairs`) persist THIS frame and derive each:
     one kernel pass, and the verify skips its collect_list regroup.
     """
-    import re
-
     import pandas as pd
-
-    ascii_nonword = re.compile(r"\W+", re.ASCII)
 
     # no annotations: PEP-563 lazy hints defeat pandas_udf inference
     @F.pandas_udf("array<string>")
     def _doc_shingles(texts):
-        out = []
-        for t in texts:
-            ws = [w for w in ascii_nonword.split(t.lower()) if w]
-            if len(ws) >= n:
-                seen = dict.fromkeys(
-                    " ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)
-                )
-                out.append(list(seen))
-            else:
-                out.append([" ".join(ws)])
-        return pd.Series(out)
+        return pd.Series([list(_shingle_set(t, n)) for t in texts])
 
     return spread(documents, "doc_id").select(
         "doc_id", _doc_shingles(F.col("text")).alias("shs")
@@ -487,73 +487,6 @@ def containment_pairs(
     )
 
 
-def minhash_band_hashes(
-    documents: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
-) -> DataFrame:
-    """(doc_id, band_id, band_hash) — LSH band buckets, fully kernel-side.
-
-    No query calls it: :func:`minhash_dedup_pairs` takes its bands from
-    the fused kernel (:func:`_minhash_fused`). It is kept as the
-    single-purpose reference that the fused kernel's band hashes are
-    tested against.
-
-    The signature matrix never leaves the Arrow batch: the kernel takes
-    the per-band FNV-style polynomial combine of the ``rows`` MinHash
-    values and emits only ``bands`` int64s per document, so the plan
-    explodes a 16-element array instead of projecting 64 signature
-    columns into per-band ``xxhash64`` structs (measured ~2x faster at
-    sf0.1, identical candidate semantics: equal band hash ⇔ equal band
-    with overwhelming probability).
-    """
-    import re
-    import zlib
-
-    import numpy as np
-    import pandas as pd
-
-    k = bands * rows
-    ascii_nonword = re.compile(r"\W+", re.ASCII)
-    a_mat = np.array(_HASH_A[:k], dtype=np.uint64)[:, None]
-    b_mat = np.array(_HASH_B[:k], dtype=np.uint64)[:, None]
-    p = np.uint64(_P32)
-    fnv = np.uint64(1099511628211)
-    n = SHINGLE_N
-
-    @F.pandas_udf("array<long>")
-    def _bands(texts):
-        out = []
-        for t in texts:
-            ws = [w for w in ascii_nonword.split(t.lower()) if w]
-            if len(ws) >= n:
-                sh = dict.fromkeys(
-                    " ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)
-                )
-            else:
-                sh = {" ".join(ws): None}
-            x = np.fromiter(
-                (zlib.crc32(s.encode()) for s in sh),
-                dtype=np.uint64,
-                count=len(sh),
-            )
-            sig = ((a_mat * x[None, :] + b_mat) % p).min(axis=1)
-            with np.errstate(over="ignore"):
-                bh = np.zeros(bands, dtype=np.uint64)
-                for r in range(rows):
-                    bh = bh * fnv + sig.reshape(bands, rows)[:, r]
-            out.append(bh.astype(np.int64))
-        return pd.Series(out)
-
-    return (
-        spread(documents, "doc_id")
-        .select("doc_id", F.posexplode(_bands(F.col("text"))))
-        .select(
-            "doc_id",
-            F.col("pos").alias("band_id"),
-            F.col("col").alias("band_hash"),
-        )
-    )
-
-
 def _minhash_fused(
     documents: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
 ) -> DataFrame:
@@ -563,42 +496,39 @@ def _minhash_fused(
 
     :func:`minhash_dedup_pairs` needs both: band hashes for candidate
     generation and the shingle sets for the exact-Jaccard verify.
-    Computing them in separate kernels (:func:`minhash_band_hashes` +
-    :func:`shingles`) tokenizes and shingles the ENTIRE corpus text
-    twice — two full passes over the heaviest Python-boundary work in
-    the dedup suite. This kernel tokenizes once, reuses the shingle
-    dict for the crc32→minhash→band fold, and emits both columns; the
-    band table and the shingle index are cheap JVM-side explodes of
-    the persisted result. Per-text semantics are bit-identical to the
-    two single-purpose kernels (same ``re.ASCII`` tokenization, same
-    insertion-ordered distinct shingles, same hash family).
+    Separate band and shingle kernels would tokenize and shingle the
+    ENTIRE corpus text twice — two full passes over the heaviest
+    Python-boundary work in the dedup suite. This kernel tokenizes
+    once, reuses the :func:`_shingle_set` dict for the
+    crc32→minhash→band fold, and emits both columns; the band table
+    and the shingle index are cheap JVM-side explodes of the persisted
+    result.
+
+    The signature matrix never leaves the Arrow batch: the kernel
+    takes the per-band FNV-style polynomial combine of the ``rows``
+    MinHash values and emits only ``bands`` int64s per document, so
+    the plan explodes a 16-element array instead of projecting 64
+    signature columns into per-band ``xxhash64`` structs (measured ~2x
+    faster at sf0.1, identical candidate semantics: equal band hash ⇔
+    equal band with overwhelming probability).
     """
-    import re
     import zlib
 
     import numpy as np
     import pandas as pd
 
     k = bands * rows
-    ascii_nonword = re.compile(r"\W+", re.ASCII)
     a_mat = np.array(_HASH_A[:k], dtype=np.uint64)[:, None]
     b_mat = np.array(_HASH_B[:k], dtype=np.uint64)[:, None]
     p = np.uint64(_P32)
     fnv = np.uint64(1099511628211)
-    n = SHINGLE_N
 
     @F.pandas_udf("struct<bands:array<long>, shs:array<string>>")
     def _both(texts):
         out_bands = []
         out_shs = []
         for t in texts:
-            ws = [w for w in ascii_nonword.split(t.lower()) if w]
-            if len(ws) >= n:
-                sh = dict.fromkeys(
-                    " ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)
-                )
-            else:
-                sh = {" ".join(ws): None}
+            sh = _shingle_set(t, SHINGLE_N)
             x = np.fromiter(
                 (zlib.crc32(s.encode()) for s in sh),
                 dtype=np.uint64,
@@ -817,9 +747,7 @@ def repeated_passages(
     document and never the text. The output is bounded by the number of
     genuinely repeated passages.
     """
-    ws = F.filter(
-        F.split(F.lower(F.col("text")), r"\W+"), lambda w: w != F.lit("")
-    )
+    ws = wordcount.words(F.col("text"))
     docs = documents.select("doc_id", ws.alias("ws")).filter(
         F.size("ws") >= window_words
     )
@@ -1107,9 +1035,7 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
     """
     tok = spread(documents, "doc_id").select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower("text"), r"\W+"), lambda w: w != F.lit(""))
-        ).alias("word"),
+        F.explode(wordcount.words(F.col("text"))).alias("word"),
     ).select(
         "doc_id",
         F.conv(F.substring(F.md5(F.col("word").cast("binary")), 1, 15), 16, 10)
@@ -1312,9 +1238,7 @@ def typo_pairs(documents: DataFrame) -> DataFrame:
     document text never shuffles; deletion keys are short strings with
     bounded fan-out, so no skewed join key.
     """
-    words = F.filter(
-        F.split(F.lower(F.col("text")), r"\W+"), lambda w: w != F.lit("")
-    )
+    words = wordcount.words(F.col("text"))
     dirty = (
         documents.filter(F.pmod(F.col("doc_id"), F.lit(TYPO_EVERY)) == 0)
         .select(F.element_at(words, 1).alias("w"))

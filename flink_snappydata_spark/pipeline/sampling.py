@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_snappydata_spark.operators import wordcount
 from flink_snappydata_spark.pipeline.packing import portable_hash
 from flink_snappydata_spark.streaming.runtime import (
     ingest_stream_to_tables,
@@ -148,14 +149,7 @@ def _doc_mix_features(documents: DataFrame, salt: str) -> DataFrame:
     """(doc_id, source, n_tokens, bucket) — the cheap per-row mixing
     features, factored out so the streaming ingest computes them once
     per document at arrival (same expressions, same results)."""
-    n_tok = (
-        F.size(
-            F.filter(
-                F.split(F.lower(F.col("text")), r"\W+"),
-                lambda w: w != F.lit(""),
-            )
-        ).cast("long")
-    )
+    n_tok = F.size(wordcount.words(F.col("text"))).cast("long")
     salt_int = zlib.crc32(salt.encode())
     bucket = F.pmod(
         portable_hash(F.col("doc_id").cast("long")) + F.lit(salt_int),

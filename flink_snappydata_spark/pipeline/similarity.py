@@ -457,18 +457,25 @@ def label_centroids(embeddings: DataFrame) -> DataFrame:
     |sum| < 2^53, so the final double conversion and the fixed
     divide-by-count-then-scale order are bit-identical in any engine).
     """
-    comp = embeddings.select(
-        "label", F.posexplode(_qvec(F.col("embedding"))).alias("pos", "q")
+    return _component_means(embeddings, "label")
+
+
+def _component_means(frame: DataFrame, key: str) -> DataFrame:
+    """(key, pos, centroid, n_vectors): the per-``key`` mean of the
+    ``embedding`` column, one row per component — the shared body of
+    :func:`label_centroids` and :func:`source_centroids`."""
+    comp = frame.select(
+        key, F.posexplode(_qvec(F.col("embedding"))).alias("pos", "q")
     )
     return (
-        comp.groupBy("label", F.col("pos").cast("long").alias("pos"))
+        comp.groupBy(key, F.col("pos").cast("long").alias("pos"))
         .agg(
             (
                 F.sum("q").cast("double") / F.count(F.lit(1)) / F.lit(QUANT)
             ).alias("centroid"),
             F.count(F.lit(1)).alias("n_vectors"),
         )
-        .orderBy("label", "pos")
+        .orderBy(key, "pos")
     )
 
 
@@ -705,6 +712,55 @@ def _assign_nearest(qv: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
+def _int_mean_vectors(rows: DataFrame, keys: list[str], vec_col: str) -> DataFrame:
+    """(*keys, ce, n): per key, the truncated integer mean ``ce`` of
+    the int64 vectors in ``vec_col`` and the member count ``n`` — the
+    one centroid step of :func:`_kmeans_fit`, :func:`_pq_train` and
+    :func:`embedding_outliers`.
+
+    Truncated integer mean, portable: (s - s % cnt) is exactly
+    divisible, and |s| < 2^53, so the double division is exact. The
+    (key, pos)-keyed sums combine map-side, so the shuffle carries
+    int64 sums, never vectors."""
+    sums = (
+        rows.select(*keys, F.posexplode(vec_col).alias("pos", "q"))
+        .groupBy(*keys, "pos")
+        .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("cnt"))
+    )
+    s, cnt = F.col("s"), F.col("cnt")
+    mean = sums.withColumn("c", ((s - s % cnt).cast("double") / cnt).cast("long"))
+    return mean.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "c"))),
+            lambda x: x["c"],
+        ).alias("ce"),
+        F.first("cnt").alias("n"),
+    )
+
+
+def _lloyd_rounds(n_iters: int) -> range:
+    """The ``n_iters - 1`` centroid updates between ``n_iters``
+    assignment rounds of a Lloyd's trainer."""
+    if n_iters < 1:
+        raise ValueError("n_iters must be >= 1")
+    return range(n_iters - 1)
+
+
+def _lloyd_update(
+    points: DataFrame, assigned: DataFrame, cents: DataFrame,
+    on: str | list[str], keys: list[str], vec_col: str,
+) -> DataFrame:
+    """(*keys, ce): one Lloyd's update — each centroid becomes the
+    :func:`_int_mean_vectors` mean of the ``points`` assigned to it
+    (``assigned`` joins on ``on``); a centroid that lost all members
+    carries its previous ``ce`` forward unchanged."""
+    # corpus × corpus: pinned shuffle join (see dedup._prefix_index)
+    members = points.join(assigned.hint("shuffle_hash"), on)
+    new_ce = _int_mean_vectors(members, keys, vec_col).select(*keys, "ce")
+    carried = cents.join(new_ce, keys, "left_anti").select(*keys, "ce")
+    return new_ce.unionByName(carried)
+
+
 def _kmeans_fit(
     qv: DataFrame, n_clusters: int, n_iters: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -712,43 +768,17 @@ def _kmeans_fit(
     rounds over a :func:`quantized` corpus — the shared core of
     :func:`kmeans_train` (membership stats) and
     :func:`kmeans_centroids` (codebook for :func:`ivf_topk`)."""
-    if n_iters < 1:
-        raise ValueError("n_iters must be >= 1")
+    rounds = _lloyd_rounds(n_iters)
     cents = qv.filter(F.col("vec_id") < n_clusters).select(
         F.col("vec_id").alias("cent_id"),
         F.col("qe").alias("ce"),
         F.col("norm_sq").alias("cn"),
     )
     assigned = _assign_nearest(qv, cents)
-    for _ in range(n_iters - 1):
-        sums = (
-            # corpus × corpus: pinned shuffle join (see dedup._prefix_index)
-            qv.join(assigned.hint("shuffle_hash"), "vec_id")
-            .select("cent_id", F.posexplode("qe").alias("pos", "q"))
-            .groupBy("cent_id", "pos")
-            .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("cnt"))
-        )
-        # Truncated integer mean, portable: (s - s % cnt) is exactly
-        # divisible, and |s| < 2^53, so the double division is exact.
-        mean = sums.withColumn(
-            "c",
-            (
-                (F.col("s") - F.col("s") % F.col("cnt")).cast("double")
-                / F.col("cnt")
-            ).cast("long"),
-        )
-        new_ce = mean.groupBy("cent_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda x: x["c"],
-            ).alias("ce")
-        )
-        carried = cents.join(new_ce, "cent_id", "left_anti").select("cent_id", "ce")
-        cents = new_ce.unionByName(carried).select(
-            "cent_id",
-            "ce",
-            _dot(F.col("ce"), F.col("ce")).alias("cn"),
-        )
+    for _ in rounds:
+        cents = _lloyd_update(
+            qv, assigned, cents, "vec_id", ["cent_id"], "qe"
+        ).select("cent_id", "ce", _dot(F.col("ce"), F.col("ce")).alias("cn"))
         assigned = _assign_nearest(qv, cents)
     return cents, assigned
 
@@ -791,26 +821,11 @@ def embedding_outliers(
     qv = emb.select(
         "vec_id", "label", qe.alias("qe"), _dot(qe, qe).alias("norm_sq")
     )
-    sums = (
-        qv.select("label", F.posexplode("qe").alias("pos", "q"))
-        .groupBy("label", "pos")
-        .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("cnt"))
-    )
-    mean = sums.withColumn(
-        "c",
-        (
-            (F.col("s") - F.col("s") % F.col("cnt")).cast("double")
-            / F.col("cnt")
-        ).cast("long"),
-    )
     cents = F.broadcast(
-        mean.groupBy("label").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda x: x["c"],
-            ).alias("ce"),
-            F.first("cnt").alias("n_label"),
-        ).select("label", "ce", F.col("n_label"), _dot(F.col("ce"), F.col("ce")).alias("cn"))
+        _int_mean_vectors(qv, ["label"], "qe").select(
+            "label", "ce", F.col("n").alias("n_label"),
+            _dot(F.col("ce"), F.col("ce")).alias("cn"),
+        )
     )
     scored = qv.join(cents, "label").select(
         "vec_id",
@@ -1017,6 +1032,7 @@ def _pq_train(
     (encode + asymmetric-distance search), and — via ``subv``, a
     pre-built (vec_id, m, sq) frame such as coarse-quantizer RESIDUAL
     blocks — by :func:`ivf_pq_topk` (the IVFADC composition)."""
+    rounds = _lloyd_rounds(n_iters)
     if subv is None:
         qv = tracked_persist(quantized(embeddings))
         subv = tracked_persist(_pq_subvectors(qv))
@@ -1024,34 +1040,11 @@ def _pq_train(
         "m", F.col("vec_id").alias("cent_id"), F.col("sq").alias("ce")
     )
     assigned = _pq_assign(subv, cents)
-    for _ in range(n_iters - 1):
-        sums = (
-            # corpus × corpus: pinned shuffle join (see dedup._prefix_index)
-            subv.join(
-                assigned.select("vec_id", "m", "cent_id").hint("shuffle_hash"),
-                ["vec_id", "m"],
-            )
-            .select("m", "cent_id", F.posexplode("sq").alias("pos", "q"))
-            .groupBy("m", "cent_id", "pos")
-            .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("cnt"))
+    for _ in rounds:
+        cents = _lloyd_update(
+            subv, assigned.select("vec_id", "m", "cent_id"), cents,
+            ["vec_id", "m"], ["m", "cent_id"], "sq",
         )
-        mean = sums.withColumn(
-            "c",
-            (
-                (F.col("s") - F.col("s") % F.col("cnt")).cast("double")
-                / F.col("cnt")
-            ).cast("long"),
-        )
-        new_ce = mean.groupBy("m", "cent_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda x: x["c"],
-            ).alias("ce")
-        )
-        carried = cents.join(new_ce, ["m", "cent_id"], "left_anti").select(
-            "m", "cent_id", "ce"
-        )
-        cents = new_ce.unionByName(carried)
         assigned = _pq_assign(subv, cents)
     return subv, cents, assigned
 
@@ -1086,8 +1079,6 @@ def pq_codebook(
     sums, never vectors. Rounds are a small fixed constant; the
     driver never collects anything.
     """
-    if n_iters < 1:
-        raise ValueError("n_iters must be >= 1")
     subv, cents, assigned = _pq_train(embeddings, n_centroids, n_iters)
     return (
         assigned.groupBy(
@@ -1342,18 +1333,7 @@ def source_centroids(
     meta = documents.select(F.col("doc_id").alias("vec_id"), "source")
     # corpus × corpus: pinned shuffle join (see dedup._prefix_index)
     joined = spread(embeddings, "vec_id").join(meta.hint("shuffle_hash"), "vec_id")
-    comp = joined.select(
-        "source", F.posexplode(_qvec(F.col("embedding"))).alias("pos", "q")
-    )
-    return (
-        comp.groupBy("source", F.col("pos").cast("long").alias("pos"))
-        .agg(
-            (F.sum("q").cast("double") / F.count(F.lit(1)) / F.lit(QUANT))
-            .alias("centroid"),
-            F.count(F.lit(1)).alias("n_vectors"),
-        )
-        .orderBy("source", "pos")
-    )
+    return _component_means(joined, "source")
 
 
 def embedding_dim_stats(embeddings: DataFrame) -> DataFrame:

@@ -12,9 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from flink_snappydata_spark.operators.wordcount import (
-    compact_wordcount_partials,
-)
+from flink_snappydata_spark.operators import wordcount
 from flink_snappydata_spark.streaming.runtime import (
     ingest_stream_to_tables,
     read_state_table,
@@ -38,10 +36,6 @@ LANG_KEYWORDS: dict[str, list[str]] = {
 EN_STOPWORDS = ["the", "a", "an", "and", "or", "is", "are", "to", "of", "in"]
 
 
-def _words(col: Column) -> Column:
-    return F.filter(F.split(F.lower(col), r"\W+"), lambda w: w != F.lit(""))
-
-
 def token_counts(documents: DataFrame) -> DataFrame:
     """Whitespace tokens + BPE-ish regex tokens + char count per doc."""
     text = F.col("text")
@@ -60,7 +54,7 @@ def quality_scores(documents: DataFrame) -> DataFrame:
     """Heuristic quality features: word stats, punctuation and stopword
     ratios, and a keep/drop flag — the standard pre-training filters."""
     text = F.col("text")
-    words = _words(text)
+    words = wordcount.words(text)
     n_words = F.size(words).cast("long")
     n_chars = F.length(text).cast("long")
     word_chars = F.length(F.regexp_replace(F.lower(text), r"\W+", "")).cast("long")
@@ -117,7 +111,7 @@ def _qm_margin(text: Column) -> tuple[Column, Column, Column]:
     """(score_sum, n_words, margin) expressions of the hashed linear
     quality model over a text column — exact int64 sum, one
     int→double division."""
-    words = _words(text)
+    words = wordcount.words(text)
     score_sum = F.aggregate(
         F.transform(words, _qm_weight),
         F.lit(0).cast("long"),
@@ -211,7 +205,7 @@ def bm25_topk(
     shuffle of document text anywhere.
     """
     terms = BM25_TERMS if terms is None else terms
-    words = _words(F.col("text"))
+    words = wordcount.words(F.col("text"))
 
     def term_freq(t: str) -> Column:
         # NB: the lambda must be unary — F.filter inspects arity, and a
@@ -733,7 +727,8 @@ def repetition_scores(documents: DataFrame) -> DataFrame:
     # putting them in the same projection as explode() makes Catalyst
     # re-evaluate the regex split + array_distinct once per exploded
     # word row (measured 6x slower at sf0.1).
-    pre = documents.select("doc_id", _words(F.col("text")).alias("words")).select(
+    ws = wordcount.words(F.col("text"))
+    pre = documents.select("doc_id", ws.alias("words")).select(
         "doc_id",
         F.size("words").cast("long").alias("n_words"),
         F.size(F.array_distinct("words")).cast("long").alias("n_distinct_words"),
@@ -862,7 +857,7 @@ def frequent_tokens(documents: DataFrame, k: int = 50) -> DataFrame:
     TakeOrderedAndProject with a token tiebreak — no full sort. The
     total-token denominator is a 1-row broadcast scalar.
     """
-    words = documents.select(F.explode(_words(F.col("text"))).alias("word"))
+    words = documents.select(F.explode(wordcount.words(F.col("text"))).alias("word"))
     counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
     return (
@@ -1026,7 +1021,7 @@ def unigram_surprisal(documents: DataFrame, sort: bool = True) -> DataFrame:
     """
     tf = (
         documents.select(
-            "doc_id", F.explode(_words(F.col("text"))).alias("word")
+            "doc_id", F.explode(wordcount.words(F.col("text"))).alias("word")
         )
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -1098,7 +1093,7 @@ def bigram_surprisal(documents: DataFrame, sort: bool = True) -> DataFrame:
     tail shuffles with no key above 1/``HOT_VOCAB_MAX`` of the corpus.
     Only tokens, pairs and counts ever shuffle, never text.
     """
-    ws = _words(F.col("text"))
+    ws = wordcount.words(F.col("text"))
     pair = F.explode(
         F.zip_with(
             F.slice(ws, 1, F.size(ws) - 1),
@@ -1207,7 +1202,7 @@ def dsir_weights(
     join is bucket-count-bounded), no text ever shuffles, and the only
     corpus-sized shuffle carries (doc_id, bucket, count) ints.
     """
-    ws = _words(F.col("text"))
+    ws = wordcount.words(F.col("text"))
     tail = F.greatest(F.size(ws) - 1, F.lit(0))
     bigrams = F.zip_with(
         F.slice(ws, 1, tail),
@@ -1310,7 +1305,7 @@ def tfidf_keywords(
     """
     tf = (
         documents.select(
-            "doc_id", F.explode(_words(F.col("text"))).alias("word")
+            "doc_id", F.explode(wordcount.words(F.col("text"))).alias("word")
         )
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -1397,7 +1392,7 @@ def frequent_bigrams(
     :func:`frequent_tokens`; the global top-k is TakeOrdered, never a
     full sort. Shuffles carry word pairs and counts only.
     """
-    ws = _words(F.col("text"))
+    ws = wordcount.words(F.col("text"))
     pair = F.explode(
         F.zip_with(
             F.slice(ws, 1, F.size(ws) - 1),
@@ -1694,7 +1689,7 @@ def inverted_index(
     """
     tf = (
         spread(documents, "doc_id")
-        .select("doc_id", F.explode(_words(F.col("text"))).alias("word"))
+        .select("doc_id", F.explode(wordcount.words(F.col("text"))).alias("word"))
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
         .withColumn("shard", F.pmod(F.col("doc_id"), F.lit(n_shards)))
@@ -1771,7 +1766,7 @@ def cms_heavy_hitters(documents: DataFrame) -> DataFrame:
     vocabulary and the fixed-size sketch.
     """
     w = spread(documents, "doc_id").select(
-        F.explode(_words(F.col("text"))).alias("word")
+        F.explode(wordcount.words(F.col("text"))).alias("word")
     )
     counts = w.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     return _cms_from_counts(counts)
@@ -1787,7 +1782,7 @@ def cms_from_state(spark, counts_table: str) -> DataFrame:
     merge (:func:`~flink_snappydata_spark.operators.wordcount.
     compact_wordcount_partials`)."""
     return _cms_from_counts(
-        compact_wordcount_partials(read_state_table(spark, counts_table))
+        wordcount.compact_wordcount_partials(read_state_table(spark, counts_table))
     )
 
 
@@ -1863,7 +1858,7 @@ def vocab_growth(
     width = (n_docs + n_buckets - 1) // n_buckets
     w = spread(documents, "doc_id").select(
         F.expr(f"doc_id DIV {width}").alias("bucket"),
-        F.explode(_words(F.col("text"))).alias("word"),
+        F.explode(wordcount.words(F.col("text"))).alias("word"),
     )
     first = w.groupBy("word").agg(F.min("bucket").alias("first_bucket"))
     hist = first.groupBy("first_bucket").agg(
@@ -1897,8 +1892,7 @@ def readability_scores(documents: DataFrame, sort: bool = True) -> DataFrame:
     map over the corpus (the gopher_rules shape). ``sort=False`` (the
     registered form) skips the O(corpus) presentation sort.
     """
-    text = F.lower(F.col("text"))
-    words = F.filter(F.split(text, r"\W+"), lambda w: w != F.lit(""))
+    words = wordcount.words(F.col("text"))
     n_words = F.size(words).cast("long")
     n_sentences = F.greatest(
         F.size(
@@ -2333,7 +2327,7 @@ def source_token_entropy(documents: DataFrame) -> DataFrame:
     (source, word), ≤ one row per pair by construction).
     """
     w = documents.select(
-        "source", F.explode(_words(F.col("text"))).alias("word")
+        "source", F.explode(wordcount.words(F.col("text"))).alias("word")
     )
     hist = w.groupBy("source", "word").agg(
         F.count(F.lit(1)).alias("c")
@@ -2389,7 +2383,7 @@ def source_tv_distance(documents: DataFrame) -> DataFrame:
     |sources|²/2-sized pair frame. Totals broadcast.
     """
     w = documents.select(
-        "source", F.explode(_words(F.col("text"))).alias("word")
+        "source", F.explode(wordcount.words(F.col("text"))).alias("word")
     )
     hist = w.groupBy("source", "word").agg(
         F.count(F.lit(1)).alias("c")
@@ -2468,7 +2462,7 @@ def ngram_diversity(documents: DataFrame, n: int = 3) -> DataFrame:
     # array, not n inlined split/filter trees (smaller plan, one
     # tokenization per row even without codegen CSE).
     wsdf = documents.select(
-        "source", _words(F.col("text")).alias("_ws")
+        "source", wordcount.words(F.col("text")).alias("_ws")
     )
     ws = F.col("_ws")
     k = F.size(ws)
@@ -2538,7 +2532,7 @@ def token_drift_topk(
     def hist(src: str, name: str) -> DataFrame:
         return (
             documents.filter(F.col("source") == src)
-            .select(F.explode(_words(F.col("text"))).alias("token"))
+            .select(F.explode(wordcount.words(F.col("text"))).alias("token"))
             .groupBy("token")
             .agg(F.count(F.lit(1)).alias(name))
         )
@@ -2636,7 +2630,7 @@ def zipf_fit(documents: DataFrame) -> DataFrame:
     from flink_snappydata_spark.util import cell_prefix_sums
 
     vocab = (
-        documents.select(F.explode(_words(F.col("text"))).alias("word"))
+        documents.select(F.explode(wordcount.words(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("f"))
     )
@@ -2828,7 +2822,7 @@ def skipgram_pmi(
     TakeOrdered a corpus-sized k (a huge top-k heap per partition is
     an OOM, not a sort).
     """
-    ws = _words(F.col("text"))
+    ws = wordcount.words(F.col("text"))
 
     def tail_zip(off: int):
         n = F.greatest(F.size(ws) - F.lit(off), F.lit(0))

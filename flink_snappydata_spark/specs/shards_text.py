@@ -260,7 +260,7 @@ _register(
 
 #: Per-document term-frequency CTE chain (DuckDB), ending at
 #: ``tf(doc_id, word, tf)`` — shared by the surprisal and tf-idf
-#: keyword oracles. Tokenization matches ``textops._words``.
+#: keyword oracles. Tokenization matches ``wordcount.words``.
 _TF_CTES = r"""
     w AS (
         SELECT doc_id,

@@ -15,6 +15,7 @@ from flink_snappydata_spark.catalog import load_table
 from flink_snappydata_spark.pipeline import dedup, multimodal, similarity
 from flink_snappydata_spark.pipeline import text as textops
 from tests.conftest import SF_CORRECT, SF_SMOKE
+from tests.dedup_reference import minhash_band_hashes, naive_shingle_set
 
 
 def test_minhash_matches_exact_jaccard(spark):
@@ -37,9 +38,10 @@ def test_minhash_matches_exact_jaccard(spark):
 
 def test_minhash_fused_kernel_matches_single_purpose_kernels(spark):
     """The fused band+shingle kernel (one tokenize pass, r14 opt) is
-    bit-identical to the two single-purpose kernels it replaced: same
-    band hashes per (doc, band) and the same distinct shingle list in
-    the same insertion order."""
+    bit-identical to two single-purpose computations: the same band
+    hashes per (doc, band) as the pure-Python reference
+    (``tests/dedup_reference.py``), and the same distinct shingle list
+    in the same insertion order as :func:`dedup.shingles`."""
     docs = load_table(spark, SF_CORRECT, "documents")
     fused = dedup._minhash_fused(docs)
     got_bands = {
@@ -49,8 +51,9 @@ def test_minhash_fused_kernel_matches_single_purpose_kernels(spark):
         ).collect()
     }
     want_bands = {
-        (r.doc_id, r.band_id): r.band_hash
-        for r in dedup.minhash_band_hashes(docs).collect()
+        (r.doc_id, band_id): band_hash
+        for r in docs.select("doc_id", "text").collect()
+        for band_id, band_hash in enumerate(minhash_band_hashes(r.text))
     }
     assert got_bands == want_bands
     got_shs = {r.doc_id: r.shs for r in fused.select("doc_id", "shs").collect()}
@@ -58,6 +61,59 @@ def test_minhash_fused_kernel_matches_single_purpose_kernels(spark):
     for r in dedup.shingles(docs).collect():
         want_shs.setdefault(r.doc_id, []).append(r.sh)
     assert got_shs == want_shs
+
+
+#: Strings where a Unicode-aware ``\W`` or lower-casing would split
+#: differently from the ASCII class both tokenizers use, plus texts too
+#: short for a trigram (the whole-text shingle).
+_TOKENIZER_EDGE_TEXTS = [
+    "Café naïve résumé déjà vu",
+    "Straße groß Fuß",
+    "İstanbul İzmir DİKKAT",
+    "snake_case and __dunder__ names",
+    "abc123 456 7x8 3.14 1,000",
+    "日本語のテキスト 中文 한국어",
+    "emoji 😀 in 🚀 text 👍🏽 ok",
+    "tabs\there\r\nand CRLF\rlines\n",
+    "",
+    "   \t\r\n  ",
+    "!!! ... ??? --- ;;;",
+    "ﬁle ﬂow oﬃce",
+    "Ⅻ Ⅳ chapter Ⅸ",
+    "ΑΛΦΑ ΒΗΤΑ ΟΔΟΣ",
+    "Mixed ÀÉÎ caps ŒUVRE",
+    "\u212a Kelvin ﬀ ſ long s",
+    "one",
+    "two words",
+]
+
+
+def test_shingle_set_matches_jvm_words(spark):
+    """The Python kernels' tokenizer + shingler (``dedup._shingle_set``)
+    and the JVM word splitter (``wordcount.words``) agree on non-ASCII
+    text: distinct words (n=1) and distinct word trigrams (n=3), in
+    first-seen order, with the whole-text shingle for short texts."""
+    from flink_snappydata_spark.operators import wordcount
+
+    df = spark.createDataFrame(
+        list(enumerate(_TOKENIZER_EDGE_TEXTS)), "doc_id long, text string"
+    )
+    ws = wordcount.words(F.col("text"))
+    whole = F.array(F.concat_ws(" ", ws))
+    grams = F.transform(
+        F.sequence(F.lit(1), F.size(ws) - 2),
+        lambda i: F.concat_ws(" ", F.slice(ws, i, 3)),
+    )
+    got = df.select(
+        "doc_id",
+        F.when(F.size(ws) >= 1, F.array_distinct(ws)).otherwise(whole).alias("n1"),
+        F.when(F.size(ws) >= 3, F.array_distinct(grams)).otherwise(whole).alias("n3"),
+    ).collect()
+    assert len(got) == len(_TOKENIZER_EDGE_TEXTS)
+    for r in got:
+        text = _TOKENIZER_EDGE_TEXTS[r.doc_id]
+        assert r.n1 == list(dedup._shingle_set(text, 1)), text
+        assert r.n3 == list(dedup._shingle_set(text, 3)), text
 
 
 def test_simhash_near_dups(spark):
@@ -290,13 +346,8 @@ def test_ngram_jaccard_prefix_filter_exact_under_hot_shingles(spark):
 
     # brute force: all doc pairs, python-side shingle sets
     import itertools
-    import re
 
-    def sh_set(t):
-        ws = [w for w in re.split(r"\W+", t.lower(), flags=re.ASCII) if w]
-        return {" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)} or {" ".join(ws)}
-
-    sets = {i: sh_set(t) for i, t in rows}
+    sets = {i: naive_shingle_set(t) for i, t in rows}
     want = {}
     for a, b in itertools.combinations(sorted(sets), 2):
         j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])

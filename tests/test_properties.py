@@ -235,15 +235,10 @@ _texts_strategy = st.lists(
 
 def _naive_jaccard_pairs(texts, threshold, n=3):
     import itertools
-    import re
 
-    def sh_set(t):
-        ws = [w for w in re.split(r"\W+", t.lower(), flags=re.ASCII) if w]
-        if len(ws) >= n:
-            return {" ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)}
-        return {" ".join(ws)}
+    from tests.dedup_reference import naive_shingle_set
 
-    sets = {i: sh_set(t) for i, t in enumerate(texts)}
+    sets = {i: naive_shingle_set(t, n) for i, t in enumerate(texts)}
     out = {}
     for a, b in itertools.combinations(sorted(sets), 2):
         j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
@@ -279,17 +274,11 @@ def test_containment_prefix_filter_matches_naive(spark, texts, threshold):
     ANY input and threshold: containment pairs and values equal the
     all-pairs overlap-coefficient brute force."""
     import itertools
-    import re
 
     from flink_snappydata_spark.pipeline.dedup import containment_pairs
+    from tests.dedup_reference import naive_shingle_set
 
-    def sh_set(t):
-        ws = [w for w in re.split(r"\W+", t.lower(), flags=re.ASCII) if w]
-        if len(ws) >= 3:
-            return {" ".join(ws[i:i + 3]) for i in range(len(ws) - 2)}
-        return {" ".join(ws)}
-
-    sets = {i: sh_set(t) for i, t in enumerate(texts)}
+    sets = {i: naive_shingle_set(t) for i, t in enumerate(texts)}
     want = {}
     for a, b in itertools.combinations(sorted(sets), 2):
         c = len(sets[a] & sets[b]) / min(len(sets[a]), len(sets[b]))

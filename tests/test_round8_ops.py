@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_snappydata_spark.catalog import load_table
+from flink_snappydata_spark.operators import wordcount
 from flink_snappydata_spark.pipeline import graph as graphops
 from flink_snappydata_spark.pipeline import similarity, text as textops
 from flink_snappydata_spark.streaming.windows import rollup_multires
@@ -246,7 +247,7 @@ def test_inverted_index_covers_all_occurrences(documents):
     )
     n_tokens = (
         documents.select(
-            F.explode(textops._words(F.col("text"))).alias("w")
+            F.explode(wordcount.words(F.col("text"))).alias("w")
         ).count()
     )
     assert total == n_tokens
@@ -265,7 +266,7 @@ def test_cms_one_sided_error_and_no_false_negatives(documents):
     # no false negatives: every exactly-heavy word must be reported
     # (CMS estimates never undercount)
     counts = (
-        documents.select(F.explode(textops._words(F.col("text"))).alias("w"))
+        documents.select(F.explode(wordcount.words(F.col("text"))).alias("w"))
         .groupBy("w")
         .count()
         .collect()
@@ -476,7 +477,7 @@ def test_percentile_bands_ordered(events):
 def test_vocab_growth_conserves_vocabulary(documents):
     out = textops.vocab_growth(documents).collect()
     vocab = (
-        documents.select(F.explode(textops._words(F.col("text"))).alias("w"))
+        documents.select(F.explode(wordcount.words(F.col("text"))).alias("w"))
         .distinct()
         .count()
     )
@@ -554,7 +555,7 @@ def test_typo_pairs_finds_all_planted_typos(documents):
         (r.typo, r.w)
         for r in documents.filter(F.col("doc_id") % 7 == 0)
         .select(
-            F.element_at(textops._words(F.col("text")), 1).alias("w")
+            F.element_at(wordcount.words(F.col("text")), 1).alias("w")
         )
         .filter(F.length("w") >= 4)
         .select(
@@ -1835,20 +1836,11 @@ def test_containment_pairs_matches_naive_python(documents):
     """Recall + values: the prefix-filtered candidate join must find
     exactly the all-pairs overlap-coefficient result a naive Python
     replay computes over the same shingle sets."""
-    import re
-
     from flink_snappydata_spark.pipeline.dedup import containment_pairs
-
-    ascii_nonword = re.compile(r"\W+", re.ASCII)
-
-    def doc_shingles(text):
-        ws = [w for w in ascii_nonword.split(text.lower()) if w]
-        if len(ws) >= 3:
-            return set(" ".join(ws[i:i + 3]) for i in range(len(ws) - 2))
-        return {" ".join(ws)}
+    from tests.dedup_reference import naive_shingle_set
 
     sets = {
-        r.doc_id: doc_shingles(r.text)
+        r.doc_id: naive_shingle_set(r.text)
         for r in documents.select("doc_id", "text").collect()
     }
     ids = sorted(sets)

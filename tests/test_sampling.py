@@ -276,11 +276,11 @@ def test_unigram_surprisal_stopword_skew(spark, _skew_confs):
     shuffle), and the result is row-identical to the naive formula."""
     from pyspark.sql import functions as F
 
+    from flink_snappydata_spark.operators.wordcount import words
     from flink_snappydata_spark.pipeline import text as textops
     from flink_snappydata_spark.pipeline.text import (
         _floor_log2,
         _join_word_stats_skew_safe,
-        _words,
     )
 
     spark.conf.set(
@@ -295,7 +295,7 @@ def test_unigram_surprisal_stopword_skew(spark, _skew_confs):
 
     # (1) the naive join shape: AQE skew split is structurally ineligible
     tf = (
-        docs.select("doc_id", F.explode(_words(F.col("text"))).alias("word"))
+        docs.select("doc_id", F.explode(words(F.col("text"))).alias("word"))
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
