@@ -36,12 +36,15 @@ def words(col: Column) -> Column:
 def tokenize(df: DataFrame, col: str = "text") -> DataFrame:
     """1 row → N token rows (flatMap parity). Empty tokens dropped
     (filter parity, reference ``WindowWordCount.scala:41``)."""
-    return (
-        spread(df).select(
-            F.explode(F.split(F.lower(F.col(col)), TOKEN_SPLIT_PATTERN)).alias("word")
-        )
-        .filter(F.col("word") != "")
-    )
+    return _tokens(spread(df), col)
+
+
+def _tokens(df: DataFrame, col: str) -> DataFrame:
+    """:func:`tokenize` at ``df``'s own partitioning — for stream
+    micro-batches, which keep their source partitioning."""
+    return df.select(
+        F.explode(F.split(F.lower(F.col(col)), TOKEN_SPLIT_PATTERN)).alias("word")
+    ).filter(F.col("word") != "")
 
 
 def word_count(df: DataFrame, col: str = "text") -> DataFrame:
@@ -112,9 +115,14 @@ def wordcount_partials(batch_df: DataFrame) -> DataFrame:
     """One batch's per-word count partials ``(word, cnt)`` — the
     :func:`streaming_wordcount_ingest` prepare step, module-level so
     the fold scale probe (``tools/scale_probe.py`` mode ``folds``)
-    lands the identical state batch-side."""
+    lands the identical state batch-side.
+
+    Scale: the batch is tokenized at its source partitioning, without
+    :func:`tokenize`'s round-robin ``spread``, so the one shuffle is
+    the aggregate's, which carries at most |vocabulary| map-side
+    combined rows per input split."""
     return (
-        tokenize(batch_df)
+        _tokens(batch_df, "text")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -84,6 +84,14 @@ def doc_shingle_arrays(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     (:func:`ngram_jaccard_pairs`) persist THIS frame and derive each:
     one kernel pass, and the verify skips its collect_list regroup.
     """
+    return _shingle_arrays(spread(documents, "doc_id"), n)
+
+
+def _shingle_arrays(frame: DataFrame, n: int) -> DataFrame:
+    """The :func:`doc_shingle_arrays` kernel at ``frame``'s own
+    partitioning. Batch callers go through ``doc_shingle_arrays``
+    (which spreads a one-split scan first); a stream micro-batch calls
+    this directly, because it keeps its source partitioning."""
     import pandas as pd
 
     # no annotations: PEP-563 lazy hints defeat pandas_udf inference
@@ -91,9 +99,7 @@ def doc_shingle_arrays(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     def _doc_shingles(texts):
         return pd.Series([list(_shingle_set(t, n)) for t in texts])
 
-    return spread(documents, "doc_id").select(
-        "doc_id", _doc_shingles(F.col("text")).alias("shs")
-    )
+    return frame.select("doc_id", _doc_shingles(F.col("text")).alias("shs"))
 
 
 def shingles(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:

@@ -328,20 +328,39 @@ def streaming_novelty_ingest(
     with :func:`novelty_from_state` — after the bounded fixture drains,
     its result is row-identical to the batch op (equivalence-tested).
 
+    Scale: a micro-batch is shingled at its source partitioning
+    (:func:`novelty_shingles`), never round-robin spread first: a
+    one-file batch of a few documents is one task and one Python
+    worker, and the cycle is 3 Spark jobs (index write with the
+    persisted kernel output, counts aggregate, counts write). A source
+    that delivers more splits per batch shingles them in parallel.
+
     Rides :func:`~flink_snappydata_spark.streaming.runtime.
     ingest_stream_to_tables`, so retried micro-batches overwrite their
     own ``batch_id`` partition instead of double-appending partials.
     """
-    from flink_snappydata_spark.pipeline.dedup import shingles
-
     return ingest_stream_to_tables(
         stream_docs,
         [
             (index_table, None),
             (counts_table, novelty_count_partials),
         ],
-        prepare=lambda batch_df: shingles(batch_df, n),
+        prepare=lambda batch_df: novelty_shingles(batch_df, n),
         checkpoint=checkpoint,
+    )
+
+
+def novelty_shingles(batch_df: DataFrame, n: int = 3) -> DataFrame:
+    """One micro-batch's index rows ``(doc_id, sh)`` — the
+    :func:`streaming_novelty_ingest` prepare step: the rows
+    ``dedup.shingles`` gives, from the same kernel, but without its
+    batch-side ``spread``. Module-level so the fold scale probe
+    (``tools/scale_probe.py`` mode ``folds``) lands the identical
+    state batch-side."""
+    from flink_snappydata_spark.pipeline.dedup import _shingle_arrays
+
+    return _shingle_arrays(batch_df, n).select(
+        "doc_id", F.explode("shs").alias("sh")
     )
 
 

@@ -319,7 +319,11 @@ def ingest_stream_to_tables(
 
     outputs: list of ``(table_name, build)`` where ``build`` maps the
     prepared frame to that table's rows. ``prepare=None`` means the
-    micro-batch lands as-is.
+    micro-batch lands as-is. ``prepare`` runs on the micro-batch at its
+    source partitioning: a prepare calls its kernel on the batch
+    directly, never through ``util.spread`` (batch-only), whose
+    round-robin shuffle of a few-row batch would cost a Spark job of
+    its own in every trigger.
     """
     if compact is not None and (
         len(outputs) != 1 or outputs[0][1] is not None

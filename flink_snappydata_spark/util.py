@@ -100,7 +100,17 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     At scale this is a no-op: a 100 TB table already scans as thousands
     of splits, so the partition count check fails and no shuffle is
     added. The check costs one driver-side plan conversion, no job.
+
+    Batch scans only: a streaming frame raises ``ValueError``. A stream
+    micro-batch keeps its source partitioning, so a stream-side prepare
+    step calls its kernel on the batch directly (a round-robin shuffle
+    of a few rows would be a job of its own in every trigger).
     """
+    if df.isStreaming:
+        raise ValueError(
+            "spread() is batch-only: a stream micro-batch keeps its source "
+            "partitioning, so apply the kernel to the batch directly"
+        )
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:

@@ -110,3 +110,15 @@ def test_spread_noop_on_wide_input(spark):
 
     wide = spark.range(0, 1000, 1, spark.sparkContext.defaultParallelism * 2)
     assert spread(wide) is wide, "spread must not add a shuffle at scale"
+
+
+def test_spread_rejects_a_streaming_frame(spark):
+    """spread() is batch-only: a stream keeps its source partitioning,
+    and the guard says so instead of Spark's generic
+    "Queries with streaming sources must be executed with
+    writeStream.start()" from ``df.rdd``."""
+    from flink_snappydata_spark.util import spread
+
+    stream = spark.readStream.format("rate").load()
+    with pytest.raises(ValueError, match="batch-only.*source partitioning"):
+        spread(stream, "value")

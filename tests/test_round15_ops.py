@@ -152,11 +152,12 @@ def _rate_embeddings(spark):
             "writeStream.start",
             id="cosine_neardup_pairs",
         ),
-        # the shingle-bound pre-probe (dedup._verified_overlap)
+        # the shingling kernel's util.spread, the pipeline's first
+        # construction-time action, names itself batch-only
         pytest.param(
             lambda s: D.ngram_jaccard_pairs(_rate_docs(s)),
-            AnalysisException,
-            "writeStream.start",
+            ValueError,
+            "batch-only",
             id="ngram_jaccard_pairs",
         ),
     ],
@@ -166,9 +167,9 @@ def test_cell_prefix_sums_rejects_streaming_input(spark, build, error, match):
     actions, and Spark rejects the non-time window a stream would need
     at start(). A streaming frame fails loudly at construction, also
     through a consumer, never later at start(). The other eager
-    construction-time probes (the all-pairs row cap, the shingle
-    bound) are batch actions too, so Spark rejects a stream there the
-    same way."""
+    construction-time actions fail loudly too: Spark rejects a stream
+    at the all-pairs row cap, and the Jaccard pipeline's first action,
+    ``util.spread``, raises its own batch-only error."""
     with pytest.raises(error, match=match):
         build(spark)
 

@@ -214,3 +214,63 @@ def test_repeat_uncached_load_table_launches_no_job(spark, tmp_path, monkeypatch
     ev = load_table(spark, SF_SMOKE, "events")
     assert _jobs(spark) - j0 == 0
     assert ev.schema["ts"].dataType.typeName() != "long"
+
+
+def test_novelty_ingest_lands_a_cycle_in_three_jobs(spark, tmp_path):
+    """The novelty loop run as a long-lived stream is: one new one-file
+    slice per cycle, one ``availableNow`` ingest on the same
+    checkpoint. A micro-batch is shingled at its source partitioning,
+    so every cycle after the first lands in at most 3 Spark jobs (index
+    write with the persisted kernel output, counts aggregate, counts
+    write); a round-robin ``spread`` first made it 5. The state scores
+    row-identically to the batch op over the slices published so far."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from flink_snappydata_spark.pipeline import text as TX
+
+    docs = pq.read_table(f"{SF_SMOKE}/documents.parquet", columns=["doc_id", "text"])
+    slice_of = docs.column("doc_id").to_numpy() % 16
+    src, ckpt = tmp_path / "src", str(tmp_path / "ckpt")
+    src.mkdir()
+    schema = StructType(
+        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    )
+    stream = spark.readStream.schema(schema).parquet(str(src))
+    tag = uuid.uuid4().hex[:8]
+    idx_t, cnt_t = f"fss_nidx_{tag}", f"fss_ncnt_{tag}"
+    try:
+        for k in range(4):
+            pq.write_table(docs.filter(slice_of == k), src / f"slice-{k}.parquet")
+            j0 = _jobs(spark)
+            q = TX.streaming_novelty_ingest(stream, idx_t, cnt_t, checkpoint=ckpt)
+            jobs = _jobs(spark) - j0
+            assert sum(p["numInputRows"] for p in q.recentProgress) > 0
+            if k > 0:
+                assert jobs <= 3, f"cycle {k}: {jobs} jobs"
+        published = load_table(spark, SF_SMOKE, "documents").filter(
+            F.col("doc_id") % 16 < 4
+        )
+        assert _rows(TX.novelty_from_state(spark, idx_t, cnt_t)) == _rows(
+            TX.novelty_scores(published)
+        )
+    finally:
+        for t in (idx_t, cnt_t):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_wordcount_partials_shuffles_only_for_its_aggregate(spark):
+    """The wordcount loop's prepare tokenizes a micro-batch where it
+    lands: over a one-file, one-partition scan (what a file-source
+    micro-batch is) its plan has exactly one shuffle, the aggregate's,
+    and no round-robin repartition (batch ``tokenize`` keeps its
+    ``spread``)."""
+    from flink_snappydata_spark.operators import wordcount as WC
+    from flink_snappydata_spark.plans.inspect import exchange_count, formatted_plan
+
+    batch = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("text")
+    assert batch.rdd.getNumPartitions() == 1
+    parts = WC.wordcount_partials(batch)
+    assert exchange_count(parts) == 1
+    assert "RoundRobinPartitioning" not in formatted_plan(parts)
+    assert exchange_count(WC.tokenize(batch)) == 1  # the batch spread

@@ -667,7 +667,7 @@ FOLD_OPS = {
     ),
     "novelty_from_state": (
         "documents",
-        lambda b: D.shingles(b, 3),
+        lambda b: T.novelty_shingles(b, 3),
         [("idx", None), ("cnt", T.novelty_count_partials)],
         lambda spark, t: T.novelty_from_state(spark, t[0], t[1]),
     ),
