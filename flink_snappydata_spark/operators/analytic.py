@@ -851,27 +851,28 @@ def itemset_pairs(events: DataFrame) -> DataFrame:
 
     Scale: the corpus collapses FIRST to the distinct (user, type)
     frame (one map-side-combined distinct, ≤ users × type-vocabulary
-    rows); the pair self-join is user-co-partitioned and bounded per
-    user by the type vocabulary (k(k-1)/2 pairs from k ≤ |vocab|
-    types), so its output is at most vocab²/2 per user — never
-    corpus². Per-item user counts reuse the same distinct frame, and
-    the lift join runs on the vocab²-sized pair histogram. The
-    user-co-partitioned self-join is corpus × corpus, so it carries
-    the estimate-independence shuffle_hash pin; the per-item lift
-    sides stay explicit vocabulary-bounded broadcasts
-    (tests/test_estimate_safety.py).
+    rows); pairs are emitted inside each user's type list
+    (:func:`~flink_snappydata_spark.util.block_pairs`), which holds at
+    most the type vocabulary (k(k-1)/2 pairs from k ≤ |vocab| types),
+    so the output is at most vocab²/2 per user — never corpus², and
+    no user-keyed join exists to broadcast. Per-item user counts reuse
+    the same distinct frame, and the lift join runs on the
+    vocab²-sized pair histogram; its per-item sides stay explicit
+    vocabulary-bounded broadcasts (tests/test_estimate_safety.py).
     """
+    from flink_snappydata_spark.util import block_pairs
+
     u = events.select("user_id", "event_type").distinct()
     n_total = u.select("user_id").distinct().count()
     per_item = u.groupBy(F.col("event_type").alias("item")).agg(
         F.count(F.lit(1)).alias("n_item")
     )
-    a = u.select("user_id", F.col("event_type").alias("item_a"))
-    b = u.select("user_id", F.col("event_type").alias("item_b"))
     pairs = (
-        a.join(b.hint("shuffle_hash"), "user_id")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
+        block_pairs(u, ["user_id"], "event_type")
+        .groupBy(
+            F.col("a.event_type").alias("item_a"),
+            F.col("b.event_type").alias("item_b"),
+        )
         .agg(F.count(F.lit(1)).alias("n_users"))
     )
     na = per_item.select(

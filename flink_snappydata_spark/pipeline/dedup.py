@@ -35,6 +35,7 @@ from flink_snappydata_spark.streaming.runtime import (
     read_state_table,
 )
 from flink_snappydata_spark.util import (
+    block_pairs,
     presentation_sorted,
     spread,
     tracked_persist,
@@ -370,9 +371,10 @@ def ngram_jaccard_pairs(
     engine-exact.
 
     Shuffles: the prefix index is built once (two shuffles, see
-    :func:`_prefix_index`), the posting lists are one more, and the
-    verify is a join and a regroup — no self-join, so no subtree of the
-    plan runs twice.
+    :func:`_prefix_index`), the posting lists are one more
+    (:func:`~flink_snappydata_spark.util.block_pairs` over the prefix
+    rows), and the verify is a join and a regroup — no self-join, so no
+    subtree of the plan runs twice.
 
     Scale: this kills the inverted-index join's hot-key explosion by
     construction — a stopword-run shingle shared by 1 M documents is,
@@ -393,10 +395,8 @@ def ngram_jaccard_pairs(
     packed = tracked_persist(doc_shingle_arrays(documents, n))
     sh = packed.selectExpr("doc_id", "explode(shs) AS sh")
     t = _dbl(threshold)
-    # Candidates come from posting lists, not a prefix self-join: the
-    # prefix rows group by shingle once, and each list (a shingle's
-    # prefix documents; singletons pair with nobody) emits its pairs
-    # in-row. Size-ratio prune (j ≥ t ⟹ t·|B| ≤ |A| ≤ |B|/t) and
+    # Candidates come from each prefix shingle's posting list
+    # (block_pairs). Size-ratio prune (j ≥ t ⟹ t·|B| ≤ |A| ≤ |B|/t) and
     # positional filter (PPJoin): all shared shingles sort at-or-after
     # the matched one, so overlap ≤ min(remaining_a, remaining_b) + 1;
     # a qualifying pair needs overlap ≥ ⌈t·max(na,nb)⌉, and its
@@ -405,14 +405,9 @@ def ngram_jaccard_pairs(
     # never drops a qualifying pair. A pair sharing several prefix
     # shingles is emitted once per list; the verify folds repeats.
     cand = (
-        _prefix_index(sh, threshold)
-        .groupBy("sh")
-        .agg(F.expr("collect_list(struct(doc_id, n_sh, rnk)) AS p"))
-        .where("size(p) > 1")
-        .selectExpr("p", "explode(p) AS a")
-        .selectExpr("a", "explode(p) AS b")
+        block_pairs(_prefix_index(sh, threshold), ["sh"], "doc_id", "n_sh", "rnk")
         .where(
-            f"a.doc_id < b.doc_id AND a.n_sh >= b.n_sh * {t} - 1e-9"
+            f"a.n_sh >= b.n_sh * {t} - 1e-9"
             f" AND b.n_sh >= a.n_sh * {t} - 1e-9"
             " AND least(a.n_sh - a.rnk, b.n_sh - b.rnk) + 1"
             f" >= greatest(a.n_sh, b.n_sh) * {t} - 1e-9"
@@ -472,7 +467,8 @@ def containment_pairs(
     # hinted side is the hash build side, and the prefix is ~20% of
     # index rows by construction. Every prefix row already satisfies
     # the positional bound ``na − rnk + 1 >= ceil(t·na)``: that is how
-    # the prefix length is defined.
+    # the prefix length is defined. Not block_pairs: prefix × full
+    # index is asymmetric, so a shingle is not one block.
     cand = (
         _prefix_index(sh, threshold).alias("a").hint("shuffle_hash")
         .join(full.alias("b"), "sh")
@@ -560,26 +556,6 @@ def _minhash_fused(
     )
 
 
-def minhash_lsh_candidates(banded: DataFrame) -> DataFrame:
-    """(doc_a, doc_b) candidate pairs from the (doc_id, band_id,
-    band_hash) LSH band table (:func:`minhash_dedup_pairs`' fused
-    kernel): docs colliding in any band pair up, once per shared band
-    (:func:`_verified_overlap` folds the repeats in its pair regroup,
-    so no separate distinct shuffle runs). Self-join key is
-    (band_id, band_hash) — candidate volume is data-dependent but
-    never O(n²). Both self-join sides read ``banded``, so the caller
-    derives it from a persisted frame.
-    """
-    # corpus × corpus band self-join: estimate-independent shuffle
-    # join, never a statically-planned broadcast (see _prefix_index)
-    return (
-        banded.alias("l")
-        .join(banded.alias("r").hint("shuffle_hash"), ["band_id", "band_hash"])
-        .where("l.doc_id < r.doc_id")
-        .selectExpr("l.doc_id AS doc_a", "r.doc_id AS doc_b")
-    )
-
-
 def minhash_dedup_pairs(
     documents: DataFrame,
     threshold: float = 0.8,
@@ -591,6 +567,12 @@ def minhash_dedup_pairs(
     shingle sets, so precision is exact and only recall depends on the
     banding. Output matches :func:`ngram_jaccard_pairs` whenever LSH
     recall is 1 at the threshold (tested on the fixtures).
+
+    Scale: candidates are paired inside each (band_id, band_hash)
+    bucket (:func:`~flink_snappydata_spark.util.block_pairs`) — one
+    shuffle of the band table, no self-join. Candidate volume is
+    Σ bucket² per band, data-dependent but never O(n²) on a corpus of
+    distinct documents; the verify touches candidates only.
     """
     # ONE fused kernel pass (see _minhash_fused) yields both the band
     # hashes (candidate generation) and the shingle lists (exact
@@ -600,9 +582,13 @@ def minhash_dedup_pairs(
     fused = tracked_persist(_minhash_fused(documents))
     sh = fused.selectExpr("doc_id", "explode(shs) AS sh")
     banded = fused.selectExpr("doc_id", "posexplode(bands) AS (band_id, band_hash)")
+    # docs colliding in a band bucket pair up inside it, once per
+    # shared band; the verify folds the repeats
+    cand = block_pairs(banded, ["band_id", "band_hash"], "doc_id").selectExpr(
+        "a.doc_id AS doc_a", "b.doc_id AS doc_b"
+    )
     overlap = _verified_overlap(
-        documents, sh, minhash_lsh_candidates(banded),
-        fused.select("doc_id", "shs"), max_set_size,
+        documents, sh, cand, fused.select("doc_id", "shs"), max_set_size
     )
     return _jaccard_pairs(overlap, threshold)
 
@@ -654,11 +640,12 @@ def source_contamination(
 
     Scale: the only wide frame is the distinct ``(shingle, source)``
     index, reduced map-side before its shuffle. Pair generation then
-    happens WITHIN each shingle's source set — an array bounded by the
-    source catalog size (tens, a constant next to the corpus), expanded
-    with in-kernel higher-order functions — so the worst case is
-    O(#distinct shingles x C(S,2)) with no doc-level or row-level
-    self-join anywhere. The final matrix is C(S,2) rows.
+    happens WITHIN each shingle's source list
+    (:func:`~flink_snappydata_spark.util.block_pairs`) — a list bounded
+    by the source catalog size (tens, a constant next to the corpus) —
+    so the worst case is O(#distinct shingles x C(S,2)) with no
+    doc-level or row-level self-join anywhere. The final matrix is
+    C(S,2) rows.
     """
     sh = shingles(documents, n)
     src_sh = (
@@ -670,26 +657,11 @@ def source_contamination(
     )
     src_sh = tracked_persist(src_sh)
     vocab = src_sh.groupBy("source").agg(F.count(F.lit(1)).alias("v"))
-    # Per-shingle sorted source set (bounded by the source catalog), then
-    # all ordered pairs from inside the array — no self-join on the index.
-    sets = src_sh.groupBy("sh").agg(
-        F.array_sort(F.collect_set("source")).alias("srcs")
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("srcs"),
-                lambda a: F.transform(
-                    F.filter(F.col("srcs"), lambda b: b > a),
-                    lambda b: F.struct(a.alias("src_a"), b.alias("src_b")),
-                ),
-            )
-        )
-    )
+    # each shingle's source list (distinct, bounded by the source
+    # catalog) pairs up in-row
     shared = (
-        sets.select(pair.alias("p"))
-        .select("p.src_a", "p.src_b")
-        .groupBy("src_a", "src_b")
+        block_pairs(src_sh, ["sh"], "source")
+        .groupBy(F.col("a.source").alias("src_a"), F.col("b.source").alias("src_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
     va = F.broadcast(vocab.select(F.col("source").alias("src_a"), F.col("v").alias("va")))
@@ -1071,6 +1043,13 @@ def simhash_dedup_pairs(
     Any pair within Hamming distance ≤3 of a 60-bit fingerprint shares
     at least one of the 4 15-bit bands exactly (pigeonhole), so blocking
     on band equality loses no recall at max_hamming ≤ 3.
+
+    Scale: each (band_id, band_val) bucket's list carries its
+    documents' fingerprints, and the Hamming check runs on the pairs
+    emitted inside it (:func:`~flink_snappydata_spark.util.block_pairs`)
+    — one shuffle of the band rows, no self-join, nothing persisted.
+    A pair sharing several bands is emitted once per band and folded
+    after the Hamming filter.
     """
     band_bits = SIMHASH_BITS // SIMHASH_BANDS
     fps = simhash_fingerprints(documents)
@@ -1090,26 +1069,16 @@ def simhash_dedup_pairs(
                 ]
             )
         ).alias("b"),
-    ).select("doc_id", "simhash", "b.band_id", "b.band_val").transform(tracked_persist)
-    # corpus × corpus band self-join: estimate-independent shuffle
-    # join, never a statically-planned broadcast (see _prefix_index)
-    l, r = bands.alias("l"), bands.alias("r").hint("shuffle_hash")
+    ).select("doc_id", "simhash", "b.band_id", "b.band_val")
     return (
-        l.join(
-            r,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_val") == F.col("r.band_val"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        block_pairs(bands, ["band_id", "band_val"], "doc_id", "simhash")
+        .selectExpr(
+            "a.doc_id AS doc_a",
+            "b.doc_id AS doc_b",
+            "CAST(bit_count(a.simhash ^ b.simhash) AS BIGINT) AS hamming",
         )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))
-            ).cast("long").alias("hamming"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
         .filter(F.col("hamming") <= max_hamming)
+        .dropDuplicates(["doc_a", "doc_b"])
         .transform(lambda d: presentation_sorted(d, "doc_a", "doc_b"))
     )
 

@@ -35,6 +35,7 @@ from flink_snappydata_spark.streaming.runtime import (
     read_state_table,
 )
 from flink_snappydata_spark.util import (
+    block_pairs,
     presentation_sorted,
     spread,
     tracked_persist,
@@ -181,6 +182,7 @@ def cosine_neardup_pairs(
     b = quantized(embeddings).select(
         F.col("vec_id").alias("vec_b"), F.col("qe").alias("qb"), F.col("norm_sq").alias("nb")
     )
+    # the guarded all-pairs oracle: one block would be the whole corpus
     return _cosine_pairs(a.join(b, F.col("vec_a") < F.col("vec_b")), threshold)
 
 
@@ -273,51 +275,47 @@ def lsh_neardup_pairs(
     ``multiprobe_bits=1`` additionally probes every Hamming-1 bucket of
     one side (pairs whose table signature differs by one hyperplane sign
     also become candidates) — recall rises without adding hash tables,
-    at ~(1+PLANES)x the probe-side rows. One-sided probing suffices:
-    ``a.bucket ^ bit == b.bucket  <=>  a.bucket == b.bucket ^ bit``.
+    at ~(1+PLANES)x the probe rows. Each row lists itself under its
+    home bucket (probe 0) and its Hamming-1 buckets (probes 1..PLANES),
+    and a pair ``a < b`` inside one (table_id, bucket) list is kept
+    when ``b`` is home there: ``a`` probes, ``b`` is probed. One-sided
+    probing suffices because Hamming ≤ 1 is symmetric
+    (``a.bucket ^ bit == b.bucket  <=>  a.bucket == b.bucket ^ bit``),
+    and it emits each pair once per table it collides in.
 
-    Scale: the self-join key is (table_id, bucket); candidate volume is
-    Σ bucket² per table, never O(n²); the verify step touches candidates
-    only.
+    Scale: candidates pair inside each (table_id, bucket) list
+    (:func:`~flink_snappydata_spark.util.block_pairs`) — one shuffle,
+    no self-join, nothing persisted. One record per (table, bucket)
+    holds that bucket's members plus the Hamming-1 probes that land on
+    it: the same rows a shuffle-hash build held for that key.
+    Candidate volume is Σ bucket² per table, never O(n²); the verify
+    step touches candidates only.
     """
-    sigs = lsh_signatures(embeddings)
-    qv = quantized(embeddings)
-    # Persist: both self-join sides read it (else signatures run twice).
-    # corpus × corpus joins below are pinned shuffle_hash so a
-    # garbage size estimate on a memory-sourced embedding frame can
-    # never statically broadcast a corpus-sized side (see
-    # dedup._prefix_index's estimate-safety note).
-    side = tracked_persist(sigs.join(qv.hint("shuffle_hash"), "vec_id"))
-    probe_side = side
-    if multiprobe_bits:
-        if multiprobe_bits != 1:
-            raise ValueError("only Hamming-1 multiprobe is supported")
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << j)).cast("long")
-                for j in range(PLANES_PER_TABLE)
-            ],
-        )
-        probe_side = side.withColumn("bucket", F.explode(probes))
-    a = probe_side.select(
-        F.col("vec_id").alias("vec_a"), F.col("table_id").alias("ta"),
-        F.col("bucket").alias("ba"), F.col("qe").alias("qa"),
-        F.col("norm_sq").alias("na"),
+    if multiprobe_bits and multiprobe_bits != 1:
+        raise ValueError("only Hamming-1 multiprobe is supported")
+    bucket = F.col("bucket")
+    hops = range(PLANES_PER_TABLE) if multiprobe_bits else ()
+    probes = F.array(
+        bucket, *[bucket.bitwiseXOR(F.lit(1 << j)).cast("long") for j in hops]
     )
-    b = side.select(
-        F.col("vec_id").alias("vec_b"), F.col("table_id").alias("tb"),
-        F.col("bucket").alias("bb"), F.col("qe").alias("qb"),
-        F.col("norm_sq").alias("nb"),
-    ).hint("shuffle_hash")
+    # signatures ⋈ quantized vectors is corpus × corpus: pinned
+    # shuffle_hash so a garbage size estimate on a memory-sourced
+    # embedding frame can never statically broadcast a corpus-sized
+    # side (see dedup._prefix_index's estimate-safety note)
+    side = lsh_signatures(embeddings).join(
+        quantized(embeddings).hint("shuffle_hash"), "vec_id"
+    )
+    probed = side.select(
+        "vec_id", "table_id", "qe", "norm_sq",
+        F.posexplode(probes).alias("probe", "bucket"),
+    )
     return _cosine_pairs(
-        a.join(
-            b,
-            (F.col("ta") == F.col("tb"))
-            & (F.col("ba") == F.col("bb"))
-            & (F.col("vec_a") < F.col("vec_b")),
+        block_pairs(probed, ["table_id", "bucket"], "vec_id", "qe", "norm_sq", "probe")
+        .where("b.probe = 0")
+        .selectExpr(
+            "a.vec_id AS vec_a", "b.vec_id AS vec_b", "a.qe AS qa",
+            "a.norm_sq AS na", "b.qe AS qb", "b.norm_sq AS nb",
         )
-        .select("vec_a", "vec_b", "qa", "na", "qb", "nb")
         .dropDuplicates(["vec_a", "vec_b"]),
         threshold,
     )
@@ -897,7 +895,8 @@ def semantic_neardup_pairs(
         F.col("norm_sq").alias("nb"),
     )
     # cluster-keyed corpus self-join: pinned shuffle-hash (no sort of
-    # the wide vector rows; SHJ spills since Spark 3.1)
+    # the wide vector rows; SHJ spills since Spark 3.1). Not block_pairs:
+    # a block is a whole cluster, ~n/k full vectors in one record.
     return _cosine_pairs(
         a.join(b.hint("shuffle_hash"), "cent_id").filter(
             F.col("vec_a") < F.col("vec_b")

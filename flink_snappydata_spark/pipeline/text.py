@@ -663,14 +663,15 @@ def winnowing_pairs(
     Scale: the (fingerprint, doc) postings are linear in the corpus
     (≈2/(w+1) per char); document frequency is one map-side-combined
     count whose filter bounds every surviving bucket at ``max_df``
-    BEFORE any ``collect_set`` runs (no giant-record hazard), and
-    pair expansion happens IN-KERNEL inside the ≤``max_df`` per-
-    fingerprint array (the `source_contamination` idiom,
-    ``pipeline/dedup.py``) — no self-join on the postings, worst case
-    ``max_df²/2`` pairs per surviving fingerprint. The df join is
-    fp-co-partitioned with the postings shuffle.
+    BEFORE any posting list is collected (no giant-record hazard), and
+    pairs are emitted inside each ≤``max_df`` per-fingerprint list
+    (:func:`~flink_snappydata_spark.util.block_pairs`) — no self-join
+    on the postings, worst case ``max_df²/2`` pairs per surviving
+    fingerprint. The df join is fp-co-partitioned with the postings
+    shuffle.
     """
     from flink_snappydata_spark.util import (
+        block_pairs,
         presentation_sorted,
         tracked_persist,
     )
@@ -689,31 +690,14 @@ def winnowing_pairs(
         .filter((F.col("df") >= 2) & (F.col("df") <= max_df))
         .select("fp")
     )
-    sets = (
-        # df_ok is fingerprint-vocabulary-sized: pinned shuffle join so
-        # a garbage size estimate on a memory-sourced corpus can never
-        # statically broadcast it (see dedup._prefix_index's note)
-        fp.join(df_ok.hint("shuffle_hash"), "fp")
-        .groupBy("fp")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("docs"))
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("docs"),
-                lambda a: F.transform(
-                    F.filter(F.col("docs"), lambda b: b > a),
-                    lambda b: F.struct(
-                        a.alias("doc_a"), b.alias("doc_b")
-                    ),
-                ),
-            )
-        )
-    )
+    # df_ok is fingerprint-vocabulary-sized: pinned shuffle join so a
+    # garbage size estimate on a memory-sourced corpus can never
+    # statically broadcast it (see dedup._prefix_index's note). Each
+    # doc's fingerprints are distinct (_winnow_pre's array_distinct),
+    # so a list never holds one doc twice.
     shared = (
-        sets.select(pair.alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .groupBy("doc_a", "doc_b")
+        block_pairs(fp.join(df_ok.hint("shuffle_hash"), "fp"), ["fp"], "doc_id")
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )

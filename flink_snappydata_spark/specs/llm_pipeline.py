@@ -253,8 +253,8 @@ _register(
     ORDER BY src_a, src_b
     """,
     doc="Cross-source contamination matrix: shared distinct word-3-gram "
-        "counts + vocabulary Jaccard per source pair (pair expansion "
-        "inside each shingle's bounded source set — no index self-join).",
+        "counts + vocabulary Jaccard per source pair (pairs emitted "
+        "inside each shingle's bounded source list — no index self-join).",
 )
 
 _register(
@@ -884,8 +884,8 @@ _register(
     doc="Partial-copy candidate pairs from shared winnowing "
         "fingerprints (>= 2 shared, boilerplate fingerprints with "
         "df > 16 dropped): the local plagiarism detector whole-doc "
-        "MinHash misses; df-filter BEFORE collect_set bounds buckets, "
-        "in-kernel pair expansion, no postings self-join.",
+        "MinHash misses; df-filter BEFORE the posting lists bounds "
+        "them, pairs emitted inside each list, no postings self-join.",
 )
 
 _register(

@@ -481,9 +481,9 @@ _register(
     ORDER BY item_a, item_b
     """,
     doc="Frequent event-type 2-itemsets with support and lift: corpus "
-        "collapses first to the distinct (user, type) frame; the pair "
-        "self-join is user-co-partitioned and bounded per user by the "
-        "type vocabulary — never corpus-squared.",
+        "collapses first to the distinct (user, type) frame; pairs are "
+        "emitted inside each user's type list, bounded by the type "
+        "vocabulary — no user self-join, never corpus-squared.",
 )
 
 _register(

@@ -49,9 +49,9 @@ def estimate_blind(df: DataFrame) -> bool:
     planner's broadcast decision is correct AT EVERY SCALE (a 50 TB
     side estimates as 50 TB and is never statically broadcast), so a
     generic binary operator can safely leave the strategy to Catalyst.
-    Same-corpus self-joins don't need this test — both sides are
-    corpus-sized by construction at any scale, so they pin
-    unconditionally.
+    Joins of a corpus against a frame derived from the same corpus
+    don't need this test — both sides are corpus-sized by construction
+    at any scale, so they pin unconditionally.
 
     Streaming frames return False immediately: forcing batch
     optimization (``optimizedPlan()``) on a streaming plan raises
@@ -70,6 +70,39 @@ def estimate_blind(df: DataFrame) -> bool:
     return any(
         leaves.apply(i).nodeName() in _ESTIMATE_BLIND_LEAVES
         for i in range(leaves.size())
+    )
+
+
+def block_pairs(
+    df: DataFrame, keys: list[str], id_col: str, *payload: str
+) -> DataFrame:
+    """(a, b) — every pair of ``df`` rows that share a block key
+    ``keys``, as two structs of ``(id_col, *payload)`` with
+    ``a.<id_col> < b.<id_col>``: the one candidate generator of the
+    near-dup family, where a block is an LSH band, a hash bucket, a
+    shingle or a user.
+
+    One shuffle, no join: rows group by ``keys`` into one posting list
+    per block, singleton lists are dropped, and each list explodes
+    twice in-row. A self-join over the same frame would run the
+    frame's subtree on both sides (under AQE a cached subtree is never
+    reused). A pair that shares several blocks is emitted once per
+    block; callers fold the repeats in their own verify or count.
+    ``id_col`` must be unique within a block, so no row meets itself.
+
+    Bound: one shuffle record per block holds all of its rows, and the
+    block emits O(rows²) pairs — the same build a shuffle-hash
+    self-join holds for that key. Callers keep blocks bounded: rarest
+    prefix shingles, LSH buckets, a ``max_df`` cap, a type vocabulary.
+    """
+    fields = ", ".join((id_col, *payload))
+    return (
+        df.groupBy(*keys)
+        .agg(F.expr(f"collect_list(struct({fields})) AS p"))
+        .where("size(p) > 1")
+        .selectExpr("p", "explode(p) AS a")
+        .selectExpr("a", "explode(p) AS b")
+        .where(f"a.{id_col} < b.{id_col}")
     )
 
 

@@ -66,7 +66,7 @@ def mem_emb(spark):
 
 
 def test_jaccard_pair_path_never_broadcasts(mem_docs):
-    """The whole prefix-filter path (DF join, prefix self-join, packed
+    """The whole prefix-filter path (prefix posting lists, packed
     verify joins) has no intentionally-broadcast side, so ZERO
     BroadcastExchange nodes may appear — each one would be a
     corpus-sized build. max_set_size=None skips the giant-doc probe so
@@ -100,9 +100,9 @@ def test_winnowing_pairs_df_join_never_broadcasts(mem_docs):
 
 
 def test_lsh_neardup_corpus_joins_are_shuffled(mem_emb):
-    """lsh_neardup has no bounded side at all: signature build join and
-    the bucket self-join are both corpus-sized, so no broadcast may
-    appear anywhere in its plan."""
+    """lsh_neardup has no bounded side at all: the signature ⋈ vector
+    join is corpus × corpus and the bucket posting lists are a
+    shuffle, so no broadcast may appear anywhere in its plan."""
     plan = _physical_plan(S.lsh_neardup_pairs(mem_emb))
     assert "BroadcastExchange" not in plan, plan[:4000]
 
@@ -199,15 +199,16 @@ def test_funnel_latency_user_join_never_broadcasts(mem_events):
     assert "BroadcastExchange" not in plan, plan[:4000]
 
 
-def test_itemset_pairs_self_join_never_broadcasts(mem_events):
-    """The user-co-partitioned self-join is corpus × corpus and must
-    shuffle; the per-item lift sides stay vocabulary-bounded explicit
-    broadcasts — so assert no user_id-keyed broadcast specifically."""
+def test_itemset_pairs_has_no_user_keyed_join(mem_events):
+    """Pairs come from each user's type list, so no join is keyed on
+    user_id at all (no corpus × corpus join to broadcast); the per-item
+    lift sides stay vocabulary-bounded explicit broadcasts."""
     from flink_snappydata_spark.operators import analytic as A
 
     plan = _physical_plan(A.itemset_pairs(mem_events))
     _no_user_keyed_broadcast(plan)
-    assert "ShuffledHashJoin [user_id" in plan or "SortMergeJoin [user_id" in plan
+    user_joins = [ln for ln in plan.splitlines() if "Join [user_id" in ln]
+    assert not user_joins, user_joins
 
 
 def test_rolling_active_users_broadcasts_only_day_grid(mem_events):

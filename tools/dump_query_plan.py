@@ -5,11 +5,17 @@ commit under plans/r{N}/.
 
 Usage: python tools/dump_query_plan.py OUTDIR SUFFIX name [name ...]
 Writes OUTDIR/<name>_<SUFFIX>.txt for each query, built at sf0.01.
+Session-global counters are masked, so two dumps of one commit diff
+clean: the exchange counter ``[plan_id=N]`` is written as
+``[plan_id=*]``, and expression ids (``doc_id#501L``) are renumbered
+from 0 in order of first appearance (which rows an id names is kept;
+the value the session's counter had reached is not).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, ".")
@@ -19,6 +25,13 @@ from flink_snappydata_spark.plans import inspect as P  # noqa: E402
 from flink_snappydata_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+
+def stable_plan(plan: str) -> str:
+    """``plan`` with its session-global counters masked (see above)."""
+    plan = re.sub(r"\[plan_id=\d+\]", "[plan_id=*]", plan)
+    ids: dict[str, int] = {}
+    return re.sub(r"#(\d+)", lambda m: f"#{ids.setdefault(m[1], len(ids))}", plan)
 
 
 def main() -> None:
@@ -31,7 +44,7 @@ def main() -> None:
         df = queries[name](spark, SF_DIR)
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(P.formatted_plan(df).rstrip() + "\n")
+            f.write(stable_plan(P.formatted_plan(df)).rstrip() + "\n")
         print(f"wrote {path}")
 
 
