@@ -277,19 +277,22 @@ def lsh_neardup_pairs(
     also become candidates) — recall rises without adding hash tables,
     at ~(1+PLANES)x the probe rows. Each row lists itself under its
     home bucket (probe 0) and its Hamming-1 buckets (probes 1..PLANES),
-    and a pair ``a < b`` inside one (table_id, bucket) list is kept
-    when ``b`` is home there: ``a`` probes, ``b`` is probed. One-sided
-    probing suffices because Hamming ≤ 1 is symmetric
-    (``a.bucket ^ bit == b.bucket  <=>  a.bucket == b.bucket ^ bit``),
-    and it emits each pair once per table it collides in.
+    and inside one (table_id, bucket) list a pair ``a < b`` is made
+    only when ``b`` is home there: ``a`` probes (or is home too), ``b``
+    is probed. One-sided probing suffices because Hamming ≤ 1 is
+    symmetric (``a.bucket ^ bit == b.bucket  <=>  a.bucket ==
+    b.bucket ^ bit``), and it emits each pair once per table it
+    collides in.
 
     Scale: candidates pair inside each (table_id, bucket) list
-    (:func:`~flink_snappydata_spark.util.block_pairs`) — one shuffle,
-    no self-join, nothing persisted. One record per (table, bucket)
-    holds that bucket's members plus the Hamming-1 probes that land on
-    it: the same rows a shuffle-hash build held for that key.
-    Candidate volume is Σ bucket² per table, never O(n²); the verify
-    step touches candidates only.
+    (:func:`~flink_snappydata_spark.util.block_pairs` with ``b`` drawn
+    from the home rows only) — one shuffle, no self-join, nothing
+    persisted. One record per (table, bucket) holds the bucket's home
+    rows plus every row probing it, ~(1+PLANES)x the home rows; a
+    shuffle-hash join held only the home rows and streamed the probes
+    past them. The list emits home × (home + probes) pairs, never
+    probe × probe. Candidate volume is Σ bucket² per table, never
+    O(n²); the verify step touches candidates only.
     """
     if multiprobe_bits and multiprobe_bits != 1:
         raise ValueError("only Hamming-1 multiprobe is supported")
@@ -310,8 +313,10 @@ def lsh_neardup_pairs(
         F.posexplode(probes).alias("probe", "bucket"),
     )
     return _cosine_pairs(
-        block_pairs(probed, ["table_id", "bucket"], "vec_id", "qe", "norm_sq", "probe")
-        .where("b.probe = 0")
+        block_pairs(
+            probed, ["table_id", "bucket"], "vec_id", "qe", "norm_sq", "probe",
+            members="x.probe = 0",
+        )
         .selectExpr(
             "a.vec_id AS vec_a", "b.vec_id AS vec_b", "a.qe AS qa",
             "a.norm_sq AS na", "b.qe AS qb", "b.norm_sq AS nb",

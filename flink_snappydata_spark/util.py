@@ -74,7 +74,8 @@ def estimate_blind(df: DataFrame) -> bool:
 
 
 def block_pairs(
-    df: DataFrame, keys: list[str], id_col: str, *payload: str
+    df: DataFrame, keys: list[str], id_col: str, *payload: str,
+    members: str | None = None,
 ) -> DataFrame:
     """(a, b) — every pair of ``df`` rows that share a block key
     ``keys``, as two structs of ``(id_col, *payload)`` with
@@ -90,18 +91,33 @@ def block_pairs(
     block; callers fold the repeats in their own verify or count.
     ``id_col`` must be unique within a block, so no row meets itself.
 
+    ``members`` (an SQL predicate on a list element ``x``) draws ``b``
+    only from the elements that satisfy it, for blocks that hold their
+    own members plus visiting rows (LSH multiprobe): member × member
+    and visitor × member pairs are made, visitor × visitor pairs never
+    are. A visitor × member pair whose visitor has the greater id is
+    dropped by the id order, so the caller must meet it the other way
+    round in the visitor's own block.
+
     Bound: one shuffle record per block holds all of its rows, and the
-    block emits O(rows²) pairs — the same build a shuffle-hash
-    self-join holds for that key. Callers keep blocks bounded: rarest
-    prefix shingles, LSH buckets, a ``max_df`` cap, a type vocabulary.
+    block emits O(rows²) pairs (O(rows × members) with ``members``).
+    Callers keep blocks bounded: rarest prefix shingles, LSH buckets, a
+    ``max_df`` cap, a type vocabulary.
     """
     fields = ", ".join((id_col, *payload))
-    return (
+    lists = (
         df.groupBy(*keys)
         .agg(F.expr(f"collect_list(struct({fields})) AS p"))
         .where("size(p) > 1")
-        .selectExpr("p", "explode(p) AS a")
-        .selectExpr("a", "explode(p) AS b")
+    )
+    b_list = "p"
+    if members:
+        # filtered once per list, before the rows multiply
+        lists = lists.selectExpr("p", f"filter(p, x -> {members}) AS m")
+        b_list = "m"
+    return (
+        lists.selectExpr(b_list, "explode(p) AS a")
+        .selectExpr("a", f"explode({b_list}) AS b")
         .where(f"a.{id_col} < b.{id_col}")
     )
 
