@@ -21,6 +21,7 @@ from flink_snappydata_spark.functions.exact import cents
 from flink_snappydata_spark.util import (
     cell_prefix_sums,
     presentation_sorted,
+    top_k,
 )
 
 
@@ -151,9 +152,7 @@ def benford_audit(orders: DataFrame) -> DataFrame:
     ).orderBy("digit")
 
 
-def key_skew_profile(
-    lineitem: DataFrame, key: str = "l_suppkey", n_buckets: int = 32
-) -> DataFrame:
+def key_skew_profile(lineitem: DataFrame, key: str = "l_suppkey") -> DataFrame:
     """Join-key skew report for a fact-table key: how concentrated are
     the rows you are about to shuffle? Returns one row —
     ``(n_rows, n_keys, max_key_rows, top1_share, top10_share, hhi)`` —
@@ -168,10 +167,8 @@ def key_skew_profile(
 
     Scale: the key histogram is one map-side-combined groupBy (output =
     key cardinality, the profile's working set — always ≪ fact rows).
-    The top-10 is two-phase: top-10 inside each of ``n_buckets`` hash
-    sub-groups of the histogram, then a re-rank of the ≤ 10·n_buckets
-    candidates — no single reducer ever sorts the whole histogram, the
-    same exact-top-k shape as `sampling.weighted_sample`.
+    The top-10 is :func:`~flink_snappydata_spark.util.top_k`, so no
+    single reducer ever sorts the whole histogram.
     """
     cnt = (
         lineitem.groupBy(F.col(key).alias("k"))
@@ -183,16 +180,8 @@ def key_skew_profile(
         F.max("c").alias("max_key_rows"),
         F.sum((F.col("c") * F.col("c")).cast("decimal(38,0)")).alias("sc2"),
     )
-    phase1 = Window.partitionBy("bkt").orderBy(F.col("c").desc(), "k")
-    survivors = (
-        cnt.withColumn("bkt", F.pmod(F.col("k"), F.lit(n_buckets)))
-        .withColumn("r1", F.row_number().over(phase1))
-        .filter(F.col("r1") <= 10)
-    )
-    phase2 = Window.partitionBy().orderBy(F.col("c").desc(), "k")
     top10 = (
-        survivors.withColumn("r", F.row_number().over(phase2))
-        .filter(F.col("r") <= 10)
+        top_k(cnt, [], [F.col("c").desc(), "k"], 10, rank="r")
         .agg(
             F.max(F.when(F.col("r") == 1, F.col("c"))).alias("top1_rows"),
             F.sum("c").alias("top10_rows"),

@@ -30,6 +30,7 @@ from flink_snappydata_spark.streaming.runtime import (
     ingest_stream_to_tables,
     read_state_table,
 )
+from flink_snappydata_spark.util import top_k
 
 SPLIT_BUCKETS = 10_000
 
@@ -525,9 +526,7 @@ def bloom_membership(
     )
 
 
-def weighted_sample(
-    documents: DataFrame, k: int = 25, n_buckets: int = 32
-) -> DataFrame:
+def weighted_sample(documents: DataFrame, k: int = 25) -> DataFrame:
     """Deterministic weighted sample: the top-``k`` documents per
     source under a weight-scaled hash priority — the A-RES
     (reservoir-with-priorities) shape with the RNG replaced by
@@ -544,14 +543,10 @@ def weighted_sample(
     bits and identical order (ties broken by ``doc_id``). Returns
     ``(source, rank, doc_id, n_chars)``.
 
-    Scale: per-source top-k is computed in two exact phases — phase 1
-    takes the top-k inside each of ``n_buckets`` hash sub-groups per
-    source (per-partition sorts bounded by corpus/(sources·buckets)),
-    phase 2 re-ranks the surviving ≤ k·n_buckets candidate rows per
-    source. The global top-k per source is exactly the top-k of the
-    union of bucket top-ks, so no single reducer ever sorts a whole
-    source — the hot-source analog of TakeOrdered. Text is never
-    selected; only ids, weights, and the source key shuffle.
+    Scale: the per-source top-k is
+    :func:`~flink_snappydata_spark.util.top_k`, so no single reducer
+    ever sorts a whole source. Text is never selected; only ids,
+    weights, and the source key shuffle.
     """
     pri = F.col("n_chars").cast("double") / (
         portable_hash(F.col("doc_id")) + F.lit(1)
@@ -561,24 +556,9 @@ def weighted_sample(
         "doc_id",
         "n_chars",
         pri.alias("pri"),
-        F.pmod(F.col("doc_id"), F.lit(n_buckets)).alias("bkt"),
-    )
-    phase1 = Window.partitionBy("source", "bkt").orderBy(
-        F.col("pri").desc(), "doc_id"
-    )
-    survivors = (
-        cand.withColumn("r1", F.row_number().over(phase1))
-        .filter(F.col("r1") <= k)
-        .drop("r1", "bkt")
-    )
-    phase2 = Window.partitionBy("source").orderBy(
-        F.col("pri").desc(), "doc_id"
     )
     return (
-        survivors.withColumn(
-            "rank", F.row_number().over(phase2).cast("long")
-        )
-        .filter(F.col("rank") <= k)
+        top_k(cand, ["source"], [F.col("pri").desc(), "doc_id"], k, rank="rank")
         .select("source", "rank", "doc_id", "n_chars")
         .orderBy("source", "rank")
     )

@@ -16,8 +16,9 @@ Scale strategy:
 * LSH ANN: random-hyperplane signatures bucket the corpus once;
   queries probe only their bucket (+ optional multiprobe), turning the
   scan into a bucket lookup — the 100 TB path;
-* per-query top-k via window row_number, which Catalyst executes as a
-  partial top-k per partition (no global sort of scores).
+* per-query top-k via :func:`~flink_snappydata_spark.util.top_k`, which
+  Catalyst executes as a partial top-k per partition (no global sort of
+  scores).
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from flink_snappydata_spark.util import (
     block_pairs,
     presentation_sorted,
     spread,
+    top_k,
     tracked_persist,
 )
 
@@ -101,9 +103,10 @@ def brute_force_cosine_topk(
     external query set).
 
     Scale: queries broadcast; corpus scanned once, never shuffled;
-    row_number top-k prunes partially per partition. Pass a persisted
-    :func:`quantized` frame via ``qv`` when composing with other ops
-    (e.g. the trained-IVF verdict) so the corpus is quantized once.
+    the per-query top-k is :func:`~flink_snappydata_spark.util.top_k`.
+    Pass a persisted :func:`quantized` frame via ``qv`` when composing
+    with other ops (e.g. the trained-IVF verdict) so the corpus is
+    quantized once.
     """
     if qv is None:
         qv = quantized(embeddings)
@@ -125,11 +128,9 @@ def brute_force_cosine_topk(
             _cosine(_dot(F.col("q_qe"), F.col("qe")), F.col("q_norm"), F.col("norm_sq")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    order = [F.col("cosine").desc(), F.col("vec_id").asc()]
+    return top_k(scored, ["query_id"], order, k, rank="rank").orderBy(
+        "query_id", "rank"
     )
 
 
@@ -360,8 +361,8 @@ def ivf_topk(
             "cent_id",
             _cosine(_dot(F.col("qe"), F.col("ce")), F.col("norm_sq"), F.col("cn")).alias("csim"),
         )
-        w = Window.partitionBy(id_col).orderBy(F.col("csim").desc(), F.col("cent_id").asc())
-        return scored.withColumn("r", F.row_number().over(w)).filter(F.col("r") <= keep)
+        order = [F.col("csim").desc(), F.col("cent_id").asc()]
+        return top_k(scored, [id_col], order, keep)
 
     assigned = nearest(qv, "vec_id", 1).select("vec_id", F.col("cent_id").alias("list_id"))
     # corpus × corpus: pinned shuffle join (see dedup._prefix_index)
@@ -388,11 +389,9 @@ def ivf_topk(
         )
         .dropDuplicates(["query_id", "vec_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    order = [F.col("cosine").desc(), F.col("vec_id").asc()]
+    return top_k(scored, ["query_id"], order, k, rank="rank").orderBy(
+        "query_id", "rank"
     )
 
 
@@ -1187,15 +1186,11 @@ def hard_negatives(
 
     Scale: probes broadcast (the anchor set is always small relative
     to the corpus); the corpus is scanned ONCE and never shuffled on
-    vectors. The per-probe top-k is TWO-PHASE so no probe becomes a hot
-    partition: phase one takes a per-(probe, vec_id mod 64) bucket
-    top-k inside a window over at most 1/64 of the candidates, phase
-    two merges the 64·k survivors per probe — O(k) rows per bucket
-    cross the final exchange, never the O(n) candidate list (the
-    bucket-histogram trick source_doc_cap uses, applied to top-k).
-    Scores are exact int64 dot products over quantized components;
-    the cosine is the deterministic double expression shared with
-    :func:`brute_force_cosine_topk`.
+    vectors. The per-probe top-k is
+    :func:`~flink_snappydata_spark.util.top_k`, so no probe becomes a
+    hot partition. Scores are exact int64 dot products over quantized
+    components; the cosine is the deterministic double expression
+    shared with :func:`brute_force_cosine_topk`.
     """
     emb = spread(embeddings, "vec_id")
     qe = _qvec(F.col("embedding"))
@@ -1230,23 +1225,10 @@ def hard_negatives(
                 F.col("norm_sq"),
             ).alias("cosine"),
         )
-        .withColumn("b", F.pmod(F.col("vec_id"), F.lit(64)))
     )
-    w_bucket = Window.partitionBy("query_id", "b").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    survivors = (
-        scored.withColumn("r", F.row_number().over(w_bucket))
-        .filter(F.col("r") <= k)
-        .drop("r", "b")
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    out = (
-        survivors.withColumn("rank", F.row_number().over(w_final).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "label", "dot_q", "cosine")
+    order = [F.col("cosine").desc(), F.col("vec_id").asc()]
+    out = top_k(scored, ["query_id"], order, k, rank="rank").select(
+        "query_id", "rank", "vec_id", "label", "dot_q", "cosine"
     )
     return presentation_sorted(out, "query_id", "rank")
 
@@ -1272,9 +1254,9 @@ def pq_adc_topk(
     n_queries × PQ_SUBSPACES × n_centroids tiny rows, broadcast; search
     is one scan of the codes joined against the broadcast LUT with a
     map-side-combined (query, vec) sum — the shuffle carries int64
-    partials, never vectors or codes. Per-query top-k is the same
-    two-phase bucket merge as :func:`hard_negatives`, so no query is a
-    hot partition.
+    partials, never vectors or codes. Per-query top-k is
+    :func:`~flink_snappydata_spark.util.top_k`, so no query is a hot
+    partition.
     """
     subv, cents, assigned = _pq_train(embeddings, n_iters=2)
     codes = assigned.select("vec_id", "m", "cent_id")
@@ -1296,23 +1278,10 @@ def pq_adc_topk(
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
         .agg(F.sum("lq").alias("adc_dist"))
-        .withColumn("b", F.pmod(F.col("vec_id"), F.lit(64)))
     )
-    w_bucket = Window.partitionBy("query_id", "b").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    survivors = (
-        adc.withColumn("r", F.row_number().over(w_bucket))
-        .filter(F.col("r") <= k)
-        .drop("r", "b")
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    out = (
-        survivors.withColumn("rank", F.row_number().over(w_final).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "adc_dist")
+    order = [F.col("adc_dist").asc(), F.col("vec_id").asc()]
+    out = top_k(adc, ["query_id"], order, k, rank="rank").select(
+        "query_id", "rank", "vec_id", "adc_dist"
     )
     return presentation_sorted(out, "query_id", "rank")
 
@@ -1396,8 +1365,9 @@ def knn_accuracy(
 
     Scale: the eval set broadcasts (bounded by ``n_eval`` — the op is
     LINEAR in the corpus, never all-pairs); one corpus scan scores all
-    candidates; the per-eval top-k is the same two-phase bucket merge
-    as :func:`hard_negatives`; the vote is a (eval, label)-keyed count
+    candidates; the per-eval top-k is
+    :func:`~flink_snappydata_spark.util.top_k`; the vote is a
+    (eval, label)-keyed count
     over n_eval × k rows. Nothing but ids, labels, and int64 dots
     shuffle.
     """
@@ -1431,22 +1401,9 @@ def knn_accuracy(
                 F.col("norm_sq"),
             ).alias("cosine"),
         )
-        .withColumn("b", F.pmod(F.col("vec_id"), F.lit(64)))
     )
-    w_bucket = Window.partitionBy("eval_id", "b").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    survivors = (
-        scored.withColumn("r", F.row_number().over(w_bucket))
-        .filter(F.col("r") <= k)
-        .drop("r", "b")
-    )
-    w_final = Window.partitionBy("eval_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    neighbors = (
-        survivors.withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
+    neighbors = top_k(
+        scored, ["eval_id"], [F.col("cosine").desc(), F.col("vec_id").asc()], k
     )
     votes = neighbors.groupBy("eval_id", "true_label", "label").agg(
         F.count(F.lit(1)).alias("n_votes")
@@ -1674,7 +1631,8 @@ def sq8_mips_recall(
     scan; scoring joins the component stream against the broadcast
     query components and map-side-combines (query, vec) int64 partials
     — the same ADC shuffle shape as :func:`pq_adc_topk`, never a
-    vector shuffle; per-query top-k is a partial-top-k window. The
+    vector shuffle; per-query top-k is
+    :func:`~flink_snappydata_spark.util.top_k`. The
     exact-MIPS judge pass is O(n_queries x n) with broadcast queries —
     it exists to grade the codec; at scale you run the SQ8 path alone.
     ``floor=0.5`` sits well under the observed per-query minimum of
@@ -1716,14 +1674,9 @@ def sq8_mips_recall(
         .groupBy("query_id", "vec_id")
         .agg(F.sum(F.col("qq") * F.col("rnum")).alias("adot"))
     )
-    w_a = Window.partitionBy("query_id").orderBy(
-        F.col("adot").desc(), F.col("vec_id").asc()
-    )
-    approx = (
-        adot.withColumn("rk", F.row_number().over(w_a))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id")
-    )
+    approx = top_k(
+        adot, ["query_id"], [F.col("adot").desc(), F.col("vec_id").asc()], k
+    ).select("query_id", "vec_id")
     q_vec = F.broadcast(
         qv.filter(F.col("vec_id") < n_queries).select(
             F.col("vec_id").alias("query_id"), F.col("qe").alias("q_qe")
@@ -1736,14 +1689,9 @@ def sq8_mips_recall(
             "query_id", "vec_id", _dot(F.col("q_qe"), F.col("qe")).alias("dot")
         )
     )
-    w_t = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("vec_id").asc()
-    )
-    truth = (
-        dots.withColumn("rk", F.row_number().over(w_t))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id")
-    )
+    truth = top_k(
+        dots, ["query_id"], [F.col("dot").desc(), F.col("vec_id").asc()], k
+    ).select("query_id", "vec_id")
     return _recall_verdict(truth, approx, floor)
 
 
@@ -1874,6 +1822,10 @@ def bitsign_hamming_recall(
             reduce(lambda a, b: a + b, ham_bits).cast("long").alias("ham"),
         )
     )
+    # A plain window, not util.top_k: n_candidates >= corpus size is the
+    # documented exact limit and may pass windowGroupLimitThreshold,
+    # where top_k refuses. Up to the threshold Catalyst plans this window
+    # with the same partial WindowGroupLimit as top_k.
     w_h = Window.partitionBy("query_id").orderBy(
         F.col("ham").asc(), F.col("vec_id").asc()
     )
@@ -1904,14 +1856,9 @@ def bitsign_hamming_recall(
             ).alias("cosine"),
         )
     )
-    w_r = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    approx = (
-        reranked.withColumn("rk", F.row_number().over(w_r))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id")
-    )
+    approx = top_k(
+        reranked, ["query_id"], [F.col("cosine").desc(), F.col("vec_id").asc()], k
+    ).select("query_id", "vec_id")
     truth = brute_force_cosine_topk(embeddings, n_queries, k, qv=qv).select(
         "query_id", "vec_id"
     )
@@ -2068,9 +2015,9 @@ def ivf_pq_topk(
     The two corpus-sized builds (residual join, codes+lists join) pin
     ``shuffle_hash``; every bounded frame (coarse centroids, PQ
     codebook, probe set, LUT, shortlist) is an explicit broadcast; the
-    per-query top-k passes are the same two-phase bucket merge as
-    :func:`pq_adc_topk`, so no query is a hot partition. The shuffle
-    carries int64 (query, vec) partials, never vectors or codes.
+    per-query top-k passes are :func:`~flink_snappydata_spark.util.top_k`,
+    so no query is a hot partition. The shuffle carries int64
+    (query, vec) partials, never vectors or codes.
 
     ``index``: a prebuilt :class:`IvfPqIndex` (from
     :func:`ivf_pq_index`) skips training/encoding — the amortized
@@ -2095,17 +2042,13 @@ def ivf_pq_topk(
             _dot(F.col("qe"), F.col("ce")), F.col("norm_sq"), F.col("cn")
         ).alias("csim"),
     )
-    w_p = Window.partitionBy("query_id").orderBy(
-        F.col("csim").desc(), F.col("cent_id").asc()
-    )
     # probes feed ONLY the LUT below, which is itself broadcast — no
     # separate broadcast round here (one fewer sequential job; all
     # frames in the LUT build are query-bounded).
-    probes = (
-        qscore.withColumn("r", F.row_number().over(w_p))
-        .filter(F.col("r") <= n_probe)
-        .select("query_id", F.col("cent_id").alias("list_id"))
-    )
+    probes = top_k(
+        qscore, ["query_id"], [F.col("csim").desc(), F.col("cent_id").asc()],
+        n_probe,
+    ).select("query_id", F.col("cent_id").alias("list_id"))
     # query residuals per probed list, cut into PQ blocks
     qres = (
         probes.join(
@@ -2146,24 +2089,11 @@ def ivf_pq_topk(
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
         .agg(F.sum("lq").alias("adc_dist"))
-        .withColumn("b", F.pmod(F.col("vec_id"), F.lit(64)))
     )
-    w_bucket = Window.partitionBy("query_id", "b").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    bucket_best = (
-        adc.withColumn("r", F.row_number().over(w_bucket))
-        .filter(F.col("r") <= n_shortlist)
-        .drop("r", "b")
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    shortlist = (
-        bucket_best.withColumn("r", F.row_number().over(w_short))
-        .filter(F.col("r") <= n_shortlist)
-        .select("query_id", "vec_id")
-    )
+    shortlist = top_k(
+        adc, ["query_id"], [F.col("adc_dist").asc(), F.col("vec_id").asc()],
+        n_shortlist,
+    ).select("query_id", "vec_id")
     # exact refinement of the bounded shortlist: attach each query's
     # vector to its candidate rows BEFORE the single broadcast, so the
     # corpus scan joins once against one (n_queries x n_shortlist)-row
@@ -2183,12 +2113,8 @@ def ivf_pq_topk(
             F.col("norm_sq"),
         ).alias("cosine"),
     )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    out = (
-        reranked.withColumn("rank", F.row_number().over(w_final).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
+    order = [F.col("cosine").desc(), F.col("vec_id").asc()]
+    out = top_k(reranked, ["query_id"], order, k, rank="rank").select(
+        "query_id", "rank", "vec_id", "cosine"
     )
     return presentation_sorted(out, "query_id", "rank")

@@ -20,6 +20,7 @@ from flink_snappydata_spark.streaming.runtime import (
 from flink_snappydata_spark.util import (
     cell_prefix_sums,
     spread,
+    top_k,
     tracked_persist,
 )
 
@@ -200,8 +201,9 @@ def bm25_topk(
 
     Scale: tf/dl are per-row column expressions on the scan (no
     explode, no shuffle); the corpus-level (N, avgdl, df_t) statistics
-    are ONE aggregate row broadcast back over the corpus; top-k is a
-    row_number partial top-k. Two scans of the corpus total, no
+    are ONE aggregate row broadcast back over the corpus; the global
+    top-k is :func:`~flink_snappydata_spark.util.top_k` (per-partition
+    heaps, never a full sort). Two scans of the corpus total, no
     shuffle of document text anywhere.
     """
     terms = BM25_TERMS if terms is None else terms
@@ -239,17 +241,13 @@ def bm25_topk(
         )
         s_i = idf * ((tf * F.lit(k1 + 1.0)) / (tf + F.lit(k1) * norm))
         score = s_i if score is None else score + s_i
-    # Global top-k via orderBy+limit (TakeOrdered — per-partition heaps,
-    # never a full sort); the rank window then runs over k rows only.
-    top = (
-        scored.select("doc_id", "dl", score.alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return top.withColumn("rank", F.row_number().over(w).cast("long")).orderBy(
-        "rank"
-    )
+    return top_k(
+        scored.select("doc_id", "dl", score.alias("score")),
+        [],
+        [F.col("score").desc(), F.col("doc_id").asc()],
+        k,
+        rank="rank",
+    ).orderBy("rank")
 
 
 def novelty_scores(
@@ -1318,10 +1316,7 @@ def tfidf_keywords(
         F.count(F.lit(1)).alias("d")
     )
     idf_bits = _floor_log2(F.col("d")) - _floor_log2(F.col("df"))
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score").desc(), F.col("word").asc()
-    )
-    out = (
+    scored = (
         _join_word_stats_skew_safe(tf, df_t, "df", n_docs, "d")
         .join(F.broadcast(n_docs))
         .select(
@@ -1331,9 +1326,10 @@ def tfidf_keywords(
             idf_bits.alias("idf_bits"),
             (F.col("tf") * idf_bits).alias("score"),
         )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("doc_id", "rank", "word", "tf", "idf_bits", "score")
+    )
+    order = [F.col("score").desc(), F.col("word").asc()]
+    out = top_k(scored, ["doc_id"], order, k, rank="rank").select(
+        "doc_id", "rank", "word", "tf", "idf_bits", "score"
     )
     return out.orderBy("doc_id", "rank") if sort else out
 
@@ -2510,7 +2506,6 @@ def token_drift_topk(
     source_a: str = "src0",
     source_b: str = "src1",
     k: int = 20,
-    n_buckets: int = 32,
 ) -> DataFrame:
     """Top-k drifting tokens between two sources by χ² contribution —
     the corpus-drift detector ("which words distinguish this crawl
@@ -2525,11 +2520,10 @@ def token_drift_topk(
 
     Scale: each side collapses to its token histogram (map-side
     combined, vocabulary-sized); the full-outer merge and the χ²
-    arithmetic run on the merged vocabulary frame; the top-k is the
-    engine's exact two-phase shape — top-k inside ``n_buckets`` hash
-    sub-groups, then a re-rank of ≤ k·n_buckets candidates — so no
-    reducer ever sorts the whole vocabulary. Text never shuffles
-    (tokens do, bounded by vocabulary).
+    arithmetic run on the merged vocabulary frame; the top-k is
+    :func:`~flink_snappydata_spark.util.top_k`, so no reducer ever
+    sorts the whole vocabulary. Text never shuffles (tokens do, bounded
+    by vocabulary).
     """
 
     def hist(src: str, name: str) -> DataFrame:
@@ -2565,22 +2559,8 @@ def token_drift_topk(
             "chi2"
         ),
     )
-    phase1 = Window.partitionBy("bkt").orderBy(F.col("chi2").desc(), "token")
-    survivors = (
-        scored.withColumn(
-            "bkt", F.pmod(F.abs(F.hash("token")), F.lit(n_buckets))
-        )
-        .withColumn("r1", F.row_number().over(phase1))
-        .filter(F.col("r1") <= k)
-        .drop("bkt", "r1")
-    )
-    phase2 = Window.partitionBy().orderBy(F.col("chi2").desc(), "token")
-    return (
-        survivors.withColumn("rank", F.row_number().over(phase2))
-        .filter(F.col("rank") <= k)
-        .select("token", "c_a", "c_b", "chi2")
-        .orderBy(F.col("chi2").desc(), "token")
-    )
+    order = [F.col("chi2").desc(), "token"]
+    return top_k(scored, [], order, k).orderBy(*order)
 
 
 def _sum_floor_log2(m: Column, squared: bool = False) -> Column:

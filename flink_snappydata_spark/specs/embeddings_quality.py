@@ -510,7 +510,7 @@ _register(
         "vectors encoded once into 4 codes by the trained codebook, "
         "queries search via broadcast per-subspace LUTs summed over "
         "codes — exact int64 ADC distances, no vectors touched at "
-        "query time, two-phase bucketed top-k.",
+        "query time, per-query util.top_k.",
 )
 
 
@@ -579,7 +579,7 @@ _register(
     """,
     doc="Hard-negative mining (DPR/Contriever recipe): per-probe top-k "
         "most-similar DIFFERENT-label vectors — broadcast probes, one "
-        "corpus scan, two-phase bucketed top-k (no per-probe hot "
+        "corpus scan, per-probe util.top_k (no per-probe hot "
         "partition), exact int64 dot products.",
 )
 

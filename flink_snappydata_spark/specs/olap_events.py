@@ -667,8 +667,8 @@ _register(
     FROM pred
     """,
     doc="k-NN label-prediction accuracy (embedding-quality probe): "
-        "bounded broadcast eval set, one corpus scan, two-phase "
-        "bucketed top-k, deterministic majority vote — linear in the "
+        "bounded broadcast eval set, one corpus scan, util.top_k "
+        "per eval vector, deterministic majority vote — linear in the "
         "corpus, judged against true labels in-query.",
     judge_bearing=True,
 )
@@ -1144,9 +1144,9 @@ _register(
     ORDER BY source, rank
     """,
     doc="Deterministic weighted per-source sample (A-RES with the RNG "
-        "replaced by the portable hash): exact two-phase per-source "
-        "top-k — bucket-bounded sorts then a candidate re-rank — so no "
-        "reducer ever sorts a whole source; text never shuffles.",
+        "replaced by the portable hash): exact per-source util.top_k "
+        "— a partial limit before the shuffle — so no reducer ever "
+        "sorts a whole source; text never shuffles.",
 )
 
 _register(

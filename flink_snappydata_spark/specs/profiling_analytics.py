@@ -121,8 +121,8 @@ _register(
     doc="Join-key skew report (max key, top-1/top-10 shares, "
         "Herfindahl index with a DECIMAL(38,0) sum-of-squares): the "
         "salting/AQE decision measurement; histogram via map-side "
-        "groupBy, exact two-phase top-10 so no reducer sorts the "
-        "whole key histogram.",
+        "groupBy, exact top-10 via util.top_k (per-partition heaps) so "
+        "no reducer sorts the whole key histogram.",
 )
 
 
@@ -818,8 +818,8 @@ _register(
     """,
     doc="Top-20 drifting tokens between two sources by chi-squared "
         "contribution (vocabulary-sized histograms, full-outer merge, "
-        "identical fixed-order double arithmetic; exact two-phase "
-        "top-k so no reducer sorts the whole vocabulary).",
+        "identical fixed-order double arithmetic; exact top-k via "
+        "util.top_k so no reducer sorts the whole vocabulary).",
 )
 
 _register(

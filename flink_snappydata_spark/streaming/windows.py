@@ -27,6 +27,7 @@ from flink_snappydata_spark.streaming.runtime import (
     ingest_stream_to_tables,
     read_state_table,
 )
+from flink_snappydata_spark.util import top_k
 
 
 def tumbling_window_counts(
@@ -726,14 +727,11 @@ def topn_partials(batch_df: DataFrame, n: int = 10) -> DataFrame:
     most N inside its own batch, so the union of per-batch top-Ns
     provably contains the global top-N — re-ranking the union at read
     is exact. State is N rows per (group, batch), corpus-independent."""
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("value").desc(), F.col("event_id").asc()
-    )
-    return (
-        batch_df.select("event_type", "event_id", "value")
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= n)
-        .drop("r")
+    return top_k(
+        batch_df.select("event_type", "event_id", "value"),
+        ["event_type"],
+        [F.col("value").desc(), F.col("event_id").asc()],
+        n,
     )
 
 
@@ -761,13 +759,14 @@ def topn_from_state(spark, partials_table: str, n: int = 10) -> DataFrame:
     """(event_type, rank, event_id, value) — the exact global top-N
     per group from the accumulated partials, identical to ranking the
     raw stream (containment argument in :func:`topn_partials`)."""
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("value").desc(), F.col("event_id").asc()
-    )
     return (
-        read_state_table(spark, partials_table)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= n)
+        top_k(
+            read_state_table(spark, partials_table),
+            ["event_type"],
+            [F.col("value").desc(), F.col("event_id").asc()],
+            n,
+            rank="rank",
+        )
         .select("event_type", "rank", "event_id", "value")
         .orderBy("event_type", "rank")
     )

@@ -122,6 +122,46 @@ def block_pairs(
     )
 
 
+def top_k(
+    df: DataFrame, group: list[str], order: list, k: int,
+    rank: str | None = None,
+) -> DataFrame:
+    """The ``k`` first rows of each ``group`` under ``order``: the
+    engine's one per-group top-k. ``order`` must be a total order (end
+    it with a unique id) so the kept rows are deterministic. With
+    ``rank`` the row number is kept as a long column of that name;
+    without it the column is dropped.
+
+    Scale: ``row_number() <= k`` is the shape Catalyst plans as a
+    map-side top-k. With a ``group`` it inserts a partial
+    ``WindowGroupLimit`` below the exchange, so each task ships at most
+    ``k`` rows per group it holds and a hot group never crosses the
+    shuffle whole; the final ``WindowGroupLimit`` and window then run
+    over those survivors. With no ``group`` the limit becomes
+    ``TakeOrderedAndProject`` (per-partition heaps, one merge of ``k``
+    rows per partition). Spark plans neither past
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000),
+    where the window would sort whole groups, so a larger ``k``
+    raises ``ValueError``.
+    """
+    from pyspark.sql import Window
+
+    limit = int(
+        df.sparkSession.conf.get("spark.sql.optimizer.windowGroupLimitThreshold")
+    )
+    if k > limit:
+        raise ValueError(
+            f"top_k: k={k} is above windowGroupLimitThreshold={limit}; "
+            "Spark plans no partial limit there"
+        )
+    col = rank or "_top_k_rn"
+    w = Window.partitionBy(*group).orderBy(*order)
+    out = df.withColumn(col, F.row_number().over(w).cast("long")).filter(
+        F.col(col) <= k
+    )
+    return out if rank else out.drop(col)
+
+
 def release_caches() -> int:
     """Unpersist every library-internal intermediate persisted via
     :func:`tracked_persist`; returns how many were released. Call after

@@ -161,8 +161,8 @@ def test_hard_negatives_semantics(embeddings):
 
 
 def test_hard_negatives_matches_bruteforce_filtered(embeddings):
-    """The two-phase bucketed top-k must equal the naive single-window
-    top-k restricted to different-label candidates."""
+    """The per-probe top-k window must equal a naive Python sort of
+    the different-label candidates by (cosine desc, vec_id asc)."""
     out = {
         (r.query_id, r.rank): r.vec_id
         for r in similarity.hard_negatives(embeddings, n_probes=3, k=4).collect()
@@ -833,7 +833,7 @@ def test_weighted_sample_matches_naive_and_favors_weight(documents):
     from flink_snappydata_spark.pipeline.sampling import weighted_sample
 
     got = weighted_sample(documents, k=5).collect()
-    # naive single-phase reference: full sort per source
+    # naive reference: full sort per source
     pri = F.col("n_chars").cast("double") / (
         portable_hash(F.col("doc_id")) + F.lit(1)
     ).cast("double")

@@ -536,6 +536,7 @@ TPCH_OPS = {
         t["lineitem"]
     ),
     "pareto_frontier": lambda t: R.pareto_frontier(t["part"]),
+    "key_skew_profile": lambda t: _profiling.key_skew_profile(t["lineitem"]),
 }
 
 

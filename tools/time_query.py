@@ -3,7 +3,9 @@
 cache on, noop sink, warm-up rep + median of N) — the per-query A/B
 harness for optimization rounds. Next to the seconds it prints the
 Spark jobs the query launched while being built and while being
-forced (DAGScheduler job counter): a count that host drift cannot move.
+forced (DAGScheduler job counter) and the shuffle exchanges in its
+physical plan, taken from one more build after the timed reps: counts
+that host drift cannot move.
 
 Usage: python tools/time_query.py name [reps] [sf_dir]
 """
@@ -21,6 +23,7 @@ from flink_snappydata_spark.catalog import (  # noqa: E402
     enable_table_cache,
     load_table,
 )
+from flink_snappydata_spark.plans.inspect import exchange_count  # noqa: E402
 from flink_snappydata_spark.session import get_spark  # noqa: E402
 from flink_snappydata_spark.util import release_caches  # noqa: E402
 
@@ -49,6 +52,9 @@ def main() -> None:
         dt = time.perf_counter() - start
         if i > 0:  # rep 0 is warm-up
             runs.append((dt, j1 - j0, dag.numTotalJobs() - j1))
+    release_caches()
+    exchanges = exchange_count(fn(spark, sf_dir))
+    release_caches()
     secs = sorted(r[0] for r in runs)
     build = sorted({r[1] for r in runs})
     force = sorted({r[2] for r in runs})
@@ -56,7 +62,8 @@ def main() -> None:
         f"{name}: median {secs[len(secs) // 2]:.3f}s "
         f"min {secs[0]:.3f} max {secs[-1]:.3f} n={len(secs)} "
         f"jobs build {'/'.join(map(str, build))} "
-        f"force {'/'.join(map(str, force))}"
+        f"force {'/'.join(map(str, force))} "
+        f"exchanges {exchanges}"
     )
 
 
