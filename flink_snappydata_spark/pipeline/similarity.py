@@ -1822,18 +1822,10 @@ def bitsign_hamming_recall(
             reduce(lambda a, b: a + b, ham_bits).cast("long").alias("ham"),
         )
     )
-    # A plain window, not util.top_k: n_candidates >= corpus size is the
-    # documented exact limit and may pass windowGroupLimitThreshold,
-    # where top_k refuses. Up to the threshold Catalyst plans this window
-    # with the same partial WindowGroupLimit as top_k.
-    w_h = Window.partitionBy("query_id").orderBy(
-        F.col("ham").asc(), F.col("vec_id").asc()
-    )
-    candidates = (
-        ham.withColumn("rk", F.row_number().over(w_h))
-        .filter(F.col("rk") <= n_candidates)
-        .select("query_id", "vec_id")
-    )
+    candidates = top_k(
+        ham, ["query_id"], [F.col("ham").asc(), F.col("vec_id").asc()],
+        n_candidates,
+    ).select("query_id", "vec_id")
     q_vec = F.broadcast(
         qv.filter(F.col("vec_id") < n_queries).select(
             F.col("vec_id").alias("query_id"),

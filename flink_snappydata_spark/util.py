@@ -137,23 +137,22 @@ def top_k(
     ``WindowGroupLimit`` below the exchange, so each task ships at most
     ``k`` rows per group it holds and a hot group never crosses the
     shuffle whole; the final ``WindowGroupLimit`` and window then run
-    over those survivors. With no ``group`` the limit becomes
-    ``TakeOrderedAndProject`` (per-partition heaps, one merge of ``k``
-    rows per partition). Spark plans neither past
-    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000),
-    where the window would sort whole groups, so a larger ``k``
-    raises ``ValueError``.
+    over those survivors. Past
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000; -1
+    turns the rule off) Spark plans the plain window, which sorts whole
+    groups: same rows, no map-side cut. With no ``group`` the top-k is
+    ``orderBy().limit(k)``, ``TakeOrderedAndProject`` at any ``k``
+    (per-partition heaps, one merge of ``k`` rows per partition), and
+    ``rank`` is numbered over those ``k`` rows only.
     """
     from pyspark.sql import Window
 
-    limit = int(
-        df.sparkSession.conf.get("spark.sql.optimizer.windowGroupLimitThreshold")
-    )
-    if k > limit:
-        raise ValueError(
-            f"top_k: k={k} is above windowGroupLimitThreshold={limit}; "
-            "Spark plans no partial limit there"
-        )
+    if not group:
+        out = df.orderBy(*order).limit(k)
+        if rank:
+            w = Window.orderBy(*order)
+            out = out.withColumn(rank, F.row_number().over(w).cast("long"))
+        return out
     col = rank or "_top_k_rn"
     w = Window.partitionBy(*group).orderBy(*order)
     out = df.withColumn(col, F.row_number().over(w).cast("long")).filter(

@@ -1,8 +1,8 @@
 """``util.top_k`` — the engine's one per-group top-k — against a
 pure-Python reference, plus the plan shapes its scale argument rests
 on: a partial ``WindowGroupLimit`` below the exchange with a group, a
-``TakeOrderedAndProject`` without one, and no top-k past Spark's
-window-group-limit threshold.
+``TakeOrderedAndProject`` without one, and the plain window past
+Spark's window-group-limit threshold.
 """
 
 from __future__ import annotations
@@ -114,17 +114,28 @@ def test_global_top_k_is_take_ordered(spark):
     assert len(df.collect()) == 3
 
 
-def test_top_k_refuses_k_above_the_group_limit_threshold(spark):
-    df = _ranked(spark)
-    order = [F.col("s").desc(), "id"]
-    top_k(df, ["g"], order, 1000)
-    with pytest.raises(ValueError, match="windowGroupLimitThreshold"):
-        top_k(df, ["g"], order, 1001)
+@pytest.mark.parametrize(
+    "threshold, limited", [("2", True), ("1", False), ("-1", False)]
+)
+def test_top_k_around_the_group_limit_threshold(spark, threshold, limited):
+    """Up to ``windowGroupLimitThreshold`` (k = 2 here) a grouped top-k
+    gets the partial limit; past it, and with the rule off at -1, it is
+    the plain window, same rows. A global one stays
+    ``TakeOrderedAndProject``."""
+    rows, group, k = CASES["several_groups"]
+    order = [F.col("s").desc(), F.col("id").asc()]
+    df = spark.createDataFrame(rows, SCHEMA)
     key = "spark.sql.optimizer.windowGroupLimitThreshold"
-    spark.conf.set(key, "5")
+    spark.conf.set(key, threshold)
     try:
-        top_k(df, ["g"], order, 5)
-        with pytest.raises(ValueError):
-            top_k(df, [], order, 6)
+        grouped = top_k(df, group, order, k, rank="r")
+        plan = formatted_plan(grouped)
+        assert (f"row_number(), {k}, Partial" in plan) == limited
+        assert {
+            ((r.g,), r.r): r.id for r in grouped.collect()
+        } == _reference(rows, group, k)
+        top = top_k(df, [], order, k, rank="r")
+        assert "TakeOrderedAndProject" in formatted_plan(top)
+        assert {((), r.r): r.id for r in top.collect()} == _reference(rows, [], k)
     finally:
         spark.conf.unset(key)
