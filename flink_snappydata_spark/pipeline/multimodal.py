@@ -11,6 +11,12 @@ streams) delegate to PIL when importable and raise ``ValueError``
 otherwise; digest-based feature extraction keeps the exact signature a
 learned extractor would have.
 
+Every kernel and fixture synthesizer here is a plain per-row function
+of ``(doc_id, content)`` (or of ``doc_id``) run through
+:func:`_row_map`, the module's one Arrow batch shape; the two RIFF
+codecs share one chunk reader (:func:`_riff_chunks`) and one chunk
+writer (:func:`_riff_chunk`).
+
 Scale: binary payloads ride in the same parquet row groups; resize
 ``spark.sql.files.maxPartitionBytes`` down for large blobs so a task's
 Arrow batches stay in memory, and keep metadata in columns (not inside
@@ -20,7 +26,8 @@ the blob) so pruning works without touching bytes.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import struct
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -64,6 +71,86 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame_bytes", T.BinaryType()),
     ]
 )
+
+
+#: ``doc_id → content`` rows of the fixture payload synthesizers.
+PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("content", T.BinaryType()),
+    ]
+)
+
+
+def _row_map(
+    df: DataFrame, cols: list[str], fn: Callable, schema: T.StructType
+) -> DataFrame:
+    """``df.mapInPandas`` with one Python call per row:
+    ``fn(*values of cols)`` returns the output row as a tuple, or a list
+    of row tuples for a 1→N kernel. Values arrive as Python objects
+    (``int``, ``bytes``). The mapped function takes ``fn``'s name, so the
+    plan's ``MapInPandas`` node still names the kernel that runs."""
+    names = schema.fieldNames()
+
+    def batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in pdfs:
+            rows = []
+            for values in zip(*(pdf[c].tolist() for c in cols)):
+                out = fn(*values)
+                if isinstance(out, list):
+                    rows.extend(out)
+                else:
+                    rows.append(out)
+            yield pd.DataFrame(rows, columns=names)
+
+    batches.__name__ = fn.__name__
+    return df.mapInPandas(batches, schema=schema)
+
+
+def _synthesized(
+    documents: DataFrame, payload: Callable[[int], bytes]
+) -> DataFrame:
+    """One synthesized ``payload(doc_id)`` per document as
+    ``(doc_id, content)`` rows, the ids spread over the cluster first."""
+
+    def _synth(doc_id: int) -> tuple:
+        return doc_id, payload(doc_id)
+
+    return _row_map(
+        spread(documents.select("doc_id"), "doc_id"),
+        ["doc_id"],
+        _synth,
+        PAYLOAD_SCHEMA,
+    )
+
+
+def _riff_chunks(buf: bytes, pos: int) -> Iterator[tuple[bytes, bytes]]:
+    """``(chunk id, body)`` of each RIFF chunk in ``buf`` from ``pos``
+    on; an odd-sized body is followed by one pad byte (chunks are
+    word-aligned)."""
+    while pos + 8 <= len(buf):
+        size = struct.unpack_from("<I", buf, pos + 4)[0]
+        yield buf[pos : pos + 4], buf[pos + 8 : pos + 8 + size]
+        pos += 8 + size + (size & 1)
+
+
+def _riff_chunk(cid: bytes, body: bytes) -> bytes:
+    """One RIFF chunk: id, little-endian size, body, pad byte if odd."""
+    return cid + struct.pack("<I", len(body)) + body + b"\x00" * (len(body) & 1)
+
+
+def _wav(samples: list[int]) -> bytes:
+    """Mono 16-bit PCM RIFF/WAVE payload at 8 kHz."""
+    pcm = struct.pack(f"<{len(samples)}h", *samples)
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+    return _riff_chunk(
+        b"RIFF", b"WAVE" + _riff_chunk(b"fmt ", fmt) + _riff_chunk(b"data", pcm)
+    )
+
+
+def _ppm(width: int, height: int, pixels: bytes) -> bytes:
+    """Binary ``P6`` PPM payload, maxval 255."""
+    return b"P6\n%d %d\n255\n" % (width, height) + pixels
 
 
 def attach_binary(documents: DataFrame) -> DataFrame:
@@ -118,8 +205,6 @@ def _decode_ppm(content: bytes) -> dict:
 def _decode_bmp(content: bytes) -> dict:
     """Pure-Python BMP decode: BITMAPINFOHEADER, uncompressed 24/32-bit
     BGR(A), bottom-up or top-down rows, 4-byte row padding."""
-    import struct
-
     if len(content) < 54:
         raise ValueError("truncated BMP header")
     data_offset = struct.unpack_from("<I", content, 10)[0]
@@ -182,20 +267,27 @@ def decode_image(content: bytes) -> dict:
         ) from None
 
 
+def _channel_means(img: dict) -> list[float]:
+    """Each channel's mean over all pixels of a decoded image dict;
+    raises ``ValueError`` naming the dimensions of an empty image."""
+    w, h, n_ch = img["width"], img["height"], img["channels"]
+    if w * h == 0:
+        raise ValueError(f"zero-dimension image ({w}x{h}) has no pixels")
+    return [sum(img["pixels"][c::n_ch]) / (w * h) for c in range(n_ch)]
+
+
 def image_stats(content: bytes) -> dict:
     """Decode + per-channel statistics: width/height/channels plus each
     channel's min/max/mean over all pixels — the typed-metadata
     extraction step of the multimodal path, runnable inside the same
-    Arrow batches as :func:`extract_features`."""
+    Arrow batches as :func:`extract_features`. A zero-dimension image
+    raises ``ValueError``."""
     img = decode_image(content)
-    n_ch = img["channels"]
-    px, n_px = img["pixels"], img["width"] * img["height"]
-    stats = []
-    for c in range(n_ch):
-        ch = px[c::n_ch]
-        stats.append(
-            {"min": min(ch), "max": max(ch), "mean": sum(ch) / n_px}
-        )
+    px, n_ch = img["pixels"], img["channels"]
+    stats = [
+        {"min": min(px[c::n_ch]), "max": max(px[c::n_ch]), "mean": mean}
+        for c, mean in enumerate(_channel_means(img))
+    ]
     return {"format": img["format"], "width": img["width"],
             "height": img["height"], "channels": n_ch,
             "channel_stats": stats}
@@ -210,41 +302,30 @@ def extract_features(media: DataFrame) -> DataFrame:
     exactly what a GPU/codec extractor would use.
     """
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            digests = [hashlib.sha256(bytes(b)).digest() for b in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "byte_len": pdf["content"].map(len).astype("int64"),
-                    "sha_hex": [d.hex() for d in digests],
-                    "feature": [
-                        [b / 255.0 for b in d[:8]] for d in digests
-                    ],
-                }
-            )
+    def _extract(doc_id: int, content: bytes) -> tuple:
+        d = hashlib.sha256(content).digest()
+        return doc_id, len(content), d.hex(), [b / 255.0 for b in d[:8]]
 
-    return media.mapInPandas(_extract, schema=FEATURE_SCHEMA)
+    return _row_map(media, ["doc_id", "content"], _extract, FEATURE_SCHEMA)
 
 
 def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     """1→N frame sampling over OPAQUE payloads: split each payload into
-    ``n_frames`` deterministic chunks — the row-expansion shape of a
-    frame sampler for formats the engine cannot parse. For uncompressed
-    AVI the real per-frame decode is :func:`decode_video` /
+    ``n_frames`` deterministic chunks of ``len // n_frames`` bytes, the
+    last one running to the end of the payload, so the frames in
+    ``frame_idx`` order concatenate back to it — the row-expansion shape
+    of a frame sampler for formats the engine cannot parse. For
+    uncompressed AVI the real per-frame decode is :func:`decode_video` /
     :func:`video_stats_table`."""
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                b = bytes(content)
-                step = max(1, len(b) // n_frames)
-                for i in range(n_frames):
-                    rows.append((int(doc_id), i, b[i * step : i * step + step]))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_bytes"])
+    def _frames(doc_id: int, content: bytes) -> list[tuple]:
+        step = max(1, len(content) // n_frames)
+        cuts = [i * step for i in range(n_frames)] + [None]
+        return [
+            (doc_id, i, content[cuts[i] : cuts[i + 1]]) for i in range(n_frames)
+        ]
 
-    return media.mapInPandas(_frames, schema=FRAME_SCHEMA)
+    return _row_map(media, ["doc_id", "content"], _frames, FRAME_SCHEMA)
 
 
 def decode_audio(content: bytes) -> dict:
@@ -256,22 +337,17 @@ def decode_audio(content: bytes) -> dict:
     ints (8-bit WAV stores unsigned bytes, converted to centered
     ``v-128``) and ``n_samples`` counts frames per channel.
     """
-    import struct
-
     if content[:4] != b"RIFF" or content[8:12] != b"WAVE":
         raise ValueError(
             f"unsupported audio format (magic {content[:4]!r}); the "
             "native decoder covers RIFF/WAVE PCM only"
         )
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(content):
-        cid, size = content[pos : pos + 4], struct.unpack_from("<I", content, pos + 4)[0]
-        body = content[pos + 8 : pos + 8 + size]
+    fmt = data = None
+    for cid, body in _riff_chunks(content, 12):
         if cid == b"fmt ":
             fmt = struct.unpack_from("<HHIIHH", body, 0)
         elif cid == b"data":
             data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
     if fmt is None or data is None:
         raise ValueError("truncated WAV: missing fmt/data chunk")
     audio_fmt, n_ch, sample_rate, _byte_rate, _block, bits = fmt
@@ -289,33 +365,19 @@ def decode_audio(content: bytes) -> dict:
             "bits": bits, "n_samples": n_samples, "samples": samples}
 
 
+def _tone(doc_id: int, i: int) -> int:
+    """Sample ``i`` of the synthesized WAV fixtures."""
+    return ((doc_id * 17 + i * 13) % 65536) - 32768
+
+
 def synthesize_wav(documents: DataFrame) -> DataFrame:
     """Deterministic mono 16-bit PCM WAV payload per document — the
     audio twin of :func:`synthesize_ppm`: ``8 + doc_id % 8`` frames at
     8 kHz, sample ``i`` = ``((doc_id*17 + i*13) % 65536) - 32768``, so
     decoding with the REAL parser yields stats with a closed-form
     arithmetic oracle."""
-    import struct
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 8 + d % 8
-                pcm = struct.pack(
-                    f"<{n}h", *(((d * 17 + i * 13) % 65536) - 32768 for i in range(n))
-                )
-                hdr = (
-                    b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-                    + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-                    + b"data" + struct.pack("<I", len(pcm))
-                )
-                rows.append((d, hdr + pcm))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
-
-    return spread(documents.select("doc_id"), "doc_id").mapInPandas(
-        _synth, schema="doc_id long, content binary"
+    return _synthesized(
+        documents, lambda d: _wav([_tone(d, i) for i in range(8 + d % 8)])
     )
 
 
@@ -336,24 +398,17 @@ def audio_stats_table(media: DataFrame) -> DataFrame:
     """Arrow-batched audio decode: each payload runs through
     :func:`decode_audio`; emits per-document frame count, mean
     amplitude (channel 0), and the exact int64 sum of squares — the
-    energy statistic as portable integer arithmetic."""
+    energy statistic as portable integer arithmetic. A payload with no
+    samples gives ``n_samples`` 0 and a null mean."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                a = decode_audio(bytes(content))
-                ch0 = a["samples"][0]
-                rows.append(
-                    (int(doc_id), a["format"], a["sample_rate"],
-                     a["channels"], a["n_samples"],
-                     sum(ch0) / len(ch0), sum(v * v for v in ch0))
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_STATS_SCHEMA.fields]
-            )
+    def _stats(doc_id: int, content: bytes) -> tuple:
+        a = decode_audio(content)
+        ch0 = a["samples"][0]
+        return (doc_id, a["format"], a["sample_rate"], a["channels"],
+                a["n_samples"], sum(ch0) / len(ch0) if ch0 else None,
+                sum(v * v for v in ch0))
 
-    return media.mapInPandas(_stats, schema=AUDIO_STATS_SCHEMA)
+    return _row_map(media, ["doc_id", "content"], _stats, AUDIO_STATS_SCHEMA)
 
 
 def synthesize_wav_gated(documents: DataFrame) -> DataFrame:
@@ -363,31 +418,12 @@ def synthesize_wav_gated(documents: DataFrame) -> DataFrame:
     (``(i//4 + doc_id) % 2 == 1`` — odd docs START silent, so
     leading-trim varies), else the same closed-form value as the
     loud twin. Same real RIFF/WAVE container, same parser."""
-    import struct
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 16 + d % 8
-                vals = [
-                    0
-                    if (i // 4 + d) % 2 == 1
-                    else ((d * 17 + i * 13) % 65536) - 32768
-                    for i in range(n)
-                ]
-                pcm = struct.pack(f"<{n}h", *vals)
-                hdr = (
-                    b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-                    + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-                    + b"data" + struct.pack("<I", len(pcm))
-                )
-                rows.append((d, hdr + pcm))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
-
-    return spread(documents.select("doc_id"), "doc_id").mapInPandas(
-        _synth, schema="doc_id long, content binary"
+    return _synthesized(
+        documents,
+        lambda d: _wav([
+            0 if (i // 4 + d) % 2 == 1 else _tone(d, i)
+            for i in range(16 + d % 8)
+        ]),
     )
 
 
@@ -419,7 +455,8 @@ def audio_silence_stats(
     (final partial frame included); a frame is silent when every
     ``|sample| < threshold``. Returns per document the frame count,
     silent-frame count and ratio, and the first/last non-silent frame
-    indexes (``-1`` when the whole clip is silence).
+    indexes (``-1`` when the whole clip is silence). A payload with no
+    samples has 0 frames and a null ratio.
 
     Scale: mapInPandas over the binary column — per-row work linear in
     payload size, no shuffle at all; the synthesized-fixture registry
@@ -428,35 +465,19 @@ def audio_silence_stats(
     reproduces the decoded stats without parsing a byte).
     """
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                a = decode_audio(bytes(content))
-                ch0 = a["samples"][0]
-                loud = []
-                n_frames = (len(ch0) + frame - 1) // frame
-                for k in range(n_frames):
-                    fr = ch0[k * frame : (k + 1) * frame]
-                    loud.append(any(abs(v) >= threshold for v in fr))
-                n_silent = sum(1 for x in loud if not x)
-                loud_idx = [k for k, x in enumerate(loud) if x]
-                rows.append(
-                    (
-                        int(doc_id),
-                        n_frames,
-                        n_silent,
-                        n_silent / n_frames,
-                        loud_idx[0] if loud_idx else -1,
-                        loud_idx[-1] if loud_idx else -1,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in AUDIO_SILENCE_SCHEMA.fields],
-            )
+    def _stats(doc_id: int, content: bytes) -> tuple:
+        ch0 = decode_audio(content)["samples"][0]
+        loud = [
+            any(abs(v) >= threshold for v in ch0[k : k + frame])
+            for k in range(0, len(ch0), frame)
+        ]
+        n_silent = loud.count(False)
+        loud_idx = [k for k, x in enumerate(loud) if x] or [-1]
+        return (doc_id, len(loud), n_silent,
+                n_silent / len(loud) if loud else None,
+                loud_idx[0], loud_idx[-1])
 
-    return media.mapInPandas(_stats, schema=AUDIO_SILENCE_SCHEMA)
+    return _row_map(media, ["doc_id", "content"], _stats, AUDIO_SILENCE_SCHEMA)
 
 
 def decode_video(content: bytes) -> dict:
@@ -471,8 +492,6 @@ def decode_video(content: bytes) -> dict:
     Compressed streams (``00dc``) raise — no codec libs here; the
     uncompressed path is fully owned, everything else is explicit.
     """
-    import struct
-
     if content[:4] != b"RIFF" or content[8:12] != b"AVI ":
         raise ValueError(
             f"unsupported video format (magic {content[:4]!r}); the "
@@ -481,14 +500,11 @@ def decode_video(content: bytes) -> dict:
     width = height = None
     frames: list[bytes] = []
 
-    def walk(buf: bytes) -> None:
+    def walk(buf: bytes, pos: int) -> None:
         nonlocal width, height
-        pos = 0
-        while pos + 8 <= len(buf):
-            cid, size = buf[pos : pos + 4], struct.unpack_from("<I", buf, pos + 4)[0]
-            body = buf[pos + 8 : pos + 8 + size]
+        for cid, body in _riff_chunks(buf, pos):
             if cid == b"LIST":
-                walk(body[4:])  # skip the 4-byte list type, recurse
+                walk(body, 4)  # skip the 4-byte list type, recurse
             elif cid == b"avih":
                 width, height = struct.unpack_from("<II", body, 32)
             elif cid[2:] == b"db":  # raw DIB frame (e.g. 00db)
@@ -498,9 +514,8 @@ def decode_video(content: bytes) -> dict:
                     "compressed AVI frame stream (..dc) not supported; "
                     "native decoder covers uncompressed (..db) frames"
                 )
-            pos += 8 + size + (size & 1)  # chunks are word-aligned
 
-    walk(content[12:])
+    walk(content, 12)
     if width is None:
         raise ValueError("truncated AVI: missing avih header")
     return {"format": "avi", "width": int(width), "height": int(height),
@@ -514,45 +529,32 @@ def synthesize_avi(documents: DataFrame) -> DataFrame:
     (width 4 ⇒ 12-byte rows, already 4-aligned — no stride padding), so
     decoding with the REAL parser yields stats with a closed-form
     arithmetic oracle."""
-    import struct
-
     w, h = 4, 2
 
-    def _chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
     def _list(ltype: bytes, body: bytes) -> bytes:
-        return _chunk(b"LIST", ltype + body)
+        return _riff_chunk(b"LIST", ltype + body)
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 2 + d % 3
-                avih = struct.pack("<IIIIIIIIIIIIII", 33333, 0, 0, 0, n, 0,
-                                   1, 0, w, h, 0, 0, 0, 0)
-                strh = struct.pack("<4s4sIHHIIIIIIIIhhhh", b"vids", b"DIB ",
-                                   0, 0, 0, 0, 1, 30, 0, n, 0, 0, 0,
-                                   0, 0, w, h)
-                strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                                   w * h * 3, 0, 0, 0, 0)
-                hdrl = _list(b"hdrl", _chunk(b"avih", avih)
-                             + _list(b"strl", _chunk(b"strh", strh)
-                                     + _chunk(b"strf", strf)))
-                movi = _list(b"movi", b"".join(
-                    _chunk(b"00db", bytes(
-                        (d * 7 + f * 11 + j) % 256 for j in range(w * h * 3)
-                    ))
-                    for f in range(n)
-                ))
-                body = b"AVI " + hdrl + movi
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def payload(d: int) -> bytes:
+        n = 2 + d % 3
+        avih = struct.pack("<IIIIIIIIIIIIII", 33333, 0, 0, 0, n, 0,
+                           1, 0, w, h, 0, 0, 0, 0)
+        strh = struct.pack("<4s4sIHHIIIIIIIIhhhh", b"vids", b"DIB ",
+                           0, 0, 0, 0, 1, 30, 0, n, 0, 0, 0,
+                           0, 0, w, h)
+        strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
+                           w * h * 3, 0, 0, 0, 0)
+        hdrl = _list(b"hdrl", _riff_chunk(b"avih", avih)
+                     + _list(b"strl", _riff_chunk(b"strh", strh)
+                             + _riff_chunk(b"strf", strf)))
+        movi = _list(b"movi", b"".join(
+            _riff_chunk(b"00db", bytes(
+                (d * 7 + f * 11 + j) % 256 for j in range(w * h * 3)
+            ))
+            for f in range(n)
+        ))
+        return _riff_chunk(b"RIFF", b"AVI " + hdrl + movi)
 
-    return spread(documents.select("doc_id"), "doc_id").mapInPandas(
-        _synth, schema="doc_id long, content binary"
-    )
+    return _synthesized(documents, payload)
 
 
 VIDEO_STATS_SCHEMA = T.StructType(
@@ -572,24 +574,17 @@ def video_stats_table(media: DataFrame) -> DataFrame:
     """Arrow-batched video decode: each payload runs through
     :func:`decode_video`; emits container dims, frame count, and exact
     int64 sum + mean over all frame payload bytes — the frame-sampling
-    statistic as portable integer arithmetic."""
+    statistic as portable integer arithmetic. A payload with no frame
+    bytes gives a null mean."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                v = decode_video(bytes(content))
-                total = sum(len(f) for f in v["frames"])
-                s = sum(b for f in v["frames"] for b in f)
-                rows.append(
-                    (int(doc_id), v["format"], v["width"], v["height"],
-                     v["n_frames"], s, s / total)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_STATS_SCHEMA.fields]
-            )
+    def _stats(doc_id: int, content: bytes) -> tuple:
+        v = decode_video(content)
+        total = sum(len(f) for f in v["frames"])
+        s = sum(sum(f) for f in v["frames"])
+        return (doc_id, v["format"], v["width"], v["height"],
+                v["n_frames"], s, s / total if total else None)
 
-    return media.mapInPandas(_stats, schema=VIDEO_STATS_SCHEMA)
+    return _row_map(media, ["doc_id", "content"], _stats, VIDEO_STATS_SCHEMA)
 
 
 def synthesize_ppm(documents: DataFrame) -> DataFrame:
@@ -600,19 +595,11 @@ def synthesize_ppm(documents: DataFrame) -> DataFrame:
     payloads and comparing channel means against the arithmetic
     expectation hash-checks the whole decode pipeline end-to-end."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 1 + d % 4
-                px = bytes((d * 31 + i) % 256 for i in range(n * 2 * 3))
-                rows.append((d, b"P6\n%d 2\n255\n" % n + px))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def payload(d: int) -> bytes:
+        n = 1 + d % 4
+        return _ppm(n, 2, bytes((d * 31 + i) % 256 for i in range(n * 2 * 3)))
 
-    return spread(documents.select("doc_id"), "doc_id").mapInPandas(
-        _synth, schema="doc_id long, content binary"
-    )
+    return _synthesized(documents, payload)
 
 
 IMAGE_STATS_SCHEMA = T.StructType(
@@ -636,22 +623,13 @@ def image_stats_table(media: DataFrame) -> DataFrame:
     same mapInPandas batch shape as :func:`extract_features`, with a
     real decoder in the loop."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                s = image_stats(bytes(content))
-                means = [c["mean"] for c in s["channel_stats"][:3]]
-                means += [float("nan")] * (3 - len(means))
-                rows.append(
-                    (int(doc_id), s["format"], s["width"], s["height"],
-                     s["channels"], *means)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_STATS_SCHEMA.fields]
-            )
+    def _stats(doc_id: int, content: bytes) -> tuple:
+        s = image_stats(content)
+        means = [c["mean"] for c in s["channel_stats"]] + [None] * 3
+        return (doc_id, s["format"], s["width"], s["height"],
+                s["channels"], *means[:3])
 
-    return media.mapInPandas(_stats, schema=IMAGE_STATS_SCHEMA)
+    return _row_map(media, ["doc_id", "content"], _stats, IMAGE_STATS_SCHEMA)
 
 
 def resize_image(img: dict, out_w: int, out_h: int) -> dict:
@@ -673,12 +651,7 @@ def resize_image(img: dict, out_w: int, out_h: int) -> dict:
     ys = (np.arange(out_h, dtype=np.int64) * h) // out_h
     xs = (np.arange(out_w, dtype=np.int64) * w) // out_w
     out = arr[ys[:, None], xs[None, :]]
-    return {
-        **img,
-        "width": out_w,
-        "height": out_h,
-        "pixels": out.tobytes(),
-    }
+    return {**img, "width": out_w, "height": out_h, "pixels": out.tobytes()}
 
 
 RESIZE_STATS_SCHEMA = T.StructType(
@@ -705,27 +678,12 @@ def image_resize_table(
     sum of the resized buffer, so the oracle pins the resize output
     bit-for-bit, not just its means."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                img = resize_image(decode_image(bytes(content)), out_w, out_h)
-                px = img["pixels"]
-                ch = img["channels"]
-                n = out_w * out_h
-                means = [
-                    sum(px[i] for i in range(c, len(px), ch)) / n
-                    for c in range(min(ch, 3))
-                ]
-                means += [float("nan")] * (3 - len(means))
-                rows.append(
-                    (int(doc_id), out_w, out_h, sum(px), *means)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RESIZE_STATS_SCHEMA.fields]
-            )
+    def _stats(doc_id: int, content: bytes) -> tuple:
+        img = resize_image(decode_image(content), out_w, out_h)
+        means = _channel_means(img) + [None] * 3
+        return (doc_id, out_w, out_h, sum(img["pixels"]), *means[:3])
 
-    return media.mapInPandas(_stats, schema=RESIZE_STATS_SCHEMA)
+    return _row_map(media, ["doc_id", "content"], _stats, RESIZE_STATS_SCHEMA)
 
 
 def synthesize_ppm_multires(documents: DataFrame) -> DataFrame:
@@ -740,33 +698,34 @@ def synthesize_ppm_multires(documents: DataFrame) -> DataFrame:
     whole construction is closed-form arithmetic on ``doc_id``, so a
     SQL oracle reproduces every expected hash exactly."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                s = d % 32
-                w0, h0 = 2 + s % 3, 2
-                k = 1 + (d // 32) % 2
-                w, h = k * w0, k * h0
-                px = bytes(
-                    (s * 31 + (((y // k) * w0 + (x // k)) * 3 + ch)) % 256
-                    for y in range(h)
-                    for x in range(w)
-                    for ch in range(3)
-                )
-                rows.append((d, b"P6\n%d %d\n255\n" % (w, h) + px))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def payload(d: int) -> bytes:
+        s = d % 32
+        w0, h0 = 2 + s % 3, 2
+        k = 1 + (d // 32) % 2
+        w, h = k * w0, k * h0
+        return _ppm(w, h, bytes(
+            (s * 31 + (((y // k) * w0 + (x // k)) * 3 + ch)) % 256
+            for y in range(h)
+            for x in range(w)
+            for ch in range(3)
+        ))
 
-    return spread(documents.select("doc_id"), "doc_id").mapInPandas(
-        _synth, schema="doc_id long, content binary"
-    )
+    return _synthesized(documents, payload)
 
 
 #: Perceptual-hash grid: 8×8 grayscale, one gradient bit per adjacent
 #: horizontal pair → 8 rows × 7 bits = 56 bits, comfortably inside a
 #: signed int64 (the same headroom rule as the 60-bit SimHash).
 PHASH_GRID = 8
+
+PHASH_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("phash", T.LongType()),
+    ]
+)
 
 
 def image_phash_table(media: DataFrame) -> DataFrame:
@@ -780,33 +739,18 @@ def image_phash_table(media: DataFrame) -> DataFrame:
     IDENTICAL thumbnail — so re-encoded resolutions of one picture
     hash equal by construction, which is the property that makes dHash
     a near-dup key. Returns ``(doc_id, width, height, phash)``."""
+    g = PHASH_GRID
+    shifts = 1 << np.arange(g * (g - 1), dtype=np.int64)
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        g = PHASH_GRID
-        shifts = 1 << np.arange(g * (g - 1), dtype=np.int64)
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                img = decode_image(bytes(content))
-                thumb = resize_image(img, g, g)
-                arr = np.frombuffer(thumb["pixels"], dtype=np.uint8)
-                gray = (
-                    arr.reshape(g, g, img["channels"])
-                    .astype(np.int64)
-                    .sum(axis=2)
-                )
-                bits = (gray[:, 1:] > gray[:, :-1]).flatten()
-                phash = int((bits * shifts).sum())
-                rows.append(
-                    (int(doc_id), img["width"], img["height"], phash)
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "phash"]
-            )
+    def _hash(doc_id: int, content: bytes) -> tuple:
+        img = decode_image(content)
+        thumb = resize_image(img, g, g)
+        arr = np.frombuffer(thumb["pixels"], dtype=np.uint8)
+        gray = arr.reshape(g, g, img["channels"]).astype(np.int64).sum(axis=2)
+        bits = (gray[:, 1:] > gray[:, :-1]).flatten()
+        return doc_id, img["width"], img["height"], int((bits * shifts).sum())
 
-    return media.mapInPandas(
-        _hash, schema="doc_id long, width int, height int, phash long"
-    )
+    return _row_map(media, ["doc_id", "content"], _hash, PHASH_SCHEMA)
 
 
 def image_phash_dedup(documents: DataFrame, sort: bool = True) -> DataFrame:

@@ -214,6 +214,14 @@ def test_multimodal_plumbing(spark):
     frames = multimodal.sample_frames(media, n_frames=4)
     counts = frames.groupBy("doc_id").count().collect()
     assert all(r["count"] == 4 for r in counts)
+    # the frames tile the payload: nothing dropped at the tail
+    payloads = {r.doc_id: bytes(r.content) for r in media.collect()}
+    by_doc: dict[int, list] = {}
+    for r in frames.collect():
+        by_doc.setdefault(r.doc_id, []).append((r.frame_idx, bytes(r.frame_bytes)))
+    assert by_doc.keys() == payloads.keys()
+    for doc_id, parts in by_doc.items():
+        assert b"".join(b for _, b in sorted(parts)) == payloads[doc_id]
     # unsupported formats raise explicitly, not silently
     with pytest.raises(ValueError, match="unsupported image format"):
         multimodal.decode_image(b"\x89PNG fake")
@@ -280,6 +288,19 @@ def test_decode_image_bmp_golden():
         {"min": 0, "max": 255, "mean": (0 + 255 + 0 + 255) / 4},
         {"min": 0, "max": 255, "mean": (0 + 0 + 255 + 255) / 4},
     ]
+
+
+def test_image_stats_zero_dimension_raises():
+    """A PPM or BMP with no pixels raises a ValueError naming its
+    dimensions instead of failing inside min()."""
+    import struct
+
+    with pytest.raises(ValueError, match=r"zero-dimension image \(0x2\)"):
+        multimodal.image_stats(b"P6\n0 2\n255\n")
+    info = struct.pack("<IiiHHIIiiII", 40, 3, 0, 1, 24, 0, 0, 2835, 2835, 0, 0)
+    bmp = struct.pack("<2sIHHI", b"BM", 54, 0, 0, 54) + info
+    with pytest.raises(ValueError, match=r"zero-dimension image \(3x0\)"):
+        multimodal.image_stats(bmp)
 
 
 def test_decode_image_truncated_raises():
@@ -607,6 +628,106 @@ def test_decode_audio_stereo_deinterleaves():
     a = multimodal.decode_audio(wav)
     assert a["channels"] == 2 and a["n_samples"] == 3
     assert a["samples"] == [[1, 2, 3], [-1, -2, -3]]
+
+
+def _riff_test_chunk(cid: bytes, body: bytes) -> bytes:
+    import struct
+
+    pad = b"\x00" if len(body) % 2 else b""
+    return cid + struct.pack("<I", len(body)) + body + pad
+
+
+def test_decode_audio_skips_odd_chunk_with_pad_byte():
+    """An odd-length LIST chunk before ``data`` is followed by one pad
+    byte; the reader must step over it to find the samples."""
+    import struct
+
+    pcm = struct.pack("<3h", 7, -8, 9)
+    body = (
+        b"WAVE"
+        + _riff_test_chunk(b"fmt ", struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16))
+        + _riff_test_chunk(b"LIST", b"INFOx")  # 5 bytes + 1 pad byte
+        + _riff_test_chunk(b"data", pcm)
+    )
+    wav = b"RIFF" + struct.pack("<I", len(body)) + body
+    a = multimodal.decode_audio(wav)
+    assert (a["n_samples"], a["samples"]) == (3, [[7, -8, 9]])
+
+
+def _media_frame(spark, rows):
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("content", T.BinaryType()),
+        ]
+    )
+    return spark.createDataFrame(rows, schema)
+
+
+def test_audio_stats_table_empty_data_chunk(spark):
+    """A valid WAV with an empty ``data`` chunk has 0 samples and a null
+    mean, next to a normal payload in the same batch."""
+    media = _media_frame(
+        spark, [(1, _golden_wav_16(samples=())), (2, _golden_wav_16())]
+    )
+    got = {r.doc_id: r for r in multimodal.audio_stats_table(media).collect()}
+    assert (got[1].n_samples, got[1].mean_amp, got[1].sum_sq) == (0, None, 0)
+    assert (got[1].format, got[1].sample_rate, got[1].channels) == ("wav", 8000, 1)
+    assert got[2].n_samples == 4
+    assert got[2].mean_amp == (-32768 + 0 + 12345 + 32767) / 4
+
+
+def test_audio_silence_stats_empty_data_chunk(spark):
+    """A WAV with no samples has no frames: zero counts, a null ratio
+    and -1 trim points."""
+    media = _media_frame(
+        spark, [(1, _golden_wav_16(samples=())), (2, _golden_wav_16())]
+    )
+    got = {r.doc_id: r for r in multimodal.audio_silence_stats(media).collect()}
+    r = got[1]
+    assert (r.n_frames, r.n_silent, r.silence_ratio, r.lead_trim, r.tail_trim) == (
+        0, 0, None, -1, -1,
+    )
+    r = got[2]  # one frame of 4 samples, loud (|-32768| >= 1)
+    assert (r.n_frames, r.n_silent, r.silence_ratio, r.lead_trim, r.tail_trim) == (
+        1, 0, 0.0, 0, 0,
+    )
+
+
+def _test_avi(frames: list[bytes], hdrl_extra: bytes = b"") -> bytes:
+    """Minimal 4x2 uncompressed AVI with the given ``00db`` frames."""
+    import struct
+
+    avih = struct.pack("<14I", 33333, 0, 0, 0, len(frames), 0, 1, 0, 4, 2, 0, 0, 0, 0)
+    hdrl = _riff_test_chunk(
+        b"LIST", b"hdrl" + _riff_test_chunk(b"avih", avih) + hdrl_extra
+    )
+    movi = _riff_test_chunk(
+        b"LIST", b"movi" + b"".join(_riff_test_chunk(b"00db", f) for f in frames)
+    )
+    body = b"AVI " + hdrl + movi
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def test_decode_video_skips_odd_chunk_in_hdrl():
+    """An odd-length chunk inside ``hdrl`` carries a pad byte; the shared
+    RIFF reader keeps word alignment and still finds every frame."""
+    frames = [bytes(range(24)), bytes(range(100, 124))]
+    v = multimodal.decode_video(_test_avi(frames, _riff_test_chunk(b"JUNK", b"abc")))
+    assert (v["width"], v["height"], v["n_frames"]) == (4, 2, 2)
+    assert v["frames"] == frames
+
+
+def test_video_stats_table_no_frames(spark):
+    """An AVI with no ``..db`` frames has 0 frames, a 0 byte sum and a
+    null mean."""
+    media = _media_frame(spark, [(1, _test_avi([])), (2, _test_avi([bytes([2] * 24)]))])
+    got = {r.doc_id: r for r in multimodal.video_stats_table(media).collect()}
+    r = got[1]
+    assert (r.width, r.height, r.n_frames, r.sum_bytes, r.mean_byte) == (
+        4, 2, 0, 0, None,
+    )
+    assert (got[2].n_frames, got[2].sum_bytes, got[2].mean_byte) == (1, 48, 2.0)
 
 
 def test_decode_audio_rejects_non_pcm_and_non_wav():

@@ -283,6 +283,17 @@ OPS = {
     "video_decode_stats": lambda d, e: M.video_stats_table(
         M.synthesize_avi(d)
     ),
+    # the remaining per-row payload kernels: PPM decode, decode+resize
+    # and the digest extractor, each one mapInPandas pass, no shuffle
+    "image_decode_stats": lambda d, e: M.image_stats_table(
+        M.synthesize_ppm(d)
+    ),
+    "image_resize_stats": lambda d, e: M.image_resize_table(
+        M.synthesize_ppm(d)
+    ),
+    "multimodal_features": lambda d, e: M.extract_features(
+        M.attach_binary(d)
+    ),
     # FIXED 250-doc benchmark (replica ids are offset by 1e6, so the
     # filter keeps selecting only base-replica docs): replication grows
     # the screened corpus organically while the broadcast side stays
